@@ -119,7 +119,7 @@ def mode_stages(cores: int, scale_k: int) -> None:
 
     import bench
     from sz_spark import blocking, canonicalize as canon, clustering, scoring
-    from sz_spark.pipeline import PipelineConfig
+    from sz_spark.pipeline import PipelineConfig, pairs_stage
     from sz_spark.transcripts import build_transcripts_from_documents
 
     cfg = PipelineConfig()
@@ -154,26 +154,11 @@ def mode_stages(cores: int, scale_k: int) -> None:
             rows_per_band=cfg.rows_per_band,
         ),
     )
-    bands = blocking.bands_from_features(feats, docs, id_col="did")
-    pairs_df, _sup = blocking.block_pairs(
-        bands, id_col="did", max_block_size=cfg.max_block_size,
-        salt_up_to=cfg.salt_up_to,
-    )
-    pairs = stage("pairs", pairs_df)
-    # mirror run_pipeline's two-tier prune (gathered below the broadcast
-    # gates, joins beyond / SZ_NO_GATHER=1)
-    if scoring.gather_gate(feats):
-        prune_bc = scoring.build_prune_broadcast(
-            feats.select("did", "len", "hist")
-        )
-        pruned = stage(
-            "prune", scoring.prune_pairs_gathered(pairs, prune_bc, cfg.threshold)
-        )
-    else:
-        attrs = scoring.attach_prune_attrs(
-            pairs, docs, id_col="did", attrs_frame=feats.select("did", "len", "hist")
-        )
-        pruned = stage("prune", scoring.prune_pairs_arrow(attrs, cfg.threshold))
+    # run_pipeline's two-tier pairs stage: prune survivors
+    pairs_df, bcs = pairs_stage(docs, feats, cfg)
+    pruned = stage("pairs", pairs_df)
+    for bc in bcs:
+        bc.unpersist()
     with_texts = scoring.attach_texts(pruned, docs, id_col="did")
     scored = stage(
         "score",

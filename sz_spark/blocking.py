@@ -152,9 +152,7 @@ def minhash_bands(
         prefix = docs.select(
             F.col(id_col),
             F.lit(-1).alias("band_id"),
-            F.xxhash64(F.substring(F.col(text_col), 1, prefix_len)).alias(
-                "band_hash"
-            ),
+            _prefix_key(text_col, prefix_len).alias("band_hash"),
         )
         bands = bands.unionByName(prefix)
     return bands
@@ -169,18 +167,20 @@ def doc_features(
     seed: int = 0,
     n_bands: int = DEFAULT_BANDS,
     rows_per_band: int = DEFAULT_ROWS,
+    prefix_len: int = 56,
 ) -> DataFrame:
-    """docs -> (id, len, bk array<long>, hist binary): the fused
-    per-document feature table — LSH band keys (minhash_bands math) AND
-    the packed prune histogram (scoring._prune_attrs_packed bytes) from
-    ONE pass over the doc bytes.
+    """docs -> (id, len, pk long, bk array<long>, hist binary): the
+    fused per-document feature table — the block keys (minhash_bands
+    math: ``pk`` is the layered prefix key, ``bk`` the LSH band keys)
+    AND the packed prune histogram (scoring._prune_attrs_packed bytes)
+    from ONE pass over the doc bytes.
 
-    The pipeline materializes this narrow frame once and derives both
-    the band explosion (:func:`bands_from_features`) and the prune
-    attributes from it, so the corpus text crosses the JVM->Python
-    boundary a single time (guide §4.1) and the checkpoint stores ~25
-    longs + 192 B per document instead of the 3.3M-row exploded band
-    table."""
+    The pipeline materializes this narrow frame once and derives the
+    band explosion (:func:`bands_from_features`), the prune attributes
+    and the gather tier's block-key broadcast from it, so the corpus
+    text crosses the JVM->Python boundary a single time (guide §4.1)
+    and the checkpoint stores ~26 longs + 192 B per document instead of
+    the 3.3M-row exploded band table."""
     from pyspark.sql import types as T
 
     from sz_spark.udfs import make_doc_features_arrow_fn, spread_for_python
@@ -190,6 +190,7 @@ def doc_features(
         docs.select(
             F.col(id_col),
             F.length(F.col(text_col)).alias("len"),
+            _prefix_key(text_col, prefix_len).alias("pk"),
             F.encode(F.col(text_col), "utf-8").alias("_t"),
         ),
         4 * parallelism,
@@ -202,6 +203,7 @@ def doc_features(
         [
             src.schema[id_col],
             src.schema["len"],
+            src.schema["pk"],
             T.StructField("bk", T.ArrayType(T.LongType()), False),
             T.StructField("hist", T.BinaryType(), False),
         ]
@@ -209,30 +211,26 @@ def doc_features(
     return src.mapInArrow(fn, out_schema)
 
 
+def _prefix_key(text_col: str, prefix_len: int):
+    """The layered prefix block key (band_id -1; see minhash_bands)."""
+    return F.xxhash64(F.substring(F.col(text_col), 1, prefix_len))
+
+
 def bands_from_features(
-    feats: DataFrame,
-    docs: DataFrame,
-    text_col: str = "doc",
-    id_col: str = "conv_id",
-    prefix_len: int = 56,
+    feats: DataFrame, docs: DataFrame | None = None, id_col: str = "conv_id"
 ) -> DataFrame:
     """(id, band_id, band_hash) derived from a :func:`doc_features`
-    frame — the same rows minhash_bands emits (posexplode of the band
-    keys + the layered prefix key, which stays a JVM-side xxhash64 over
-    the doc text; see minhash_bands for the prefix rationale)."""
+    frame — the same rows minhash_bands emits: the prefix key ``pk`` as
+    band -1 plus the posexplode of the band keys.  Reads only ``feats``
+    (the prefix key is computed in doc_features); ``docs`` is accepted
+    for two-argument callers and unused."""
     bands = feats.select(
         id_col, F.posexplode("bk").alias("band_id", "band_hash")
     )
-    if prefix_len > 0:
-        prefix = docs.select(
-            F.col(id_col),
-            F.lit(-1).alias("band_id"),
-            F.xxhash64(F.substring(F.col(text_col), 1, prefix_len)).alias(
-                "band_hash"
-            ),
-        )
-        bands = bands.unionByName(prefix)
-    return bands
+    prefix = feats.select(
+        id_col, F.lit(-1).alias("band_id"), F.col("pk").alias("band_hash")
+    )
+    return prefix.unionByName(bands)
 
 
 def cap_blocks(
@@ -342,20 +340,82 @@ def block_pairs(
     list is collected, so a pathological stop-band can never OOM an
     aggregation task), the suppressed-stats agg, and a collect_list —
     Catalyst reuses the exchange for all three.  Lower-triangle pairs
-    are then emitted JVM-side from each block's id array (nested
-    ``transform``/``slice``, whole-stage codegen): per-block work is
-    bounded by cap^2 cheap struct emissions in one task, which replaces
-    the salting machinery — salting redistributed O(s^2) JOIN-reducer
-    work, but with in-array emission the bound is the cap itself.  The
-    global cross-band dedup is the second (unavoidable) shuffle.
+    are then emitted from each block's id array
+    (:func:`explode_lower_triangle`): per-block work is bounded by
+    cap^2 cheap emissions in one task, which replaces the salting
+    machinery — salting redistributed O(s^2) JOIN-reducer work, but
+    with in-array emission the bound is the cap itself.  The global
+    cross-band dedup is the second shuffle; the broadcast-gather tier
+    avoids it (:func:`block_pairs_pruned`).
 
     Same output contract as cap_blocks + candidate_pairs: every
     unordered in-block pair (id_a < id_b) from blocks of size <= the
     drop threshold (salt_up_to when set, else max_block_size), plus the
     suppressed-block stats frame (band_id, band_hash, block_size)."""
+    blocks, suppressed = _capped_blocks(
+        bands, id_col, _drop_above(max_block_size, salt_up_to)
+    )
+    pairs = explode_lower_triangle(blocks, "ids").dropDuplicates(
+        ["id_a", "id_b"]
+    )
+    return pairs, suppressed
+
+
+def block_pairs_pruned(
+    bands: DataFrame,
+    prune_bc,
+    threshold: float,
+    id_col: str = "conv_id",
+    max_block_size: int = 64,
+    salt_up_to: int = 0,
+) -> DataFrame:
+    """:func:`block_pairs` + the length/histogram prune in ONE exchange:
+    returns the surviving (id_a, id_b) (the suppressed-block stats are
+    block_pairs' second output — the same blocks).
+
+    The capped blocks come from the same window-count + collect_list
+    exchange; then a single mapInArrow pass emits each block's triangle
+    pairs and keeps a pair only where this block's band is the LOWEST
+    band in which the two docs share a key whose block is kept
+    (2 <= size <= drop threshold).  Every distinct candidate pair thus
+    leaves exactly one block — dedup by construction, no (id_a, id_b)
+    shuffle (the ICDE'19 metric-join partitioning idea).  The size
+    check matters: a pair's first collision can sit in a suppressed
+    stop-band block, and it must then come from its next kept band.
+    The same pass applies scoring.prune_pairs_arrow's length +
+    histogram bounds (identical f64 comparisons), so only survivors
+    leave Python — the set equals block_pairs + dropDuplicates +
+    prune_pairs_arrow.
+
+    ``prune_bc`` is scoring.build_prune_broadcast's value: per-doc
+    len/hist plus all block keys and their block sizes, id-sorted.
+    Bands must carry the prefix key as band -1 and minhash bands
+    0..k-1 (bands_from_features)."""
+    from pyspark.sql import types as T
+
+    drop_above = _drop_above(max_block_size, salt_up_to)
+    blocks, _ = _capped_blocks(bands, id_col, drop_above)
+    elem = blocks.schema["ids"].dataType.elementType
+    out_schema = T.StructType(
+        [T.StructField("id_a", elem, False), T.StructField("id_b", elem, False)]
+    )
+    return blocks.select("band_id", "ids").mapInArrow(
+        _first_band_prune_arrow_fn(prune_bc, drop_above, threshold), out_schema
+    )
+
+
+def _drop_above(max_block_size: int, salt_up_to: int) -> int:
+    return salt_up_to if salt_up_to > max_block_size else max_block_size
+
+
+def _capped_blocks(
+    bands: DataFrame, id_col: str, drop_above: int
+) -> tuple[DataFrame, DataFrame]:
+    """(band_id, band_hash, ids) for blocks of 2..drop_above members,
+    plus the suppressed-block stats — all off one exchange (see
+    :func:`block_pairs`)."""
     from pyspark.sql import Window
 
-    drop_above = salt_up_to if salt_up_to > max_block_size else max_block_size
     w = Window.partitionBy("band_id", "band_hash")
     sized = bands.withColumn("block_size", F.count(F.lit(1)).over(w))
     suppressed = (
@@ -370,10 +430,73 @@ def block_pairs(
         .groupBy("band_id", "band_hash")
         .agg(F.collect_list(F.col(id_col)).alias("ids"))
     )
-    pairs = explode_lower_triangle(blocks, "ids").dropDuplicates(
-        ["id_a", "id_b"]
-    )
-    return pairs, suppressed
+    return blocks, suppressed
+
+
+def _first_band_prune_arrow_fn(
+    prune_bc, drop_above: int, threshold: float, max_pairs: int = 1 << 16
+):
+    """RecordBatch (band_id, ids list<long>) -> surviving (id_a, id_b),
+    id_a < id_b; see :func:`block_pairs_pruned`.  Pairs whose id is
+    missing from the broadcast are dropped (the join tier's inner-join
+    semantics)."""
+    lim = 1.0 - threshold
+
+    def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        ids, lens, hists, keys, sizes = prune_bc.value
+        hi = len(ids) - 1
+        for batch in batches:
+            if batch.num_rows == 0 or hi < 0:
+                continue
+            col = batch.column(1)
+            offsets = np.asarray(col.offsets, dtype=np.int64)
+            vals = np.asarray(col.values, dtype=np.int64)[offsets[0] : offsets[-1]]
+            offsets = offsets - offsets[0]
+            # keys row 0 is the prefix key (band -1), row k+1 band k
+            elem_row = np.repeat(
+                np.asarray(batch.column(0), dtype=np.int64) + 1, np.diff(offsets)
+            )
+            pos = np.clip(np.searchsorted(ids, vals), 0, hi)
+            found = ids[pos] == vals
+            for ia, ib in _triangle_chunks(offsets, max_pairs):
+                pa_, pb_ = pos[ia], pos[ib]
+                row = elem_row[ia]
+                keep = found[ia] & found[ib]
+                # emit only from the first band sharing a KEPT block
+                for j in range(int(row.max())):
+                    kj = keys[j]
+                    keep &= ~(
+                        (row > j)
+                        & (kj[pa_] == kj[pb_])
+                        & (sizes[j][pa_] <= drop_above)
+                    )
+                la, lb = lens[pa_], lens[pb_]
+                maxlen = np.maximum(la, lb)
+                bound = lim * maxlen  # (1-τ)*max in f64, as prune_pairs_arrow
+                keep &= (maxlen - np.minimum(la, lb)) <= bound
+                sub = np.nonzero(keep)[0]
+                # L1 in slices: the (pairs, 96) gathers dominate memory;
+                # int32 holds any sum of 96 u16 differences exactly
+                for s0 in range(0, len(sub), 4096):
+                    ss = sub[s0 : s0 + 4096]
+                    l1 = np.abs(
+                        hists[pa_[ss]].astype(np.int32)
+                        - hists[pb_[ss]].astype(np.int32)
+                    ).sum(axis=1)
+                    keep[ss] &= (l1 / 2.0) <= bound[ss]
+                sel = np.nonzero(keep)[0]
+                if not len(sel):
+                    continue
+                a, b = vals[ia[sel]], vals[ib[sel]]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.minimum(a, b)), pa.array(np.maximum(a, b))],
+                    ["id_a", "id_b"],
+                )
+
+    return fn
 
 
 def explode_lower_triangle(
@@ -407,6 +530,39 @@ def explode_lower_triangle(
     return src.mapInArrow(_triangle_arrow_fn(out), out_schema)
 
 
+def _triangle_chunks(offsets, max_pairs: int):
+    """Yield (ia, ib) int64 index arrays into the flat values of a list
+    column with these offsets: every unordered in-list pair once.
+    Lists are grouped by size so each group's pair indices come from
+    one broadcasted triu table (fully vectorized), and the output is
+    chunked at ~max_pairs so a near-cap block never materializes
+    O(size^2) indices in one allocation."""
+    import numpy as np
+
+    starts = offsets[:-1]
+    sizes = np.diff(offsets)
+    order = np.argsort(sizes, kind="stable")
+    by_size = sizes[order]
+    pend_a: list = []
+    pend_b: list = []
+    pend = 0
+    for s in np.unique(by_size[by_size >= 2]):
+        lo, hi = np.searchsorted(by_size, [s, s + 1])
+        group = starts[order[lo:hi]]
+        ii, jj = np.triu_indices(int(s), 1)
+        rows_per = max(1, max_pairs // len(ii))
+        for g0 in range(0, len(group), rows_per):
+            g = group[g0 : g0 + rows_per, None]
+            pend_a.append((g + ii).ravel())
+            pend_b.append((g + jj).ravel())
+            pend += len(pend_a[-1])
+            if pend >= max_pairs:
+                yield np.concatenate(pend_a), np.concatenate(pend_b)
+                pend_a, pend_b, pend = [], [], 0
+    if pend:
+        yield np.concatenate(pend_a), np.concatenate(pend_b)
+
+
 def _triangle_arrow_fn(out: tuple, max_pairs_per_batch: int = 1 << 18):
     """RecordBatch (ids list<T>) -> (out0 T, out1 T): every unordered
     in-list pair, out0 = min, out1 = max — value-identical to the
@@ -418,78 +574,24 @@ def _triangle_arrow_fn(out: tuple, max_pairs_per_batch: int = 1 << 18):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        triu_cache: dict[int, tuple] = {}
-
-        def triu(s: int):
-            t = triu_cache.get(s)
-            if t is None:
-                ii, jj = np.triu_indices(s, 1)
-                t = triu_cache[s] = (ii.astype(np.int64), jj.astype(np.int64))
-            return t
-
         for batch in batches:
             col = batch.column(0)
             if isinstance(col, pa.ChunkedArray):  # pragma: no cover
                 col = col.combine_chunks()
-            # flatten() drops the list layer; offsets bound each block
             # ListArray.offsets respects the logical slice and indexes
             # into .values (the unsliced child), so absolute takes work
             offsets = np.asarray(col.offsets, dtype=np.int64)
             values = col.values
-            starts = offsets[:-1]
-            sizes = np.diff(offsets)
             emitted_any = False
-            # group blocks by size so each group's pair indices come from
-            # one broadcasted triu table (fully vectorized)
-            order = np.argsort(sizes, kind="stable")
-            pos = 0
-            n_blocks = len(sizes)
-            pend_a: list[np.ndarray] = []
-            pend_b: list[np.ndarray] = []
-            pend = 0
-
-            def flush():
-                nonlocal pend, pend_a, pend_b, emitted_any
-                if not pend:
-                    return None
-                ia = np.concatenate(pend_a)
-                ib = np.concatenate(pend_b)
-                pend_a, pend_b, pend = [], [], 0
+            for ia, ib in _triangle_chunks(offsets, max_pairs_per_batch):
                 va = values.take(pa.array(ia))
                 vb = values.take(pa.array(ib))
                 lt = pc.less_equal(va, vb)
                 emitted_any = True
-                return pa.RecordBatch.from_arrays(
+                yield pa.RecordBatch.from_arrays(
                     [pc.if_else(lt, va, vb), pc.if_else(lt, vb, va)],
                     [out[0], out[1]],
                 )
-
-            while pos < n_blocks:
-                s = int(sizes[order[pos]])
-                end = pos
-                while end < n_blocks and sizes[order[end]] == s:
-                    end += 1
-                if s >= 2:
-                    ii, jj = triu(s)
-                    npairs = len(ii)
-                    group = starts[order[pos:end]]
-                    # chunk the group so one flush stays bounded
-                    rows_per = max(1, max_pairs_per_batch // max(npairs, 1))
-                    for g0 in range(0, len(group), rows_per):
-                        g = group[g0 : g0 + rows_per]
-                        ia = (g[:, None] + ii[None, :]).ravel()
-                        ib = (g[:, None] + jj[None, :]).ravel()
-                        pend_a.append(ia)
-                        pend_b.append(ib)
-                        pend += len(ia)
-                        if pend >= max_pairs_per_batch:
-                            b = flush()
-                            if b is not None:
-                                yield b
-                pos = end
-            b = flush()
-            if b is not None:
-                yield b
             if not emitted_any:
                 # mapInArrow tolerates empty output, but keep the stream
                 # well-typed for readers that peek the first batch

@@ -40,17 +40,13 @@ class PipelineConfig:
     # guaranteed margin on both sides
     threshold: float = 0.94
     max_block_size: int = 64
-    # blocks between max_block_size and salt_up_to get salted sub-keys
-    # (bounded O(max^2) work per salt) instead of being dropped
+    # the block-size cap: blocks of more than max(max_block_size,
+    # salt_up_to) members are suppressed as stop-bands (reported in
+    # suppressed_blocks); every smaller block emits all its pairs
+    # in-array, unsalted (blocking.block_pairs)
     salt_up_to: int = 1024
     checkpoint_dir: str | None = None
     cc_max_iterations: int = 20
-    # Fail loudly on an xxhash64 surrogate-key collision (ADVICE r4):
-    # one cheap agg over the canonical-docs stage.  Runs whenever the
-    # stage is checkpoint-materialized (re-reading it is one scan); in
-    # lineage-only runs the agg would recompute the whole canonicalize,
-    # so set True to force it anyway.
-    verify_surrogate_keys: bool | None = None
 
 
 def run_pipeline(
@@ -58,7 +54,13 @@ def run_pipeline(
     transcripts: DataFrame,
     cfg: PipelineConfig | None = None,
 ) -> dict[str, DataFrame]:
-    """Returns {'docs', 'pairs', 'scored', 'clusters', 'suppressed_blocks'}."""
+    """Returns {'docs', 'pairs', 'scored', 'clusters', 'suppressed_blocks'}.
+
+    ``pairs`` holds the candidate pairs (surrogate ``did`` ids, id_a <
+    id_b) that SURVIVE the length + histogram prune — on both tiers, so
+    a ``pairs`` checkpoint resumes straight into scoring; the raw
+    deduplicated candidate set is never materialized.  ``scored`` holds
+    those pairs' edit distances and similarities under conv_ids."""
     cfg = cfg or PipelineConfig()
     ckpt = CheckpointManager(spark, cfg.checkpoint_dir)
 
@@ -66,8 +68,9 @@ def run_pipeline(
     # and the candidate-pair set are shuffled several times each, and a
     # string conv_id costs ~3x the bytes of a long in UnsafeRow format.
     # xxhash64 is deterministic across runs/executors; the collision
-    # probability for n docs is n^2/2^65 (~2e-9 at 1M docs — document,
-    # don't handle).  conv_id reappears only in the (small) outputs.
+    # probability for n docs is n^2/2^65 (~2e-9 at 1M docs), and the
+    # guard below makes one fail loudly.  conv_id reappears only in the
+    # (small) outputs.
     docs = ckpt.stage(
         "canonical_docs",
         lambda: canon.canonicalize(transcripts).withColumn(
@@ -75,31 +78,11 @@ def run_pipeline(
         ),
     )
 
-    # Collision guard (ADVICE r4): a did collision would silently merge
-    # two conversations through blocking/scoring and FAN OUT rows at the
-    # conv_id remap join — corrupting clusters instead of erroring.  One
-    # agg makes it fail loudly.  canonicalize emits one row per conv_id
-    # (groupBy), so count(*) == countDistinct(did) iff no collision.
-    verify = cfg.verify_surrogate_keys
-    if verify is None:
-        verify = cfg.checkpoint_dir is not None
-    if verify:
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col("did")).alias("n_did"),
-        ).collect()[0]
-        if row["n"] != row["n_did"]:
-            raise RuntimeError(
-                f"xxhash64(conv_id) surrogate-key collision: {row['n']} docs "
-                f"-> {row['n_did']} distinct dids; rerun with a string key "
-                "or a salted surrogate"
-            )
-
-    # Fused per-document features: band keys + prune len/histogram from
+    # Fused per-document features: block keys + prune len/histogram from
     # ONE Python pass over the corpus (blocking.doc_features) — the
-    # text used to cross the JVM->Python boundary twice (fingerprint
-    # bands, then prune histograms), and the checkpoint now stores the
-    # narrow 133k-row feature table instead of the exploded band table.
+    # text crosses the JVM->Python boundary once, and the checkpoint
+    # stores the narrow 133k-row feature table instead of the exploded
+    # band table.
     def _feats():
         return blocking.doc_features(
             docs,
@@ -112,74 +95,44 @@ def run_pipeline(
         )
 
     feats = ckpt.stage("doc_features", _feats)
-    bands = blocking.bands_from_features(feats, docs, id_col="did")
-    pairs_df, suppressed = blocking.block_pairs(
-        bands, id_col="did", max_block_size=cfg.max_block_size,
-        salt_up_to=cfg.salt_up_to,
+    _, suppressed = blocking.block_pairs(
+        blocking.bands_from_features(feats, id_col="did"), **_block_kw(cfg)
     )
-    pairs = ckpt.stage("pairs", lambda: pairs_df)
 
-    id_map = docs.select("did", "conv_id")
-
-    # broadcasts created by _scored(), released (executor blocks) once
-    # the stage is materialized — the checkpoint truncates the lineage,
-    # so nothing re-executes the UDFs that captured them; unpersist
+    # the gather tier's broadcast, released (executor blocks) once
+    # `pairs` is materialized — the checkpoint truncates the lineage,
+    # so nothing re-executes the kernel that captured it; unpersist
     # (not destroy) keeps the driver copy as a safety net
     gather_bcs: list = []
 
-    def _scored():
-        # Two-tier prune+score (scoring.py "Gathered" block): when the
-        # corpus passes the broadcast gates, per-doc attributes and
-        # texts ship ONCE per worker and the candidate stream stays
-        # (id_a, id_b) — no attribute/text joins, no per-pair histogram
-        # transport.  Beyond the gates (or SZ_NO_GATHER=1) the
-        # join-based path runs unchanged; both tiers make identical
-        # τ-decisions (tests/test_pipeline.py gather-parity tests).
-        if scoring.gather_gate(feats):
-            prune_bc = scoring.build_prune_broadcast(
-                feats.select("did", "len", "hist")
-            )
-            gather_bcs.append(prune_bc)
-            pruned = scoring.prune_pairs_gathered(
-                pairs, prune_bc, cfg.threshold
-            )
-            import os as _os
+    def _pairs():
+        out, bcs = pairs_stage(docs, feats, cfg)
+        gather_bcs.extend(bcs)
+        for bc in bcs:
+            ids = bc.value[0]  # id-sorted: a collision is a repeat
+            _check_surrogate_keys(len(ids), len(ids) - int((ids[1:] == ids[:-1]).sum()))
+        return out
 
-            if _os.environ.get("SZ_TEXT_GATHER") == "1" and scoring.text_gather_gate(
-                docs
-            ):
-                # Full-gather twin: also broadcast the text blob and
-                # score join-free.  Measured a wash at the probe (the
-                # ~2 s driver collect+broadcast of the 89 MB corpus
-                # cancels the ~0.6 s survivor text joins + transport it
-                # removes), so the default scores the (tiny) survivor
-                # set through attach_texts; the tier stays for corpora
-                # whose survivor count is large relative to their text
-                # bytes.
-                text_bc = scoring.build_text_broadcast(docs, id_col="did")
-                gather_bcs.append(text_bc)
-                out = scoring.score_pairs_gathered(
-                    pruned, text_bc, bounded=cfg.threshold
-                ).select("id_a", "id_b", "edit_distance", "sim")
-            else:
-                with_texts = scoring.attach_texts(pruned, docs, id_col="did")
-                out = scoring.score_pairs(
-                    with_texts, threshold=None, bounded=cfg.threshold
-                ).select("id_a", "id_b", "edit_distance", "sim")
-        else:
-            # prune BEFORE attaching texts: the length/histogram prunes
-            # need only (len, hist) per side (~800 B/pair) and drop ~95%
-            # of candidates; the doc bytes join only the survivors
-            # (measured funnel in scoring.attach_prune_attrs docstring)
-            attrs = scoring.attach_prune_attrs(
-                pairs, docs, id_col="did",
-                attrs_frame=feats.select("did", "len", "hist"),
-            )
-            pruned = scoring.prune_pairs_arrow(attrs, cfg.threshold)
-            with_texts = scoring.attach_texts(pruned, docs, id_col="did")
-            out = scoring.score_pairs(
-                with_texts, threshold=None, bounded=cfg.threshold
-            ).select("id_a", "id_b", "edit_distance", "sim")
+    pairs = ckpt.stage("pairs", _pairs)
+    for bc in gather_bcs:
+        bc.unpersist()
+    if not gather_bcs:
+        # join tier, or `pairs` resumed from its checkpoint: one agg.
+        # canonicalize emits one row per conv_id (groupBy), so
+        # count(*) == countDistinct(did) iff no collision.
+        row = docs.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.col("did")).alias("n_did"),
+        ).collect()[0]
+        _check_surrogate_keys(row["n"], row["n_did"])
+
+    id_map = docs.select("did", "conv_id")
+
+    def _scored():
+        with_texts = scoring.attach_texts(pairs, docs, id_col="did")
+        out = scoring.score_pairs(
+            with_texts, threshold=None, bounded=cfg.threshold
+        ).select("id_a", "id_b", "edit_distance", "sim")
         # map surrogates back to conv_ids on the (small) scored output
         return (
             out.join(id_map.withColumnRenamed("did", "id_a"), "id_a")
@@ -195,8 +148,6 @@ def run_pipeline(
         )
 
     scored = ckpt.stage("scored", _scored)
-    for bc in gather_bcs:
-        bc.unpersist()
 
     edges = scored.filter(F.col("sim") >= cfg.threshold).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -221,6 +172,58 @@ def run_pipeline(
         "clusters": clusters,
         "suppressed_blocks": suppressed,
     }
+
+
+def _block_kw(cfg: PipelineConfig) -> dict:
+    return dict(
+        id_col="did", max_block_size=cfg.max_block_size,
+        salt_up_to=cfg.salt_up_to,
+    )
+
+
+def pairs_stage(
+    docs: DataFrame, feats: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, list]:
+    """run_pipeline's ``pairs`` stage frame — the prune survivors (did
+    ids, id_a < id_b) — plus the broadcasts it captured, to unpersist
+    once the frame is materialized.
+
+    Two tiers (scoring.py "Gathered" block).  Below the gate every
+    doc's prune attributes and block keys ship ONCE per worker, and
+    blocking.block_pairs_pruned emits each candidate from exactly one
+    block and prunes it in the same pass — no dedup shuffle, no
+    per-pair attribute joins.  Beyond the gate (or SZ_NO_GATHER=1) the
+    candidates are deduplicated and get their (len, hist) joined on.
+    Both tiers keep the identical pair set (tests/test_pipeline.py
+    parity tests)."""
+    bands = blocking.bands_from_features(feats, id_col="did")
+    if scoring.gather_gate(feats):
+        prune_bc = scoring.build_prune_broadcast(feats)
+        pairs = blocking.block_pairs_pruned(
+            bands, prune_bc, cfg.threshold, **_block_kw(cfg)
+        )
+        return pairs, [prune_bc]
+    candidates, _ = blocking.block_pairs(bands, **_block_kw(cfg))
+    # prune BEFORE attaching texts: the prunes need only (len, hist)
+    # per side and drop ~95% of candidates; the doc bytes join only the
+    # survivors (measured funnel in scoring.attach_prune_attrs)
+    attrs = scoring.attach_prune_attrs(
+        candidates, docs, id_col="did",
+        attrs_frame=feats.select("did", "len", "hist"),
+    )
+    return scoring.prune_pairs_arrow(attrs, cfg.threshold), []
+
+
+def _check_surrogate_keys(n_docs: int, n_distinct: int) -> None:
+    """A did collision would silently merge two conversations through
+    blocking/scoring and FAN OUT rows at the conv_id remap join —
+    corrupting clusters instead of erroring — so fail loudly."""
+    if n_docs != n_distinct:
+        raise RuntimeError(
+            f"xxhash64(conv_id) surrogate-key collision: {n_docs} docs "
+            f"-> {n_distinct} distinct dids; rerun with a string key "
+            "or a salted surrogate"
+        )
 
 
 def evaluate_pairs(

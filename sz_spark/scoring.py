@@ -18,6 +18,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -208,8 +211,6 @@ def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
     that was the pipeline's largest remaining interpreted surface
     (guide §4.2), and it re-paid the JIT-warmup cliff per fresh JVM.
     SZ_JVM_PRUNE=1 forces the expression twin."""
-    import os
-
     if os.environ.get("SZ_JVM_PRUNE") == "1":
         return histogram_prune(length_prune(attrs, threshold), threshold).select(
             "id_a", "id_b"
@@ -266,267 +267,103 @@ def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Gathered (broadcast) prune + score: the small-corpus fast tier
+# Gathered (broadcast) prune: the small-corpus fast tier
 # ---------------------------------------------------------------------------
 #
-# The join-based prune/score path is the scale-correct design: per-pair
-# attribute/text transport grows with the PAIR count and never assumes
-# the doc table fits anywhere.  But when the deduplicated corpus is
-# small enough that its feature table (208 B/doc) — and optionally its
-# text bytes — fit comfortably in each Python worker, shipping the doc
-# table ONCE per worker as a Spark broadcast and gathering per-pair
-# attributes locally beats joining them onto every candidate row:
-# at the 975k-turn probe the join path moved ~560 MB of per-pair
-# histograms through two sort-merge joins plus the Arrow boundary,
-# where the broadcast is 26 MB per worker, and the pair stream itself
-# shrinks to 16 B/row.  This is the same two-tier trade Spark's own
-# broadcast-hash join makes, and the same hybrid posture as
-# clustering.connected_components' driver union-find fast path.
+# The join-based prune path is the scale-correct design: per-pair
+# attribute transport grows with the PAIR count and never assumes the
+# doc table fits anywhere.  But when the corpus is small enough that
+# its feature table fits comfortably in each Python worker, shipping
+# the doc table ONCE per worker as a Spark broadcast and gathering
+# per-pair attributes locally beats joining them onto every candidate
+# row: at the 975k-turn probe the join path moved ~560 MB of per-pair
+# histograms through two sort-merge joins plus the Arrow boundary.
+# With every doc's block keys and block sizes in the same broadcast,
+# blocking.block_pairs_pruned also emits each candidate pair from
+# exactly one block and prunes it in that pass, so the tier needs no
+# cross-band dedup shuffle either.  This is the same two-tier trade
+# Spark's own broadcast-hash join makes, and the same hybrid posture
+# as clustering.connected_components' driver union-find fast path.
 #
-# Memory math for the default gates (SZ_GATHER_MAX_DOCS = 1M docs,
-# SZ_GATHER_MAX_TEXT_MB = 256): prune broadcast <= 1M x 208 B = 208 MB,
-# text broadcast <= 256 MB + 16 B/doc of offsets; each Python worker
-# process holds one copy while it lives, so an executor running W
-# workers pays <= W x ~0.5 GB — sized for standard 4-8 GB executors.
-# Above the gates the join path runs unchanged (it is also the
+# Memory math for the default gate (SZ_GATHER_MAX_DOCS = 1M docs, 24
+# bands + the prefix key): per doc the broadcast holds id 8 B + len
+# 8 B + hist 192 B + 25 block keys x 8 B + 25 block sizes x 4 B =
+# 508 B, so <= 508 MB at the gate.  Each Python worker process holds
+# one copy while it lives, so an executor running W workers pays
+# <= W x ~0.5 GB — the same per-worker budget the tier had before it
+# carried keys (208 MB prune table + a 256 MB text blob, now removed),
+# sized for standard 4-8 GB executors.  The driver transiently holds
+# the collected Arrow table and the sorted arrays (~1 GB at the gate).
+# Above the gate the join path runs unchanged (it is also the
 # SZ_NO_GATHER=1 twin the differential tests compare against).
+
+_log = logging.getLogger(__name__)
 
 
 def gather_gate(feats: DataFrame) -> bool:
     """True when the corpus is small enough for the broadcast-gather
-    PRUNE tier (one cheap count over the — checkpointed — feature
-    table).  The prune broadcast is 208 B/doc regardless of text size,
-    so only the doc count gates it; the text tier has its own
-    byte-exact gate (:func:`text_gather_gate`)."""
-    import os
-
+    tier (one cheap count over the — checkpointed — feature table).
+    The broadcast is 508 B/doc regardless of text size, so only the doc
+    count gates it; a malformed SZ_GATHER_MAX_DOCS falls back to the
+    default with a warning."""
     if os.environ.get("SZ_NO_GATHER") == "1":
         return False
-    max_docs = int(os.environ.get("SZ_GATHER_MAX_DOCS", "1000000"))
+    max_docs = 1_000_000
+    raw = os.environ.get("SZ_GATHER_MAX_DOCS")
+    if raw is not None:
+        try:
+            max_docs = int(raw)
+        except ValueError:
+            _log.warning(
+                "ignoring malformed SZ_GATHER_MAX_DOCS=%r; using %d", raw, max_docs
+            )
     row = feats.agg(F.count(F.lit(1)).alias("n")).collect()[0]
     return row["n"] <= max_docs
 
 
-def text_gather_gate(
-    docs: DataFrame, text_col: str = "doc"
-) -> bool:
-    """True when the corpus's UTF-8 BYTES fit the text-broadcast budget
-    (octet_length, not codepoints — a CJK-heavy corpus is up to 4 bytes
-    per char, and the blob must match the documented per-worker memory
-    math)."""
-    import os
-
-    max_bytes = int(os.environ.get("SZ_GATHER_MAX_TEXT_MB", "256")) * (1 << 20)
-    row = docs.agg(
-        F.sum(F.octet_length(F.col(text_col))).alias("b")
-    ).collect()[0]
-    return (row["b"] or 0) <= max_bytes
-
-
 def build_prune_broadcast(feats: DataFrame):
-    """Collect the (id, len, hist) doc-feature table to the driver,
-    pack it as id-sorted NumPy arrays, and broadcast it.
+    """Collect a :func:`blocking.doc_features` table (id, len, pk, bk,
+    hist) to the driver, pack it as id-sorted NumPy arrays, and
+    broadcast it for :func:`blocking.block_pairs_pruned`.
 
-    ``value = (ids_sorted i64, char_lens i64, hists (n, 96) u16)``.
-    The hist bytes are exactly the packed u16 blobs doc_features /
-    _prune_attrs_packed emit, so gathered prune decisions are
-    value-identical to the join path's.  Collection is Arrow-native
-    (DataFrame.toArrow); the hist matrix is a view over the collected
-    Arrow buffer — no per-row Python objects on the driver (~0.25 s
-    for the 133k-doc probe corpus)."""
+    ``value = (ids i64 (n,), char_lens i64 (n,), hists u16 (n, 96),
+    keys i64 (1 + n_bands, n), sizes i32 (1 + n_bands, n))``: key row 0
+    is the prefix key (band -1), row k+1 band k; ``sizes`` is the size
+    of the block each key falls in (one np.unique per band — the same
+    counts as block_pairs' window count).  The hist bytes are exactly
+    the packed u16 blobs doc_features emits, so gathered prune
+    decisions are value-identical to the join path's.  Collection is
+    Arrow-native (DataFrame.toArrow); no per-row Python objects on the
+    driver."""
     import numpy as np
 
     from sz_spark.udfs import arrow_binary_flat
 
     spark = feats.sparkSession
-    cols = feats.columns
-    ftbl = feats.select(cols[0], cols[1], cols[2]).toArrow()
+    ftbl = feats.select(feats.columns[0], "len", "pk", "bk", "hist").toArrow()
+    n = ftbl.num_rows
     ids = ftbl.column(0).to_numpy().astype(np.int64, copy=False)
     lens = ftbl.column(1).to_numpy().astype(np.int64)
-    hcol = ftbl.column(2).combine_chunks()
-    hdata, hoff = arrow_binary_flat(hcol)
-    if len(ids) and not (np.diff(hoff) == 192).all():  # pragma: no cover
+    bk_vals = np.asarray(ftbl.column(3).combine_chunks().flatten(), dtype=np.int64)
+    bk_vals = bk_vals.reshape(n, len(bk_vals) // max(n, 1))
+    keys = np.vstack([ftbl.column(2).to_numpy()[None, :], bk_vals.T])
+    sizes = np.empty(keys.shape, dtype=np.int32)
+    for j, row in enumerate(keys):
+        _, inv, cnt = np.unique(row, return_inverse=True, return_counts=True)
+        sizes[j] = cnt[inv]
+    hdata, hoff = arrow_binary_flat(ftbl.column(4).combine_chunks())
+    if n and not (np.diff(hoff) == 192).all():  # pragma: no cover
         raise ValueError("doc_features hist blobs must be 96 u16 bins")
-    hists = hdata[hoff[0] : hoff[-1]].view("<u2").reshape(len(ids), 96)
+    hists = hdata[hoff[0] : hoff[-1]].view("<u2").reshape(n, 96)
     order = np.argsort(ids, kind="stable")
-    return spark.sparkContext.broadcast((ids[order], lens[order], hists[order]))
-
-
-def build_text_broadcast(
-    docs: DataFrame, id_col: str = "conv_id", text_col: str = "doc"
-):
-    """Collect the doc texts to the driver as one flat byte blob and
-    broadcast them for :func:`score_pairs_gathered`.
-
-    ``value = (ids_sorted i64, char_lens i64, starts i64, byte_lens
-    i64, blob u8)``; char_lens are codepoint counts (== attach_texts'
-    F.length), starts/byte_lens index into the blob.  Arrow-native like
-    :func:`build_prune_broadcast` (a toPandas + .encode() loop measured
-    3.3 s for the 89 MB probe corpus; this path ~2 s, most of it the
-    unavoidable 89 MB collect + broadcast write)."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    from sz_spark.udfs import arrow_binary_flat
-
-    spark = docs.sparkSession
-    ttbl = docs.select(id_col, text_col).toArrow()
-    tids = ttbl.column(0).to_numpy().astype(np.int64, copy=False)
-    tcol = ttbl.column(1).combine_chunks()
-    char_lens = pc.utf8_length(tcol).to_numpy().astype(np.int64)
-    blob, toff = arrow_binary_flat(tcol)
-    torder = np.argsort(tids, kind="stable")
     return spark.sparkContext.broadcast(
         (
-            tids[torder],
-            char_lens[torder],
-            toff[:-1][torder],
-            np.diff(toff)[torder],
-            blob,
+            ids[order],
+            lens[order],
+            hists[order],
+            np.ascontiguousarray(keys[:, order]),
+            np.ascontiguousarray(sizes[:, order]),
         )
-    )
-
-
-def prune_pairs_gathered(
-    pairs: DataFrame, prune_bc, threshold: float
-) -> DataFrame:
-    """Fused length + histogram prune gathering per-doc attributes from
-    ``prune_bc`` instead of joining them onto each pair — the same f64
-    comparisons on the same values as :func:`prune_pairs_arrow`, so the
-    surviving pair set is identical (pairs whose id is missing from the
-    feature table are dropped, matching the join path's inner joins)."""
-    from pyspark.sql import types as T
-
-    src = pairs.select("id_a", "id_b")
-    out_schema = T.StructType([src.schema["id_a"], src.schema["id_b"]])
-    lim = 1.0 - threshold
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        ids, lens, hists = prune_bc.value
-        hi = len(ids) - 1
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if hi < 0:
-                # empty feature table: the join path's inner joins drop
-                # every pair — emit nothing
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0).slice(0, 0), batch.column(1).slice(0, 0)],
-                    ["id_a", "id_b"],
-                )
-                continue
-            a = np.asarray(batch.column(0), dtype=np.int64)
-            b = np.asarray(batch.column(1), dtype=np.int64)
-            ia = np.clip(np.searchsorted(ids, a), 0, hi)
-            ib = np.clip(np.searchsorted(ids, b), 0, hi)
-            la = lens[ia]
-            lb = lens[ib]
-            maxlen = np.maximum(la, lb)
-            bound = lim * maxlen
-            keep = (ids[ia] == a) & (ids[ib] == b)
-            keep &= (maxlen - np.minimum(la, lb)) <= bound
-            sub = np.nonzero(keep)[0]
-            if len(sub):
-                l1 = np.abs(
-                    hists[ia[sub]].astype(np.int64)
-                    - hists[ib[sub]].astype(np.int64)
-                ).sum(axis=1)
-                keep[sub] &= (l1 / 2.0) <= bound[sub]
-            idx = pa.array(np.nonzero(keep)[0].astype(np.int32))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0).take(idx), batch.column(1).take(idx)],
-                ["id_a", "id_b"],
-            )
-
-    return src.mapInArrow(fn, out_schema)
-
-
-def score_pairs_gathered(
-    pairs: DataFrame, text_bc, bounded: float, chunk: int = 1024
-) -> DataFrame:
-    """Banded-DP scoring gathering BOTH documents of every pair from
-    the broadcast text blob — no text join, no per-pair text transport;
-    the kernel reads the two sides straight out of one shared buffer.
-
-    Same math as the join path (make_bounded_lev_arrow_fn): pairs are
-    byte-length-sorted and scored in chunks with a per-chunk band bound,
-    so every kept (sim >= τ) pair's edit_distance/sim is identical; the
-    clamped placeholder values of sub-τ pairs may differ by chunk
-    composition, exactly as they already do between batch layouts (the
-    chunk bound strictly exceeds (1-τ)*maxlen, so τ-decisions never
-    depend on grouping).  Emits (id_a, id_b, edit_distance, sim); the
-    sim expression is the join path's verbatim, on char lengths from
-    the broadcast (== attach_texts' F.length values)."""
-    from pyspark.sql import types as T
-
-    from sz_spark import kernels as K
-
-    src = pairs.select("id_a", "id_b").repartition(scoring_fanout(pairs))
-    out_schema = T.StructType(
-        [
-            src.schema["id_a"],
-            src.schema["id_b"],
-            T.StructField("edit_distance", T.LongType(), False),
-            T.StructField("len_a", T.LongType(), False),
-            T.StructField("len_b", T.LongType(), False),
-        ]
-    )
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        ids, char_lens, starts, byte_lens, blob = text_bc.value
-        hi = len(ids) - 1
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            a = np.asarray(batch.column(0), dtype=np.int64)
-            b = np.asarray(batch.column(1), dtype=np.int64)
-            if hi < 0:
-                # empty doc table: inner-join parity — drop every pair
-                a = b = np.zeros(0, dtype=np.int64)
-                ia = ib = np.zeros(0, dtype=np.int64)
-            else:
-                ia = np.clip(np.searchsorted(ids, a), 0, hi)
-                ib = np.clip(np.searchsorted(ids, b), 0, hi)
-                ok = (ids[ia] == a) & (ids[ib] == b)
-                if not ok.all():
-                    sel = np.nonzero(ok)[0]
-                    a, b, ia, ib = a[sel], b[sel], ia[sel], ib[sel]
-            n = len(a)
-            out = np.zeros(n, dtype=np.int64)
-            if n:
-                sa, la = starts[ia], byte_lens[ia]
-                sb, lb = starts[ib], byte_lens[ib]
-                maxlen = np.maximum(la, lb)
-                order = np.argsort(maxlen, kind="stable")
-                for s in range(0, n, chunk):
-                    idx = order[s : s + chunk]
-                    m = int(maxlen[idx].max())
-                    bnd = int((1.0 - bounded) * m) + 1
-                    out[idx] = K.bounded_lev_ladder(
-                        blob, sa[idx], la[idx], blob, sb[idx], lb[idx], bnd
-                    )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(a, type=pa.int64()),
-                    pa.array(b, type=pa.int64()),
-                    pa.array(out, type=pa.int64()),
-                    pa.array(char_lens[ia], type=pa.int64()),
-                    pa.array(char_lens[ib], type=pa.int64()),
-                ],
-                ["id_a", "id_b", "edit_distance", "len_a", "len_b"],
-            )
-
-    out = src.mapInArrow(fn, out_schema)
-    return out.withColumn(
-        "sim",
-        F.lit(1.0)
-        - F.col("edit_distance") / F.greatest("len_a", "len_b").cast("double"),
     )
 
 
@@ -600,8 +437,6 @@ def score_pairs(
     pairs_with_texts = pairs_with_texts.repartition(
         scoring_fanout(pairs_with_texts)
     )
-    import os
-
     if (
         bounded is not None
         and not add_jaro_winkler

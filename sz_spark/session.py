@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -130,7 +131,9 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     slot) that performs the worker-side imports and touches the
     compiled kernel twin so its dlopen (or first-time gcc build, on a
     cold cache) also happens here rather than inside a timed stage.
-    Best-effort: any failure leaves the session fully functional.
+    Best-effort: a failure leaves the session usable and is logged once
+    here — the same fault (e.g. workers that cannot import sz_spark)
+    would otherwise surface only inside the first real query.
     SZ_NO_PREWARM=1 skips it (the A/B switch)."""
     try:
         from pyspark.sql import types as T
@@ -159,5 +162,8 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
             .selectExpr("count(1)")
             .collect()
         )
-    except Exception:  # pragma: no cover — prewarm must never break a session
-        pass
+    except Exception as exc:  # prewarm must never break a session
+        logging.getLogger(__name__).warning(
+            "Python worker prewarm failed; the first Arrow stage will pay "
+            "worker start-up and may fail the same way: %s", exc
+        )

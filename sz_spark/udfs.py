@@ -318,8 +318,8 @@ def make_doc_features_arrow_fn(
     n_bands: int = 32,
     rows_per_band: int = 4,
 ):
-    """Fused per-document feature kernel: RecordBatch (id, len, text
-    binary) -> (id, len, bk array<long>, hist binary).
+    """Fused per-document feature kernel: RecordBatch (id, len, pk,
+    text binary) -> (id, len, pk, bk array<long>, hist binary).
 
     One pass over the doc bytes computes BOTH the LSH band keys
     (identical math to make_band_keys_arrow_fn) and the packed 96-bin
@@ -328,9 +328,9 @@ def make_doc_features_arrow_fn(
     boundary once instead of twice, and the pipeline materializes one
     narrow feature table instead of feeding two separate Python stages
     (guide §4.1: pass whole batches once, derive everything needed).
-    ``len`` is computed JVM-side (F.length, characters) and carried
-    through so downstream length semantics match the unfused path
-    exactly."""
+    ``len`` (F.length, characters) and ``pk`` (the prefix block key)
+    are computed JVM-side and carried through, so downstream length and
+    prefix-key semantics match the unfused path exactly."""
     assert n_bands * rows_per_band <= ndim
 
     def fn(batches):
@@ -338,12 +338,10 @@ def make_doc_features_arrow_fn(
         import pyarrow as pa
 
         for batch in batches:
-            ids = batch.column(0)
-            lens_col = batch.column(1)
             n = batch.num_rows
             if n == 0:
                 continue
-            data, off = arrow_binary_flat(batch.column(2))
+            data, off = arrow_binary_flat(batch.column(3))
             # band keys (fingerprint + splitmix combine)
             h, _c = K.fingerprints_flat(
                 data, off, ndim=ndim, widths=widths, seed=seed, with_counts=False
@@ -379,8 +377,8 @@ def make_doc_features_arrow_fn(
                 [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(h16.tobytes())],
             )
             yield pa.RecordBatch.from_arrays(
-                [ids, lens_col, lst, hist],
-                [batch.schema.names[0], batch.schema.names[1], "bk", "hist"],
+                [*batch.columns[:3], lst, hist],
+                [*batch.schema.names[:3], "bk", "hist"],
             )
 
     return fn

@@ -154,7 +154,7 @@ def test_surrogate_collision_guard(spark, monkeypatch):
     tr = build_transcripts(spark, SF_DIR)
     monkeypatch.setattr(P.F, "xxhash64", lambda *cols: F.lit(7).cast("long"))
     with pytest.raises(RuntimeError, match="collision"):
-        P.run_pipeline(spark, tr, P.PipelineConfig(verify_surrogate_keys=True))
+        P.run_pipeline(spark, tr, P.PipelineConfig())
 
 
 def test_arrow_transport_parity(spark):
@@ -343,8 +343,8 @@ def test_prune_packed_matches_array_path(spark):
 
 
 def _gather_fixture(spark):
-    """docs / feats / capped candidate pairs at SF_DIR — the inputs the
-    gathered prune/score tier consumes."""
+    """cfg / docs / materialized feats at SF_DIR — the inputs both
+    pairs tiers consume."""
     from pyspark.sql import functions as F
 
     from sz_spark import blocking, canonicalize as canon
@@ -359,82 +359,174 @@ def _gather_fixture(spark):
         docs, id_col="did", ndim=cfg.ndim, widths=cfg.fp_widths,
         seed=cfg.seed, n_bands=cfg.n_bands, rows_per_band=cfg.rows_per_band,
     )
-    bands = blocking.bands_from_features(feats, docs, id_col="did")
-    pairs, _ = blocking.block_pairs(
-        bands, id_col="did", max_block_size=cfg.max_block_size,
+    return cfg, docs, feats.localCheckpoint()
+
+
+def _join_tier_pairs(bands, docs, feats, threshold, **block_kw):
+    """The join tier's pairs stage: dedup, attach (len, hist), prune."""
+    from sz_spark import blocking, scoring
+
+    cand, _ = blocking.block_pairs(bands, id_col="did", **block_kw)
+    attrs = scoring.attach_prune_attrs(
+        cand, docs, id_col="did", attrs_frame=feats.select("did", "len", "hist")
+    )
+    return scoring.prune_pairs_arrow(attrs, threshold)
+
+
+def _pair_rows(df):
+    return [tuple(r) for r in df.select("id_a", "id_b").collect()]
+
+
+@pytest.mark.parametrize(
+    "max_block_size,salt_up_to,shuffled",
+    [(64, 1024, False), (8, 16, False), (4, 0, False), (64, 1024, True)],
+)
+def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled):
+    """blocking.block_pairs_pruned (first-kept-band emission + in-pass
+    prune) must keep EXACTLY the join tier's pair set — block_pairs'
+    dedup, then attach_prune_attrs + prune_pairs_arrow — with no
+    duplicate rows, including under a cap that suppresses blocks (a
+    pair whose first collision is suppressed must come from its next
+    kept band) and under shuffled input order."""
+    from pyspark.sql import functions as F
+
+    from sz_spark import blocking, scoring
+
+    cfg, docs, feats = _gather_fixture(spark)
+    kw = dict(max_block_size=max_block_size, salt_up_to=salt_up_to)
+    want = set(_pair_rows(_join_tier_pairs(
+        blocking.bands_from_features(feats, id_col="did"),
+        docs, feats, cfg.threshold, **kw,
+    )))
+    if shuffled:
+        # every downstream list and broadcast order changes with it
+        feats = feats.orderBy(F.rand(7)).localCheckpoint()
+    bands = blocking.bands_from_features(feats, id_col="did")
+    bc = scoring.build_prune_broadcast(feats)
+    got = _pair_rows(blocking.block_pairs_pruned(
+        bands, bc, cfg.threshold, id_col="did", **kw
+    ))
+    bc.unpersist()
+    assert set(got) == want and len(got) == len(want) > 0
+    assert all(a < b for a, b in got)
+    if salt_up_to == 0:
+        _, sup = blocking.block_pairs(bands, id_col="did", **kw)
+        assert sup.count() > 0  # the suppressed-block leg is not vacuous
+
+
+def test_fused_pairs_first_collision_in_suppressed_block(spark):
+    """Hand-built keys: docs 1-5 share a prefix block of 5 > cap 4
+    (suppressed); docs 1,2 also share bands 0 AND 1, docs 3,4 band 1.
+    Each pair must leave exactly once, from its first KEPT band."""
+    from sz_spark import blocking, scoring
+
+    hist = bytes(192)
+    bk = {1: [7, 9], 2: [7, 9], 3: [11, 13], 4: [12, 13], 5: [14, 15]}
+    feats = spark.createDataFrame(
+        [(d, 10, 100, k, hist) for d, k in bk.items()],
+        "did long, len int, pk long, bk array<long>, hist binary",
+    )
+    bands = blocking.bands_from_features(feats, id_col="did")
+    kw = dict(max_block_size=4, salt_up_to=0)
+    bc = scoring.build_prune_broadcast(feats)
+    got = _pair_rows(blocking.block_pairs_pruned(bands, bc, 0.9, id_col="did", **kw))
+    want = _pair_rows(_join_tier_pairs(bands, None, feats, 0.9, **kw))
+    assert sorted(got) == sorted(want) == [(1, 2), (3, 4)]
+    # an empty corpus broadcasts empty tables and emits nothing
+    empty = feats.limit(0)
+    bc = scoring.build_prune_broadcast(empty)
+    bands = blocking.bands_from_features(empty, id_col="did")
+    assert blocking.block_pairs_pruned(bands, bc, 0.9, id_col="did", **kw).count() == 0
+
+
+def test_fused_pairs_plan_has_one_exchange(spark):
+    """The gather-tier pairs plan shuffles once — the (band_id,
+    band_hash) hash partitioning — and never aggregates on the pair."""
+    import re
+
+    from sz_spark import blocking, scoring
+
+    cfg, docs, feats = _gather_fixture(spark)
+    bc = scoring.build_prune_broadcast(feats)
+    pairs = blocking.block_pairs_pruned(
+        blocking.bands_from_features(feats, id_col="did"), bc, cfg.threshold,
+        id_col="did", max_block_size=cfg.max_block_size,
         salt_up_to=cfg.salt_up_to,
     )
-    return cfg, docs, feats, pairs
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    bc.unpersist()
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert re.search(r"hashpartitioning\(band_id#\d+, band_hash#\d+", exchanges[0])
+    assert not re.search(r"Aggregate.*keys=\[id_a", plan), plan
+    assert "Deduplicate" not in plan
 
 
 def test_gathered_prune_matches_join_path(spark):
-    """prune_pairs_gathered (broadcast doc-feature gather) must keep the
-    IDENTICAL pair set as the join-based prune_pairs_arrow — same f64
-    comparisons on the same len/hist values — and must drop pairs whose
-    id is missing from the feature table, matching the inner joins."""
+    """Band rows whose id is missing from the feature table: the join
+    tier's inner joins drop their pairs, and the fused gather kernel
+    must too (found-mask) — the rest of the pair set is unchanged."""
     from pyspark.sql import functions as F
 
-    from sz_spark import scoring
+    from sz_spark import blocking, scoring
 
-    cfg, docs, feats, pairs = _gather_fixture(spark)
-    # inject a pair with an id absent from feats: the join path drops it
-    # (inner join); the gathered path must too (found-mask)
+    cfg, docs, feats = _gather_fixture(spark)
+    kw = dict(max_block_size=cfg.max_block_size, salt_up_to=cfg.salt_up_to)
+    bands = blocking.bands_from_features(feats, id_col="did")
+    # a bogus id joining the prefix block of one real doc
+    pk = feats.select("pk").first()["pk"]
     bogus = spark.createDataFrame(
-        [(int(-(1 << 60)), int(1 << 60))], "id_a long, id_b long"
+        [(int(-(1 << 60)), -1, pk)], "did long, band_id int, band_hash long"
     )
-    pairs = pairs.unionByName(bogus)
-    attrs = scoring.attach_prune_attrs(
-        pairs, docs, id_col="did", attrs_frame=feats.select("did", "len", "hist")
-    )
-    want = sorted(
-        map(tuple, scoring.prune_pairs_arrow(attrs, cfg.threshold).collect())
-    )
-    bc = scoring.build_prune_broadcast(feats.select("did", "len", "hist"))
-    got = sorted(
-        map(tuple, scoring.prune_pairs_gathered(pairs, bc, cfg.threshold).collect())
-    )
+    bands = bands.unionByName(bogus)
+    want = sorted(_pair_rows(_join_tier_pairs(bands, docs, feats, cfg.threshold, **kw)))
+    bc = scoring.build_prune_broadcast(feats)
+    got = sorted(_pair_rows(
+        blocking.block_pairs_pruned(bands, bc, cfg.threshold, id_col="did", **kw)
+    ))
+    bc.unpersist()
     assert got == want
     assert len(got) > 0
+    assert not any(-(1 << 60) in p for p in got)
 
 
-def test_gathered_score_matches_join_path(spark):
-    """score_pairs_gathered (broadcast text-blob gather) vs the
-    attach_texts + score_pairs join path on the real pruned pair set:
-    kept (>= tau) pairs must agree exactly on edit_distance and sim;
-    sub-tau pairs may clamp differently (chunk composition) but must
-    land on the same side of tau."""
+def test_gather_gate_malformed_env(spark, monkeypatch, caplog):
+    """A malformed SZ_GATHER_MAX_DOCS falls back to the default gate
+    with one warning naming the variable and the value."""
+    import logging
+
     from sz_spark import scoring
 
-    cfg, docs, feats, pairs = _gather_fixture(spark)
-    tau = cfg.threshold
-    bc = scoring.build_prune_broadcast(feats.select("did", "len", "hist"))
-    pruned = scoring.prune_pairs_gathered(pairs, bc, tau)
-    wt = scoring.attach_texts(pruned, docs, id_col="did")
-    old = (
-        scoring.score_pairs(wt, threshold=None, bounded=tau)
-        .select("id_a", "id_b", "edit_distance", "sim")
-        .toPandas()
-    )
-    tbc = scoring.build_text_broadcast(docs, id_col="did")
-    new = (
-        scoring.score_pairs_gathered(pruned, tbc, bounded=tau)
-        .select("id_a", "id_b", "edit_distance", "sim")
-        .toPandas()
-    )
-    m = old.merge(new, on=["id_a", "id_b"], suffixes=("_o", "_n"))
-    assert len(m) == len(old) == len(new) > 0
-    kept = (m.sim_o >= tau) | (m.sim_n >= tau)
-    assert kept.any()
-    assert (m.loc[kept, "edit_distance_o"] == m.loc[kept, "edit_distance_n"]).all()
-    assert (m.loc[kept, "sim_o"] == m.loc[kept, "sim_n"]).all()
-    assert ((m.sim_o < tau) == (m.sim_n < tau)).all()
+    monkeypatch.delenv("SZ_NO_GATHER", raising=False)
+    monkeypatch.setenv("SZ_GATHER_MAX_DOCS", "1e6")
+    with caplog.at_level(logging.WARNING, logger="sz_spark.scoring"):
+        assert scoring.gather_gate(spark.range(3)) is True
+    msgs = [r.getMessage() for r in caplog.records if r.name == "sz_spark.scoring"]
+    assert len(msgs) == 1
+    assert "SZ_GATHER_MAX_DOCS" in msgs[0] and "1e6" in msgs[0]
+
+
+def test_prewarm_failure_is_logged(caplog):
+    """A failing worker prewarm leaves the session usable but says so."""
+    import logging
+
+    from sz_spark import session
+
+    class NoContext:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no python workers")
+
+    with caplog.at_level(logging.WARNING, logger="sz_spark.session"):
+        session._prewarm_python_workers(NoContext())
+    msgs = [r.getMessage() for r in caplog.records if r.name == "sz_spark.session"]
+    assert len(msgs) == 1 and "no python workers" in msgs[0]
 
 
 def test_pipeline_gather_tiers_identical(spark):
     """run_pipeline with the gathered tier (default at this corpus
-    size), the full-gather twin (SZ_TEXT_GATHER=1), and the join tier
-    (SZ_NO_GATHER=1) must produce identical clusters and identical kept
-    scored pairs."""
+    size) and the join tier (SZ_NO_GATHER=1) must produce identical
+    pairs-stage survivors, clusters and kept scored pairs."""
     import os
 
     from pyspark.sql import functions as F
@@ -444,21 +536,15 @@ def test_pipeline_gather_tiers_identical(spark):
 
     cfg = PipelineConfig()
     outs = {}
-    knobs = ("SZ_NO_GATHER", "SZ_TEXT_GATHER")
-    saved = {k: os.environ.get(k) for k in knobs}
+    saved = os.environ.get("SZ_NO_GATHER")
     try:
-        for label, env in (
-            ("gather", {}),
-            ("textgather", {"SZ_TEXT_GATHER": "1"}),
-            ("join", {"SZ_NO_GATHER": "1"}),
-        ):
-            # each leg sets EXACTLY its own knobs: a pre-existing
+        for label, no_gather in (("gather", None), ("join", "1")):
+            # each leg sets EXACTLY its own knob: a pre-existing
             # SZ_NO_GATHER=1 in the environment must not silently turn
-            # the gather legs into join-tier runs
-            for k in knobs:
-                os.environ.pop(k, None)
-            for k, v in env.items():
-                os.environ[k] = v
+            # the gather leg into a join-tier run
+            os.environ.pop("SZ_NO_GATHER", None)
+            if no_gather:
+                os.environ["SZ_NO_GATHER"] = no_gather
             tr = build_transcripts(spark, SF_DIR)
             stages = run_pipeline(spark, tr, cfg)
             kept = (
@@ -469,13 +555,11 @@ def test_pipeline_gather_tiers_identical(spark):
             outs[label] = (
                 sorted(map(tuple, kept.collect())),
                 sorted(map(tuple, stages["clusters"].collect())),
+                sorted(_pair_rows(stages["pairs"])),
             )
     finally:
-        for k, v in saved.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
-    assert outs["gather"][0] == outs["join"][0] == outs["textgather"][0]
-    assert outs["gather"][1] == outs["join"][1] == outs["textgather"][1]
+        os.environ.pop("SZ_NO_GATHER", None)
+        if saved is not None:
+            os.environ["SZ_NO_GATHER"] = saved
+    assert outs["gather"] == outs["join"]
     assert len(outs["gather"][0]) > 0
