@@ -2,13 +2,15 @@
 
 Two interchangeable signature families:
 
-* :func:`add_fingerprint` / :func:`bands_from_fingerprint` — the
+* :func:`doc_features` / :func:`minhash_bands` — the
   reference-conformant rolling-hash MinHash (sz_spark.kernels, byte-exact
-  vs stringzillas' Fingerprints engine) computed in an Arrow-batched
-  pandas UDF; banding itself is native Spark (F.slice + F.hash, JVM-side).
-* :func:`minhash_bands_sql_variant` — an md5-over-shingles MinHash whose
-  math is *also* expressible in ANSI SQL, used by the DuckDB correctness
-  oracle so the whole blocking stage is value-checked end-to-end.
+  vs stringzillas' Fingerprints engine) and its band keys, computed in
+  one Arrow pass per batch of documents; :func:`bands_from_features`
+  explodes the pipeline's feature table into (id, band_id, band_hash).
+* :func:`shingle_minhash_bands` — an md5-over-shingles MinHash whose
+  math is *also* expressible in SQL (:func:`shingle_minhash_bands_sql`),
+  used by the DuckDB correctness oracle so the whole blocking stage is
+  value-checked end-to-end.
 
 Scale design: banding is the pipeline's ONE deliberate shuffle before
 pair scoring.  Oversized blocks (stop-band signatures) are capped — the
@@ -20,8 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from sz_spark.udfs import make_fingerprint_udf
 
 # Measured: with the layered prefix key, candidate recall is 1.00000 at
 # sf0.001 AND sf0.1 for 64, 96, and 128 dims with near-identical
@@ -42,20 +42,6 @@ DEFAULT_FP_WIDTHS = (16, 24, 32, 48)
 # keeps the measured miss rate at 0 with barely more candidates.
 DEFAULT_BANDS = 32
 DEFAULT_ROWS = 4
-
-
-def add_fingerprint(
-    docs: DataFrame,
-    text_col: str = "doc",
-    ndim: int = DEFAULT_NDIM,
-    widths=DEFAULT_FP_WIDTHS,
-    seed: int = 0,
-) -> DataFrame:
-    """docs + fp (array<long> of u32 min-hashes, reference math §2.8)."""
-    fp_udf = make_fingerprint_udf(ndim=ndim, widths=widths, seed=seed)
-    return docs.withColumn("_fp", fp_udf(F.col(text_col))).select(
-        "*", F.col("_fp.hashes").alias("fp"), F.col("_fp.counts").alias("fp_counts")
-    ).drop("_fp")
 
 
 def minhash_bands(

@@ -1478,8 +1478,8 @@ def _explode_fp_rows(with_fp: DataFrame) -> DataFrame:
 
 def _fp_rows_arrow(d: DataFrame, text_col, ndim: int, seed: int = 0) -> DataFrame:
     """(doc_id, dim, min_hash, min_count) via the Arrow-native transport
-    (udfs.make_fingerprint_arrow_fn — flat-buffer kernel, bit-identical
-    to the pandas make_fingerprint_udf path)."""
+    (udfs.make_fingerprint_arrow_fn over the flat-buffer kernel
+    kernels.fingerprints_flat)."""
     from pyspark.sql import types as T
 
     from sz_spark.udfs import make_fingerprint_arrow_fn

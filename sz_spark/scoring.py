@@ -29,7 +29,6 @@ from sz_spark.udfs import (
     jaro_winkler_udf,
     levenshtein_udf,
     make_bounded_levenshtein_udf,
-    norm_edit_sim_udf,
 )
 
 
@@ -483,11 +482,3 @@ def score_pairs(
     if threshold is not None:
         out = out.filter(F.col("sim") >= threshold)
     return out
-
-
-def score_pairs_exact_udf(pairs_with_texts: DataFrame) -> DataFrame:
-    """Variant computing sim fully inside Python (norm_edit_sim_udf) —
-    used by conformance tests to check the two paths agree."""
-    return pairs_with_texts.withColumn(
-        "sim", norm_edit_sim_udf(F.col("doc_a"), F.col("doc_b"))
-    )

@@ -21,39 +21,6 @@ def _to_bytes(series: pd.Series) -> list[bytes]:
 
 
 # ---------------------------------------------------------------------------
-# fingerprints (reference math, SURVEY.md §2.8)
-# ---------------------------------------------------------------------------
-
-
-def make_fingerprint_udf(ndim: int = 128, widths=None, seed: int = 0):
-    """Scalar pandas UDF: text -> struct(hashes array<int>, counts array<int>).
-
-    Hashes/counts are the reference's u32 values stored as Spark ints by
-    bit-pattern-safe widening to IntegerType via int64 cast (values fit
-    u32; stored in IntegerType as the low 32 bits — compared only for
-    equality downstream, per SURVEY.md §7 'u64 hashes in signed types').
-    """
-    schema = T.StructType(
-        [
-            T.StructField("hashes", T.ArrayType(T.LongType()), False),
-            T.StructField("counts", T.ArrayType(T.LongType()), False),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def fp(texts: pd.Series) -> pd.DataFrame:
-        h, c = K.fingerprints(_to_bytes(texts), ndim=ndim, widths=widths, seed=seed)
-        return pd.DataFrame(
-            {
-                "hashes": [row.astype("int64").tolist() for row in h],
-                "counts": [row.astype("int64").tolist() for row in c],
-            }
-        )
-
-    return fp
-
-
-# ---------------------------------------------------------------------------
 # pairwise scorers (SURVEY.md §2.8 similarity engines)
 # ---------------------------------------------------------------------------
 
@@ -120,12 +87,6 @@ def levenshtein_utf8_udf(a: pd.Series, b: pd.Series) -> pd.Series:
             ["" if x is None else str(x) for x in b],
         )
     )
-
-
-@pandas_udf(T.DoubleType())
-def norm_edit_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """1 - dist/max(len): the ER pair score."""
-    return pd.Series(K.normalized_edit_similarity(_to_bytes(a), _to_bytes(b)))
 
 
 @pandas_udf(T.DoubleType())
@@ -385,7 +346,7 @@ def make_doc_features_arrow_fn(
 
 
 def make_fingerprint_arrow_fn(ndim: int = 128, widths=None, seed: int = 0):
-    """mapInArrow twin of make_fingerprint_udf: RecordBatch (id, text
+    """Fingerprints over mapInArrow: RecordBatch (id, text
     binary) -> (id, hashes array<long>, counts array<long>), via the
     flat kernel with zero per-row Python objects."""
 

@@ -140,6 +140,132 @@ def test_resume_identical(spark, tmp_path):
     metrics = r2["clusters"].sparkSession.read.parquet(os.path.join(ck, "_metrics"))
     stages_logged = {r["stage"] for r in metrics.select("stage").distinct().collect()}
     assert {"canonical_docs", "doc_features", "pairs", "scored"} <= stages_logged
+    # each run's rows of a stage add up to the stage's row count
+    for r in metrics.groupBy("stage", "run_id").sum("rows").collect():
+        stage_rows = spark.read.parquet(os.path.join(ck, r["stage"], "data")).count()
+        assert r["sum(rows)"] == stage_rows, (r["stage"], r["run_id"])
+
+
+def _jobs_in_group(spark, group, fn):
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lineage_rows_match_spark_oracle(spark, tmp_path):
+    """Every stage's metric rows (read off the parquet footers) equal a
+    Spark aggregate over the stage's files: per file, the row count and
+    the native-order min/max of the first column, rendered with str."""
+    from pyspark.sql import functions as F
+
+    from sz_spark.pipeline import PipelineConfig, run_pipeline
+    from sz_spark.transcripts import build_transcripts
+
+    ck = str(tmp_path / "ckpt")
+    run_pipeline(spark, build_transcripts(spark, SF_DIR), PipelineConfig(checkpoint_dir=ck))
+    metrics = spark.read.parquet(os.path.join(ck, "_metrics")).toPandas()
+    assert {"canonical_docs", "doc_features", "pairs", "scored", "clusters"} <= set(metrics.stage)
+    assert metrics.run_id.nunique() == 1
+
+    def rendered(v):
+        return None if v is None else str(v)
+
+    for stage, got in metrics.groupby("stage"):
+        data = spark.read.parquet(os.path.join(ck, stage, "data"))
+        first = data.columns[0]
+        oracle = {
+            os.path.basename(r["f"]): (r["rows"], rendered(r["lo"]), rendered(r["hi"]))
+            for r in data.groupBy(F.input_file_name().alias("f"))
+            .agg(F.count(F.lit(1)).alias("rows"), F.min(first).alias("lo"), F.max(first).alias("hi"))
+            .collect()
+        }
+        files = sorted(os.path.basename(f) for f in data.inputFiles())
+        want = [(pid, *oracle.get(f, (0, None, None))) for pid, f in enumerate(files)]
+        got = got.sort_values("partition_id")[["partition_id", "rows", "min_key", "max_key"]]
+        assert [tuple(r) for r in got.astype(object).itertuples(index=False)] == want, stage
+
+
+def test_checkpoint_runs_only_its_write_jobs(spark, tmp_path):
+    """A checkpointed stage launches exactly the jobs of its parquet
+    write: the re-read infers no schema and the metric rows need no
+    job."""
+    from sz_spark.lineage import CheckpointManager
+
+    df = (
+        spark.range(0, 5000, numPartitions=4)
+        .selectExpr("id * 7919 % 5000 AS did", "id AS v")
+        .repartition(3, "did")
+    )
+    mgr = CheckpointManager(spark, str(tmp_path / "ckpt"))
+    plain = str(tmp_path / "plain")
+    write_jobs = _jobs_in_group(spark, "ckpt-write", lambda: df.write.parquet(plain))
+    out = []
+    mat_jobs = _jobs_in_group(spark, "ckpt-materialize", lambda: out.append(mgr.materialize("s", df)))
+    assert write_jobs >= 1 and mat_jobs == write_jobs
+    assert _jobs_in_group(spark, "ckpt-metrics", lambda: mgr._write_metrics("s", out[0])) == 0
+    rows = mgr.metrics().collect()
+    assert sum(r["rows"] for r in rows) == 5000
+    assert min(int(r["min_key"]) for r in rows) == 0
+    assert max(int(r["max_key"]) for r in rows) == 4999
+
+
+@pytest.mark.parametrize(
+    "keys",
+    [
+        [],
+        [None, None],
+        ["x" * 5000, "y" * 5000],
+        [f"a{i:03d}" for i in range(100)] + ["z" * 5000] * 100,
+    ],
+    ids=["empty", "all_null", "over_4kb", "over_4kb_in_second_row_group"],
+)
+def test_checkpoint_lineage_null_key_range(spark, tmp_path, keys):
+    """A file whose footer holds no key range — an empty stage, only
+    null keys, or keys too long for parquet-mr to keep statistics of,
+    in any of its row groups — gets null min/max keys and still its
+    row count."""
+    from sz_spark.lineage import CheckpointManager
+
+    mgr = CheckpointManager(spark, str(tmp_path / "ckpt"))
+    df = spark.createDataFrame([(k,) for k in keys], "k string").coalesce(1)
+    # parquet-mr closes a row group at its first size check (100 rows)
+    spark.conf.set("parquet.block.size", "1")
+    try:
+        assert mgr.materialize("s", df).count() == len(keys)
+    finally:
+        spark.conf.unset("parquet.block.size")
+    rows = mgr.metrics().collect()
+    assert sum(r["rows"] for r in rows) == len(keys)
+    assert all(r["min_key"] is None and r["max_key"] is None for r in rows)
+
+
+def test_checkpoint_rerun_replaces_metric_file(spark, tmp_path):
+    """A stage rerun under a pinned run_id replaces its metric file
+    instead of adding rows; no hidden temporary file is left behind."""
+    from sz_spark.lineage import CheckpointManager
+
+    root = str(tmp_path / "ckpt")
+    mgr = CheckpointManager(spark, root, run_id="pinned")
+    for n in (300, 200):
+        mgr.materialize("s", spark.range(n).selectExpr("id AS did"))
+    names = os.listdir(os.path.join(root, "_metrics"))
+    assert names == ["part-pinned-s.parquet"]
+    assert sum(r["rows"] for r in mgr.metrics().collect()) == 200
+
+
+@pytest.mark.parametrize("root", ["s3a://bucket/ckpt", "bogus://host/ckpt"])
+def test_checkpoint_root_unsupported_scheme(spark, root):
+    from sz_spark.lineage import CheckpointManager
+
+    scheme = root.split(":")[0]
+    with pytest.raises(ValueError, match=f"'{scheme}'.*local path, file://, hdfs://, s3://, gs://"):
+        CheckpointManager(spark, root)
 
 
 def test_surrogate_collision_guard(spark, monkeypatch):
