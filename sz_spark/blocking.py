@@ -12,10 +12,13 @@ Two interchangeable signature families:
   used by the DuckDB correctness oracle so the whole blocking stage is
   value-checked end-to-end.
 
-Scale design: banding is the pipeline's ONE deliberate shuffle before
-pair scoring.  Oversized blocks (stop-band signatures) are capped — the
-classic LSH guard; at 10^12 turns a single hot band would otherwise
-generate O(n^2) pairs.  AQE skew-join handles residual imbalance.
+Scale design: above the gather gate, banding is the pipeline's ONE
+deliberate shuffle before pair scoring (:func:`block_pairs`); below it
+the blocks come from the broadcast block keys in one narrow pass
+(:func:`block_pairs_gathered`).  Oversized blocks (stop-band
+signatures) are capped on both tiers — the classic LSH guard; at 10^12
+turns a single hot band would otherwise generate O(n^2) pairs.  AQE
+skew-join handles residual imbalance.
 """
 
 from __future__ import annotations
@@ -331,8 +334,10 @@ def block_pairs(
     cap^2 cheap emissions in one task, which replaces the salting
     machinery — salting redistributed O(s^2) JOIN-reducer work, but
     with in-array emission the bound is the cap itself.  The global
-    cross-band dedup is the second shuffle; the broadcast-gather tier
-    avoids it (:func:`block_pairs_pruned`).
+    cross-band dedup is the second shuffle.  This is the join tier's
+    blocking (above the gather gate); below it the pipeline builds the
+    same blocks from the broadcast keys with no band rows and no
+    shuffle (:func:`block_pairs_gathered`).
 
     Same output contract as cap_blocks + candidate_pairs: every
     unordered in-block pair (id_a < id_b) from blocks of size <= the
@@ -345,49 +350,6 @@ def block_pairs(
         ["id_a", "id_b"]
     )
     return pairs, suppressed
-
-
-def block_pairs_pruned(
-    bands: DataFrame,
-    prune_bc,
-    threshold: float,
-    id_col: str = "conv_id",
-    max_block_size: int = 64,
-    salt_up_to: int = 0,
-) -> DataFrame:
-    """:func:`block_pairs` + the length/histogram prune in ONE exchange:
-    returns the surviving (id_a, id_b) (the suppressed-block stats are
-    block_pairs' second output — the same blocks).
-
-    The capped blocks come from the same window-count + collect_list
-    exchange; then a single mapInArrow pass emits each block's triangle
-    pairs and keeps a pair only where this block's band is the LOWEST
-    band in which the two docs share a key whose block is kept
-    (2 <= size <= drop threshold).  Every distinct candidate pair thus
-    leaves exactly one block — dedup by construction, no (id_a, id_b)
-    shuffle (the ICDE'19 metric-join partitioning idea).  The size
-    check matters: a pair's first collision can sit in a suppressed
-    stop-band block, and it must then come from its next kept band.
-    The same pass applies scoring.prune_pairs_arrow's length +
-    histogram bounds (identical f64 comparisons), so only survivors
-    leave Python — the set equals block_pairs + dropDuplicates +
-    prune_pairs_arrow.
-
-    ``prune_bc`` is scoring.build_prune_broadcast's value: per-doc
-    len/hist plus all block keys and their block sizes, id-sorted.
-    Bands must carry the prefix key as band -1 and minhash bands
-    0..k-1 (bands_from_features)."""
-    from pyspark.sql import types as T
-
-    drop_above = _drop_above(max_block_size, salt_up_to)
-    blocks, _ = _capped_blocks(bands, id_col, drop_above)
-    elem = blocks.schema["ids"].dataType.elementType
-    out_schema = T.StructType(
-        [T.StructField("id_a", elem, False), T.StructField("id_b", elem, False)]
-    )
-    return blocks.select("band_id", "ids").mapInArrow(
-        _first_band_prune_arrow_fn(prune_bc, drop_above, threshold), out_schema
-    )
 
 
 def _drop_above(max_block_size: int, salt_up_to: int) -> int:
@@ -419,70 +381,127 @@ def _capped_blocks(
     return blocks, suppressed
 
 
-def _first_band_prune_arrow_fn(
-    prune_bc, drop_above: int, threshold: float, max_pairs: int = 1 << 16
-):
-    """RecordBatch (band_id, ids list<long>) -> surviving (id_a, id_b),
-    id_a < id_b; see :func:`block_pairs_pruned`.  Pairs whose id is
-    missing from the broadcast are dropped (the join tier's inner-join
-    semantics)."""
-    lim = 1.0 - threshold
+def block_pairs_gathered(
+    spark,
+    prune_bc,
+    threshold: float,
+    max_block_size: int = 64,
+    salt_up_to: int = 0,
+) -> DataFrame:
+    """The gather tier's pairs: :func:`block_pairs` + the
+    length/histogram prune, built straight from the broadcast block
+    keys — returns the surviving (id_a, id_b), id_a < id_b, from one
+    narrow pass with no band rows, no exchange and no aggregate.
+
+    ``prune_bc`` is scoring.build_prune_broadcast's value: per-doc
+    len/hist, every doc's block keys (row 0 the prefix key, row k+1
+    band k) and their block sizes, id-sorted.  The pass is
+    ``spark.range(P)`` with P = min(defaultParallelism, key rows), one
+    row per task; each task rebuilds the blocks of its key rows with
+    one argsort per row (:func:`_gathered_task_pairs`).  A pair leaves
+    only from the LOWEST key row in which its docs share a kept block
+    (2 <= size <= drop threshold): dedup by construction (the ICDE'19
+    metric-join partitioning idea).  The size check matters: a pair's
+    first collision can sit in a suppressed stop-band block, and it
+    must then come from its next kept row.  The same pass applies
+    scoring.prune_pairs_arrow's length + histogram bounds (identical
+    f64 comparisons), so the set equals block_pairs + dropDuplicates +
+    prune_pairs_arrow over bands_from_features of the same table."""
+    from pyspark.sql import types as T
+
+    drop_above = _drop_above(max_block_size, salt_up_to)
+    n_tasks = max(
+        1, min(spark.sparkContext.defaultParallelism, len(prune_bc.value[3]))
+    )
+    out_schema = T.StructType(
+        [T.StructField("id_a", T.LongType(), False),
+         T.StructField("id_b", T.LongType(), False)]
+    )
 
     def fn(batches):
-        import numpy as np
         import pyarrow as pa
 
-        ids, lens, hists, keys, sizes = prune_bc.value
-        hi = len(ids) - 1
+        value = prune_bc.value
         for batch in batches:
-            if batch.num_rows == 0 or hi < 0:
-                continue
-            col = batch.column(1)
-            offsets = np.asarray(col.offsets, dtype=np.int64)
-            vals = np.asarray(col.values, dtype=np.int64)[offsets[0] : offsets[-1]]
-            offsets = offsets - offsets[0]
-            # keys row 0 is the prefix key (band -1), row k+1 band k
-            elem_row = np.repeat(
-                np.asarray(batch.column(0), dtype=np.int64) + 1, np.diff(offsets)
-            )
-            pos = np.clip(np.searchsorted(ids, vals), 0, hi)
-            found = ids[pos] == vals
-            for ia, ib in _triangle_chunks(offsets, max_pairs):
-                pa_, pb_ = pos[ia], pos[ib]
-                row = elem_row[ia]
-                keep = found[ia] & found[ib]
-                # emit only from the first band sharing a KEPT block
-                for j in range(int(row.max())):
-                    kj = keys[j]
-                    keep &= ~(
-                        (row > j)
-                        & (kj[pa_] == kj[pb_])
-                        & (sizes[j][pa_] <= drop_above)
+            for task in batch.column(0).to_pylist():
+                for a, b in _gathered_task_pairs(
+                    value, task, n_tasks, drop_above, threshold
+                ):
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(a), pa.array(b)], ["id_a", "id_b"]
                     )
-                la, lb = lens[pa_], lens[pb_]
-                maxlen = np.maximum(la, lb)
-                bound = lim * maxlen  # (1-τ)*max in f64, as prune_pairs_arrow
-                keep &= (maxlen - np.minimum(la, lb)) <= bound
-                sub = np.nonzero(keep)[0]
-                # L1 in slices: the (pairs, 96) gathers dominate memory;
-                # int32 holds any sum of 96 u16 differences exactly
-                for s0 in range(0, len(sub), 4096):
-                    ss = sub[s0 : s0 + 4096]
-                    l1 = np.abs(
-                        hists[pa_[ss]].astype(np.int32)
-                        - hists[pb_[ss]].astype(np.int32)
-                    ).sum(axis=1)
-                    keep[ss] &= (l1 / 2.0) <= bound[ss]
-                sel = np.nonzero(keep)[0]
-                if not len(sel):
-                    continue
-                a, b = vals[ia[sel]], vals[ib[sel]]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.minimum(a, b)), pa.array(np.maximum(a, b))],
-                    ["id_a", "id_b"],
-                )
 
-    return fn
+    return spark.range(n_tasks, numPartitions=n_tasks).mapInArrow(fn, out_schema)
+
+
+def _snake_rows(task: int, n_tasks: int, n_rows: int) -> list:
+    """The key rows dealt to ``task`` in snake order (t, 2P-1-t, 2P+t,
+    ...): a higher row re-checks every lower row, so alternating the
+    deal direction evens out the per-task cost."""
+    rows = []
+    for base in range(0, n_rows, n_tasks):
+        forward = (base // n_tasks) % 2 == 0
+        r = base + (task if forward else n_tasks - 1 - task)
+        if r < n_rows:
+            rows.append(r)
+    return rows
+
+
+def _gathered_task_pairs(
+    value, task: int, n_tasks: int, drop_above: int, threshold: float,
+    max_pairs: int = 1 << 16,
+):
+    """Yield the surviving (id_a, id_b) int64 arrays of ``task``'s key
+    rows (see :func:`block_pairs_gathered`); ``value`` is the prune
+    broadcast's tuple.
+
+    Per row, a stable argsort of the keys lays each block out as one
+    run of doc positions in ascending order; runs of 2..drop_above are
+    the kept blocks, and their triangles come from _triangle_chunks
+    over the sorted positions.  Positions index the id-sorted arrays
+    directly (no id lookup), and the earlier position of a pair is the
+    smaller id."""
+    import numpy as np
+
+    ids, lens, hists, keys, sizes = value
+    lim = 1.0 - threshold
+    for j in _snake_rows(task, n_tasks, len(keys)):
+        order = np.argsort(keys[j], kind="stable")
+        sk = keys[j][order]
+        bounds = np.concatenate(
+            ([0], np.flatnonzero(sk[1:] != sk[:-1]) + 1, [len(sk)])
+        )
+        run = np.diff(bounds)
+        kept = (run >= 2) & (run <= drop_above)
+        if not kept.any():
+            continue
+        pos = order[np.repeat(kept, run)]
+        offsets = np.concatenate(([0], np.cumsum(run[kept])))
+        for ia, ib in _triangle_chunks(offsets, max_pairs):
+            pa_, pb_ = pos[ia], pos[ib]
+            # emit only from the first row sharing a KEPT block
+            for i in range(j):
+                ki = keys[i]
+                dup = (ki[pa_] == ki[pb_]) & (sizes[i][pa_] <= drop_above)
+                if dup.any():
+                    pa_, pb_ = pa_[~dup], pb_[~dup]
+            la, lb = lens[pa_], lens[pb_]
+            maxlen = np.maximum(la, lb)
+            bound = lim * maxlen  # (1-τ)*max in f64, as prune_pairs_arrow
+            keep = (maxlen - np.minimum(la, lb)) <= bound
+            sub = np.nonzero(keep)[0]
+            # L1 in slices: the (pairs, 96) gathers dominate memory;
+            # int32 holds any sum of 96 u16 differences exactly
+            for s0 in range(0, len(sub), 4096):
+                ss = sub[s0 : s0 + 4096]
+                l1 = np.abs(
+                    hists[pa_[ss]].astype(np.int32)
+                    - hists[pb_[ss]].astype(np.int32)
+                ).sum(axis=1)
+                keep[ss] &= (l1 / 2.0) <= bound[ss]
+            sel = np.nonzero(keep)[0]
+            if len(sel):
+                yield ids[pa_[sel]], ids[pb_[sel]]
 
 
 def explode_lower_triangle(

@@ -190,19 +190,21 @@ def pairs_stage(
 
     Two tiers (scoring.py "Gathered" block).  Below the gate every
     doc's prune attributes and block keys ship ONCE per worker, and
-    blocking.block_pairs_pruned emits each candidate from exactly one
-    block and prunes it in the same pass — no dedup shuffle, no
-    per-pair attribute joins.  Beyond the gate (or SZ_NO_GATHER=1) the
-    candidates are deduplicated and get their (len, hist) joined on.
-    Both tiers keep the identical pair set (tests/test_pipeline.py
+    blocking.block_pairs_gathered rebuilds the blocks from those keys
+    in one narrow pass (no band rows, no exchange): each candidate
+    leaves exactly one block and is pruned in the same pass.  Beyond
+    the gate (or SZ_NO_GATHER=1) the band rows are shuffled into
+    blocks, the candidates deduplicated, and their (len, hist) joined
+    on.  Both tiers keep the identical pair set (tests/test_pipeline.py
     parity tests)."""
-    bands = blocking.bands_from_features(feats, id_col="did")
     if scoring.gather_gate(feats):
         prune_bc = scoring.build_prune_broadcast(feats)
-        pairs = blocking.block_pairs_pruned(
-            bands, prune_bc, cfg.threshold, **_block_kw(cfg)
+        pairs = blocking.block_pairs_gathered(
+            feats.sparkSession, prune_bc, cfg.threshold,
+            max_block_size=cfg.max_block_size, salt_up_to=cfg.salt_up_to,
         )
         return pairs, [prune_bc]
+    bands = blocking.bands_from_features(feats, id_col="did")
     candidates, _ = blocking.block_pairs(bands, **_block_kw(cfg))
     # prune BEFORE attaching texts: the prunes need only (len, hist)
     # per side and drop ~95% of candidates; the doc bytes join only the

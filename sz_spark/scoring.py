@@ -5,15 +5,17 @@ Scores run in Arrow-batched pandas UDFs over the batched-DP kernels
 (similarities/serial.hpp:613-693) with the Arrow batch as the lane axis.
 
 Scale notes:
-* pairs join back to the (much smaller) canonical-docs table twice —
-  sort-merge joins on conv_id; the texts are NEVER carried through the
-  band explosion (that would multiply text bytes by n_bands in the
-  shuffle).
-* a cheap JVM-side length-difference prune runs before the Python DP:
-  |len(a)-len(b)| / max(len) > 1-τ already bounds similarity below τ
-  (edit distance ≥ length difference), so those pairs never cross into
-  Python.  This mirrors the reference's algorithm tiering by input size
-  (serial.hpp:2948-2994).
+* the texts join onto the prune SURVIVORS only — sort-merge joins on
+  the surrogate ``did`` against the (much smaller) canonical-docs
+  table; the texts are NEVER carried through the band explosion (that
+  would multiply text bytes by n_bands in the shuffle).
+* a length-difference + byte-histogram prune runs before the DP, in a
+  Python Arrow pass on both tiers (prune_pairs_arrow above the gather
+  gate, blocking.block_pairs_gathered below it): |len(a)-len(b)| /
+  max(len) > 1-τ already bounds similarity below τ (edit distance ≥
+  length difference), and so does half the histogram L1, so those
+  pairs never reach the DP.  This mirrors the reference's algorithm
+  tiering by input size (serial.hpp:2948-2994).
 """
 
 from __future__ import annotations
@@ -278,11 +280,12 @@ def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
 # row: at the 975k-turn probe the join path moved ~560 MB of per-pair
 # histograms through two sort-merge joins plus the Arrow boundary.
 # With every doc's block keys and block sizes in the same broadcast,
-# blocking.block_pairs_pruned also emits each candidate pair from
-# exactly one block and prunes it in that pass, so the tier needs no
-# cross-band dedup shuffle either.  This is the same two-tier trade
-# Spark's own broadcast-hash join makes, and the same hybrid posture
-# as clustering.connected_components' driver union-find fast path.
+# blocking.block_pairs_gathered rebuilds the blocks from those keys,
+# emits each candidate pair from exactly one block and prunes it in
+# that pass, so the tier needs no band rows and no shuffle at all.
+# This is the same two-tier trade Spark's own broadcast-hash join
+# makes, and the same hybrid posture as
+# clustering.connected_components' driver union-find fast path.
 #
 # Memory math for the default gate (SZ_GATHER_MAX_DOCS = 1M docs, 24
 # bands + the prefix key): per doc the broadcast holds id 8 B + len
@@ -291,8 +294,12 @@ def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
 # one copy while it lives, so an executor running W workers pays
 # <= W x ~0.5 GB — the same per-worker budget the tier had before it
 # carried keys (208 MB prune table + a 256 MB text blob, now removed),
-# sized for standard 4-8 GB executors.  The driver transiently holds
-# the collected Arrow table and the sorted arrays (~1 GB at the gate).
+# sized for standard 4-8 GB executors.  On top of the broadcast, a
+# pairs task holds per key row the keys' argsort and its sorted copy,
+# the run bounds and the kept-run positions: a few O(n) int64 arrays
+# (~8 MB each at the gate), freed before the next row.  The driver
+# transiently holds the collected Arrow table and the sorted arrays
+# (~1 GB at the gate).
 # Above the gate the join path runs unchanged (it is also the
 # SZ_NO_GATHER=1 twin the differential tests compare against).
 
@@ -323,7 +330,7 @@ def gather_gate(feats: DataFrame) -> bool:
 def build_prune_broadcast(feats: DataFrame):
     """Collect a :func:`blocking.doc_features` table (id, len, pk, bk,
     hist) to the driver, pack it as id-sorted NumPy arrays, and
-    broadcast it for :func:`blocking.block_pairs_pruned`.
+    broadcast it for :func:`blocking.block_pairs_gathered`.
 
     ``value = (ids i64 (n,), char_lens i64 (n,), hists u16 (n, 96),
     keys i64 (1 + n_bands, n), sizes i32 (1 + n_bands, n))``: key row 0

@@ -503,20 +503,50 @@ def _pair_rows(df):
     return [tuple(r) for r in df.select("id_a", "id_b").collect()]
 
 
+def _gathered_pairs(spark, feats, threshold, **block_kw):
+    """The gather tier's pairs from a feature table, its broadcast
+    released once collected."""
+    from sz_spark import blocking, scoring
+
+    bc = scoring.build_prune_broadcast(feats)
+    try:
+        return _pair_rows(
+            blocking.block_pairs_gathered(spark, bc, threshold, **block_kw)
+        )
+    finally:
+        bc.unpersist()
+
+
+def _pairs_dealt(bc_value, n_tasks, threshold, max_block_size, salt_up_to):
+    """The gather tier's worker function called directly, with the key
+    rows dealt to ``n_tasks`` tasks."""
+    from sz_spark import blocking
+
+    drop_above = blocking._drop_above(max_block_size, salt_up_to)
+    out = []
+    for task in range(n_tasks):
+        for a, b in blocking._gathered_task_pairs(
+            bc_value, task, n_tasks, drop_above, threshold
+        ):
+            out.extend(zip(a.tolist(), b.tolist()))
+    return out
+
+
 @pytest.mark.parametrize(
     "max_block_size,salt_up_to,shuffled",
     [(64, 1024, False), (8, 16, False), (4, 0, False), (64, 1024, True)],
 )
 def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled):
-    """blocking.block_pairs_pruned (first-kept-band emission + in-pass
-    prune) must keep EXACTLY the join tier's pair set — block_pairs'
-    dedup, then attach_prune_attrs + prune_pairs_arrow — with no
-    duplicate rows, including under a cap that suppresses blocks (a
-    pair whose first collision is suppressed must come from its next
-    kept band) and under shuffled input order."""
+    """blocking.block_pairs_gathered (blocks rebuilt from the broadcast
+    keys, first-kept-block emission + in-pass prune) must keep EXACTLY
+    the join tier's pair set — block_pairs' dedup, then
+    attach_prune_attrs + prune_pairs_arrow — with no duplicate rows,
+    including under a cap that suppresses blocks (a pair whose first
+    collision is suppressed must come from its next kept band) and
+    under shuffled input order."""
     from pyspark.sql import functions as F
 
-    from sz_spark import blocking, scoring
+    from sz_spark import blocking
 
     cfg, docs, feats = _gather_fixture(spark)
     kw = dict(max_block_size=max_block_size, salt_up_to=salt_up_to)
@@ -527,17 +557,36 @@ def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled
     if shuffled:
         # every downstream list and broadcast order changes with it
         feats = feats.orderBy(F.rand(7)).localCheckpoint()
-    bands = blocking.bands_from_features(feats, id_col="did")
-    bc = scoring.build_prune_broadcast(feats)
-    got = _pair_rows(blocking.block_pairs_pruned(
-        bands, bc, cfg.threshold, id_col="did", **kw
-    ))
-    bc.unpersist()
+    got = _gathered_pairs(spark, feats, cfg.threshold, **kw)
     assert set(got) == want and len(got) == len(want) > 0
     assert all(a < b for a, b in got)
     if salt_up_to == 0:
+        bands = blocking.bands_from_features(feats, id_col="did")
         _, sup = blocking.block_pairs(bands, id_col="did", **kw)
         assert sup.count() > 0  # the suppressed-block leg is not vacuous
+
+
+@pytest.mark.parametrize("max_block_size,salt_up_to", [(64, 1024), (4, 0)])
+def test_gathered_pairs_independent_of_task_count(
+    spark, max_block_size, salt_up_to
+):
+    """The key rows dealt to one task, to the session's width, and to
+    more tasks than there are key rows give the same pair set, each
+    pair once: results must not depend on core count."""
+    from sz_spark import scoring
+
+    cfg, _, feats = _gather_fixture(spark)
+    kw = dict(max_block_size=max_block_size, salt_up_to=salt_up_to)
+    want = sorted(_gathered_pairs(spark, feats, cfg.threshold, **kw))
+    assert want
+    bc = scoring.build_prune_broadcast(feats)
+    try:
+        n_rows = len(bc.value[3])
+        for n_tasks in (1, n_rows + 3):
+            got = _pairs_dealt(bc.value, n_tasks, cfg.threshold, **kw)
+            assert sorted(got) == want, n_tasks
+    finally:
+        bc.unpersist()
 
 
 def test_fused_pairs_first_collision_in_suppressed_block(spark):
@@ -554,66 +603,74 @@ def test_fused_pairs_first_collision_in_suppressed_block(spark):
     )
     bands = blocking.bands_from_features(feats, id_col="did")
     kw = dict(max_block_size=4, salt_up_to=0)
-    bc = scoring.build_prune_broadcast(feats)
-    got = _pair_rows(blocking.block_pairs_pruned(bands, bc, 0.9, id_col="did", **kw))
+    got = _gathered_pairs(spark, feats, 0.9, **kw)
     want = _pair_rows(_join_tier_pairs(bands, None, feats, 0.9, **kw))
     assert sorted(got) == sorted(want) == [(1, 2), (3, 4)]
     # an empty corpus broadcasts empty tables and emits nothing
     empty = feats.limit(0)
     bc = scoring.build_prune_broadcast(empty)
-    bands = blocking.bands_from_features(empty, id_col="did")
-    assert blocking.block_pairs_pruned(bands, bc, 0.9, id_col="did", **kw).count() == 0
-
-
-def test_fused_pairs_plan_has_one_exchange(spark):
-    """The gather-tier pairs plan shuffles once — the (band_id,
-    band_hash) hash partitioning — and never aggregates on the pair."""
-    import re
-
-    from sz_spark import blocking, scoring
-
-    cfg, docs, feats = _gather_fixture(spark)
-    bc = scoring.build_prune_broadcast(feats)
-    pairs = blocking.block_pairs_pruned(
-        blocking.bands_from_features(feats, id_col="did"), bc, cfg.threshold,
-        id_col="did", max_block_size=cfg.max_block_size,
-        salt_up_to=cfg.salt_up_to,
-    )
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert blocking.block_pairs_gathered(spark, bc, 0.9, **kw).count() == 0
     bc.unpersist()
-    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    assert len(exchanges) == 1, plan
-    assert re.search(r"hashpartitioning\(band_id#\d+, band_hash#\d+", exchanges[0])
-    assert not re.search(r"Aggregate.*keys=\[id_a", plan), plan
-    assert "Deduplicate" not in plan
 
 
-def test_gathered_prune_matches_join_path(spark):
-    """Band rows whose id is missing from the feature table: the join
-    tier's inner joins drop their pairs, and the fused gather kernel
-    must too (found-mask) — the rest of the pair set is unchanged."""
-    from pyspark.sql import functions as F
+def test_gathered_pairs_hot_doc_and_stop_band(spark):
+    """Hand-built feature table: doc 0 shares a key with other docs in
+    EVERY key row (a hot document), and band 2 holds one block larger
+    than the cap (a stop-band).  The gather tier must emit exactly the
+    join tier's pair set, each pair once."""
+    from sz_spark import blocking
 
-    from sz_spark import blocking, scoring
-
-    cfg, docs, feats = _gather_fixture(spark)
-    kw = dict(max_block_size=cfg.max_block_size, salt_up_to=cfg.salt_up_to)
+    cap = 8
+    n = 40
+    rows = []
+    for d in range(n):
+        # prefix: doc 0 with docs 1-3; others alone
+        pk = 500 if d < 4 else 1000 + d
+        bk = [
+            # band 0: doc 0 with 4-6; band 1: doc 0 with 7-9 and also
+            # docs 1,2 again (their second collision)
+            100 if d == 0 or 4 <= d <= 6 else 2000 + d,
+            200 if d in (0, 1, 2, 7, 8, 9) else 3000 + d,
+            # band 2: 30 docs incl. doc 0 in one stop-band block
+            300 if d < 30 else 4000 + d,
+            # band 3: doc 0 with 10-12, 30-33 (a block at the cap)
+            400 if d == 0 or 10 <= d <= 12 or 30 <= d <= 33 else 5000 + d,
+        ]
+        # near-identical lengths and histograms, except doc 5's length,
+        # so the prune drops exactly doc 5's pairs
+        hist = bytes([d % 3]) + bytes(191)
+        rows.append((d + 1, 300 if d == 5 else 100 + d % 2, pk, bk, hist))
+    feats = spark.createDataFrame(
+        rows, "did long, len int, pk long, bk array<long>, hist binary"
+    )
     bands = blocking.bands_from_features(feats, id_col="did")
-    # a bogus id joining the prefix block of one real doc
-    pk = feats.select("pk").first()["pk"]
-    bogus = spark.createDataFrame(
-        [(int(-(1 << 60)), -1, pk)], "did long, band_id int, band_hash long"
-    )
-    bands = bands.unionByName(bogus)
-    want = sorted(_pair_rows(_join_tier_pairs(bands, docs, feats, cfg.threshold, **kw)))
-    bc = scoring.build_prune_broadcast(feats)
-    got = sorted(_pair_rows(
-        blocking.block_pairs_pruned(bands, bc, cfg.threshold, id_col="did", **kw)
-    ))
-    bc.unpersist()
-    assert got == want
-    assert len(got) > 0
-    assert not any(-(1 << 60) in p for p in got)
+    kw = dict(max_block_size=cap, salt_up_to=0)
+    _, sup = blocking.block_pairs(bands, id_col="did", **kw)
+    assert [r["block_size"] for r in sup.collect()] == [30]
+    want = _pair_rows(_join_tier_pairs(bands, None, feats, 0.9, **kw))
+    got = _gathered_pairs(spark, feats, 0.9, **kw)
+    assert len(got) == len(set(got))
+    assert sorted(got) == sorted(want)
+    hot = [p for p in got if 1 in p]
+    # doc 0 (did 1) pairs with 1-3 (prefix), 4-9 but not 5 (bands 0-1),
+    # 10-12 and 30-33 (band 3); the stop-band adds nothing
+    assert len(hot) == 3 + 5 + 7
+
+
+def test_gathered_pairs_plan_has_no_exchange(spark):
+    """The gather-tier pairs plan is one narrow pass: no Exchange, no
+    Window and no aggregate."""
+    from sz_spark.pipeline import pairs_stage
+
+    cfg, docs, feats = _gather_fixture(spark)
+    pairs, bcs = pairs_stage(docs, feats, cfg)
+    assert bcs, "the fixture must take the gather tier"
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    for bc in bcs:
+        bc.unpersist()
+    for op in ("Exchange", "Window", "Aggregate"):
+        assert op not in plan, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_gather_gate_malformed_env(spark, monkeypatch, caplog):
