@@ -123,14 +123,18 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
 
     A fresh session's FIRST Arrow-UDF stage pays worker spawn + numpy/
     pyarrow/pandas imports + the JVM's Arrow-stream codepath warmup —
-    measured ~1.9 s at local[8] (2.58 s first stage vs 0.69 s after).
-    Long-lived executors amortize this across jobs via
-    spark.python.worker.reuse; a short-lived session pays it inside its
-    first real query unless the pool is prestarted at build time, which
-    is what this does: one tiny mapInArrow pass (one task per worker
-    slot) that performs the worker-side imports and touches the
-    compiled kernel twin so its dlopen (or first-time gcc build, on a
-    cold cache) also happens here rather than inside a timed stage.
+    measured ~1.9 s at local[8] on an earlier 32-core box (2.58 s first
+    stage vs 0.69 s after); those numbers predate the 4-core box the
+    benchmark now runs on.  Long-lived executors amortize this across
+    jobs via spark.python.worker.reuse; a short-lived session pays it
+    inside its first real query unless the pool is prestarted at build
+    time, which is what this does: one tiny mapInArrow pass (two tasks
+    per worker slot) that performs the worker-side imports and touches
+    the compiled kernel twin so its dlopen (or first-time gcc build, on
+    a cold cache) also happens here rather than inside a timed stage.
+    Importing ``sz_spark`` there also installs the package's checked
+    zipimporter invalidation (``sz_spark/__init__.py``) in every pooled
+    worker, so no timed task pays the per-task re-read of pyspark.zip.
     Best-effort: a failure leaves the session usable and is logged once
     here — the same fault (e.g. workers that cannot import sz_spark)
     would otherwise surface only inside the first real query.

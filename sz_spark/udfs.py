@@ -152,7 +152,11 @@ def upstream_width(df) -> int:
     most of the query twice.  So shuffle-bearing plans report the
     session's configured shuffle width instead — which is exactly what
     their output width will be — and only exchange-free plans use the
-    (job-free) RDD probe.  Returns 0 when nothing can be determined."""
+    (job-free) RDD probe.  Returns 0 when nothing can be determined,
+    which includes shuffle-bearing plans while AQE partition coalescing
+    is on: the post-shuffle width then depends on shuffle bytes, not on
+    the configured width, so callers repartition rather than risk a
+    Python stage on one or two coalesced partitions."""
     import re
 
     global _SHUFFLE_NODE_RE
@@ -168,6 +172,14 @@ def upstream_width(df) -> int:
         plan = None
     if plan is None or _SHUFFLE_NODE_RE.search(plan):
         try:
+            if all(
+                sess.conf.get(key).strip().lower() == "true"
+                for key in (
+                    "spark.sql.adaptive.enabled",
+                    "spark.sql.adaptive.coalescePartitions.enabled",
+                )
+            ):
+                return 0
             return int(sess.conf.get("spark.sql.shuffle.partitions"))
         except Exception:  # pragma: no cover
             return 0

@@ -706,6 +706,138 @@ def test_prewarm_failure_is_logged(caplog):
     assert len(msgs) == 1 and "no python workers" in msgs[0]
 
 
+def _task_rows(spark, fn, fields, n_tasks=8):
+    """Run ``fn(task_index) -> tuple`` once in each of ``n_tasks``
+    Python tasks and collect the rows it returns."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField(name, typ) for name, typ in fields])
+
+    def run(batches):
+        for batch in batches:
+            for task in batch.column(0).to_pylist():
+                row = fn(task)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([v]) for v in row], schema.names
+                )
+
+    df = spark.range(n_tasks, numPartitions=n_tasks).mapInArrow(run, schema)
+    return sorted(map(tuple, df.collect()))
+
+
+def test_add_py_file_after_first_python_job_imports_in_task(spark, tmp_path):
+    """Workers skip re-reading UNCHANGED archives on each task, so a
+    module and a zip package shipped with addPyFile after the workers
+    already ran Python tasks must still import inside a task -- and a
+    shipped archive that then changes on disk must be re-read."""
+    import zipfile
+
+    from pyspark import SparkFiles
+    from pyspark.sql import types as T
+
+    def warm(task):
+        from sz_spark import kernels  # noqa: F401
+
+        return (task,)
+
+    assert len(_task_rows(spark, warm, [("t", T.LongType())])) == 8
+
+    mod = tmp_path / "szt_shipped_mod.py"
+    mod.write_text("VALUE = 'module'\n")
+    pkg = tmp_path / "szt_shipped_pkg.zip"
+    with zipfile.ZipFile(pkg, "w") as zf:
+        zf.writestr("szt_shipped_pkg/__init__.py", "VALUE = 'package'\n")
+    spark.sparkContext.addPyFile(str(mod))
+    spark.sparkContext.addPyFile(str(pkg))
+
+    def shipped(task):
+        import szt_shipped_mod
+        import szt_shipped_pkg
+
+        return (task, szt_shipped_mod.VALUE, szt_shipped_pkg.VALUE)
+
+    rows = _task_rows(
+        spark, shipped,
+        [("t", T.LongType()), ("mod", T.StringType()), ("pkg", T.StringType())],
+    )
+    assert rows == [(t, "module", "package") for t in range(8)]
+
+    # the workers' zipimporters over the fetched copy are stamped now;
+    # rewrite it with one more module (local mode: the executor's files
+    # root is the driver's)
+    with zipfile.ZipFile(SparkFiles.get(pkg.name), "w") as zf:
+        zf.writestr("szt_shipped_pkg/__init__.py", "VALUE = 'package'\n")
+        zf.writestr("szt_shipped_pkg/extra.py", "VALUE = 'extra'\n")
+
+    def changed(task):
+        from szt_shipped_pkg import extra
+
+        return (task, extra.VALUE)
+
+    rows = _task_rows(spark, changed, [("t", T.LongType()), ("v", T.StringType())])
+    assert rows == [(t, "extra") for t in range(8)]
+
+
+def test_workers_keep_the_checked_zip_invalidation(spark):
+    """A worker that ran an sz_spark task has the checked
+    zipimporter.invalidate_caches installed for its later tasks."""
+    from pyspark.sql import types as T
+
+    def warm(task):
+        from sz_spark import kernels  # noqa: F401
+
+        return (task,)
+
+    def probe(task):
+        import sys
+        import zipimport
+
+        method = zipimport.zipimporter.invalidate_caches
+        return (
+            task,
+            "sz_spark" in sys.modules,
+            bool(getattr(method, "_sz_checked", False)),
+        )
+
+    _task_rows(spark, warm, [("t", T.LongType())])
+    rows = _task_rows(
+        spark, probe,
+        [("t", T.LongType()), ("imported", T.BooleanType()),
+         ("checked", T.BooleanType())],
+    )
+    imported = [r for r in rows if r[1]]
+    assert imported, "no task ran in a worker that had imported sz_spark"
+    assert all(checked for _, _, checked in imported), rows
+
+
+def test_upstream_width(spark):
+    """Scan: the RDD's width; shuffle plan: the configured width, or 0
+    (unknown) once AQE may coalesce its partitions."""
+    from pyspark.sql import functions as F
+
+    from sz_spark.udfs import spread_for_python, upstream_width
+
+    scan = spark.range(100, numPartitions=3)
+    grouped = scan.groupBy((F.col("id") % 7).alias("k")).count()
+    assert upstream_width(scan) == 3
+    assert upstream_width(grouped) == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        assert upstream_width(grouped) == 0
+        assert upstream_width(scan) == 3
+        spread = spread_for_python(grouped, 16)
+        plan = spread._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning(16)" in plan
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_pipeline_gather_tiers_identical(spark):
     """run_pipeline with the gathered tier (default at this corpus
     size) and the join tier (SZ_NO_GATHER=1) must produce identical
