@@ -1,7 +1,6 @@
 #!/usr/bin/env python
-"""Round-6 optimization helper benchmarks.  bench.py is FROZEN for
-measurement (the driver times the round with the round-start copy), so
-every extra instrument lives here.
+"""Extra benchmark instruments kept out of bench.py, whose timing loop
+stays fixed so its records stay comparable.
 
 Modes:
   python bench_extra.py queries [name ...]
@@ -11,14 +10,13 @@ Modes:
   python bench_extra.py probe [cores] [scale_k]
       one flagship-pipeline scaling probe in a fresh subprocess —
       identical to bench.py --scale-probe (cores default 8).
-  python bench_extra.py stages [cores] [scale_k]
-      stage-by-stage pipeline profile at local[cores] over the
-      replicated corpus: each stage is localCheckpoint-materialized and
-      timed separately so the wall decomposes by operator.
   python bench_extra.py plans <out_dir> [suffix] [name ...]
       dump .explain("formatted") of registry queries to
       <out_dir>/<name>_<suffix>.txt (default suffix 'before', default
       all registry queries).
+
+Per-stage walls of the real pipeline come from
+``python3 perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -34,14 +32,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _session(cores: int | None = None, shuffle: int | None = None):
+def _session():
     from sz_spark.session import build_session
 
-    cores = cores or CPUS
     return build_session(
-        master=f"local[{cores}]",
-        shuffle_partitions=shuffle if shuffle is not None else cores,
-        app_name="bench_extra",
+        master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name="bench_extra"
     )
 
 
@@ -113,91 +108,6 @@ def mode_probe(cores: int, scale_k: int) -> None:
     print(out.stdout.strip().splitlines()[-1])
 
 
-def mode_stages(cores: int, scale_k: int) -> None:
-    """Decomposed pipeline probe: localCheckpoint walls per stage."""
-    from pyspark.sql import functions as F
-
-    import bench
-    from sz_spark import blocking, canonicalize as canon, clustering, scoring
-    from sz_spark.pipeline import PipelineConfig, pairs_stage
-    from sz_spark.transcripts import build_transcripts_from_documents
-
-    cfg = PipelineConfig()
-    spark = _session(cores, shuffle=4 * cores)
-    docs_in, scale_k = bench.replicated_documents(spark, SF_DIR, scale_k)
-    transcripts = build_transcripts_from_documents(docs_in).localCheckpoint()
-    n_turns = transcripts.count()
-    timings: dict[str, float] = {}
-
-    def stage(name, df):
-        spark.sparkContext.setJobDescription(f"stage:{name}")
-        t0 = time.time()
-        out = df.localCheckpoint()
-        timings[name] = round(time.time() - t0, 2)
-        print(f"[stage] {name}: {timings[name]}s", file=sys.stderr, flush=True)
-        return out
-
-    t_all = time.time()
-    docs = stage(
-        "canonicalize",
-        canon.canonicalize(transcripts).withColumn("did", F.xxhash64("conv_id")),
-    )
-    feats = stage(
-        "doc_features",
-        blocking.doc_features(
-            docs,
-            id_col="did",
-            ndim=cfg.ndim,
-            widths=cfg.fp_widths,
-            seed=cfg.seed,
-            n_bands=cfg.n_bands,
-            rows_per_band=cfg.rows_per_band,
-        ),
-    )
-    # run_pipeline's two-tier pairs stage: prune survivors
-    pairs_df, bcs = pairs_stage(docs, feats, cfg)
-    pruned = stage("pairs", pairs_df)
-    for bc in bcs:
-        bc.unpersist()
-    with_texts = scoring.attach_texts(pruned, docs, id_col="did")
-    scored = stage(
-        "score",
-        scoring.score_pairs(with_texts, threshold=None, bounded=cfg.threshold).select(
-            "id_a", "id_b", "edit_distance", "sim"
-        ),
-    )
-    id_map = docs.select("did", "conv_id")
-    edges = (
-        scored.filter(F.col("sim") >= cfg.threshold)
-        .join(id_map.withColumnRenamed("did", "id_a"), "id_a")
-        .withColumnRenamed("conv_id", "src")
-        .join(id_map.withColumnRenamed("did", "id_b"), "id_b")
-        .withColumnRenamed("conv_id", "dst")
-        .select("src", "dst")
-    )
-    asg = clustering.connected_components(edges, max_iterations=cfg.cc_max_iterations)
-    clusters = stage(
-        "cc+clusters", clustering.clusters_with_singletons(asg, docs, "conv_id")
-    )
-    n_clusters = clusters.select("cluster_id").distinct().count()
-    wall = round(time.time() - t_all, 2)
-    print(
-        json.dumps(
-            {
-                "cores": cores,
-                "scale_k": scale_k,
-                "n_turns": n_turns,
-                "n_clusters": n_clusters,
-                "stage_walls": timings,
-                "total_wall_sec": wall,
-                "note": "stage walls include checkpoint materialization; "
-                "total > fused pipeline wall",
-            }
-        )
-    )
-    spark.stop()
-
-
 def mode_plans(out_dir: str, suffix: str, names: list[str]) -> None:
     import contextlib
     import io
@@ -230,10 +140,6 @@ if __name__ == "__main__":
         cores = int(sys.argv[2]) if len(sys.argv) > 2 else 8
         scale_k = int(sys.argv[3]) if len(sys.argv) > 3 else 16
         mode_probe(cores, scale_k)
-    elif mode == "stages":
-        cores = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-        scale_k = int(sys.argv[3]) if len(sys.argv) > 3 else 16
-        mode_stages(cores, scale_k)
     elif mode == "plans":
         out_dir = sys.argv[2] if len(sys.argv) > 2 else "plans/r06"
         suffix = sys.argv[3] if len(sys.argv) > 3 else "before"

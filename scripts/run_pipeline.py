@@ -35,15 +35,37 @@ if os.path.isdir(os.path.join(_repo_root, "sz_spark")) and _repo_root not in sys
     sys.path.insert(0, _repo_root)
 
 
-def main() -> int:
+#: flags that set a PipelineConfig field of the same name
+_CONFIG_FLAGS = ("checkpoint_dir", "threshold", "ndim", "max_block_size")
+
+
+def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--sf-dir", help="directory with documents.parquet (synth input)")
     p.add_argument("--transcripts", help="parquet path of a real transcripts table")
     p.add_argument("--output", required=True, help="output path for cluster assignments")
-    p.add_argument("--checkpoint-dir", default=None)
-    p.add_argument("--threshold", type=float, default=0.94)
-    p.add_argument("--ndim", type=int, default=128)
-    p.add_argument("--max-block-size", type=int, default=64)
+    # pipeline flags default to PipelineConfig's fields: unset, they
+    # stay out of the namespace (see _config)
+    unset = argparse.SUPPRESS
+    p.add_argument("--checkpoint-dir", default=unset)
+    p.add_argument("--threshold", type=float, default=unset)
+    p.add_argument("--ndim", type=int, default=unset)
+    p.add_argument("--max-block-size", type=int, default=unset)
+    return p
+
+
+def _config(args: argparse.Namespace):
+    """PipelineConfig from the flags the user set; the rest keep the
+    dataclass defaults."""
+    from sz_spark.pipeline import PipelineConfig
+
+    return PipelineConfig(
+        **{k: getattr(args, k) for k in _CONFIG_FLAGS if hasattr(args, k)}
+    )
+
+
+def main() -> int:
+    p = _parser()
     args = p.parse_args()
     if not args.sf_dir and not args.transcripts:
         p.error("one of --sf-dir / --transcripts is required")
@@ -65,7 +87,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("WARN")
 
-    from sz_spark.pipeline import PipelineConfig, run_pipeline
+    from sz_spark.pipeline import run_pipeline
     from sz_spark.transcripts import build_transcripts
 
     if args.transcripts:
@@ -73,12 +95,7 @@ def main() -> int:
     else:
         transcripts = build_transcripts(spark, args.sf_dir)
 
-    cfg = PipelineConfig(
-        ndim=args.ndim,
-        threshold=args.threshold,
-        max_block_size=args.max_block_size,
-        checkpoint_dir=args.checkpoint_dir,
-    )
+    cfg = _config(args)
     t0 = time.time()
     n_turns = transcripts.count()
     stages = run_pipeline(spark, transcripts, cfg)

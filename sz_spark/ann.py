@@ -21,45 +21,27 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-def _dot(x, y):
-    return F.aggregate(
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def _norm(x):
-    return F.sqrt(
-        F.aggregate(F.transform(x, lambda p: p * p), F.lit(0.0), lambda a, v: a + v)
-    )
-
 
 def attach_cosine_arrow(
     df: DataFrame, a_col: str, b_col: str, out_col: str = "_cos_raw"
 ) -> DataFrame:
     """df + unrounded cosine(a_col, b_col) computed in a mapInArrow batch,
-    BIT-IDENTICAL to the ``_dot/_norm`` expression form: the accumulation
-    loops over dimensions sequentially (``acc += a[:, d] * b[:, d]``),
-    which is exactly the JVM aggregate's left-to-right f64 op order —
-    same products, same addition order, same sqrt/divide — so swapping
-    transports cannot move a value across a rounding boundary.  The
-    caller keeps F.round in the JVM.  The expression path evaluated one
-    interpreted lambda per element per pair (guide §4.2; it also repaid
-    the JIT-warmup cliff per fresh JVM).  Rows whose two lists differ in
-    length or are non-uniform fall back per-batch to an exact per-row
-    loop (same op order); NULL lists yield NULL like the expression
-    form.  Zero-norm/empty inputs yield NULL where the ANSI expression
-    form would raise DIVIDE_BY_ZERO — no corpus contains them, and NULL
-    is the tolerant contract (the threshold/rank consumers drop it)."""
-    import os
-
-    from pyspark.sql import types as T
-
-    if os.environ.get("SZ_JVM_COSINE") == "1":  # expression twin (tests)
-        return df.withColumn(
-            out_col,
-            _dot(F.col(a_col), F.col(b_col))
-            / (_norm(F.col(a_col)) * _norm(F.col(b_col))),
-        ).drop(a_col, b_col)
+    BIT-IDENTICAL to the Spark-expression form (zip_with/aggregate
+    dot product over sqrt-of-aggregate norms, kept in tests/ as the
+    oracle): the accumulation loops over dimensions sequentially
+    (``acc += a[:, d] * b[:, d]``), which is exactly the JVM aggregate's
+    left-to-right f64 op order — same products, same addition order,
+    same sqrt/divide — so the transport cannot move a value across a
+    rounding boundary.  The caller keeps F.round in the JVM.  The
+    expression form evaluated one interpreted lambda per element per
+    pair (guide §4.2; it also repaid the JIT-warmup cliff per fresh
+    JVM) and measured slower on dedup_embedding_cosine and
+    ann_cosine_topk.  Rows whose two lists differ in length or are
+    non-uniform fall back per-batch to an exact per-row loop (same op
+    order); NULL lists yield NULL like the expression form.
+    Zero-norm/empty inputs yield NULL where the ANSI expression form
+    would raise DIVIDE_BY_ZERO — no corpus contains them, and NULL is
+    the tolerant contract (the threshold/rank consumers drop it)."""
     carry = [c for c in df.columns if c not in (a_col, b_col)]
     src = df.select(*carry, a_col, b_col)
     out_schema = T.StructType(

@@ -1,12 +1,12 @@
 """MinHash-LSH blocking: fingerprint -> band signatures -> candidate blocks.
 
-Two interchangeable signature families:
+Two signature families:
 
-* :func:`doc_features` / :func:`minhash_bands` — the
-  reference-conformant rolling-hash MinHash (sz_spark.kernels, byte-exact
-  vs stringzillas' Fingerprints engine) and its band keys, computed in
-  one Arrow pass per batch of documents; :func:`bands_from_features`
-  explodes the pipeline's feature table into (id, band_id, band_hash).
+* :func:`doc_features` — the reference-conformant rolling-hash MinHash
+  (sz_spark.kernels, byte-exact vs stringzillas' Fingerprints engine),
+  its band keys and the layered prefix key, computed in one Arrow pass
+  per batch of documents; :func:`bands_from_features` explodes the
+  feature table into (id, band_id, band_hash).  This is the pipeline's.
 * :func:`shingle_minhash_bands` — an md5-over-shingles MinHash whose
   math is *also* expressible in SQL (:func:`shingle_minhash_bands_sql`),
   used by the DuckDB correctness oracle so the whole blocking stage is
@@ -16,9 +16,9 @@ Scale design: above the gather gate, banding is the pipeline's ONE
 deliberate shuffle before pair scoring (:func:`block_pairs`); below it
 the blocks come from the broadcast block keys in one narrow pass
 (:func:`block_pairs_gathered`).  Oversized blocks (stop-band
-signatures) are capped on both tiers — the classic LSH guard; at 10^12
-turns a single hot band would otherwise generate O(n^2) pairs.  AQE
-skew-join handles residual imbalance.
+signatures) are suppressed on both tiers — the classic LSH guard; at
+10^12 turns a single hot band would otherwise generate O(n^2) pairs.
+AQE skew-join handles residual imbalance.
 """
 
 from __future__ import annotations
@@ -47,106 +47,6 @@ DEFAULT_BANDS = 32
 DEFAULT_ROWS = 4
 
 
-def minhash_bands(
-    docs: DataFrame,
-    text_col: str = "doc",
-    id_col: str = "conv_id",
-    ndim: int = DEFAULT_NDIM,
-    widths=DEFAULT_FP_WIDTHS,
-    seed: int = 0,
-    n_bands: int = DEFAULT_BANDS,
-    rows_per_band: int = DEFAULT_ROWS,
-    prefix_len: int = 56,
-) -> DataFrame:
-    """docs -> (id, band_id, band_hash): the one-pass blocking stage.
-
-    Fingerprint + band hashing run fused inside a single pandas UDF
-    (see udfs.make_band_keys_arrow_fn) so only n_bands longs per doc
-    cross the Arrow boundary; the explode is a cheap JVM posexplode.
-
-    Layered blocking: a deterministic PREFIX key (band_id = -1, hash of
-    the first ``prefix_len`` bytes) is unioned with the minhash bands —
-    the ER-classic "block on a strong attribute" key.  Short documents
-    have too few rolling windows for reliable band agreement (measured:
-    14/3753 true pairs at sf0.1 were 2-turn docs missed by all 32
-    bands); their shared conversation-handle prefix recovers them.
-
-    ``prefix_len`` must COVER the strong attribute: the synthetic
-    corpus's conversation handle is 49 bytes ('u' + 6 digits x 8), and
-    the round-1 default of 32 cut it mid-handle — every block then
-    mixed ~dozens of entities sharing leading digits, which was cheap
-    only because salting silently dropped cross-salt pairs.  With
-    recall-preserving salting (round 2) those precision-less blocks
-    would pay full O(s^2); at 56 bytes each prefix block is one entity
-    (its 2-3 conversation variants), recall is identical (same-entity
-    variants share the WHOLE handle by construction), and the prefix
-    layer's pair cost is O(n).  Block caps/salting still apply to
-    prefix blocks like any other.  ``prefix_len=0`` disables the
-    layer."""
-    from pyspark.sql import types as T
-
-    from sz_spark.udfs import make_band_keys_arrow_fn
-
-    # Spread docs before entering Python when they arrive
-    # under-partitioned — the fingerprint UDF's CPU cost per byte is
-    # invisible to the optimizer (guide §2/§4).  4x cores when
-    # spreading: per-doc fingerprint cost varies with length, so four
-    # waves of smaller chunks keep the tail short.  When the upstream
-    # (canonicalize's groupBy) already left >= parallelism partitions,
-    # the extra round-robin exchange of the full doc bytes is skipped —
-    # measured as pure overhead at bench scale.
-    from sz_spark.udfs import spread_for_python
-
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    docs = spread_for_python(docs, 4 * parallelism)
-    # encode JVM-side, then mapInArrow: the worker reads the Arrow binary
-    # column's (data, offsets) buffers straight into the flat kernel —
-    # no pandas Series, no per-row bytes objects (r4 measured the pandas
-    # transport at ~60% of standalone kernel throughput).
-    # SZ_PANDAS_TRANSPORT=1 flips back to the pandas twin — the bench
-    # A/B switch (box noise demands same-window interleaving) and the
-    # fallback if an Arrow buffer-layout assumption ever breaks.
-    import os
-
-    if os.environ.get("SZ_PANDAS_TRANSPORT") == "1":
-        from sz_spark.udfs import make_band_keys_udf
-
-        keys = make_band_keys_udf(
-            ndim=ndim, widths=widths, seed=seed, n_bands=n_bands,
-            rows_per_band=rows_per_band,
-        )
-        bands = docs.select(
-            F.col(id_col), keys(F.encode(F.col(text_col), "utf-8")).alias("bk")
-        )
-    else:
-        fn = make_band_keys_arrow_fn(
-            ndim=ndim, widths=widths, seed=seed, n_bands=n_bands,
-            rows_per_band=rows_per_band,
-        )
-        src = docs.select(
-            F.col(id_col), F.encode(F.col(text_col), "utf-8").alias("_t")
-        )
-        out_schema = T.StructType(
-            [
-                src.schema[id_col],
-                T.StructField("bk", T.ArrayType(T.LongType()), False),
-            ]
-        )
-        bands = src.mapInArrow(fn, out_schema)
-    bands = bands.select(
-        id_col,
-        F.posexplode("bk").alias("band_id", "band_hash"),
-    )
-    if prefix_len > 0:
-        prefix = docs.select(
-            F.col(id_col),
-            F.lit(-1).alias("band_id"),
-            _prefix_key(text_col, prefix_len).alias("band_hash"),
-        )
-        bands = bands.unionByName(prefix)
-    return bands
-
-
 def doc_features(
     docs: DataFrame,
     text_col: str = "doc",
@@ -159,10 +59,10 @@ def doc_features(
     prefix_len: int = 56,
 ) -> DataFrame:
     """docs -> (id, len, pk long, bk array<long>, hist binary): the
-    fused per-document feature table — the block keys (minhash_bands
-    math: ``pk`` is the layered prefix key, ``bk`` the LSH band keys)
-    AND the packed prune histogram (scoring._prune_attrs_packed bytes)
-    from ONE pass over the doc bytes.
+    fused per-document feature table — the block keys (``pk`` the
+    layered prefix key, :func:`_prefix_key`; ``bk`` the LSH band keys,
+    udfs.band_keys) AND the packed prune histogram
+    (udfs.pack_histograms) from ONE pass over the doc bytes.
 
     The pipeline materializes this narrow frame once and derives the
     band explosion (:func:`bands_from_features`), the prune attributes
@@ -201,7 +101,21 @@ def doc_features(
 
 
 def _prefix_key(text_col: str, prefix_len: int):
-    """The layered prefix block key (band_id -1; see minhash_bands)."""
+    """The layered prefix block key (band_id -1), unioned with the
+    minhash bands — the ER-classic "block on a strong attribute" key.
+    Short documents have too few rolling windows for reliable band
+    agreement (measured: 14/3753 true pairs at sf0.1 were 2-turn docs
+    missed by all 32 bands); their shared conversation-handle prefix
+    recovers them.
+
+    ``prefix_len`` must COVER the strong attribute: the synthetic
+    corpus's conversation handle is 49 bytes ('u' + 6 digits x 8).  A
+    32-byte prefix cut it mid-handle, so every block mixed dozens of
+    entities sharing leading digits; at 56 bytes each prefix block is
+    one entity (its 2-3 conversation variants), recall is identical
+    (same-entity variants share the WHOLE handle by construction), and
+    the prefix layer's pair cost is O(n).  The block cap applies to
+    prefix blocks like any other."""
     return F.xxhash64(F.substring(F.col(text_col), 1, prefix_len))
 
 
@@ -209,10 +123,10 @@ def bands_from_features(
     feats: DataFrame, docs: DataFrame | None = None, id_col: str = "conv_id"
 ) -> DataFrame:
     """(id, band_id, band_hash) derived from a :func:`doc_features`
-    frame — the same rows minhash_bands emits: the prefix key ``pk`` as
-    band -1 plus the posexplode of the band keys.  Reads only ``feats``
-    (the prefix key is computed in doc_features); ``docs`` is accepted
-    for two-argument callers and unused."""
+    frame: the prefix key ``pk`` as band -1 plus the posexplode of the
+    band keys.  Reads only ``feats`` (the prefix key is computed in
+    doc_features); ``docs`` is accepted for two-argument callers and
+    unused."""
     bands = feats.select(
         id_col, F.posexplode("bk").alias("band_id", "band_hash")
     )
@@ -222,107 +136,14 @@ def bands_from_features(
     return prefix.unionByName(bands)
 
 
-def cap_blocks(
-    bands: DataFrame,
-    max_block_size: int = 64,
-    salt_up_to: int = 0,
-) -> tuple[DataFrame, DataFrame]:
-    """Tame oversized blocks (stop-bands).  Returns (kept, suppressed_stats).
-
-    Mirrors the reference's refusal to let one giant work item starve the
-    pool (similarities/serial.hpp:3296-3395 two-tier scheduling): a block
-    of size s contributes O(s^2) candidate pairs with near-zero precision
-    value.  Three tiers:
-
-    * s <= max_block_size            — kept intact (salt 0, n_salts 1)
-    * max < s <= salt_up_to          — SALTED: each member gets a
-      deterministic salt (xxhash64 of the id mod ceil(s/max)) plus the
-      block's n_salts.  candidate_pairs replicates ONE join side across
-      all n_salts (classic salted self-join), so every in-block pair is
-      still produced — salting loses NO recall; it redistributes a hot
-      block's O(s^2) pair work across n_salts reducers (per-reducer
-      work O(max * s) <= O(max * salt_up_to)) instead of one
-    * s > salt_up_to                 — suppressed and *logged* (never
-      silently); this tier, not salting, is the total-work bound
-
-    ``salt_up_to=0`` disables salting (drop-only behavior).
-    """
-    sizes = bands.groupBy("band_id", "band_hash").agg(
-        F.count(F.lit(1)).alias("block_size")
-    )
-    joined = bands.join(sizes, ["band_id", "band_hash"])
-    drop_above = salt_up_to if salt_up_to > max_block_size else max_block_size
-    kept = joined.filter(F.col("block_size") <= drop_above)
-    id_col = [c for c in bands.columns if c not in ("band_id", "band_hash")][0]
-    n_salts = F.when(
-        F.col("block_size") <= max_block_size, F.lit(1).cast("long")
-    ).otherwise(F.ceil(F.col("block_size") / F.lit(max_block_size)).cast("long"))
-    kept = (
-        kept.withColumn("n_salts", n_salts)
-        .withColumn(
-            "salt",
-            F.when(F.col("n_salts") == 1, F.lit(0).cast("long")).otherwise(
-                F.pmod(F.xxhash64(F.col(id_col)), F.col("n_salts"))
-            ),
-        )
-        .drop("block_size")
-    )
-    suppressed = sizes.filter(F.col("block_size") > drop_above)
-    return kept, suppressed
-
-
-def candidate_pairs(bands: DataFrame, id_col: str = "conv_id") -> DataFrame:
-    """Within-block pairs, lower-triangle only (a < b — the reference's
-    symmetric-mirror trick, serial.hpp:3356-3360), deduped across bands.
-
-    When cap_blocks salted the input, this is the recall-preserving
-    salted self-join: side a keeps its own salt; side b is REPLICATED to
-    every salt of its block (explode over 0..n_salts-1), so a pair
-    (x, y) in a salted block still meets — at exactly x's salt.  The
-    shuffle key (band_id, band_hash, salt) splits a hot block across
-    n_salts reducers; only salted rows replicate (n_salts == 1 explodes
-    to a single row), so small blocks pay nothing."""
-    if "salt" in bands.columns:
-        keys = ["band_id", "band_hash", "salt"]
-        a = bands.drop("n_salts").alias("a")
-        # replicate ONLY the salted minority; the n_salts == 1 majority
-        # keeps its row as-is (no per-row array allocation + explode)
-        plain = bands.filter(F.col("n_salts") == 1).drop("n_salts")
-        salted = (
-            bands.filter(F.col("n_salts") > 1)
-            .drop("salt")
-            .withColumn(
-                "salt",
-                F.explode(
-                    F.sequence(F.lit(0).cast("long"), F.col("n_salts") - 1)
-                ),
-            )
-            .drop("n_salts")
-        )
-        b = plain.unionByName(salted).alias("b")
-    else:
-        keys = ["band_id", "band_hash"]
-        a = bands.alias("a")
-        b = bands.alias("b")
-    return (
-        a.join(b, keys)
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 def block_pairs(
     bands: DataFrame,
     id_col: str = "conv_id",
     max_block_size: int = 64,
     salt_up_to: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
-    """Fused cap_blocks + candidate_pairs: the within-block pair set in
-    TWO shuffles instead of the salted self-join's four-plus.
+    """The join tier's blocking: every within-block pair, in TWO
+    shuffles.
 
     Plan: one hash-partition on (band_id, band_hash) serves a window
     count (the cap filter — blocks above the cap are dropped BEFORE any
@@ -331,18 +152,17 @@ def block_pairs(
     Catalyst reuses the exchange for all three.  Lower-triangle pairs
     are then emitted from each block's id array
     (:func:`explode_lower_triangle`): per-block work is bounded by
-    cap^2 cheap emissions in one task, which replaces the salting
-    machinery — salting redistributed O(s^2) JOIN-reducer work, but
-    with in-array emission the bound is the cap itself.  The global
+    cap^2 cheap emissions in one task, so the bound is the cap itself
+    and no block needs salting across reducers.  The global
     cross-band dedup is the second shuffle.  This is the join tier's
     blocking (above the gather gate); below it the pipeline builds the
     same blocks from the broadcast keys with no band rows and no
     shuffle (:func:`block_pairs_gathered`).
 
-    Same output contract as cap_blocks + candidate_pairs: every
-    unordered in-block pair (id_a < id_b) from blocks of size <= the
-    drop threshold (salt_up_to when set, else max_block_size), plus the
-    suppressed-block stats frame (band_id, band_hash, block_size)."""
+    Returns every unordered in-block pair (id_a < id_b), once, from
+    blocks of 2..drop-threshold members (salt_up_to when it exceeds
+    max_block_size, else max_block_size), plus the suppressed-block
+    stats frame (band_id, band_hash, block_size)."""
     blocks, suppressed = _capped_blocks(
         bands, id_col, _drop_above(max_block_size, salt_up_to)
     )
@@ -403,9 +223,9 @@ def block_pairs_gathered(
     (2 <= size <= drop threshold): dedup by construction (the ICDE'19
     metric-join partitioning idea).  The size check matters: a pair's
     first collision can sit in a suppressed stop-band block, and it
-    must then come from its next kept row.  The same pass applies
-    scoring.prune_pairs_arrow's length + histogram bounds (identical
-    f64 comparisons), so the set equals block_pairs + dropDuplicates +
+    must then come from its next kept row.  The same pass applies the
+    length + histogram prune (udfs.prune_keep, as
+    scoring.prune_pairs_arrow does), so the set equals block_pairs +
     prune_pairs_arrow over bands_from_features of the same table."""
     from pyspark.sql import types as T
 
@@ -463,8 +283,9 @@ def _gathered_task_pairs(
     smaller id."""
     import numpy as np
 
+    from sz_spark.udfs import prune_keep
+
     ids, lens, hists, keys, sizes = value
-    lim = 1.0 - threshold
     for j in _snake_rows(task, n_tasks, len(keys)):
         order = np.argsort(keys[j], kind="stable")
         sk = keys[j][order]
@@ -485,20 +306,7 @@ def _gathered_task_pairs(
                 dup = (ki[pa_] == ki[pb_]) & (sizes[i][pa_] <= drop_above)
                 if dup.any():
                     pa_, pb_ = pa_[~dup], pb_[~dup]
-            la, lb = lens[pa_], lens[pb_]
-            maxlen = np.maximum(la, lb)
-            bound = lim * maxlen  # (1-τ)*max in f64, as prune_pairs_arrow
-            keep = (maxlen - np.minimum(la, lb)) <= bound
-            sub = np.nonzero(keep)[0]
-            # L1 in slices: the (pairs, 96) gathers dominate memory;
-            # int32 holds any sum of 96 u16 differences exactly
-            for s0 in range(0, len(sub), 4096):
-                ss = sub[s0 : s0 + 4096]
-                l1 = np.abs(
-                    hists[pa_[ss]].astype(np.int32)
-                    - hists[pb_[ss]].astype(np.int32)
-                ).sum(axis=1)
-                keep[ss] &= (l1 / 2.0) <= bound[ss]
+            keep = prune_keep(lens, hists, pa_, pb_, threshold)
             sel = np.nonzero(keep)[0]
             if len(sel):
                 yield ids[pa_[sel]], ids[pb_[sel]]
@@ -518,13 +326,11 @@ def explode_lower_triangle(
     (guide §4.2; the lambda path also paid the JIT-warmup cliff on
     every fresh JVM).  Output batches are chunked (<= ~256k pairs) so a
     near-cap block never materializes O(size^2) rows in one allocation.
-    Struct elements (field-lexicographic ordering) and SZ_JVM_TRIANGLE=1
-    keep the JVM expression twin below."""
-    import os
-
+    Struct elements (field-lexicographic ordering) take the JVM
+    expression form below."""
     elem = blocks.schema[ids_col].dataType.elementType
     atomic = elem.typeName() in ("long", "integer", "string", "short", "byte")
-    if os.environ.get("SZ_JVM_TRIANGLE") == "1" or not atomic:
+    if not atomic:
         return explode_lower_triangle_exprs(blocks, ids_col, out)
     from pyspark.sql import types as T
 
@@ -571,8 +377,8 @@ def _triangle_chunks(offsets, max_pairs: int):
 def _triangle_arrow_fn(out: tuple, max_pairs_per_batch: int = 1 << 18):
     """RecordBatch (ids list<T>) -> (out0 T, out1 T): every unordered
     in-list pair, out0 = min, out1 = max — value-identical to the
-    least/greatest of the expression twin (same total order for longs
-    and UTF8 strings)."""
+    least/greatest of :func:`explode_lower_triangle_exprs` (same total
+    order for longs and UTF8 strings)."""
 
     def fn(batches):
         import numpy as np
@@ -610,7 +416,8 @@ def _triangle_arrow_fn(out: tuple, max_pairs_per_batch: int = 1 << 18):
 def explode_lower_triangle_exprs(
     blocks: DataFrame, ids_col: str = "ids", out: tuple = ("id_a", "id_b")
 ) -> DataFrame:
-    """JVM expression twin of :func:`explode_lower_triangle`.
+    """JVM expression form of :func:`explode_lower_triangle`, used for
+    element types the Arrow emitter does not order (structs).
 
     Two CHAINED explodes, not one flattened pair array: peak per-row
     memory stays O(block size) (each generated row carries one element
@@ -659,25 +466,18 @@ def shingle_minhash_bands(
     sig[k] = min over shingles s of md5(k || '|' || s) (hex string order);
     band j = hash-of-concat of its rows.
 
-    Production transport is an Arrow-batched mapInArrow running
-    hashlib's C md5 (guide §4.2): the JVM expression form below
-    (:func:`shingle_minhash_bands_exprs`) evaluates 8 md5s per shingle
-    through interpreted higher-order-function lambdas, and its first
-    executions run before HotSpot has compiled those paths — measured
-    11-13 s cold vs 2.3 s steady-state for dedup_minhash_lsh at sf0.1,
-    with ~2 busy cores and zero steal/GC during the cold runs (pure
-    JIT-warmup wall).  hashlib is compiled C from call one, so the cold
-    and steady costs coincide.  Values are bit-identical (md5 hex is
-    md5 hex; byte order == hex-string order), asserted by
-    tests/test_blocking.py::test_minhash_bands_arrow_vs_exprs.
-    SZ_JVM_MINHASH=1 forces the expression twin.
+    The transport is an Arrow-batched mapInArrow running hashlib's C
+    md5 (guide §4.2): the same math as Spark expressions evaluates 8
+    md5s per shingle through interpreted higher-order-function lambdas,
+    and its first executions run before HotSpot has compiled those
+    paths — measured 11-13 s cold vs 2.3 s steady-state for
+    dedup_minhash_lsh at sf0.1, with ~2 busy cores and zero steal/GC
+    during the cold runs (pure JIT-warmup wall).  hashlib is compiled C
+    from call one, so the cold and steady costs coincide.  Values are
+    bit-identical to that expression form (md5 hex is md5 hex; byte
+    order == hex-string order), which tests/test_blocking.py keeps as
+    its oracle.
     """
-    import os
-
-    if os.environ.get("SZ_JVM_MINHASH") == "1":
-        return shingle_minhash_bands_exprs(
-            docs, text_col, id_col, shingle_words, n_hashes, n_bands
-        )
     from pyspark.sql import types as T
 
     # Spread the md5 work before entering Python when the input is
@@ -706,7 +506,7 @@ def shingle_minhash_bands(
 def _shingle_band_arrow_fn(shingle_words: int, n_hashes: int, n_bands: int):
     """RecordBatch (id, text) -> (id, band_0..band_{n_bands-1}); rows
     with no shingles (fewer than ``shingle_words`` tokens) are dropped,
-    matching the expression path's ``size(shingles) > 0`` filter.
+    matching the SQL form's ``len(shingles) > 0`` filter.
     Digest-bytes are compared instead of hexdigest strings — hex
     rendering is byte-order-monotone, so the min is the same shingle."""
     rows_per_band = n_hashes // n_bands
@@ -764,46 +564,6 @@ def _shingle_band_arrow_fn(shingle_words: int, n_hashes: int, n_bands: int):
             )
 
     return fn
-
-
-def shingle_minhash_bands_exprs(
-    docs: DataFrame,
-    text_col: str = "doc",
-    id_col: str = "conv_id",
-    shingle_words: int = 3,
-    n_hashes: int = 8,
-    n_bands: int = 4,
-) -> DataFrame:
-    """JVM-expression twin of :func:`shingle_minhash_bands` (native
-    Spark expressions end to end; the differential/fallback path).
-    Shingling is the shared zip_with construction (textops.word_shingles)
-    — the old transform-lambda form re-evaluated split(text) per element
-    (guide §1.2; measured 8x on sf0.1)."""
-    from sz_spark.textops import word_shingles
-
-    rows_per_band = n_hashes // n_bands
-    d = docs.select(
-        id_col, word_shingles(text_col, shingle_words).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    sig_cols = [
-        F.array_min(
-            F.transform(
-                F.col("shingles"),
-                lambda s: F.md5(F.concat(F.lit(f"{k}|"), s)),
-            )
-        ).alias(f"mh_{k}")
-        for k in range(n_hashes)
-    ]
-    sigs = d.select(id_col, *sig_cols)
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-        ).alias(f"band_{b}")
-        for b in range(n_bands)
-    ]
-    return sigs.select(id_col, *band_cols)
 
 
 def shingle_minhash_bands_ctes(

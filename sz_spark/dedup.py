@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sz_spark import blocking
-from sz_spark.textops import word_shingles
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -113,21 +112,15 @@ def _distinct_shingles_exploded(
     """(doc_id, sh): each document's DISTINCT word n-gram shingles, one
     row per shingle — the exploded form ngram_jaccard_pairs consumes.
 
-    Production transport is mapInArrow: Python's str.split/join/set do
-    the per-document work at C speed, where the expression form
-    (word_shingles zip_with chain + array_distinct + explode) evaluated
-    interpreted lambdas per element and re-paid the JIT-warmup cliff in
-    every fresh JVM (measured: dedup_ngram_jaccard 5-9 s cold vs 1.4 s
-    steady at sf0.1).  Output rows are identical (first-occurrence
-    order within a doc is irrelevant to the downstream groupBys).
-    SZ_JVM_SHINGLES=1 forces the expression twin."""
-    import os
-
-    if os.environ.get("SZ_JVM_SHINGLES") == "1":
-        return docs.select(
-            "doc_id",
-            F.explode(F.array_distinct(word_shingles(text_col, n))).alias("sh"),
-        )
+    The transport is mapInArrow: Python's str.split/join/set do the
+    per-document work at C speed, where the expression form
+    (textops.word_shingles zip_with chain + array_distinct + explode)
+    evaluated interpreted lambdas per element and re-paid the
+    JIT-warmup cliff in every fresh JVM (measured: dedup_ngram_jaccard
+    5-9 s cold vs 1.4 s steady at sf0.1).  Output rows are identical to
+    that expression form, which tests/test_blocking.py keeps as its
+    oracle (first-occurrence order within a doc is irrelevant to the
+    downstream groupBys)."""
     from pyspark.sql import types as T
 
     src = docs.select("doc_id", F.col(text_col).alias("_t"))

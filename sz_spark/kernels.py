@@ -260,7 +260,7 @@ def _fingerprint_padded_batch(
 
     ``with_counts=False`` skips the count-of-min bookkeeping (3 of the
     ~13 memory passes per position) for consumers that only need the
-    min-hashes — the LSH blocking path (udfs.make_band_keys_udf) never
+    min-hashes — the LSH blocking path (udfs.make_doc_features_arrow_fn) never
     reads counts.  Hash values are identical either way.
 
     One Python step per BYTE POSITION updates all ``ndim`` dimensions at

@@ -1,9 +1,10 @@
 """End-to-end record-linkage pipeline (BASELINE.json north_rule):
 
-transcripts -> canonicalize -> MinHash fingerprints (reference math) ->
-LSH bands -> capped blocks -> candidate pairs -> length prune ->
-batched-DP edit-similarity scoring -> threshold -> large-star/small-star
-connected components -> entity clusters.
+transcripts -> canonicalize -> doc features (MinHash fingerprints in
+the reference math, LSH band keys, prune histograms) -> blocks with
+stop-band suppression -> length + histogram prune -> banded-DP
+edit-similarity scoring -> threshold -> connected components -> entity
+clusters.
 
 Each stage is resumable via CheckpointManager; evaluation computes
 pairwise precision/recall/F1 against the synthetic ground truth at a
@@ -106,7 +107,7 @@ def run_pipeline(
     gather_bcs: list = []
 
     def _pairs():
-        out, bcs = pairs_stage(docs, feats, cfg)
+        out, bcs = pairs_stage(feats, cfg)
         gather_bcs.extend(bcs)
         for bc in bcs:
             ids = bc.value[0]  # id-sorted: a collision is a repeat
@@ -130,9 +131,9 @@ def run_pipeline(
 
     def _scored():
         with_texts = scoring.attach_texts(pairs, docs, id_col="did")
-        out = scoring.score_pairs(
-            with_texts, threshold=None, bounded=cfg.threshold
-        ).select("id_a", "id_b", "edit_distance", "sim")
+        out = scoring.score_pairs(with_texts, bounded=cfg.threshold).select(
+            "id_a", "id_b", "edit_distance", "sim"
+        )
         # map surrogates back to conv_ids on the (small) scored output
         return (
             out.join(id_map.withColumnRenamed("did", "id_a"), "id_a")
@@ -181,9 +182,7 @@ def _block_kw(cfg: PipelineConfig) -> dict:
     )
 
 
-def pairs_stage(
-    docs: DataFrame, feats: DataFrame, cfg: PipelineConfig
-) -> tuple[DataFrame, list]:
+def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, list]:
     """run_pipeline's ``pairs`` stage frame — the prune survivors (did
     ids, id_a < id_b) — plus the broadcasts it captured, to unpersist
     once the frame is materialized.
@@ -210,8 +209,7 @@ def pairs_stage(
     # per side and drop ~95% of candidates; the doc bytes join only the
     # survivors (measured funnel in scoring.attach_prune_attrs)
     attrs = scoring.attach_prune_attrs(
-        candidates, docs, id_col="did",
-        attrs_frame=feats.select("did", "len", "hist"),
+        candidates, feats.select("did", "len", "hist")
     )
     return scoring.prune_pairs_arrow(attrs, cfg.threshold), []
 

@@ -1045,15 +1045,16 @@ def er_clusters(spark, sf):
 
 def er_clusters_production(spark, sf):
     """The DEPLOYED pipeline plan — reference-fingerprint MinHash
-    blocking (blocking.minhash_bands + layered prefix key), capped and
-    salted blocks, histogram/length prunes, bounded banded DP, hybrid
-    connected components — NOT the md5-shingle SQL stand-in the other
+    blocking (blocking.doc_features band keys + layered prefix key),
+    blocks with stop-band suppression, the fused length + histogram
+    prune, bounded banded DP, hybrid connected components — NOT the
+    md5-shingle SQL stand-in the other
     er_* rows run.  The oracle is the analytic GROUND TRUTH: every
     conversation variant of doc_id clusters to 'c<doc_id>' because
     true-variant similarity >= 0.96 and cross-entity <= 0.905 by the
     salt construction (sz_spark.transcripts), so a pipeline with
     pairwise P=R=1.0 must reproduce the entity partition exactly; a
-    hash mismatch means the production blocking/salting/scoring path
+    hash mismatch means the production blocking/prune/scoring path
     regressed."""
     from sz_spark.pipeline import PipelineConfig, run_pipeline
 

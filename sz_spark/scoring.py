@@ -1,6 +1,6 @@
 """Pairwise scoring of candidate pairs.
 
-Scores run in Arrow-batched pandas UDFs over the batched-DP kernels
+Scores run in an Arrow-batched mapInArrow over the batched-DP kernels
 (sz_spark.kernels) — the reference's candidate-lane design
 (similarities/serial.hpp:613-693) with the Arrow batch as the lane axis.
 
@@ -9,9 +9,10 @@ Scale notes:
   the surrogate ``did`` against the (much smaller) canonical-docs
   table; the texts are NEVER carried through the band explosion (that
   would multiply text bytes by n_bands in the shuffle).
-* a length-difference + byte-histogram prune runs before the DP, in a
-  Python Arrow pass on both tiers (prune_pairs_arrow above the gather
-  gate, blocking.block_pairs_gathered below it): |len(a)-len(b)| /
+* a length-difference + byte-histogram prune (udfs.prune_keep) runs
+  before the DP, in a Python Arrow pass on both tiers
+  (prune_pairs_arrow above the gather gate,
+  blocking.block_pairs_gathered below it): |len(a)-len(b)| /
   max(len) > 1-τ already bounds similarity below τ (edit distance ≥
   length difference), and so does half the histogram L1, so those
   pairs never reach the DP.  This mirrors the reference's algorithm
@@ -20,17 +21,18 @@ Scale notes:
 
 from __future__ import annotations
 
-import logging
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# module-level on purpose: importing the pipeline loads the kernels
+# here, not inside its first (timed) run
 from sz_spark.udfs import (
-    byte_histogram_udf,
-    jaro_winkler_udf,
-    levenshtein_udf,
-    make_bounded_levenshtein_udf,
+    make_bounded_lev_arrow_fn,
+    prune_keep,
+    unpack_histograms,
+    upstream_width,
 )
 
 
@@ -39,85 +41,45 @@ def attach_texts(
     docs: DataFrame,
     id_col: str = "conv_id",
     text_col: str = "doc",
-    with_histogram: bool = False,
 ) -> DataFrame:
-    """pairs(id_a, id_b) ⋈ docs -> (id_a, id_b, doc_a, doc_b, len_a, len_b
-    [, hist_a, hist_b])."""
+    """pairs(id_a, id_b) ⋈ docs -> (id_a, id_b, doc_a, doc_b, len_a,
+    len_b)."""
     slim = docs.select(
         F.col(id_col).alias("_id"),
         F.col(text_col).alias("_doc"),
         F.length(text_col).alias("_len"),
-        *(
-            [byte_histogram_udf(F.encode(F.col(text_col), "utf-8")).alias("_hist")]
-            if with_histogram
-            else []
-        ),
     )
-    out = (
+    return (
         pairs.join(slim.withColumnRenamed("_id", "id_a"), "id_a")
         .withColumnRenamed("_doc", "doc_a")
         .withColumnRenamed("_len", "len_a")
-        .withColumnRenamed("_hist", "hist_a")
         .join(slim.withColumnRenamed("_id", "id_b"), "id_b")
         .withColumnRenamed("_doc", "doc_b")
         .withColumnRenamed("_len", "len_b")
-        .withColumnRenamed("_hist", "hist_b")
     )
-    return out
 
 
-def attach_prune_attrs(
-    pairs: DataFrame,
-    docs: DataFrame,
-    id_col: str = "conv_id",
-    text_col: str = "doc",
-    packed: bool = False,
-    attrs_frame: DataFrame | None = None,
-) -> DataFrame:
-    """pairs(id_a, id_b) ⋈ docs -> + (len_a, len_b, hist_a, hist_b):
-    the prune-only attributes, WITHOUT the texts.
+def attach_prune_attrs(pairs: DataFrame, attrs_frame: DataFrame) -> DataFrame:
+    """pairs(id_a, id_b) ⋈ attrs -> + (len_a, len_b, hist_a, hist_b):
+    the prune-only attributes, WITHOUT the texts.  ``attrs_frame`` is an
+    (id, len, hist) frame — ``blocking.doc_features`` sliced to those
+    columns, so one Python pass over the corpus serves both blocking
+    and pruning; ``hist`` is the packed 192-byte blob
+    (udfs.pack_histograms), ~55% fewer bytes through the two pair joins
+    than an array<int> in UnsafeRow format.
 
-    The production flow attaches these first, prunes, and only then
-    attaches texts (attach_texts) to the survivors.  Measured funnel at
-    bench scale 16 (133k docs, avg 666 B): 1.46M candidate pairs, of
-    which the histogram prune drops 95.5% — attaching texts up front
-    shuffled ~1.3 KB of doc bytes per candidate (2x666 B) that the prune
-    then discarded, ~2/3 of the scored-stage join traffic.  The two
-    extra survivor-side joins are broadcast-sized (66k pairs x 16 B).
-
-    ``packed=True`` (the production pipeline setting) carries each
-    histogram as a 192-byte binary blob (96 little-endian u16 bins,
-    counts clamped at 65535) instead of an array<int> (~420 B in
-    UnsafeRow format): the same decisions from ~55% fewer bytes through
-    the two pair joins and the Arrow prune transport, and the histogram
-    itself is computed over the Arrow binary column's flat buffers
-    (mapInArrow) rather than per-row pandas objects.  Clamping is a
-    contraction, so the clamped L1 stays a valid edit-distance lower
-    bound for any document size; bins only saturate on documents where
-    one byte value repeats > 65535 times (>= 64 KB docs), where the
-    prune merely weakens, never misprunes.
-
-    ``attrs_frame``: an optional precomputed (id, len, hist) frame —
-    e.g. ``blocking.doc_features`` sliced to those columns — used
-    instead of recomputing the histograms from the doc texts (the
-    fused-feature path: one Python pass over the corpus serves both
-    blocking and pruning).
-    """
-    if attrs_frame is not None:
-        cols = attrs_frame.columns
-        slim = attrs_frame.select(
-            F.col(cols[0]).alias("_id"),
-            F.col(cols[1]).alias("_len"),
-            F.col(cols[2]).alias("_hist"),
-        )
-    elif packed:
-        slim = _prune_attrs_packed(docs, id_col, text_col)
-    else:
-        slim = docs.select(
-            F.col(id_col).alias("_id"),
-            F.length(text_col).alias("_len"),
-            byte_histogram_udf(F.encode(F.col(text_col), "utf-8")).alias("_hist"),
-        )
+    The join tier attaches these first, prunes, and only then attaches
+    texts (attach_texts) to the survivors.  Measured funnel at bench
+    scale 16 (133k docs, avg 666 B): 1.46M candidate pairs, of which
+    the histogram prune drops 95.5% — attaching texts up front shuffled
+    ~1.3 KB of doc bytes per candidate (2x666 B) that the prune then
+    discarded, ~2/3 of the scored-stage join traffic."""
+    cols = attrs_frame.columns
+    slim = attrs_frame.select(
+        F.col(cols[0]).alias("_id"),
+        F.col(cols[1]).alias("_len"),
+        F.col(cols[2]).alias("_hist"),
+    )
     return (
         pairs.join(slim.withColumnRenamed("_id", "id_a"), "id_a")
         .withColumnRenamed("_len", "len_a")
@@ -128,136 +90,38 @@ def attach_prune_attrs(
     )
 
 
-def _prune_attrs_packed(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """docs -> (_id, _len, _hist binary): the packed prune-attr frame.
-
-    The 96-bin printable-ASCII histogram (byte_histogram_udf math) packed
-    as 96 little-endian u16s, computed from the Arrow binary column's
-    (data, offsets) buffers with one flat bincount per batch — no
-    per-row Python objects on either side of the boundary."""
-    from pyspark.sql import types as T
-
-    from sz_spark.udfs import arrow_binary_flat
-
-    src = docs.select(
-        F.col(id_col).alias("_id"),
-        F.length(text_col).alias("_len"),
-        F.encode(F.col(text_col), "utf-8").alias("_b"),
-    )
-    out_schema = T.StructType(
-        [src.schema["_id"], src.schema["_len"],
-         T.StructField("_hist", T.BinaryType(), False)]
-    )
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            data, off = arrow_binary_flat(batch.column(2))
-            data = data[off[0] : off[-1]]
-            lens = np.diff(off)
-            rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-            mask = (data >= 32) & (data < 128)
-            h = np.bincount(
-                rows[mask] * 96 + (data[mask].astype(np.int64) - 32),
-                minlength=n * 96,
-            ).reshape(n, 96)
-            h16 = np.minimum(h, 65535).astype("<u2")
-            offs = np.arange(0, (n + 1) * 192, 192, dtype=np.int32)
-            hist = pa.Array.from_buffers(
-                pa.binary(), n,
-                [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(h16.tobytes())],
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), batch.column(1), hist], ["_id", "_len", "_hist"]
-            )
-
-    return src.mapInArrow(fn, out_schema)
-
-
-def histogram_prune(pairs_with_hists: DataFrame, threshold: float) -> DataFrame:
-    """Counting-filter prune: L1 distance of byte histograms / 2 is a
-    lower bound on edit distance, so any pair whose histogram gap alone
-    pushes similarity below τ is dropped JVM-side (whole-stage-codegen
-    zip_with/aggregate, no Python).  At corpus scale this removes the
-    bulk of band-collision candidates — near-identical content with
-    different entity salts — before the expensive DP."""
-    l1 = F.aggregate(
-        F.zip_with("hist_a", "hist_b", lambda x, y: F.abs(x - y)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    max_len = F.greatest("len_a", "len_b")
-    return pairs_with_hists.filter(
-        (l1 / 2) <= ((F.lit(1.0) - F.lit(threshold)) * max_len)
-    ).drop("hist_a", "hist_b")
-
-
 def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
-    """Fused length + histogram prune over the prune-attr frame —
-    returns the surviving (id_a, id_b).
+    """Fused length + histogram prune over the prune-attr frame
+    (:func:`attach_prune_attrs`) — returns the surviving (id_a, id_b).
 
-    Decision-identical to ``histogram_prune(length_prune(attrs, τ), τ)``:
-    the same comparisons on the same values ((max-min) <= (1-τ)*max and
-    L1(hist)/2 <= (1-τ)*max, both in f64 with the identical int→double
-    widenings), evaluated vectorized in a mapInArrow batch.  The
-    expression form walked two interpreted zip_with/aggregate lambdas
-    over 96 bins per candidate pair — at the probe's 1.46M candidates
-    that was the pipeline's largest remaining interpreted surface
-    (guide §4.2), and it re-paid the JIT-warmup cliff per fresh JVM.
-    SZ_JVM_PRUNE=1 forces the expression twin."""
-    if os.environ.get("SZ_JVM_PRUNE") == "1":
-        return histogram_prune(length_prune(attrs, threshold), threshold).select(
-            "id_a", "id_b"
-        )
+    The bounds are udfs.prune_keep's, evaluated vectorized in a
+    mapInArrow batch: the same decisions as the gather tier's in-pass
+    prune.  The Spark-expression form walked two interpreted
+    zip_with/aggregate lambdas over 96 bins per candidate pair — at the
+    probe's 1.46M candidates that was the pipeline's largest remaining
+    interpreted surface (guide §4.2), and it re-paid the JIT-warmup
+    cliff per fresh JVM; tests/ keeps it as the oracle."""
     from pyspark.sql import types as T
 
     src = attrs.select("id_a", "id_b", "len_a", "len_b", "hist_a", "hist_b")
     out_schema = T.StructType([src.schema["id_a"], src.schema["id_b"]])
-    lim = 1.0 - threshold
-    hist_packed = src.schema["hist_a"].dataType.typeName() == "binary"
 
     def fn(batches):
         import numpy as np
         import pyarrow as pa
 
-        from sz_spark.udfs import arrow_binary_flat
-
-        def unpack(col, n):
-            if hist_packed:
-                # 96 LE u16 bins per row (attach_prune_attrs packed=True)
-                data, off = arrow_binary_flat(col)
-                return (
-                    data[off[0] : off[-1]]
-                    .view("<u2")
-                    .reshape(n, 96)
-                    .astype(np.int64)
-                )
-            o = np.asarray(col.offsets, dtype=np.int64)
-            return (
-                np.asarray(col.values)[o[0] : o[-1]].reshape(n, -1).astype(np.int64)
-            )
-
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            la = np.asarray(batch.column(2), dtype=np.int64)
-            lb = np.asarray(batch.column(3), dtype=np.int64)
-            A = unpack(batch.column(4), n)
-            B = unpack(batch.column(5), n)
-            maxlen = np.maximum(la, lb)
-            minlen = np.minimum(la, lb)
-            bound = lim * maxlen  # (1-τ)*max in f64, same as the JVM expr
-            keep = (maxlen - minlen) <= bound
-            l1 = np.abs(A - B).sum(axis=1)
-            keep &= (l1 / 2.0) <= bound
+            lens = np.concatenate(
+                [np.asarray(batch.column(i), dtype=np.int64) for i in (2, 3)]
+            )
+            hists = np.concatenate(
+                [unpack_histograms(batch.column(i)) for i in (4, 5)]
+            )
+            rows = np.arange(n)
+            keep = prune_keep(lens, hists, rows, rows + n, threshold)
             idx = pa.array(np.nonzero(keep)[0].astype(np.int32))
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0).take(idx), batch.column(1).take(idx)],
@@ -303,26 +167,22 @@ def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
 # Above the gate the join path runs unchanged (it is also the
 # SZ_NO_GATHER=1 twin the differential tests compare against).
 
-_log = logging.getLogger(__name__)
-
 
 def gather_gate(feats: DataFrame) -> bool:
     """True when the corpus is small enough for the broadcast-gather
     tier (one cheap count over the — checkpointed — feature table).
     The broadcast is 508 B/doc regardless of text size, so only the doc
-    count gates it; a malformed SZ_GATHER_MAX_DOCS falls back to the
-    default with a warning."""
+    count gates it (default 1M docs, SZ_GATHER_MAX_DOCS overrides); a
+    malformed SZ_GATHER_MAX_DOCS raises ValueError."""
     if os.environ.get("SZ_NO_GATHER") == "1":
         return False
-    max_docs = 1_000_000
-    raw = os.environ.get("SZ_GATHER_MAX_DOCS")
-    if raw is not None:
-        try:
-            max_docs = int(raw)
-        except ValueError:
-            _log.warning(
-                "ignoring malformed SZ_GATHER_MAX_DOCS=%r; using %d", raw, max_docs
-            )
+    raw = os.environ.get("SZ_GATHER_MAX_DOCS", "1000000")
+    try:
+        max_docs = int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SZ_GATHER_MAX_DOCS must be an integer doc count, got {raw!r}"
+        ) from None
     row = feats.agg(F.count(F.lit(1)).alias("n")).collect()[0]
     return row["n"] <= max_docs
 
@@ -343,8 +203,6 @@ def build_prune_broadcast(feats: DataFrame):
     driver."""
     import numpy as np
 
-    from sz_spark.udfs import arrow_binary_flat
-
     spark = feats.sparkSession
     ftbl = feats.select(feats.columns[0], "len", "pk", "bk", "hist").toArrow()
     n = ftbl.num_rows
@@ -357,10 +215,7 @@ def build_prune_broadcast(feats: DataFrame):
     for j, row in enumerate(keys):
         _, inv, cnt = np.unique(row, return_inverse=True, return_counts=True)
         sizes[j] = cnt[inv]
-    hdata, hoff = arrow_binary_flat(ftbl.column(4).combine_chunks())
-    if n and not (np.diff(hoff) == 192).all():  # pragma: no cover
-        raise ValueError("doc_features hist blobs must be 96 u16 bins")
-    hists = hdata[hoff[0] : hoff[-1]].view("<u2").reshape(n, 96)
+    hists = unpack_histograms(ftbl.column(4).combine_chunks())
     order = np.argsort(ids, kind="stable")
     return spark.sparkContext.broadcast(
         (
@@ -370,17 +225,6 @@ def build_prune_broadcast(feats: DataFrame):
             np.ascontiguousarray(keys[:, order]),
             np.ascontiguousarray(sizes[:, order]),
         )
-    )
-
-
-def length_prune(pairs_with_texts: DataFrame, threshold: float) -> DataFrame:
-    """Drop pairs whose length gap alone caps similarity below threshold —
-    a native-Spark filter that never enters Python."""
-    max_len = F.greatest("len_a", "len_b")
-    min_len = F.least("len_a", "len_b")
-    # 1 - dist/max_len <= 1 - (max-min)/max  ⇒ prune if that bound < τ
-    return pairs_with_texts.filter(
-        (max_len - min_len) <= ((F.lit(1.0) - F.lit(threshold)) * max_len)
     )
 
 
@@ -399,8 +243,6 @@ def scoring_fanout(df: DataFrame) -> int:
     runs (the naive .rdd probe would eagerly execute a shuffle-bearing
     plan's map stages under AQE and the real query would run them
     again)."""
-    from sz_spark.udfs import upstream_width
-
     par = df.sparkSession.sparkContext.defaultParallelism
     n_in = upstream_width(df)
     if n_in < par:
@@ -408,27 +250,23 @@ def scoring_fanout(df: DataFrame) -> int:
     return min(4 * par, n_in)
 
 
-def score_pairs(
-    pairs_with_texts: DataFrame,
-    threshold: float | None = None,
-    add_jaro_winkler: bool = False,
-    bounded: float | None = None,
-) -> DataFrame:
-    """Adds edit_distance + sim (normalized edit similarity in [0,1]).
+def score_pairs(pairs_with_texts: DataFrame, bounded: float) -> DataFrame:
+    """(*carry, doc_a, doc_b, len_a, len_b) -> (*carry, edit_distance,
+    sim), sim = 1 - edit_distance / max(len_a, len_b).
 
-    ``bounded``: when set, uses the banded DP exact below the τ-bound
-    (the at-scale path — ~10x cheaper); distances of sub-τ pairs come
-    back clamped, which only matters if you *keep* sub-τ pairs.
-
-    Output columns: the bounded production path runs Arrow-native
-    (mapInArrow over flat buffers) and deliberately DROPS doc_a/doc_b —
-    shipping the texts back JVM-side would double the Arrow transfer for
-    columns no consumer reads.  The pandas paths (exact lev /
-    add_jaro_winkler) keep all input columns.
+    The banded DP is exact below the τ = ``bounded`` bound (~10x cheaper
+    than the full DP); distances of sub-τ pairs come back clamped, which
+    only matters if you *keep* sub-τ pairs.  The worker reads the
+    binary columns' flat buffers straight into the DP — no pandas
+    Series, no per-row bytes objects — and the output deliberately
+    DROPS doc_a/doc_b: shipping the texts back JVM-side would double
+    the Arrow transfer for columns no consumer reads.
     """
+    from pyspark.sql import types as T
+
     # AQE coalesces the (byte-wise tiny) pair shuffle down to a couple of
-    # partitions, which would serialize the pandas-UDF DP — its CPU cost
-    # is invisible to the optimizer.  Spread the batch explicitly across
+    # partitions, which would serialize the DP — its CPU cost is
+    # invisible to the optimizer.  Spread the batch explicitly across
     # the cluster before entering Python.
     # The repartition stays UNCONDITIONAL (unlike the band entrances'
     # adaptive spread): the pair stream arrives hash-partitioned by its
@@ -443,49 +281,19 @@ def score_pairs(
     pairs_with_texts = pairs_with_texts.repartition(
         scoring_fanout(pairs_with_texts)
     )
-    if (
-        bounded is not None
-        and not add_jaro_winkler
-        and os.environ.get("SZ_PANDAS_TRANSPORT") != "1"
-    ):
-        # Arrow-native production path: the worker reads the binary
-        # columns' flat buffers straight into the banded DP — no pandas
-        # Series, no per-row bytes objects.  The texts do NOT ride back
-        # to the JVM: the output batch carries only the carry columns +
-        # edit_distance.
-        from pyspark.sql import types as T
-
-        from sz_spark.udfs import make_bounded_lev_arrow_fn
-
-        carry = [c for c in pairs_with_texts.columns if c not in ("doc_a", "doc_b")]
-        src = pairs_with_texts.select(
-            *carry,
-            F.encode(F.col("doc_a"), "utf-8").alias("_ba"),
-            F.encode(F.col("doc_b"), "utf-8").alias("_bb"),
-        )
-        out_schema = T.StructType(
-            [src.schema[c] for c in carry]
-            + [T.StructField("edit_distance", T.LongType(), False)]
-        )
-        out = src.mapInArrow(make_bounded_lev_arrow_fn(bounded), out_schema)
-    else:
-        lev = (
-            make_bounded_levenshtein_udf(bounded)
-            if bounded is not None
-            else levenshtein_udf
-        )
-        out = pairs_with_texts.withColumn(
-            "edit_distance",
-            # JVM-side encode: workers get bytes, skipping per-row re-encode
-            lev(F.encode(F.col("doc_a"), "utf-8"), F.encode(F.col("doc_b"), "utf-8")),
-        )
-    out = out.withColumn(
+    carry = [c for c in pairs_with_texts.columns if c not in ("doc_a", "doc_b")]
+    src = pairs_with_texts.select(
+        *carry,
+        F.encode(F.col("doc_a"), "utf-8").alias("_ba"),
+        F.encode(F.col("doc_b"), "utf-8").alias("_bb"),
+    )
+    out_schema = T.StructType(
+        [src.schema[c] for c in carry]
+        + [T.StructField("edit_distance", T.LongType(), False)]
+    )
+    out = src.mapInArrow(make_bounded_lev_arrow_fn(bounded), out_schema)
+    return out.withColumn(
         "sim",
         F.lit(1.0)
         - F.col("edit_distance") / F.greatest("len_a", "len_b").cast("double"),
     )
-    if add_jaro_winkler:
-        out = out.withColumn("jw_sim", jaro_winkler_udf(F.col("doc_a"), F.col("doc_b")))
-    if threshold is not None:
-        out = out.filter(F.col("sim") >= threshold)
-    return out

@@ -31,39 +31,6 @@ def levenshtein_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(K.levenshtein_batch(_to_bytes(a), _to_bytes(b)))
 
 
-def make_bounded_levenshtein_udf(threshold: float, chunk: int = 1024):
-    """Arrow-batched bounded edit distance for threshold-τ pair scoring.
-
-    Exact wherever ``1 - dist/max(len) >= threshold`` could hold; pairs
-    beyond the bound come back clamped (> bound), which the τ-filter
-    drops anyway.  Pairs are sorted by length inside each Arrow batch and
-    scored in chunks so the band width and padding track each chunk's
-    actual sizes (the reference's input-size algorithm tiering,
-    similarities/serial.hpp:2948-2994, re-expressed batch-wise).
-    """
-    import numpy as np
-
-    @pandas_udf(T.LongType())
-    def bounded_lev(a: pd.Series, b: pd.Series) -> pd.Series:
-        A, B = _to_bytes(a), _to_bytes(b)
-        n = len(A)
-        out = np.zeros(n, dtype=np.int64)
-        if n == 0:
-            return pd.Series(out)
-        maxlen = np.asarray([max(len(x), len(y)) for x, y in zip(A, B)])
-        order = np.argsort(maxlen, kind="stable")
-        for s in range(0, n, chunk):
-            idx = order[s : s + chunk]
-            m = int(maxlen[idx].max())
-            bound = int((1.0 - threshold) * m) + 1
-            out[idx] = K.levenshtein_batch_bounded(
-                [A[i] for i in idx], [B[i] for i in idx], bound
-            )
-        return pd.Series(out)
-
-    return bounded_lev
-
-
 def make_levenshtein_affine_udf(match=0, mismatch=1, gap_open=1, gap_extend=1):
     @pandas_udf(T.LongType())
     def lev_affine(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -237,51 +204,90 @@ def arrow_binary_flat(arr) -> tuple:
     return data, off
 
 
-def make_band_keys_arrow_fn(
-    ndim: int = 128,
-    widths=None,
-    seed: int = 0,
-    n_bands: int = 32,
-    rows_per_band: int = 4,
-):
-    """mapInArrow twin of make_band_keys_udf: RecordBatch (id, text
-    binary) -> RecordBatch (id, bk array<long>).  Same math
-    (fingerprints_flat is bit-identical to fingerprints); only the
-    transport changes."""
-    assert n_bands * rows_per_band <= ndim
+def band_keys(h, n_bands: int, rows_per_band: int):
+    """(n, n_bands) int64 LSH band keys from an (n, ndim) fingerprint
+    matrix: band b folds its ``rows_per_band`` min-hashes into a
+    splitmix64 chain seeded with b + 1."""
+    import numpy as np
 
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
+    n = h.shape[0]
+    out = np.empty((n, n_bands), dtype=np.uint64)
+    for b in range(n_bands):
+        acc = np.full(n, np.uint64(b + 1), dtype=np.uint64)
+        for r in range(rows_per_band):
+            acc = K.splitmix64(acc ^ h[:, b * rows_per_band + r].astype(np.uint64))
+        out[:, b] = acc
+    return out.astype(np.int64)
 
-        for batch in batches:
-            ids = batch.column(0)
-            data, off = arrow_binary_flat(batch.column(1))
-            h, _c = K.fingerprints_flat(
-                data, off, ndim=ndim, widths=widths, seed=seed, with_counts=False
-            )
-            n = h.shape[0]
-            out = np.empty((n, n_bands), dtype=np.uint64)
-            for b in range(n_bands):
-                acc = np.full(n, np.uint64(b + 1), dtype=np.uint64)
-                for r in range(rows_per_band):
-                    acc = K.splitmix64(
-                        acc ^ h[:, b * rows_per_band + r].astype(np.uint64)
-                    )
-                out[:, b] = acc
-            flat = out.astype(np.int64).reshape(-1)
-            lst = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * n_bands, n_bands, dtype=np.int32),
-                    type=pa.int32(),
-                ),
-                pa.array(flat, type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [ids, lst], [batch.schema.names[0], "bk"]
-            )
 
-    return fn
+#: bins of the prune histogram: printable ASCII, bytes 0x20..0x7F
+HIST_BINS = 96
+
+
+def pack_histograms(data, off):
+    """Arrow binary array of packed prune histograms for the documents
+    at (data, off) (the :func:`arrow_binary_flat` layout): per document
+    the counts of bytes 0x20..0x7F as 96 little-endian u16 bins (192 B),
+    clamped at 65535, from one flat bincount over the batch.
+
+    Half the L1 distance of two histograms is a lower bound on their
+    edit distance.  Clamping is a contraction, so the clamped L1 stays a
+    valid bound for any document size; bins only saturate where one
+    byte value repeats > 65535 times (docs >= 64 KB), where the prune
+    merely weakens, never misprunes."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(off) - 1
+    dslice = data[off[0] : off[-1]]
+    rows = np.repeat(np.arange(n, dtype=np.int64), np.diff(off))
+    mask = (dslice >= 32) & (dslice < 32 + HIST_BINS)
+    cnt = np.bincount(
+        rows[mask] * HIST_BINS + (dslice[mask].astype(np.int64) - 32),
+        minlength=n * HIST_BINS,
+    ).reshape(n, HIST_BINS)
+    h16 = np.minimum(cnt, 65535).astype("<u2")
+    width = 2 * HIST_BINS
+    offs = np.arange(0, (n + 1) * width, width, dtype=np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), n, [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(h16.tobytes())]
+    )
+
+
+def unpack_histograms(arr):
+    """(n, 96) u16 view of an Arrow binary array of packed histograms
+    (:func:`pack_histograms`); raises on a blob of any other size."""
+    import numpy as np
+
+    data, off = arrow_binary_flat(arr)
+    if len(arr) and not (np.diff(off) == 2 * HIST_BINS).all():
+        raise ValueError(f"prune histograms must be {HIST_BINS} u16 bins")
+    return data[off[0] : off[-1]].view("<u2").reshape(len(arr), HIST_BINS)
+
+
+def prune_keep(lens, hists, ia, ib, threshold: float, step: int = 4096):
+    """Keep mask of the candidate pairs (ia[k], ib[k]) — row indices into
+    ``lens`` (char lengths) and ``hists`` (:func:`unpack_histograms`
+    rows): a pair survives iff (max - min) <= (1-τ)*max AND
+    L1(hist)/2 <= (1-τ)*max, both compared in f64.  Either bound failing
+    caps the similarity below τ, so such pairs never reach the DP.  The
+    L1 runs over length survivors only, in slices of ``step`` pairs so
+    the (pairs, 96) gathers stay small; int32 holds any sum of 96 u16
+    differences exactly."""
+    import numpy as np
+
+    la, lb = lens[ia], lens[ib]
+    maxlen = np.maximum(la, lb)
+    bound = (1.0 - threshold) * maxlen
+    keep = (maxlen - np.minimum(la, lb)) <= bound
+    sub = np.nonzero(keep)[0]
+    for s0 in range(0, len(sub), step):
+        ss = sub[s0 : s0 + step]
+        l1 = np.abs(
+            hists[ia[ss]].astype(np.int32) - hists[ib[ss]].astype(np.int32)
+        ).sum(axis=1)
+        keep[ss] &= (l1 / 2.0) <= bound[ss]
+    return keep
 
 
 def make_doc_features_arrow_fn(
@@ -295,15 +301,12 @@ def make_doc_features_arrow_fn(
     text binary) -> (id, len, pk, bk array<long>, hist binary).
 
     One pass over the doc bytes computes BOTH the LSH band keys
-    (identical math to make_band_keys_arrow_fn) and the packed 96-bin
-    u16 histogram the candidate prune consumes (identical bytes to
-    scoring._prune_attrs_packed) — the corpus crosses the JVM->Python
-    boundary once instead of twice, and the pipeline materializes one
-    narrow feature table instead of feeding two separate Python stages
-    (guide §4.1: pass whole batches once, derive everything needed).
-    ``len`` (F.length, characters) and ``pk`` (the prefix block key)
-    are computed JVM-side and carried through, so downstream length and
-    prefix-key semantics match the unfused path exactly."""
+    (:func:`band_keys` over the fingerprints) and the packed prune
+    histogram (:func:`pack_histograms`) — the corpus crosses the
+    JVM->Python boundary once, and the pipeline materializes one narrow
+    feature table (guide §4.1: pass whole batches once, derive
+    everything needed).  ``len`` (F.length, characters) and ``pk`` (the
+    prefix block key) are computed JVM-side and carried through."""
     assert n_bands * rows_per_band <= ndim
 
     def fn(batches):
@@ -315,42 +318,18 @@ def make_doc_features_arrow_fn(
             if n == 0:
                 continue
             data, off = arrow_binary_flat(batch.column(3))
-            # band keys (fingerprint + splitmix combine)
             h, _c = K.fingerprints_flat(
                 data, off, ndim=ndim, widths=widths, seed=seed, with_counts=False
             )
-            out = np.empty((n, n_bands), dtype=np.uint64)
-            for b in range(n_bands):
-                acc = np.full(n, np.uint64(b + 1), dtype=np.uint64)
-                for r in range(rows_per_band):
-                    acc = K.splitmix64(
-                        acc ^ h[:, b * rows_per_band + r].astype(np.uint64)
-                    )
-                out[:, b] = acc
             lst = pa.ListArray.from_arrays(
                 pa.array(
                     np.arange(0, (n + 1) * n_bands, n_bands, dtype=np.int32),
                     type=pa.int32(),
                 ),
-                pa.array(out.astype(np.int64).reshape(-1), type=pa.int64()),
-            )
-            # packed u16 histogram (same bytes as _prune_attrs_packed)
-            dslice = data[off[0] : off[-1]]
-            blens = np.diff(off)
-            rows = np.repeat(np.arange(n, dtype=np.int64), blens)
-            mask = (dslice >= 32) & (dslice < 128)
-            hcnt = np.bincount(
-                rows[mask] * 96 + (dslice[mask].astype(np.int64) - 32),
-                minlength=n * 96,
-            ).reshape(n, 96)
-            h16 = np.minimum(hcnt, 65535).astype("<u2")
-            offs = np.arange(0, (n + 1) * 192, 192, dtype=np.int32)
-            hist = pa.Array.from_buffers(
-                pa.binary(), n,
-                [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(h16.tobytes())],
+                pa.array(band_keys(h, n_bands, rows_per_band).reshape(-1), type=pa.int64()),
             )
             yield pa.RecordBatch.from_arrays(
-                [*batch.columns[:3], lst, hist],
+                [*batch.columns[:3], lst, pack_histograms(data, off)],
                 [*batch.schema.names[:3], "bk", "hist"],
             )
 
@@ -389,11 +368,16 @@ def make_fingerprint_arrow_fn(ndim: int = 128, widths=None, seed: int = 0):
 
 
 def make_bounded_lev_arrow_fn(threshold: float, chunk: int = 1024):
-    """mapInArrow twin of make_bounded_levenshtein_udf: RecordBatch
-    (*carry, _ba binary, _bb binary) -> (*carry, edit_distance long).
-    Pairs are length-sorted and scored in chunks with a per-chunk band
-    bound, exactly like the pandas path (sub-τ pairs come back clamped
-    above the bound, which the τ-filter drops)."""
+    """Arrow-batched bounded edit distance for threshold-τ pair scoring:
+    RecordBatch (*carry, _ba binary, _bb binary) -> (*carry,
+    edit_distance long).
+
+    Exact wherever ``1 - dist/max(len) >= threshold`` could hold; pairs
+    beyond the bound come back clamped (> bound), which the τ-filter
+    drops anyway.  Pairs are sorted by length inside each batch and
+    scored in chunks so the band width tracks each chunk's actual sizes
+    (the reference's input-size algorithm tiering,
+    similarities/serial.hpp:2948-2994, re-expressed batch-wise)."""
 
     def fn(batches):
         import numpy as np
@@ -557,72 +541,6 @@ def simhash64_udf(token_arrays: pd.Series) -> pd.Series:
     ]
     sigs = K.simhash64(toks)
     return pd.Series(sigs.astype("int64"))
-
-
-@pandas_udf(T.ArrayType(T.IntegerType()))
-def byte_histogram_udf(texts: pd.Series) -> pd.Series:
-    """96-bin histogram of printable-ASCII bytes (0x20..0x7F), used by the
-    counting-filter prune: L1(hist_a, hist_b)/2 is a lower bound on edit
-    distance, so pairs whose histogram gap alone exceeds the tau bound
-    never enter the DP.
-
-    One flat bincount over (row * 96 + bin) covers the whole batch —
-    the per-row frombuffer/bincount loop it replaces paid Python
-    dispatch per document (guide §4.2)."""
-    import numpy as np
-
-    bts = _to_bytes(texts)
-    n = len(bts)
-    if n == 0:
-        return pd.Series([], dtype=object)
-    lens = np.fromiter((len(t) for t in bts), dtype=np.int64, count=n)
-    data = np.frombuffer(b"".join(bts), dtype=np.uint8)
-    rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-    mask = (data >= 32) & (data < 128)
-    h = (
-        np.bincount(rows[mask] * 96 + (data[mask] - 32), minlength=n * 96)
-        .reshape(n, 96)
-        .astype("int32")
-    )
-    return pd.Series(list(h))
-
-
-def make_band_keys_udf(
-    ndim: int = 128,
-    widths=None,
-    seed: int = 0,
-    n_bands: int = 32,
-    rows_per_band: int = 4,
-):
-    """text -> array<long> of LSH band keys, computed entirely inside one
-    Arrow batch: fingerprint (reference math) + per-band splitmix64 hash
-    combine.  Returning 32 longs instead of the 2x128-long fingerprint
-    struct cuts the Python->JVM Arrow transfer ~8x and removes the
-    JVM-side slice/hash work — the fp+bands stage was transfer-bound.
-    """
-    assert n_bands * rows_per_band <= ndim
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def band_keys(texts: pd.Series) -> pd.Series:
-        import numpy as np
-
-        # counts never feed the band keys — skip their bookkeeping
-        h, _c = K.fingerprints(
-            _to_bytes(texts), ndim=ndim, widths=widths, seed=seed, with_counts=False
-        )
-        n = h.shape[0]
-        out = np.empty((n, n_bands), dtype=np.uint64)
-        for b in range(n_bands):
-            acc = np.full(n, np.uint64(b + 1), dtype=np.uint64)
-            for r in range(rows_per_band):
-                acc = K.splitmix64(acc ^ h[:, b * rows_per_band + r].astype(np.uint64))
-            out[:, b] = acc
-        signed = out.astype(np.int64)
-        return pd.Series(list(signed))
-
-    return band_keys
-
-
 
 
 @pandas_udf(T.IntegerType())

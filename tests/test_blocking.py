@@ -1,10 +1,11 @@
-"""Differential tests for the blocking transports: the Arrow-batched
-md5-MinHash banding (production) must be value-identical to the JVM
-expression twin it replaced (guide §4.2 move — same math, compiled
-transport)."""
+"""Differential tests for the Arrow-batched blocking and feature
+operators: each must be value-identical to an independent reference —
+the Spark-expression forms in tests/oracles.py, or NumPy on the driver
+(guide §4.2 move — same math, compiled transport)."""
 
 from __future__ import annotations
 
+import oracles
 import pytest
 
 from sz_spark import blocking
@@ -31,7 +32,7 @@ def test_minhash_bands_arrow_vs_exprs(spark):
         .withColumnRenamed("doc_id", "conv_id")
     )
     got = _rows(blocking.shingle_minhash_bands(d, text_col="text"))
-    want = _rows(blocking.shingle_minhash_bands_exprs(d, text_col="text"))
+    want = _rows(oracles.shingle_minhash_bands_exprs(d, text_col="text"))
     assert got == want
     assert len(got) > 0
 
@@ -51,17 +52,9 @@ def test_minhash_bands_arrow_vs_exprs_edges(spark):
         "conv_id long, text string",
     )
     got = _rows(blocking.shingle_minhash_bands(edge, text_col="text"))
-    want = _rows(blocking.shingle_minhash_bands_exprs(edge, text_col="text"))
+    want = _rows(oracles.shingle_minhash_bands_exprs(edge, text_col="text"))
     assert got == want
     assert {r[0] for r in got} == {4, 5, 6}
-
-
-def test_minhash_bands_env_switch(spark, monkeypatch):
-    monkeypatch.setenv("SZ_JVM_MINHASH", "1")
-    d = spark.createDataFrame([(1, "p q r s")], "conv_id long, text string")
-    out = blocking.shingle_minhash_bands(d, text_col="text")
-    # expression path has no MapInArrow node
-    assert "MapInArrow" not in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_triangle_arrow_vs_exprs_longs(spark):
@@ -110,7 +103,7 @@ def test_triangle_chunked_large_block(spark):
     assert blocking.explode_lower_triangle(df).count() == n * (n - 1) // 2
 
 
-def test_cosine_arrow_vs_exprs(spark, monkeypatch):
+def test_cosine_arrow_vs_exprs(spark):
     """attach_cosine_arrow must be BIT-identical to the _dot/_norm
     expression form (same sequential f64 op order), including the NULL
     contract for mismatched/empty/NULL lists."""
@@ -128,11 +121,7 @@ def test_cosine_arrow_vs_exprs(spark, monkeypatch):
         r["k"]: r["_cos_raw"]
         for r in ann.attach_cosine_arrow(df, "a", "b").collect()
     }
-    monkeypatch.setenv("SZ_JVM_COSINE", "1")
-    want = {
-        r["k"]: r["_cos_raw"]
-        for r in ann.attach_cosine_arrow(df, "a", "b").collect()
-    }
+    want = {r["k"]: r["_cos_raw"] for r in oracles.cosine_exprs(df, "a", "b").collect()}
     assert got == want  # exact equality, float bits included
     assert want[4] is None and want[5] is None
 
@@ -150,28 +139,27 @@ def test_cosine_arrow_zero_norm_is_null(spark):
     assert out == {6: None, 7: None}
 
 
-def test_byte_histogram_batch_matches_per_row(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
+def test_byte_histogram_batch_matches_per_row():
+    """udfs.pack_histograms over one flat batch == a per-row bincount of
+    each document's UTF-8 bytes (control bytes, DEL, multi-byte
+    characters, empty and NULL text included), and unpack_histograms
+    round-trips the packed blobs."""
+    import pyarrow as pa
 
-    from sz_spark.udfs import byte_histogram_udf
+    from sz_spark.udfs import arrow_binary_flat, pack_histograms, unpack_histograms
 
-    rows = [(1, "hello world!"), (2, ""), (3, "\x01\x7f\x80 abc"), (4, None)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["h"]
-        for r in df.select(
-            "doc_id", byte_histogram_udf(F.encode("text", "utf-8")).alias("h")
-        ).collect()
-    }
-    for doc_id, text in rows:
-        t = (text or "").encode()
-        arr = np.frombuffer(t, dtype=np.uint8)
-        ref = np.bincount(arr, minlength=256)[32:128].astype("int32").tolist()
-        assert got[doc_id] == ref
+    texts = ["hello world!", "", "\x01\x7f\x80 abc", None, "~" * 70000]
+    arr = pa.array([None if t is None else t.encode() for t in texts], pa.binary())
+    packed = pack_histograms(*arrow_binary_flat(arr))
+    assert [len(b) for b in packed.to_pylist()] == [192] * len(texts)
+    got = unpack_histograms(packed).tolist()
+    # bins saturate at the u16 maximum (the 70 KB doc's '~' bin)
+    want = [[min(c, 65535) for c in oracles.byte_histogram(t)] for t in texts]
+    assert got == want
+    assert got[-1][ord("~") - 32] == 65535
 
 
-def test_distinct_shingles_arrow_vs_exprs(spark, monkeypatch):
+def test_distinct_shingles_arrow_vs_exprs(spark):
     from sz_spark import dedup
 
     edge = spark.createDataFrame(
@@ -181,40 +169,46 @@ def test_distinct_shingles_arrow_vs_exprs(spark, monkeypatch):
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     for df in (edge, d):
         got = sorted(map(tuple, dedup._distinct_shingles_exploded(df).collect()))
-        monkeypatch.setenv("SZ_JVM_SHINGLES", "1")
-        want = sorted(map(tuple, dedup._distinct_shingles_exploded(df).collect()))
-        monkeypatch.delenv("SZ_JVM_SHINGLES")
+        want = sorted(map(tuple, oracles.distinct_shingles_exprs(df).collect()))
         assert got == want
 
 
 def test_doc_features_matches_unfused_paths(spark):
-    """blocking.doc_features must reproduce BOTH unfused outputs
-    exactly: bands_from_features == minhash_bands (same rows), and the
-    (len, hist) columns == scoring._prune_attrs_packed bytes."""
+    """blocking.doc_features must match independent references for
+    every column: ``pk`` the xxhash64 of the 56-character prefix,
+    ``bk`` kernels.fingerprints + the splitmix64 band combine, ``len``
+    the codepoint length and ``hist`` the per-document bincount."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from sz_spark import blocking, canonicalize as canon, scoring
+    from sz_spark import canonicalize as canon, kernels as K
     from sz_spark.transcripts import build_transcripts
 
+    n_bands, rows_per_band = 24, blocking.DEFAULT_ROWS
     docs = canon.canonicalize(
         build_transcripts(spark, "/root/testdata/sf0.001")
     ).withColumn("did", F.xxhash64("conv_id"))
-    feats = blocking.doc_features(
-        docs, id_col="did", ndim=96, n_bands=24
-    )
-    got_bands = sorted(
-        map(tuple, blocking.bands_from_features(feats, docs, id_col="did").collect())
-    )
-    want_bands = sorted(
-        map(tuple, blocking.minhash_bands(docs, id_col="did", ndim=96, n_bands=24).collect())
-    )
-    assert got_bands == want_bands
+    feats = blocking.doc_features(docs, id_col="did", ndim=96, n_bands=n_bands)
+    got = {r["did"]: r for r in feats.collect()}
 
-    got_attrs = sorted(
-        map(tuple, feats.select("did", "len", "hist").collect())
-    )
-    want_attrs = sorted(
-        map(tuple, scoring._prune_attrs_packed(docs, "did", "doc").collect())
-    )
-    assert got_attrs == want_attrs
-    assert len(got_attrs) > 0
+    ref = docs.select(
+        "did", "doc", F.xxhash64(F.substring("doc", 1, 56)).alias("pk")
+    ).collect()
+    assert len(ref) == len(got) > 0
+    texts = [r["doc"].encode() for r in ref]
+    h, _ = K.fingerprints(texts, ndim=96, widths=blocking.DEFAULT_FP_WIDTHS)
+    h = h.astype(np.uint64)
+    keys = np.empty((len(texts), n_bands), dtype=np.uint64)
+    for b in range(n_bands):
+        acc = np.full(len(texts), b + 1, dtype=np.uint64)
+        for k in range(rows_per_band):
+            acc = K.splitmix64(acc ^ h[:, b * rows_per_band + k])
+        keys[:, b] = acc
+    keys = keys.astype(np.int64)
+    for i, r in enumerate(ref):
+        row = got[r["did"]]
+        assert row["bk"] == keys[i].tolist()
+        assert row["pk"] == r["pk"]
+        assert row["len"] == len(r["doc"])
+        hist = np.frombuffer(row["hist"], dtype="<u2").tolist()
+        assert hist == oracles.byte_histogram(r["doc"])

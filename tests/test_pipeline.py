@@ -58,46 +58,16 @@ def test_deterministic_across_parallelism(spark):
     assert outs[0].equals(outs[1])
 
 
-def test_block_salting(spark):
-    """Oversized blocks get salted sub-keys that spread the work across
-    reducers WITHOUT losing any in-block pair (replicated-side salted
-    self-join); small blocks stay intact; huge blocks are suppressed
-    and logged."""
-    from pyspark.sql import functions as F
-
-    from sz_spark import blocking
-
-    rows = (
-        [("small%d" % i, 0, 111) for i in range(5)]
-        + [("hot%02d" % i, 0, 222) for i in range(40)]
-        + [("huge%d" % i, 0, 333) for i in range(200)]
-    )
-    bands = spark.createDataFrame(rows, "conv_id string, band_id int, band_hash long")
-    kept, suppressed = blocking.cap_blocks(bands, max_block_size=8, salt_up_to=64)
-    sup = suppressed.collect()
-    assert len(sup) == 1 and sup[0]["block_size"] == 200
-    k = kept.toPandas()
-    assert (k[k.conv_id.str.startswith("small")]["salt"] == 0).all()
-    assert (k[k.conv_id.str.startswith("small")]["n_salts"] == 1).all()
-    hot = k[k.conv_id.str.startswith("hot")]
-    assert hot["salt"].nunique() > 1  # split across salts
-    assert (hot["n_salts"] == 5).all()  # ceil(40/8)
-    pairs = blocking.candidate_pairs(kept).toPandas()
-    # salting preserves recall exactly: ALL 40C2 hot pairs + 5C2 small
-    n_hot_pairs = len(pairs[pairs.id_a.str.startswith("hot")])
-    assert n_hot_pairs == 40 * 39 // 2
-    n_small_pairs = len(pairs[pairs.id_a.str.startswith("small")])
-    assert n_small_pairs == 5 * 4 // 2
-    # suppressed block contributes no pairs at all
-    assert not pairs.id_a.str.startswith("huge").any()
-
-
 def test_block_pairs_fused_equals_salted_join(spark):
-    """The fused two-shuffle block_pairs (window cap + in-array pair
-    emission) produces EXACTLY the salted self-join's pair set and the
-    same suppressed stats, on the skew fixture (intact block, salted-
-    tier block, suppressed block) plus multi-band overlap for the
-    cross-band dedup."""
+    """block_pairs (window cap + in-array pair emission + cross-band
+    dedup) == itertools.combinations over every block that survives
+    the cap, on the skew fixture (a block below max_block_size, one
+    between max_block_size and salt_up_to, one suppressed) plus
+    multi-band overlap for the dedup; the suppressed stats list exactly
+    the blocks above the cap."""
+    import itertools
+    from collections import defaultdict
+
     from sz_spark import blocking
 
     rows = (
@@ -109,16 +79,23 @@ def test_block_pairs_fused_equals_salted_join(spark):
         + [("hot%02d" % i, 1, 555) for i in range(3)]
     )
     bands = spark.createDataFrame(rows, "conv_id string, band_id int, band_hash long")
-    kept, sup_old = blocking.cap_blocks(bands, max_block_size=8, salt_up_to=64)
-    old = blocking.candidate_pairs(kept).toPandas()
-    new, sup_new = blocking.block_pairs(bands, max_block_size=8, salt_up_to=64)
-    new = new.toPandas()
-    key = lambda df: set(map(tuple, df[["id_a", "id_b"]].itertuples(index=False)))
-    assert key(new) == key(old) and len(new) == len(old)  # set AND no dups
-    assert (
-        sup_new.orderBy("band_hash").toPandas().to_dict("records")
-        == sup_old.orderBy("band_hash").toPandas().to_dict("records")
-    )
+    blocks = defaultdict(list)
+    for conv_id, band_id, band_hash in rows:
+        blocks[band_id, band_hash].append(conv_id)
+    cap = 64
+    want = {
+        pair
+        for ids in blocks.values()
+        if len(ids) <= cap
+        for pair in itertools.combinations(sorted(ids), 2)
+    }
+    assert len(want) == 40 * 39 // 2 + 5 * 4 // 2  # no huge%d pair
+    new, sup = blocking.block_pairs(bands, max_block_size=8, salt_up_to=cap)
+    got = [tuple(r) for r in new.select("id_a", "id_b").collect()]
+    assert set(got) == want and len(got) == len(want)  # set AND no dups
+    assert [tuple(r) for r in sup.collect()] == [
+        (b, h, len(ids)) for (b, h), ids in blocks.items() if len(ids) > cap
+    ] == [(0, 333, 200)]
 
 
 def test_resume_identical(spark, tmp_path):
@@ -284,37 +261,16 @@ def test_surrogate_collision_guard(spark, monkeypatch):
 
 
 def test_arrow_transport_parity(spark):
-    """The r5 mapInArrow transport (flat-buffer kernels) must produce
-    exactly the pandas-UDF twins' outputs: band keys from
-    blocking.minhash_bands == make_band_keys_udf, and bounded-lev
-    scoring == make_bounded_levenshtein_udf."""
+    """Bounded Arrow scoring (score_pairs) == the full-DP reference
+    kernels.levenshtein_batch on every pair it keeps (sim >= τ), and
+    every pair it drops really scores below τ."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from sz_spark import blocking, canonicalize as canon, scoring
+    from sz_spark import canonicalize as canon, kernels as K, scoring
     from sz_spark.transcripts import build_transcripts
-    from sz_spark.udfs import make_band_keys_udf, make_bounded_levenshtein_udf
 
     docs = canon.canonicalize(build_transcripts(spark, SF_DIR)).limit(200)
-
-    # bands: arrow path (production) vs pandas twin
-    got = (
-        blocking.minhash_bands(docs, ndim=32, n_bands=8, rows_per_band=4,
-                               widths=None, prefix_len=0)
-        .orderBy("conv_id", "band_id")
-        .toPandas()
-    )
-    keys = make_band_keys_udf(ndim=32, n_bands=8, rows_per_band=4)
-    exp = (
-        docs.select(
-            "conv_id", keys(F.encode(F.col("doc"), "utf-8")).alias("bk")
-        )
-        .select("conv_id", F.posexplode("bk").alias("band_id", "band_hash"))
-        .orderBy("conv_id", "band_id")
-        .toPandas()
-    )
-    assert got.reset_index(drop=True).equals(exp.reset_index(drop=True))
-
-    # scoring: arrow bounded path vs pandas bounded twin
     pairs = (
         docs.alias("a")
         .join(docs.alias("b"), F.col("a.conv_id") < F.col("b.conv_id"))
@@ -323,55 +279,44 @@ def test_arrow_transport_parity(spark):
         )
         .limit(500)
     )
-    wt = scoring.attach_texts(pairs, docs)
+    wt = scoring.attach_texts(pairs, docs).localCheckpoint()
     tau = 0.3  # low enough that pairs land on both sides of the bound
-    got_s = (
-        scoring.score_pairs(wt, bounded=tau)
-        .select("id_a", "id_b", "edit_distance", F.round("sim", 9).alias("sim"))
-        .orderBy("id_a", "id_b")
-        .toPandas()
+    got = {
+        (r["id_a"], r["id_b"]): (r["edit_distance"], r["sim"])
+        for r in scoring.score_pairs(wt, bounded=tau).collect()
+    }
+    ref = wt.select("id_a", "id_b", "doc_a", "doc_b", "len_a", "len_b").collect()
+    assert len(got) == len(ref) > 0
+    dist = K.levenshtein_batch(
+        [r["doc_a"].encode() for r in ref], [r["doc_b"].encode() for r in ref]
     )
-    lev = make_bounded_levenshtein_udf(tau)
-    exp_s = (
-        wt.withColumn(
-            "edit_distance",
-            lev(F.encode(F.col("doc_a"), "utf-8"), F.encode(F.col("doc_b"), "utf-8")),
-        )
-        .withColumn(
-            "sim",
-            F.round(
-                F.lit(1.0)
-                - F.col("edit_distance") / F.greatest("len_a", "len_b").cast("double"),
-                9,
-            ),
-        )
-        .select("id_a", "id_b", "edit_distance", "sim")
-        .orderBy("id_a", "id_b")
-        .toPandas()
-    )
-    # bounded contract: sub-τ pairs come back CLAMPED, and the clamp value
-    # depends on chunk composition (both paths chunk independently) — so
-    # compare exactly what consumers rely on: identical pair set, and for
-    # every pair either both sides agree exactly (kept pairs are exact
-    # below the bound) or both sides score it below τ (dropped either way)
-    m = got_s.merge(exp_s, on=["id_a", "id_b"], suffixes=("_a", "_p"))
-    assert len(m) == len(got_s) == len(exp_s)
-    kept = (m.sim_a >= tau) | (m.sim_p >= tau)
-    assert (m.loc[kept, "edit_distance_a"] == m.loc[kept, "edit_distance_p"]).all()
-    assert (m.loc[kept, "sim_a"] == m.loc[kept, "sim_p"]).all()
-    assert ((m.sim_a < tau) == (m.sim_p < tau)).all()
-    assert kept.sum() > 0  # the parity check must not be vacuous
+    sims = 1.0 - dist / np.maximum(
+        [r["len_a"] for r in ref], [r["len_b"] for r in ref]
+    ).astype(np.float64)
+    n_kept = 0
+    for r, d, sim in zip(ref, dist.tolist(), sims.tolist()):
+        g_dist, g_sim = got[r["id_a"], r["id_b"]]
+        if g_sim >= tau:
+            # kept pairs are exact below the bound
+            assert (g_dist, g_sim) == (d, sim)
+            n_kept += 1
+        else:
+            # sub-τ pairs may come back clamped; below τ either way
+            assert sim < tau
+    assert n_kept > 0  # the parity check must not be vacuous
 
 
 def test_prune_first_scored_flow_parity(spark):
-    """The production scored flow (attach_prune_attrs -> prunes ->
-    attach_texts on survivors) must select exactly the pair set of the
-    attach-everything-first flow, and score it identically — the
-    restructure only moves WHEN the doc bytes join, never WHAT is
-    scored."""
+    """The production scored flow (doc_features (len, hist) ->
+    attach_prune_attrs -> prune_pairs_arrow -> attach_texts on the
+    survivors) must select exactly the pair set of the
+    attach-everything-first flow pruned by the expression oracles, and
+    score it identically — pruning first only moves WHEN the doc bytes
+    join, never WHAT is scored."""
+    import oracles
     from pyspark.sql import functions as F
 
-    from sz_spark import canonicalize as canon, scoring
+    from sz_spark import blocking, canonicalize as canon, scoring
     from sz_spark.queries import _md5_band_pairs
     from sz_spark.transcripts import build_transcripts
 
@@ -379,28 +324,33 @@ def test_prune_first_scored_flow_parity(spark):
     docs = canon.canonicalize(build_transcripts(spark, SF_DIR))
     pairs = _md5_band_pairs(docs)
 
-    # old flow: texts + hists attached up front
-    wt_old = scoring.attach_texts(pairs, docs, with_histogram=True)
-    pruned_old = scoring.histogram_prune(
-        scoring.length_prune(wt_old, tau), tau
+    def scored(df):
+        return (
+            scoring.score_pairs(df, bounded=tau)
+            .select("id_a", "id_b", "edit_distance", F.round("sim", 9).alias("sim"))
+            .orderBy("id_a", "id_b")
+            .toPandas()
+        )
+
+    # reference flow: texts + driver-side histograms attached up front
+    hists = oracles.prune_attrs_frame(spark, docs).select(
+        "conv_id", "hist"
     )
-    old = (
-        scoring.score_pairs(pruned_old, bounded=tau)
-        .select("id_a", "id_b", "edit_distance", F.round("sim", 9).alias("sim"))
-        .orderBy("id_a", "id_b")
-        .toPandas()
+    wt_old = (
+        scoring.attach_texts(pairs, docs)
+        .join(hists.withColumnRenamed("conv_id", "id_a"), "id_a")
+        .withColumnRenamed("hist", "hist_a")
+        .join(hists.withColumnRenamed("conv_id", "id_b"), "id_b")
+        .withColumnRenamed("hist", "hist_b")
     )
+    old = scored(oracles.histogram_prune(oracles.length_prune(wt_old, tau), tau))
 
     # production flow: prune on (len, hist) only, texts join survivors
-    attrs = scoring.attach_prune_attrs(pairs, docs)
-    pruned = scoring.histogram_prune(scoring.length_prune(attrs, tau), tau)
-    wt_new = scoring.attach_texts(pruned.select("id_a", "id_b"), docs)
-    new = (
-        scoring.score_pairs(wt_new, bounded=tau)
-        .select("id_a", "id_b", "edit_distance", F.round("sim", 9).alias("sim"))
-        .orderBy("id_a", "id_b")
-        .toPandas()
+    feats = blocking.doc_features(docs).select("conv_id", "len", "hist")
+    pruned = scoring.prune_pairs_arrow(
+        scoring.attach_prune_attrs(pairs, feats), tau
     )
+    new = scored(scoring.attach_texts(pruned, docs))
 
     assert len(old) > 0  # non-vacuous
     m = old.merge(new, on=["id_a", "id_b"], suffixes=("_o", "_n"))
@@ -415,10 +365,11 @@ def test_prune_first_scored_flow_parity(spark):
 
 
 def test_prune_pairs_arrow_matches_expression_twin(spark):
-    """Fused Arrow prune == histogram_prune(length_prune(...)) on the
-    real candidate frame (same comparisons, f64-identical bounds)."""
-    import os
-
+    """Fused Arrow prune over doc_features' packed u16 histograms ==
+    the expression oracles histogram_prune(length_prune(...)) over
+    unclamped driver-side bincounts, on the real candidate frame (same
+    comparisons, f64-identical bounds; no bin here reaches the clamp)."""
+    import oracles
     from pyspark.sql import functions as F
 
     from sz_spark import blocking, canonicalize as canon, scoring
@@ -427,45 +378,26 @@ def test_prune_pairs_arrow_matches_expression_twin(spark):
     docs = canon.canonicalize(
         build_transcripts(spark, "/root/testdata/sf0.001")
     ).withColumn("did", F.xxhash64("conv_id"))
-    bands = blocking.minhash_bands(docs, id_col="did", ndim=96, n_bands=24)
+    feats = blocking.doc_features(docs, id_col="did", ndim=96, n_bands=24)
     pairs, _ = blocking.block_pairs(
-        bands, id_col="did", max_block_size=64, salt_up_to=1024
+        blocking.bands_from_features(feats, id_col="did"),
+        id_col="did", max_block_size=64, salt_up_to=1024,
     )
-    attrs = scoring.attach_prune_attrs(pairs, docs, id_col="did")
+    attrs = scoring.attach_prune_attrs(pairs, feats.select("did", "len", "hist"))
     got = sorted(map(tuple, scoring.prune_pairs_arrow(attrs, 0.94).collect()))
-    os.environ["SZ_JVM_PRUNE"] = "1"
-    try:
-        want = sorted(map(tuple, scoring.prune_pairs_arrow(attrs, 0.94).collect()))
-    finally:
-        del os.environ["SZ_JVM_PRUNE"]
-    assert got == want
-    assert len(got) > 0
-
-
-def test_prune_packed_matches_array_path(spark):
-    """attach_prune_attrs(packed=True) + prune must make the IDENTICAL
-    keep/drop decisions as the array-histogram path on a real candidate
-    frame: the u16 packing only clamps bins above 65535, which no
-    document here reaches, so the L1 values (and the f64 bound
-    comparisons) are the same numbers."""
-    from pyspark.sql import functions as F
-
-    from sz_spark import blocking, canonicalize as canon, scoring
-    from sz_spark.transcripts import build_transcripts
-
-    docs = canon.canonicalize(
-        build_transcripts(spark, SF_DIR)
-    ).withColumn("did", F.xxhash64("conv_id"))
-    bands = blocking.minhash_bands(docs, id_col="did", ndim=96, n_bands=24)
-    pairs, _ = blocking.block_pairs(
-        bands, id_col="did", max_block_size=64, salt_up_to=1024
+    ref_attrs = scoring.attach_prune_attrs(
+        pairs, oracles.prune_attrs_frame(spark, docs, id_col="did")
     )
-    arr = scoring.attach_prune_attrs(pairs, docs, id_col="did")
-    pk = scoring.attach_prune_attrs(pairs, docs, id_col="did", packed=True)
-    got_arr = sorted(map(tuple, scoring.prune_pairs_arrow(arr, 0.94).collect()))
-    got_pk = sorted(map(tuple, scoring.prune_pairs_arrow(pk, 0.94).collect()))
-    assert got_arr == got_pk
-    assert len(got_pk) > 0
+    want = sorted(
+        map(
+            tuple,
+            oracles.histogram_prune(oracles.length_prune(ref_attrs, 0.94), 0.94)
+            .select("id_a", "id_b")
+            .collect(),
+        )
+    )
+    assert got == want
+    assert 0 < len(got) < pairs.count()  # the prune drops some, keeps some
 
 
 def _gather_fixture(spark):
@@ -493,9 +425,7 @@ def _join_tier_pairs(bands, docs, feats, threshold, **block_kw):
     from sz_spark import blocking, scoring
 
     cand, _ = blocking.block_pairs(bands, id_col="did", **block_kw)
-    attrs = scoring.attach_prune_attrs(
-        cand, docs, id_col="did", attrs_frame=feats.select("did", "len", "hist")
-    )
+    attrs = scoring.attach_prune_attrs(cand, feats.select("did", "len", "hist"))
     return scoring.prune_pairs_arrow(attrs, threshold)
 
 
@@ -662,8 +592,8 @@ def test_gathered_pairs_plan_has_no_exchange(spark):
     Window and no aggregate."""
     from sz_spark.pipeline import pairs_stage
 
-    cfg, docs, feats = _gather_fixture(spark)
-    pairs, bcs = pairs_stage(docs, feats, cfg)
+    cfg, _, feats = _gather_fixture(spark)
+    pairs, bcs = pairs_stage(feats, cfg)
     assert bcs, "the fixture must take the gather tier"
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     for bc in bcs:
@@ -673,20 +603,17 @@ def test_gathered_pairs_plan_has_no_exchange(spark):
     assert "MapInArrow" in plan, plan
 
 
-def test_gather_gate_malformed_env(spark, monkeypatch, caplog):
-    """A malformed SZ_GATHER_MAX_DOCS falls back to the default gate
-    with one warning naming the variable and the value."""
-    import logging
-
+def test_gather_gate_malformed_env(spark, monkeypatch):
+    """A malformed SZ_GATHER_MAX_DOCS raises a ValueError naming the
+    variable and the value; a well-formed one sets the gate."""
     from sz_spark import scoring
 
     monkeypatch.delenv("SZ_NO_GATHER", raising=False)
     monkeypatch.setenv("SZ_GATHER_MAX_DOCS", "1e6")
-    with caplog.at_level(logging.WARNING, logger="sz_spark.scoring"):
-        assert scoring.gather_gate(spark.range(3)) is True
-    msgs = [r.getMessage() for r in caplog.records if r.name == "sz_spark.scoring"]
-    assert len(msgs) == 1
-    assert "SZ_GATHER_MAX_DOCS" in msgs[0] and "1e6" in msgs[0]
+    with pytest.raises(ValueError, match=r"SZ_GATHER_MAX_DOCS.*'1e6'"):
+        scoring.gather_gate(spark.range(3))
+    monkeypatch.setenv("SZ_GATHER_MAX_DOCS", "2")
+    assert scoring.gather_gate(spark.range(3)) is False
 
 
 def test_prewarm_failure_is_logged(caplog):
