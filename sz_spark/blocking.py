@@ -254,6 +254,29 @@ def block_pairs_gathered(
     return spark.range(n_tasks, numPartitions=n_tasks).mapInArrow(fn, out_schema)
 
 
+def suppressed_blocks_gathered(
+    spark, value, max_block_size: int = 64, salt_up_to: int = 0
+) -> DataFrame:
+    """:func:`block_pairs`' suppressed-block stats (band_id, band_hash,
+    block_size), built on the driver from a prune broadcast's ``value``
+    (scoring.build_prune_broadcast): every (key row, key) whose block
+    size is above the drop threshold, once, with band_id = row - 1."""
+    import numpy as np
+    import pyarrow as pa
+
+    keys, sizes = value[3], value[4]
+    row, col = np.nonzero(sizes > _drop_above(max_block_size, salt_up_to))
+    blocks, first = np.unique(
+        np.stack([row, keys[row, col]]), axis=1, return_index=True
+    )
+    tbl = pa.table({
+        "band_id": pa.array(blocks[0] - 1, pa.int32()),
+        "band_hash": blocks[1],
+        "block_size": sizes[row[first], col[first]].astype(np.int64),
+    })
+    return spark.createDataFrame(tbl, "band_id int, band_hash long, block_size long")
+
+
 def _snake_rows(task: int, n_tasks: int, n_rows: int) -> list:
     """The key rows dealt to ``task`` in snake order (t, 2P-1-t, 2P+t,
     ...): a higher row re-checks every lower row, so alternating the

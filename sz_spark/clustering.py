@@ -45,26 +45,37 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def union_find_local(edge_rows: list[tuple[str, str]]) -> dict[str, str]:
-    """Driver-side union-find with path compression + union by rank,
-    min-id roots.  The small-graph fast path of
-    :func:`connected_components`; also the test oracle (FIXTURES.md §4)."""
-    parent: dict[str, str] = {}
+def _components_local(src, dst):
+    """Vectorized union-find over parallel Arrow id columns -> (names,
+    root index per name).  The ids are dictionary-encoded and the
+    dictionary sorted by Arrow's byte order (Spark's UTF-8 order), so a
+    component's minimum index is its lexicographic minimum id.  Each
+    round hooks every edge's larger root under its smaller one, then
+    pointer-jumps until every node points at a root; pointers only go
+    down, so no cycle forms, and the rounds stop when every edge's ends
+    share a root."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def find(x: str) -> str:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for s, d in edge_rows:
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            lo, hi = (rs, rd) if rs < rd else (rd, rs)
-            parent[hi] = lo
-    return {x: find(x) for x in parent}
+    ends = pa.chunked_array(src.chunks + dst.chunks, src.type).combine_chunks()
+    enc = ends.dictionary_encode()
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(len(order), np.int64)
+    rank[order] = np.arange(len(order))
+    code = rank[enc.indices.to_numpy()]
+    a, b = code[: len(src)], code[len(src):]
+    parent = np.arange(len(order))
+    while True:
+        ra, rb = parent[a], parent[b]
+        if (ra == rb).all():
+            return enc.dictionary.take(order), parent
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if (jumped == parent).all():
+                break
+            parent = jumped
 
 
 def connected_components(
@@ -79,15 +90,17 @@ def connected_components(
     scheduling (similarities/serial.hpp:3296-3395): the *match graph* of
     an ER run is orders of magnitude smaller than the input (only
     above-threshold pairs), so when it fits comfortably on the driver
-    (< local_threshold edges) a union-find there beats dozens of
-    distributed rounds.  Driver-memory math for the default 2M-edge
-    threshold: ~200 B/edge for the collected (src, dst) string tuples
-    plus ~150 B/entry for the parent dict over <= 2 * edges nodes ->
-    ~1 GB peak worst-case, inside a standard 4-8 GB driver with margin;
-    raise local_threshold only with driver memory to back it.  Beyond
-    that, alternating large-star/small-star rounds run fully
-    distributed, each round checkpointed so a failed run resumes
-    mid-stage.
+    (<= local_threshold edges) a union-find there beats dozens of
+    distributed rounds.  One Arrow collect of at most local_threshold +
+    1 edges is both the size gate and the driver tier's data
+    (:func:`_components_local`; no per-id Python object).  Driver memory
+    at the default 2M-edge threshold, measured at 30-byte ids: ~380
+    B/edge peak (Arrow table 68 B, Arrow encode/sort/take ~240 B, NumPy
+    int64 codes and parents ~72 B) -> ~0.8 GB, inside a standard 4-8 GB
+    driver; raise local_threshold only with driver memory to back it.
+    Larger graphs (collected up to the gate once, then dropped) run
+    alternating large-star/small-star rounds fully distributed, each
+    round checkpointed so a failed run resumes mid-stage.
 
     ``checkpoint``: optional callable ``(df, round_idx) -> df`` that
     persists the intermediate edge set and returns a lineage-truncated
@@ -97,27 +110,17 @@ def connected_components(
     spark = edges.sparkSession
     cur = edges.select(
         F.col("src").cast("string"), F.col("dst").cast("string")
-    ).filter(F.col("src") != F.col("dst")).distinct()
+    ).filter(F.col("src") != F.col("dst"))
 
-    n_edges = cur.limit(local_threshold + 1).count()
-    if n_edges <= local_threshold:
-        # Arrow transport both ways: toPandas() and a pandas-backed
-        # createDataFrame move ~100k-2M edges in tens of ms, vs seconds
-        # of driver-serial Row/pickle conversion — this path sits on the
-        # critical path of every probe/pipeline run (r5 Amdahl work).
-        import pandas as pd
+    tbl = cur.limit(local_threshold + 1).toArrow()
+    if tbl.num_rows <= local_threshold:
+        import pyarrow as pa
 
-        pdf = cur.toPandas()
-        mapping = union_find_local(
-            list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-        )
-        if not mapping:
-            return spark.createDataFrame([], "id string, cluster_id string")
-        out = pd.DataFrame(
-            {"id": list(mapping.keys()), "cluster_id": list(mapping.values())}
-        )
+        names, root = _components_local(tbl.column(0), tbl.column(1))
+        out = pa.table({"id": names, "cluster_id": names.take(root)})
         return spark.createDataFrame(out, "id string, cluster_id string")
 
+    cur = cur.distinct()
     prev_sig = None
     for i in range(max_iterations):
         nxt = _small_star(_large_star(cur))

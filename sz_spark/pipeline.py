@@ -70,8 +70,8 @@ def run_pipeline(
     # string conv_id costs ~3x the bytes of a long in UnsafeRow format.
     # xxhash64 is deterministic across runs/executors; the collision
     # probability for n docs is n^2/2^65 (~2e-9 at 1M docs), and the
-    # guard below makes one fail loudly.  conv_id reappears only in the
-    # (small) outputs.
+    # guard below makes one fail loudly.  conv_id comes back only where
+    # the texts join the (small) prune-survivor set, and in the clusters.
     docs = ckpt.stage(
         "canonical_docs",
         lambda: canon.canonicalize(transcripts).withColumn(
@@ -96,18 +96,17 @@ def run_pipeline(
         )
 
     feats = ckpt.stage("doc_features", _feats)
-    _, suppressed = blocking.block_pairs(
-        blocking.bands_from_features(feats, id_col="did"), **_block_kw(cfg)
-    )
 
     # the gather tier's broadcast, released (executor blocks) once
     # `pairs` is materialized — the checkpoint truncates the lineage,
     # so nothing re-executes the kernel that captured it; unpersist
     # (not destroy) keeps the driver copy as a safety net
     gather_bcs: list = []
+    suppressed: list = []
 
     def _pairs():
-        out, bcs = pairs_stage(feats, cfg)
+        out, sup, bcs = pairs_stage(feats, cfg)
+        suppressed.append(sup)
         gather_bcs.extend(bcs)
         for bc in bcs:
             ids = bc.value[0]  # id-sorted: a collision is a repeat
@@ -117,6 +116,11 @@ def run_pipeline(
     pairs = ckpt.stage("pairs", _pairs)
     for bc in gather_bcs:
         bc.unpersist()
+    if not suppressed:
+        # `pairs` resumed from its checkpoint: the join tier's stats frame
+        suppressed.append(blocking.block_pairs(
+            blocking.bands_from_features(feats, id_col="did"), **_block_kw(cfg)
+        )[1])
     if not gather_bcs:
         # join tier, or `pairs` resumed from its checkpoint: one agg.
         # canonicalize emits one row per conv_id (groupBy), so
@@ -127,28 +131,7 @@ def run_pipeline(
         ).collect()[0]
         _check_surrogate_keys(row["n"], row["n_did"])
 
-    id_map = docs.select("did", "conv_id")
-
-    def _scored():
-        with_texts = scoring.attach_texts(pairs, docs, id_col="did")
-        out = scoring.score_pairs(with_texts, bounded=cfg.threshold).select(
-            "id_a", "id_b", "edit_distance", "sim"
-        )
-        # map surrogates back to conv_ids on the (small) scored output
-        return (
-            out.join(id_map.withColumnRenamed("did", "id_a"), "id_a")
-            .withColumnRenamed("conv_id", "conv_a")
-            .join(id_map.withColumnRenamed("did", "id_b"), "id_b")
-            .withColumnRenamed("conv_id", "conv_b")
-            .select(
-                F.col("conv_a").alias("id_a"),
-                F.col("conv_b").alias("id_b"),
-                "edit_distance",
-                "sim",
-            )
-        )
-
-    scored = ckpt.stage("scored", _scored)
+    scored = ckpt.stage("scored", lambda: scored_stage(pairs, docs, cfg))
 
     edges = scored.filter(F.col("sim") >= cfg.threshold).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -171,7 +154,7 @@ def run_pipeline(
         "pairs": pairs,
         "scored": scored,
         "clusters": clusters,
-        "suppressed_blocks": suppressed,
+        "suppressed_blocks": suppressed[0],
     }
 
 
@@ -182,41 +165,62 @@ def _block_kw(cfg: PipelineConfig) -> dict:
     )
 
 
-def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, list]:
+def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame, list]:
     """run_pipeline's ``pairs`` stage frame — the prune survivors (did
-    ids, id_a < id_b) — plus the broadcasts it captured, to unpersist
+    ids, id_a < id_b) — plus the suppressed-block stats (band_id,
+    band_hash, block_size) and the broadcasts it captured, to unpersist
     once the frame is materialized.
 
     Two tiers (scoring.py "Gathered" block).  Below the gate every
     doc's prune attributes and block keys ship ONCE per worker, and
     blocking.block_pairs_gathered rebuilds the blocks from those keys
     in one narrow pass (no band rows, no exchange): each candidate
-    leaves exactly one block and is pruned in the same pass.  Beyond
+    leaves exactly one block and is pruned in the same pass; the
+    suppressed stats come from the broadcast's block sizes.  Beyond
     the gate (or SZ_NO_GATHER=1) the band rows are shuffled into
     blocks, the candidates deduplicated, and their (len, hist) joined
     on.  Both tiers keep the identical pair set (tests/test_pipeline.py
     parity tests)."""
     if scoring.gather_gate(feats):
+        spark = feats.sparkSession
         prune_bc = scoring.build_prune_broadcast(feats)
         pairs = blocking.block_pairs_gathered(
-            feats.sparkSession, prune_bc, cfg.threshold,
+            spark, prune_bc, cfg.threshold,
             max_block_size=cfg.max_block_size, salt_up_to=cfg.salt_up_to,
         )
-        return pairs, [prune_bc]
+        suppressed = blocking.suppressed_blocks_gathered(
+            spark, prune_bc.value,
+            max_block_size=cfg.max_block_size, salt_up_to=cfg.salt_up_to,
+        )
+        return pairs, suppressed, [prune_bc]
     bands = blocking.bands_from_features(feats, id_col="did")
-    candidates, _ = blocking.block_pairs(bands, **_block_kw(cfg))
+    candidates, suppressed = blocking.block_pairs(bands, **_block_kw(cfg))
     # prune BEFORE attaching texts: the prunes need only (len, hist)
     # per side and drop ~95% of candidates; the doc bytes join only the
     # survivors (measured funnel in scoring.attach_prune_attrs)
     attrs = scoring.attach_prune_attrs(
         candidates, feats.select("did", "len", "hist")
     )
-    return scoring.prune_pairs_arrow(attrs, cfg.threshold), []
+    return scoring.prune_pairs_arrow(attrs, cfg.threshold), suppressed, []
+
+
+def scored_stage(pairs: DataFrame, docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """run_pipeline's ``scored`` stage frame: the pairs' edit distances
+    and similarities under conv_ids.  conv_id rides through the two
+    text joins on did (scoring.attach_texts ``carry``), so no join maps
+    the surrogates back."""
+    with_texts = scoring.attach_texts(pairs, docs, id_col="did", carry=("conv_id",))
+    return scoring.score_pairs(with_texts, bounded=cfg.threshold).select(
+        F.col("conv_id_a").alias("id_a"),
+        F.col("conv_id_b").alias("id_b"),
+        "edit_distance",
+        "sim",
+    )
 
 
 def _check_surrogate_keys(n_docs: int, n_distinct: int) -> None:
     """A did collision would silently merge two conversations through
-    blocking/scoring and FAN OUT rows at the conv_id remap join —
+    blocking/scoring and FAN OUT rows where the texts join on did —
     corrupting clusters instead of erroring — so fail loudly."""
     if n_docs != n_distinct:
         raise RuntimeError(

@@ -41,22 +41,19 @@ def attach_texts(
     docs: DataFrame,
     id_col: str = "conv_id",
     text_col: str = "doc",
+    carry: tuple = (),
 ) -> DataFrame:
     """pairs(id_a, id_b) ⋈ docs -> (id_a, id_b, doc_a, doc_b, len_a,
-    len_b)."""
-    slim = docs.select(
-        F.col(id_col).alias("_id"),
-        F.col(text_col).alias("_doc"),
-        F.length(text_col).alias("_len"),
-    )
-    return (
-        pairs.join(slim.withColumnRenamed("_id", "id_a"), "id_a")
-        .withColumnRenamed("_doc", "doc_a")
-        .withColumnRenamed("_len", "len_a")
-        .join(slim.withColumnRenamed("_id", "id_b"), "id_b")
-        .withColumnRenamed("_doc", "doc_b")
-        .withColumnRenamed("_len", "len_b")
-    )
+    len_b), plus ``<c>_a`` / ``<c>_b`` for each docs column ``c`` in
+    ``carry`` (the pipeline carries conv_id through the same two joins
+    instead of joining it back on after scoring)."""
+    cols = [(F.col(id_col), "id"), (F.col(text_col), "doc"),
+            (F.length(text_col), "len")] + [(F.col(c), c) for c in carry]
+    out = pairs
+    for side in ("a", "b"):
+        slim = docs.select(*(e.alias(f"{name}_{side}") for e, name in cols))
+        out = out.join(slim, f"id_{side}")
+    return out
 
 
 def attach_prune_attrs(pairs: DataFrame, attrs_frame: DataFrame) -> DataFrame:
@@ -232,11 +229,11 @@ def scoring_fanout(df: DataFrame) -> int:
     """Round-robin width for the DP scoring stage.
 
     The wave policy lives in the SESSION's shuffle-partition sizing
-    (bench probes run 4x-cores shuffles precisely so uneven DP cost
-    rides out in waves); re-fanning WIDER than both the session
-    parallelism and the upstream width only multiplies Python task
-    overhead (measured: 128 tasks for a 4.5k-pair frame at local[32]
-    cost 1.8-9 s vs 0.75 s at the upstream's 32).  Under-partitioned
+    (session.build_session defaults it to 1x cores; a session sized
+    wider lets uneven DP cost ride out in waves); re-fanning WIDER than
+    both the session parallelism and the upstream width only multiplies
+    Python task overhead (measured: 128 tasks for a 4.5k-pair frame at
+    local[32] cost 1.8-9 s vs 0.75 s at the upstream's 32).  Under-partitioned
     inputs (a bare scan) still spread to 4x cores, matching
     udfs.spread_for_python — the optimizer cannot see Python CPU cost.
     The width probe (udfs.upstream_width) is plan-time only — no job

@@ -127,3 +127,25 @@ def histogram_prune(pairs: DataFrame, threshold: float) -> DataFrame:
     return pairs.filter(
         (l1 / 2) <= ((F.lit(1.0) - F.lit(threshold)) * max_len)
     ).drop("hist_a", "hist_b")
+
+
+def union_find_local(edge_rows: list[tuple[str, str]]) -> dict[str, str]:
+    """Dict union-find with path compression and min-id roots, one edge
+    at a time: the per-edge twin of clustering._components_local (the
+    driver tier of clustering.connected_components)."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for s, d in edge_rows:
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            lo, hi = (rs, rd) if rs < rd else (rd, rs)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}

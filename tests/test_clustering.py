@@ -92,10 +92,76 @@ def test_distributed_path_matches_oracle(spark, name):
 
 
 def test_union_find_local_direct():
-    from sz_spark.clustering import union_find_local
+    from oracles import union_find_local
 
     for name, edges in GRAPHS.items():
         exp = oracle_components(edges)
         got = union_find_local(edges)
         got_full = {k: got.get(k, k) for k in exp}
         assert got_full == exp, name
+
+
+def _numpy_components(edges) -> dict[str, str]:
+    import pyarrow as pa
+
+    from sz_spark.clustering import _components_local
+
+    src = pa.chunked_array([pa.array([s for s, _ in edges], pa.string())])
+    dst = pa.chunked_array([pa.array([d for _, d in edges], pa.string())])
+    names, root = _components_local(src, dst)
+    return dict(zip(names.to_pylist(), names.take(root).to_pylist()))
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_numpy_union_find_matches_oracle(name):
+    edges = GRAPHS[name]
+    assert _numpy_components(edges) == oracle_components(edges)
+
+
+def test_numpy_union_find_long_chain():
+    """A 10k-node chain (the worst-case diameter), its ids shuffled so
+    the hooks do not follow the chain order."""
+    ids = [f"v{i:05d}" for i in range(10_000)]
+    random.Random(3).shuffle(ids)
+    edges = list(zip(ids, ids[1:]))
+    got = _numpy_components(edges)
+    assert got == oracle_components(edges)
+    assert set(got.values()) == {"v00000"}
+
+
+def test_driver_tier_long_ids(spark):
+    """LongType ids are clustered by their string form (min "10" < "9"),
+    as the distributed tier does."""
+    from sz_spark.clustering import connected_components
+
+    edges = [(9, 10), (10, 11), (3, 4), (100, 2)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    exp = oracle_components([(str(s), str(d)) for s, d in edges])
+    for kw in ({}, {"local_threshold": 0}):
+        got = {r["id"]: r["cluster_id"] for r in connected_components(df, **kw).collect()}
+        assert got == exp, kw
+    assert exp["9"] == "10"
+
+
+def test_driver_tier_empty_edges(spark):
+    assert _assign(spark, []) == {}
+    assert _assign(spark, [("x", "x")]) == {}
+
+
+def test_tiers_agree_on_non_ascii_ids(spark):
+    """The driver tier orders ids like Spark's UTF-8 byte order, so both
+    tiers pick the same cluster_id; "\uffff" < "\U00010000" in UTF-8
+    (and code points) but not in UTF-16."""
+    edges = [
+        ("\U00010000", "\uffff"),
+        ("é", "e"),
+        ("ß", "ss"),
+        ("日本", "中文"),
+        ("中文", "😀"),
+        ("\u00a0x", "x"),
+        ("Ω", "\U0001f600a"),
+    ]
+    local = _assign(spark, edges)
+    distributed = _assign(spark, edges, local_threshold=0)
+    assert local == distributed == oracle_components(edges)
+    assert local["\U00010000"] == "\uffff"

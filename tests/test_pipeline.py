@@ -135,6 +135,45 @@ def _jobs_in_group(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_driver_tier_clustering_runs_one_job(spark):
+    """The driver tier of connected_components is one Arrow collect:
+    the size gate and the edges come from the same job."""
+    from sz_spark.clustering import connected_components
+
+    edges = spark.createDataFrame(
+        [(f"a{i}", f"a{i + 1}") for i in range(50)] + [("b", "c"), ("c", "c")],
+        "src string, dst string",
+    )
+    out = []
+    assert _jobs_in_group(spark, "cc-driver", lambda: out.append(connected_components(edges))) == 1
+    assert len(out[0].collect()) == 53
+
+
+def test_scored_stage_joins_only_the_texts(spark):
+    """conv_id rides through the two text joins: the scored stage's
+    executed plan holds exactly those 2 joins, and its rows are keyed
+    by conv_id."""
+    import re
+
+    from sz_spark.pipeline import pairs_stage, scored_stage
+
+    cfg, docs, feats = _gather_fixture(spark)
+    docs = docs.localCheckpoint()  # as the pipeline's stages are
+    pairs, _, bcs = pairs_stage(feats, cfg)
+    try:
+        scored = scored_stage(pairs.localCheckpoint(), docs, cfg)
+        plan = scored._jdf.queryExecution().executedPlan().toString()
+        rows = scored.collect()
+    finally:
+        for bc in bcs:
+            bc.unpersist()
+    joins = re.findall(r"\b(\w*Join|CartesianProduct)\b", plan)
+    assert len(joins) == 2, plan
+    assert scored.columns == ["id_a", "id_b", "edit_distance", "sim"]
+    conv_ids = {r["conv_id"] for r in docs.select("conv_id").collect()}
+    assert rows and all(r["id_a"] in conv_ids and r["id_b"] in conv_ids for r in rows)
+
+
 def test_lineage_rows_match_spark_oracle(spark, tmp_path):
     """Every stage's metric rows (read off the parquet footers) equal a
     Spark aggregate over the stage's files: per file, the row count and
@@ -473,10 +512,12 @@ def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled
     attach_prune_attrs + prune_pairs_arrow — with no duplicate rows,
     including under a cap that suppresses blocks (a pair whose first
     collision is suppressed must come from its next kept band) and
-    under shuffled input order."""
+    under shuffled input order; under the cap that suppresses blocks in
+    several bands, the gather tier's suppressed-block stats (from the
+    broadcast's sizes) equal the join tier's."""
     from pyspark.sql import functions as F
 
-    from sz_spark import blocking
+    from sz_spark import blocking, scoring
 
     cfg, docs, feats = _gather_fixture(spark)
     kw = dict(max_block_size=max_block_size, salt_up_to=salt_up_to)
@@ -493,7 +534,14 @@ def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled
     if salt_up_to == 0:
         bands = blocking.bands_from_features(feats, id_col="did")
         _, sup = blocking.block_pairs(bands, id_col="did", **kw)
-        assert sup.count() > 0  # the suppressed-block leg is not vacuous
+        want_sup = sorted(sup.collect())
+        assert len({b for b, _, _ in want_sup}) > 1  # the suppressed leg is not vacuous
+        bc = scoring.build_prune_broadcast(feats)
+        try:
+            got_sup = blocking.suppressed_blocks_gathered(spark, bc.value, **kw)
+            assert sorted(got_sup.collect()) == want_sup
+        finally:
+            bc.unpersist()
 
 
 @pytest.mark.parametrize("max_block_size,salt_up_to", [(64, 1024), (4, 0)])
@@ -547,8 +595,9 @@ def test_gathered_pairs_hot_doc_and_stop_band(spark):
     """Hand-built feature table: doc 0 shares a key with other docs in
     EVERY key row (a hot document), and band 2 holds one block larger
     than the cap (a stop-band).  The gather tier must emit exactly the
-    join tier's pair set, each pair once."""
-    from sz_spark import blocking
+    join tier's pair set, each pair once, and the same suppressed-block
+    stats."""
+    from sz_spark import blocking, scoring
 
     cap = 8
     n = 40
@@ -585,6 +634,15 @@ def test_gathered_pairs_hot_doc_and_stop_band(spark):
     # doc 0 (did 1) pairs with 1-3 (prefix), 4-9 but not 5 (bands 0-1),
     # 10-12 and 30-33 (band 3); the stop-band adds nothing
     assert len(hot) == 3 + 5 + 7
+    # the gather tier's suppressed stats, from the broadcast's sizes,
+    # equal the join tier's window count
+    bc = scoring.build_prune_broadcast(feats)
+    try:
+        gathered = blocking.suppressed_blocks_gathered(spark, bc.value, **kw)
+    finally:
+        bc.unpersist()
+    assert [f.dataType for f in gathered.schema] == [f.dataType for f in sup.schema]
+    assert sorted(gathered.collect()) == sorted(sup.collect()) == [(2, 300, 30)]
 
 
 def test_gathered_pairs_plan_has_no_exchange(spark):
@@ -593,7 +651,7 @@ def test_gathered_pairs_plan_has_no_exchange(spark):
     from sz_spark.pipeline import pairs_stage
 
     cfg, _, feats = _gather_fixture(spark)
-    pairs, bcs = pairs_stage(feats, cfg)
+    pairs, _, bcs = pairs_stage(feats, cfg)
     assert bcs, "the fixture must take the gather tier"
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     for bc in bcs:
