@@ -15,9 +15,10 @@ parquet via --transcripts), runs canonicalize -> blocking -> scoring ->
 clustering with resumable checkpoints, writes cluster assignments to
 --output, and prints a one-line JSON summary.
 
-No local-mode assumptions: the session master/deploy mode comes from
-spark-submit; only when run directly (python scripts/run_pipeline.py)
-does it fall back to local[*].
+No local-mode assumptions: the session comes from
+``sz_spark.session.build_session`` with the master and deploy mode left
+to spark-submit (or ``PYSPARK_SUBMIT_ARGS``); run directly (python
+scripts/run_pipeline.py) it falls back to spark-submit's local[*].
 """
 
 from __future__ import annotations
@@ -70,25 +71,11 @@ def main() -> int:
     if not args.sf_dir and not args.transcripts:
         p.error("one of --sf-dir / --transcripts is required")
 
-    from pyspark.sql import SparkSession
-
-    # master/deploy mode come from spark-submit; these configs are
-    # wanted everywhere (AQE skew-join + Arrow UDF transport; byte-driven
-    # partition coalescing off because the heavy stages are CPU-bound
-    # Arrow UDFs whose cost AQE cannot see — rationale + A/B in
-    # sz_spark/session.py)
-    spark = (
-        SparkSession.builder.appName("sz_spark_pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-
     from sz_spark.pipeline import run_pipeline
+    from sz_spark.session import build_session
     from sz_spark.transcripts import build_transcripts
+
+    spark = build_session(app_name="sz_spark_pipeline")
 
     if args.transcripts:
         transcripts = spark.read.parquet(args.transcripts)

@@ -184,8 +184,9 @@ class Projection:
                     f"> task budget {self.cluster.task_budget_bytes / 1e6:.0f} MB"
                 )
         # the Python DP/fingerprint workers are cache-resident by design:
-        # SZ_FP_BATCH_BYTES (2 MiB) and the <=512-pair int16 DP chunks are
-        # orders below the task budget — assert the constants stay sane
+        # kernels.fingerprints_flat's default batch_bytes (2 MiB) and the
+        # <=512-pair int16 DP chunks are orders below the task budget —
+        # assert the constants stay sane
         if 2 * (1 << 21) > self.cluster.task_budget_bytes:
             problems.append("fingerprint batch exceeds task budget")
         if self.pairs_worst_case < self.pairs:

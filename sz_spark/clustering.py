@@ -172,28 +172,3 @@ def clusters_with_singletons(
             F.coalesce("cluster_id", F.col("id")).alias("cluster_id"),
         )
     )
-
-
-def connected_components_sql(edges_cte: str, node_cte: str) -> str:
-    """DuckDB-oracle twin: min-label reachability via a recursive CTE.
-    Correct for the oracle's small scale; the Spark path uses
-    large-star/small-star for 10^12-turn scale."""
-    return f"""
-WITH RECURSIVE edges AS ({edges_cte}),
-nodes AS ({node_cte}),
-sym AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT dst AS src, src AS dst FROM edges
-),
-reach AS (
-  SELECT id, id AS comp FROM nodes
-  UNION
-  SELECT s.dst AS id, r.comp
-  FROM reach r JOIN sym s ON r.id = s.src
-  WHERE r.comp < s.dst
-)
-SELECT id AS conv_id, min(comp) AS cluster_id
-FROM reach
-GROUP BY id
-"""

@@ -479,58 +479,3 @@ JOIN {source} ea ON ea.vec_id = id_a
 JOIN {source} eb ON eb.vec_id = id_b
 WHERE round(list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]), 6) >= {threshold}
 """
-
-
-def embedding_near_pairs(
-    embeddings: DataFrame, threshold: float = 0.9
-) -> DataFrame:
-    """Brute-force cosine near-dup pairs — the oracle-checkable baseline.
-
-    Native F.zip_with/F.aggregate dot products (JVM-side, no Python).
-    Quadratic by construction: the registered operator is
-    :func:`embedding_near_pairs_lsh`; this baseline exists for recall
-    checks (tests/test_queries.py) and small reference sets.
-    """
-    # compute in float64 on both sides (float32 noise would poke through
-    # the 6-decimal rounding the oracle compares on)
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    a = e.alias("a")
-    b = e.alias("b")
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def norm(x):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(x, lambda p: p * p), F.lit(0.0), lambda acc, v: acc + v
-            )
-        )
-
-    pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        norm(F.col("a.embedding")) * norm(F.col("b.embedding"))
-    )
-    return (
-        pairs.select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def embedding_near_pairs_sql(threshold: float = 0.9) -> str:
-    return f"""
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cosine
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= {threshold}
-"""

@@ -158,7 +158,7 @@ def fingerprints(
     ndim: int = 128,
     widths: Sequence[int] | None = None,
     seed: int = 0,
-    batch_bytes: int | None = None,
+    batch_bytes: int = 1 << 21,
     with_counts: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Rolling-hash MinHash + Count-Min fingerprints for a batch of texts.
@@ -194,20 +194,17 @@ def fingerprints_flat(
     ndim: int = 128,
     widths: Sequence[int] | None = None,
     seed: int = 0,
-    batch_bytes: int | None = None,
+    batch_bytes: int = 1 << 21,
     with_counts: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
     """:func:`fingerprints` over the flat Arrow-style (data, offsets)
     layout — the zero-copy entry for Arrow-native UDF transport (text i
     is data[offsets[i]:offsets[i+1]]; no per-row Python objects are ever
-    created).  Bit-identical to :func:`fingerprints`."""
-    if batch_bytes is None:
-        # default 2^21 keeps the padded working set L2-resident for ONE
-        # worker; when many workers share a small L3, shrink via env
-        # (SZ_FP_BATCH_BYTES) — tuned by scripts/bench_fp_kernel.py
-        import os
+    created).  Bit-identical to :func:`fingerprints`.
 
-        batch_bytes = int(os.environ.get("SZ_FP_BATCH_BYTES", 1 << 21))
+    ``batch_bytes`` caps the padded sub-batch of the NumPy fallback (the
+    compiled twin ignores it): the default 2^21 keeps the working set
+    L2-resident for one worker; scripts/bench_fp_kernel.py sweeps it."""
     params = fingerprint_params(ndim, widths, seed)
     offsets = np.asarray(offsets, dtype=np.int64)
     lengths = np.diff(offsets)
@@ -732,14 +729,6 @@ def _as_byte_matrix(strs: Sequence[bytes], max_len: int) -> np.ndarray:
     for i, s in enumerate(strs):
         if s:
             out[i, : len(s)] = np.frombuffer(s, dtype=np.uint8)
-    return out
-
-
-def _as_codepoint_matrix(strs: Sequence[str], max_len: int) -> np.ndarray:
-    out = np.zeros((len(strs), max_len), dtype=np.int64)
-    for i, s in enumerate(strs):
-        if s:
-            out[i, : len(s)] = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
     return out
 
 

@@ -177,10 +177,10 @@ def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataF
     in one narrow pass (no band rows, no exchange): each candidate
     leaves exactly one block and is pruned in the same pass; the
     suppressed stats come from the broadcast's block sizes.  Beyond
-    the gate (or SZ_NO_GATHER=1) the band rows are shuffled into
-    blocks, the candidates deduplicated, and their (len, hist) joined
-    on.  Both tiers keep the identical pair set (tests/test_pipeline.py
-    parity tests)."""
+    the gate (SZ_GATHER_MAX_DOCS=0 puts every non-empty corpus there)
+    the band rows are shuffled into blocks, the candidates
+    deduplicated, and their (len, hist) joined on.  Both tiers keep
+    the identical pair set (tests/test_pipeline.py parity tests)."""
     if scoring.gather_gate(feats):
         spark = feats.sparkSession
         prune_bc = scoring.build_prune_broadcast(feats)

@@ -976,14 +976,14 @@ def er_minhash_bands(spark, sf):
     return blocking.shingle_minhash_bands(docs)
 
 
-def _md5_band_pairs(docs: DataFrame) -> DataFrame:
+def _md5_band_pairs(docs: DataFrame, text_col: str = "doc") -> DataFrame:
     # In-array pair emission (blocking.lower_triangle_pairs): ONE
     # groupBy shuffle collects each band block's ids and the lower
     # triangle is emitted JVM-side — no self-join, and therefore no
     # shared band table needing a localCheckpoint (the r4 design; its
     # cache-vs-checkpoint rationale lives in blocking.block_pairs).
     # Identical pair set to the oracle's SQL self-join.
-    bands = blocking.shingle_minhash_bands(docs)
+    bands = blocking.shingle_minhash_bands(docs, text_col=text_col)
     long = bands.select(
         "conv_id",
         F.explode(
@@ -1460,23 +1460,6 @@ FROM folded
 """
 
 
-def _explode_fp_rows(with_fp: DataFrame) -> DataFrame:
-    return (
-        with_fp.select(
-            "doc_id",
-            F.col("_fp.hashes").alias("h"),
-            F.col("_fp.counts").alias("c"),
-        )
-        .select("doc_id", F.posexplode(F.arrays_zip("h", "c")).alias("dim", "hc"))
-        .select(
-            "doc_id",
-            "dim",
-            F.col("hc.h").alias("min_hash"),
-            F.col("hc.c").alias("min_count"),
-        )
-    )
-
-
 def _fp_rows_arrow(d: DataFrame, text_col, ndim: int, seed: int = 0) -> DataFrame:
     """(doc_id, dim, min_hash, min_count) via the Arrow-native transport
     (udfs.make_fingerprint_arrow_fn over the flat-buffer kernel
@@ -1659,28 +1642,7 @@ def dedup_ngram_jaccard(spark, sf):
 
 def dedup_minhash_lsh(spark, sf):
     d = _t(spark, sf, "documents").withColumnRenamed("doc_id", "conv_id")
-    bands = blocking.shingle_minhash_bands(d, text_col="text")
-    long = bands.select(
-        "conv_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"band_{i}").alias("bh"))
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("conv_id", F.col("b.band_id").alias("band_id"), F.col("b.bh").alias("bh"))
-    # in-array pair emission — one groupBy shuffle, no self-join, no
-    # checkpointed shared band table (see _md5_band_pairs)
-    blocks = (
-        long.groupBy("band_id", "bh")
-        .agg(F.collect_list("conv_id").alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    return blocking.explode_lower_triangle(blocks, "ids").dropDuplicates(
-        ["id_a", "id_b"]
-    )
+    return _md5_band_pairs(d, text_col="text")
 
 
 def dedup_minhash_lsh_oracle() -> str:

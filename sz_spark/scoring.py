@@ -161,8 +161,9 @@ def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
 # (~8 MB each at the gate), freed before the next row.  The driver
 # transiently holds the collected Arrow table and the sorted arrays
 # (~1 GB at the gate).
-# Above the gate the join path runs unchanged (it is also the
-# SZ_NO_GATHER=1 twin the differential tests compare against).
+# Above the gate the join path runs unchanged (SZ_GATHER_MAX_DOCS=0
+# sends every non-empty corpus there: the twin the differential tests
+# compare against).
 
 
 def gather_gate(feats: DataFrame) -> bool:
@@ -171,8 +172,6 @@ def gather_gate(feats: DataFrame) -> bool:
     The broadcast is 508 B/doc regardless of text size, so only the doc
     count gates it (default 1M docs, SZ_GATHER_MAX_DOCS overrides); a
     malformed SZ_GATHER_MAX_DOCS raises ValueError."""
-    if os.environ.get("SZ_NO_GATHER") == "1":
-        return False
     raw = os.environ.get("SZ_GATHER_MAX_DOCS", "1000000")
     try:
         max_docs = int(raw)

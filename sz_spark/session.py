@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -14,51 +15,29 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or get) a SparkSession tuned for this pipeline.
+    """Create (or get) a SparkSession tuned for this pipeline: the one
+    session recipe every entry point uses.
 
-    In the sandbox this is ``local[N]``; on a real cluster the same
-    config block ships via ``spark-submit --py-files`` untouched — no
-    ``local``-only assumptions live anywhere in the pipeline.
+    ``master=None`` takes the master from spark-submit (or
+    ``PYSPARK_SUBMIT_ARGS``); a cluster deployment then gets the same
+    pipeline conf block and worker prewarm as a ``local[N]`` test
+    session.  The settings that only matter for a JVM this call
+    launches itself (driver memory, GC/JIT thread caps, scratch dir, UI
+    off, the shuffle-partition default) apply only to a ``local``
+    master.  ``extra`` is applied last, so its keys win.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
-        shuffle_partitions = int(n) if n.isdigit() else 32
-
-    # Local mode: size the JVM's BACKGROUND parallelism to the session's
-    # core budget instead of the machine's.  HotSpot picks GC/JIT thread
-    # counts from os.cpu_count(), so a local[2] probe JVM on a 32-core
-    # box runs ~23 parallel-GC threads and ~12 JIT compiler threads and
-    # was measured consuming ~6.7 cores for a "2-core" job — which both
-    # borrows idle cores the scaling methodology assumes absent (a real
-    # 2-core executor does everything within 2 cores) and makes N
-    # concurrent copies collide in GC/JIT stampedes (weak-scaling CPU
-    # inflated 140->164 tree-CPU-sec).  Caps = the defaults whenever the
-    # session is given the whole machine, so local[32] here is unchanged;
-    # measured with caps: solo local[2] tree-CPU 140->122 s, 4x-copy
-    # weak-scaling efficiency 0.755->0.877, and the local[8] probe ran
-    # FASTER (22.8->12.9 s wall) with less GC/JIT thrash.
-    core_n = None
-    if master.startswith("local"):
-        inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        core_n = int(inner) if inner.isdigit() else (os.cpu_count() or 32)
-    java_opts = ""
-    machine_n = os.cpu_count() or 32
-    if core_n and core_n < machine_n:
-        # sub-machine session only — a whole-machine session keeps the
-        # JVM's own ergonomics (on this box: GC 23 / JIT 15)
-        gc_threads = max(2, core_n)
-        jit_threads = max(2, min(core_n, 12))
-        java_opts = (
-            f"-XX:ParallelGCThreads={gc_threads} "
-            f"-XX:ConcGCThreads={max(1, gc_threads // 4)} "
-            f"-XX:CICompilerCount={jit_threads}"
-        )
-
+    builder = SparkSession.builder.appName(app_name)
+    cores = _local_cores(master)
+    if master is not None:
+        builder = builder.master(master)
+    if cores is not None:
+        builder = _local_conf(builder, cores)
+        if shuffle_partitions is None:
+            shuffle_partitions = cores
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder
         # AQE: runtime re-planning + skew-join splitting — the Spark
         # analog of the reference's two-tier small/large work scheduling
         # (similarities/serial.hpp:3296-3395).  Partition COALESCING is
@@ -77,45 +56,66 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow is the zero-copy tape the reference's Strs already speaks
         # (python/stringzilla.c:392-395) — mandatory for pandas UDFs
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SZ_SPARK_DRIVER_MEM", "32g"))
     )
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
-    # Shuffle/spill scratch.  Real clusters hand Spark node-local NVMe via
-    # SPARK_LOCAL_DIRS; this sandbox's VM disk is IO-throttled (measured
-    # as low as 4 MB/s writes in one session, which turned a 6 s
-    # shuffle-heavy query into 266 s), while the box carries 126 GB of
-    # tmpfs.  Prefer RAM-backed scratch when nothing is configured —
-    # the honest single-box analog of local SSD scratch, not a cheat:
-    # shuffle bytes are identical, only the device changes.
-    scratch = os.environ.get("SZ_SPARK_LOCAL_DIR")
-    if scratch is None and "SPARK_LOCAL_DIRS" not in os.environ:
-        if os.path.isdir("/dev/shm"):
-            scratch = "/dev/shm/sz_spark_local"
-    if scratch:
-        os.makedirs(scratch, exist_ok=True)
-        builder = builder.config("spark.local.dir", scratch)
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
-    # Experiment hook: semicolon-separated k=v conf overrides from the
-    # environment (applied last, so they win).  Lets A/B harnesses vary
-    # one knob per fresh-JVM probe without code edits.
-    for kv in os.environ.get("SZ_SPARK_EXTRA_CONF", "").split(";"):
-        if "=" in kv:
-            k, _, v = kv.partition("=")
-            builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SZ_NO_PREWARM") != "1":
-        _prewarm_python_workers(spark)
+    _prewarm_python_workers(spark)
     return spark
+
+
+def _local_cores(master: str | None) -> int | None:
+    """Worker threads of a ``local``, ``local[N]``, ``local[*]`` or
+    ``local[N,F]`` master; None for any other master, or none given."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", master or "")
+    if m is None:
+        return None
+    n = m.group(1) or "1"
+    return int(n) if n.isdigit() else (os.cpu_count() or 32)
+
+
+def _local_conf(builder: SparkSession.Builder, cores: int) -> SparkSession.Builder:
+    """Settings for the driver JVM a local master runs everything in."""
+    builder = builder.config("spark.ui.enabled", "false").config(
+        "spark.driver.memory", os.environ.get("SZ_SPARK_DRIVER_MEM", "32g")
+    )
+    # Size the JVM's BACKGROUND parallelism to the session's core budget
+    # instead of the machine's.  HotSpot picks GC/JIT thread counts from
+    # os.cpu_count(), so a local[2] probe JVM on a 32-core box runs ~23
+    # parallel-GC threads and ~12 JIT compiler threads and was measured
+    # consuming ~6.7 cores for a "2-core" job — which both borrows idle
+    # cores the scaling methodology assumes absent (a real 2-core
+    # executor does everything within 2 cores) and makes N concurrent
+    # copies collide in GC/JIT stampedes (weak-scaling CPU inflated
+    # 140->164 tree-CPU-sec).  A whole-machine session keeps the JVM's
+    # own ergonomics; measured with caps: solo local[2] tree-CPU
+    # 140->122 s, 4x-copy weak-scaling efficiency 0.755->0.877, and the
+    # local[8] probe ran FASTER (22.8->12.9 s wall) with less GC/JIT
+    # thrash.
+    if cores < (os.cpu_count() or 32):
+        gc_threads = max(2, cores)
+        builder = builder.config(
+            "spark.driver.extraJavaOptions",
+            f"-XX:ParallelGCThreads={gc_threads} "
+            f"-XX:ConcGCThreads={max(1, gc_threads // 4)} "
+            f"-XX:CICompilerCount={max(2, min(cores, 12))}",
+        )
+    # Shuffle/spill scratch.  Spark reads SPARK_LOCAL_DIRS ahead of
+    # spark.local.dir, and real clusters hand it node-local NVMe that
+    # way.  Unset, prefer RAM-backed scratch over the VM disk, which was
+    # measured as low as 4 MB/s writes (a 6 s shuffle-heavy query took
+    # 266 s): shuffle bytes are identical, only the device changes.
+    if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
+        scratch = "/dev/shm/sz_spark_local"
+        os.makedirs(scratch, exist_ok=True)
+        builder = builder.config("spark.local.dir", scratch)
+    return builder
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:
@@ -137,8 +137,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     worker, so no timed task pays the per-task re-read of pyspark.zip.
     Best-effort: a failure leaves the session usable and is logged once
     here — the same fault (e.g. workers that cannot import sz_spark)
-    would otherwise surface only inside the first real query.
-    SZ_NO_PREWARM=1 skips it (the A/B switch)."""
+    would otherwise surface only inside the first real query."""
     try:
         from pyspark.sql import types as T
 

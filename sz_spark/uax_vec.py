@@ -1408,14 +1408,6 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
 _SEP = 0x0A  # LF: hard barrier in all four annexes (module docstring)
 
 
-def _cp_array(text: str) -> np.ndarray:
-    if not text:
-        return np.zeros(0, dtype=np.int32)
-    # codepoints fit int32 (max 0x10FFFF): view, don't widen — halves the
-    # batch's memory traffic and skips a full-array copy
-    return np.frombuffer(text.encode("utf-32-le"), dtype="<u4").view(np.int32)
-
-
 def _concat_batch(texts):
     """Join texts with the LF separator in ONE C-speed encode pass.
     Returns (cps, offs, lens, text_start_of) where texts[t] occupies

@@ -84,6 +84,26 @@ def cosine_exprs(
     ).drop(a_col, b_col)
 
 
+def embedding_near_pairs(embeddings: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """Brute-force cosine near-dup pairs: the quadratic baseline that
+    dedup.embedding_near_pairs_lsh's recall is checked against.  f64 on
+    both sides (f32 noise would poke through the 6-decimal rounding)."""
+    e = embeddings.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    a, b = F.col("a.embedding"), F.col("b.embedding")
+    return (
+        e.alias("a")
+        .join(e.alias("b"), F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
 def byte_histogram(text: str | None) -> list[int]:
     """The 96 counts of bytes 0x20..0x7F in ``text``'s UTF-8 encoding."""
     data = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8)

@@ -12,15 +12,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: every SZ_* environment variable sz_spark reads; a new switch must be
 #: added here on purpose
 SWITCHES = {
-    "SZ_FP_BATCH_BYTES",
     "SZ_GATHER_MAX_DOCS",
     "SZ_NATIVE_CACHE",
-    "SZ_NO_GATHER",
     "SZ_NO_NATIVE",
-    "SZ_NO_PREWARM",
     "SZ_SPARK_DRIVER_MEM",
-    "SZ_SPARK_EXTRA_CONF",
-    "SZ_SPARK_LOCAL_DIR",
 }
 
 

@@ -666,12 +666,13 @@ def test_gather_gate_malformed_env(spark, monkeypatch):
     variable and the value; a well-formed one sets the gate."""
     from sz_spark import scoring
 
-    monkeypatch.delenv("SZ_NO_GATHER", raising=False)
     monkeypatch.setenv("SZ_GATHER_MAX_DOCS", "1e6")
     with pytest.raises(ValueError, match=r"SZ_GATHER_MAX_DOCS.*'1e6'"):
         scoring.gather_gate(spark.range(3))
     monkeypatch.setenv("SZ_GATHER_MAX_DOCS", "2")
     assert scoring.gather_gate(spark.range(3)) is False
+    monkeypatch.setenv("SZ_GATHER_MAX_DOCS", "0")
+    assert scoring.gather_gate(spark.range(1)) is False
 
 
 def test_prewarm_failure_is_logged(caplog):
@@ -823,12 +824,10 @@ def test_upstream_width(spark):
         spark.conf.set(key, saved)
 
 
-def test_pipeline_gather_tiers_identical(spark):
+def test_pipeline_gather_tiers_identical(spark, monkeypatch):
     """run_pipeline with the gathered tier (default at this corpus
-    size) and the join tier (SZ_NO_GATHER=1) must produce identical
-    pairs-stage survivors, clusters and kept scored pairs."""
-    import os
-
+    size) and the join tier (SZ_GATHER_MAX_DOCS=0) must produce
+    identical pairs-stage survivors, clusters and kept scored pairs."""
     from pyspark.sql import functions as F
 
     from sz_spark.pipeline import PipelineConfig, run_pipeline
@@ -836,30 +835,25 @@ def test_pipeline_gather_tiers_identical(spark):
 
     cfg = PipelineConfig()
     outs = {}
-    saved = os.environ.get("SZ_NO_GATHER")
-    try:
-        for label, no_gather in (("gather", None), ("join", "1")):
-            # each leg sets EXACTLY its own knob: a pre-existing
-            # SZ_NO_GATHER=1 in the environment must not silently turn
-            # the gather leg into a join-tier run
-            os.environ.pop("SZ_NO_GATHER", None)
-            if no_gather:
-                os.environ["SZ_NO_GATHER"] = no_gather
-            tr = build_transcripts(spark, SF_DIR)
-            stages = run_pipeline(spark, tr, cfg)
-            kept = (
-                stages["scored"]
-                .filter(F.col("sim") >= cfg.threshold)
-                .select("id_a", "id_b", "edit_distance", "sim")
-            )
-            outs[label] = (
-                sorted(map(tuple, kept.collect())),
-                sorted(map(tuple, stages["clusters"].collect())),
-                sorted(_pair_rows(stages["pairs"])),
-            )
-    finally:
-        os.environ.pop("SZ_NO_GATHER", None)
-        if saved is not None:
-            os.environ["SZ_NO_GATHER"] = saved
+    for label, max_docs in (("gather", None), ("join", "0")):
+        # each leg sets EXACTLY its own gate: a SZ_GATHER_MAX_DOCS in
+        # the environment must not silently turn the gather leg into a
+        # join-tier run
+        if max_docs is None:
+            monkeypatch.delenv("SZ_GATHER_MAX_DOCS", raising=False)
+        else:
+            monkeypatch.setenv("SZ_GATHER_MAX_DOCS", max_docs)
+        tr = build_transcripts(spark, SF_DIR)
+        stages = run_pipeline(spark, tr, cfg)
+        kept = (
+            stages["scored"]
+            .filter(F.col("sim") >= cfg.threshold)
+            .select("id_a", "id_b", "edit_distance", "sim")
+        )
+        outs[label] = (
+            sorted(map(tuple, kept.collect())),
+            sorted(map(tuple, stages["clusters"].collect())),
+            sorted(_pair_rows(stages["pairs"])),
+        )
     assert outs["gather"] == outs["join"]
     assert len(outs["gather"][0]) > 0

@@ -112,12 +112,14 @@ def test_embedding_lsh_recall(spark):
     the exact re-rank guarantees it), and recall must be positive at
     the corpus's weak-similarity regime (cos <= 0.48; LSH is designed
     for >= 0.9 near-dups where per-table collision is ~100x higher)."""
+    from oracles import embedding_near_pairs
+
     from sz_spark import dedup
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     brute = {
         (r.id_a, r.id_b)
-        for r in dedup.embedding_near_pairs(emb, threshold=0.4).collect()
+        for r in embedding_near_pairs(emb, threshold=0.4).collect()
     }
     lsh = {
         (r.id_a, r.id_b)
