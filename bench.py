@@ -40,7 +40,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # 8,212 turns/s vs 12,714 at k=16 — correct scores, all rejected at τ,
 # but quadratic in the replication artifact, not in corpus size).  A
 # real duplicate-heavy corpus would take the same hit, which is why
-# max_block_size/salt_up_to are tunable: suppression, not salting, is
+# max_block_size is tunable: suppression, not salting, is
 # the total-work bound when families are known to be precision-free.
 SCALE_K = int(os.environ.get("BENCH_SCALE_K", "16"))
 # N vs 4N parallelism for the scaling gate.  2 vs 8 is the regime where

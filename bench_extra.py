@@ -4,7 +4,7 @@ stays fixed so its records stay comparable.
 
 Modes:
   python bench_extra.py queries [name ...]
-      min-of-2 per-query wall at local[$SPARK_GRAFT_CPUS], the same
+      min-of-2 per-query wall at local[$SPARK_GRAFT_CPUS or nproc], the same
       timing policy as bench.py's headline loop (count() action, warm
       JVM/footers/worker pool).  Default: bench.py's HEADLINE list.
   python bench_extra.py probe [cores] [scale_k]
@@ -13,7 +13,9 @@ Modes:
   python bench_extra.py plans <out_dir> [suffix] [name ...]
       dump .explain("formatted") of registry queries to
       <out_dir>/<name>_<suffix>.txt (default suffix 'before', default
-      all registry queries).
+      all registry queries), with the per-session ids (``plan_id=N``,
+      ``#N`` expression ids) stripped so a ``diff -r`` of two dumps
+      shows only real plan changes.
 
 Per-stage walls of the real pipeline come from
 ``python3 perfbench/run.py --trace 1``.
@@ -23,13 +25,15 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here (PEP 563)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the session width: $SPARK_GRAFT_CPUS, else the cores this process may run on
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _session():
@@ -127,9 +131,15 @@ def mode_plans(out_dir: str, suffix: str, names: list[str]) -> None:
             buf.write(f"EXPLAIN FAILED: {exc}\n")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(buf.getvalue())
+            fh.write(_strip_plan_ids(buf.getvalue()))
         print(f"[plans] wrote {path}", file=sys.stderr, flush=True)
     spark.stop()
+
+
+def _strip_plan_ids(plan: str) -> str:
+    """``plan`` without the ids Spark numbers per session: ``, [plan_id=N]``
+    and the digits of ``name#N`` expression ids (``id#12L`` -> ``id#L``)."""
+    return re.sub(r"#\d+", "#", re.sub(r",? ?\[plan_id=\d+\]", "", plan))
 
 
 if __name__ == "__main__":

@@ -44,8 +44,7 @@ class PipelineKnobs:
     ndim: int = 96
     n_bands: int = 24
     rows_per_band: int = 4
-    max_block_size: int = 64
-    salt_up_to: int = 1024
+    max_block_size: int = 1024  # PipelineConfig's block-size cap
     threshold: float = 0.94
     cc_gate_edges: int = 2_000_000  # driver union-find fast path cap
 
@@ -113,8 +112,8 @@ class Projection:
     def pairs_worst_case(self) -> float:
         """Adversarial bound: every band key at the block cap — each of
         the band_rows rows pairs with at most (cap - 1) block-mates /2.
-        Salting splits larger blocks into <= cap chunks, so the cap
-        bounds per-block pair work REGARDLESS of skew."""
+        Larger blocks are suppressed, so the cap bounds per-block pair
+        work REGARDLESS of skew."""
         return self.band_rows * (self.knobs.max_block_size - 1) / 2
 
     @property
@@ -247,11 +246,10 @@ def render_markdown() -> str:
         "window cap drops oversize blocks BEFORE any list is collected, "
         "bounding both aggregation-state memory and per-task emission at "
         "cap and cap^2 respectively) — there is no pair self-join left "
-        "to skew, so the former salting tier is simply the upper drop "
-        "threshold.  AQE handles residual partition imbalance.  Knobs: "
-        "ndim/n_bands trade recall for band rows; max_block_size bounds "
-        "per-block DP; salt_up_to bounds how large a block may grow "
-        "before suppression."
+        "to skew, and no block is salted.  AQE handles residual "
+        "partition imbalance.  Knobs: ndim/n_bands trade recall for band "
+        "rows; max_block_size bounds per-block pair work and DP — larger "
+        "blocks are suppressed."
     )
     out.append("")
     return "\n".join(out)

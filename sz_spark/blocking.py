@@ -139,74 +139,66 @@ def bands_from_features(
 def block_pairs(
     bands: DataFrame,
     id_col: str = "conv_id",
-    max_block_size: int = 64,
-    salt_up_to: int = 0,
+    max_block_size: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """The join tier's blocking: every within-block pair, in TWO
-    shuffles.
+    """Every unordered in-block pair (id_a < id_b), once, from rows
+    keyed by (band_id, band_hash), plus the suppressed-block stats
+    frame (band_id, band_hash, block_size): the one operator that turns
+    keyed rows into in-block pairs.  Callers select their own key
+    columns as band_id/band_hash.
 
-    Plan: one hash-partition on (band_id, band_hash) serves a window
-    count (the cap filter — blocks above the cap are dropped BEFORE any
-    list is collected, so a pathological stop-band can never OOM an
-    aggregation task), the suppressed-stats agg, and a collect_list —
-    Catalyst reuses the exchange for all three.  Lower-triangle pairs
-    are then emitted from each block's id array
-    (:func:`explode_lower_triangle`): per-block work is bounded by
-    cap^2 cheap emissions in one task, so the bound is the cap itself
-    and no block needs salting across reducers.  The global
-    cross-band dedup is the second shuffle.  This is the join tier's
-    blocking (above the gather gate); below it the pipeline builds the
-    same blocks from the broadcast keys with no band rows and no
-    shuffle (:func:`block_pairs_gathered`).
+    Plan: the ids are grouped per key, each block's list is collected
+    and its lower triangle emitted in-array
+    (:func:`explode_lower_triangle`, no self-join), and the pairs are
+    deduplicated across keys — two shuffles.  With a ``max_block_size``
+    cap, a window count on the same hash partitioning drops blocks of
+    more than ``max_block_size`` members (stop-bands) BEFORE any list is
+    collected, so a pathological block can never OOM an aggregation
+    task; the suppressed-stats agg reuses that exchange.  Per-block work
+    is then bounded by cap^2 cheap emissions in one task, so no block
+    needs salting across reducers.  ``None`` means uncapped (the
+    suppressed frame is empty).  This is the join tier's blocking;
+    below the gather gate the pipeline builds the same blocks from the
+    broadcast keys with no band rows and no shuffle
+    (:func:`block_pairs_gathered`)."""
+    keys = ("band_id", "band_hash")
+    if max_block_size is None:
+        blocks = (
+            bands.groupBy(*keys)
+            .agg(F.collect_list(F.col(id_col)).alias("ids"))
+            .filter(F.size("ids") >= 2)
+        )
+        suppressed = blocks.select(
+            *keys, F.size("ids").cast("long").alias("block_size")
+        ).filter(F.lit(False))
+    else:
+        from pyspark.sql import Window
 
-    Returns every unordered in-block pair (id_a < id_b), once, from
-    blocks of 2..drop-threshold members (salt_up_to when it exceeds
-    max_block_size, else max_block_size), plus the suppressed-block
-    stats frame (band_id, band_hash, block_size)."""
-    blocks, suppressed = _capped_blocks(
-        bands, id_col, _drop_above(max_block_size, salt_up_to)
-    )
+        sized = bands.withColumn(
+            "block_size", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        )
+        size = F.col("block_size")
+        suppressed = (
+            sized.filter(size > max_block_size)
+            .groupBy(*keys)
+            .agg(F.first("block_size").alias("block_size"))
+        )
+        blocks = (
+            sized.filter((size <= max_block_size) & (size >= 2))
+            .groupBy(*keys)
+            .agg(F.collect_list(F.col(id_col)).alias("ids"))
+        )
     pairs = explode_lower_triangle(blocks, "ids").dropDuplicates(
         ["id_a", "id_b"]
     )
     return pairs, suppressed
 
 
-def _drop_above(max_block_size: int, salt_up_to: int) -> int:
-    return salt_up_to if salt_up_to > max_block_size else max_block_size
-
-
-def _capped_blocks(
-    bands: DataFrame, id_col: str, drop_above: int
-) -> tuple[DataFrame, DataFrame]:
-    """(band_id, band_hash, ids) for blocks of 2..drop_above members,
-    plus the suppressed-block stats — all off one exchange (see
-    :func:`block_pairs`)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band_id", "band_hash")
-    sized = bands.withColumn("block_size", F.count(F.lit(1)).over(w))
-    suppressed = (
-        sized.filter(F.col("block_size") > drop_above)
-        .groupBy("band_id", "band_hash")
-        .agg(F.first("block_size").alias("block_size"))
-    )
-    blocks = (
-        sized.filter(
-            (F.col("block_size") <= drop_above) & (F.col("block_size") >= 2)
-        )
-        .groupBy("band_id", "band_hash")
-        .agg(F.collect_list(F.col(id_col)).alias("ids"))
-    )
-    return blocks, suppressed
-
-
 def block_pairs_gathered(
     spark,
     prune_bc,
     threshold: float,
-    max_block_size: int = 64,
-    salt_up_to: int = 0,
+    max_block_size: int | None = None,
 ) -> DataFrame:
     """The gather tier's pairs: :func:`block_pairs` + the
     length/histogram prune, built straight from the broadcast block
@@ -220,7 +212,7 @@ def block_pairs_gathered(
     row per task; each task rebuilds the blocks of its key rows with
     one argsort per row (:func:`_gathered_task_pairs`).  A pair leaves
     only from the LOWEST key row in which its docs share a kept block
-    (2 <= size <= drop threshold): dedup by construction (the ICDE'19
+    (2 <= size <= max_block_size): dedup by construction (the ICDE'19
     metric-join partitioning idea).  The size check matters: a pair's
     first collision can sit in a suppressed stop-band block, and it
     must then come from its next kept row.  The same pass applies the
@@ -229,7 +221,6 @@ def block_pairs_gathered(
     prune_pairs_arrow over bands_from_features of the same table."""
     from pyspark.sql import types as T
 
-    drop_above = _drop_above(max_block_size, salt_up_to)
     n_tasks = max(
         1, min(spark.sparkContext.defaultParallelism, len(prune_bc.value[3]))
     )
@@ -245,7 +236,7 @@ def block_pairs_gathered(
         for batch in batches:
             for task in batch.column(0).to_pylist():
                 for a, b in _gathered_task_pairs(
-                    value, task, n_tasks, drop_above, threshold
+                    value, task, n_tasks, max_block_size, threshold
                 ):
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(a), pa.array(b)], ["id_a", "id_b"]
@@ -255,17 +246,17 @@ def block_pairs_gathered(
 
 
 def suppressed_blocks_gathered(
-    spark, value, max_block_size: int = 64, salt_up_to: int = 0
+    spark, value, max_block_size: int | None = None
 ) -> DataFrame:
     """:func:`block_pairs`' suppressed-block stats (band_id, band_hash,
     block_size), built on the driver from a prune broadcast's ``value``
     (scoring.build_prune_broadcast): every (key row, key) whose block
-    size is above the drop threshold, once, with band_id = row - 1."""
+    size is above ``max_block_size``, once, with band_id = row - 1."""
     import numpy as np
     import pyarrow as pa
 
     keys, sizes = value[3], value[4]
-    row, col = np.nonzero(sizes > _drop_above(max_block_size, salt_up_to))
+    row, col = np.nonzero(sizes > _cap(max_block_size))
     blocks, first = np.unique(
         np.stack([row, keys[row, col]]), axis=1, return_index=True
     )
@@ -275,6 +266,11 @@ def suppressed_blocks_gathered(
         "block_size": sizes[row[first], col[first]].astype(np.int64),
     })
     return spark.createDataFrame(tbl, "band_id int, band_hash long, block_size long")
+
+
+def _cap(max_block_size: int | None) -> float:
+    """The block-size cap as a number block sizes compare against."""
+    return float("inf") if max_block_size is None else max_block_size
 
 
 def _snake_rows(task: int, n_tasks: int, n_rows: int) -> list:
@@ -291,16 +287,16 @@ def _snake_rows(task: int, n_tasks: int, n_rows: int) -> list:
 
 
 def _gathered_task_pairs(
-    value, task: int, n_tasks: int, drop_above: int, threshold: float,
-    max_pairs: int = 1 << 16,
+    value, task: int, n_tasks: int, max_block_size: int | None,
+    threshold: float, max_pairs: int = 1 << 16,
 ):
     """Yield the surviving (id_a, id_b) int64 arrays of ``task``'s key
     rows (see :func:`block_pairs_gathered`); ``value`` is the prune
     broadcast's tuple.
 
     Per row, a stable argsort of the keys lays each block out as one
-    run of doc positions in ascending order; runs of 2..drop_above are
-    the kept blocks, and their triangles come from _triangle_chunks
+    run of doc positions in ascending order; runs of 2..max_block_size
+    are the kept blocks, and their triangles come from _triangle_chunks
     over the sorted positions.  Positions index the id-sorted arrays
     directly (no id lookup), and the earlier position of a pair is the
     smaller id."""
@@ -309,6 +305,7 @@ def _gathered_task_pairs(
     from sz_spark.udfs import prune_keep
 
     ids, lens, hists, keys, sizes = value
+    cap = _cap(max_block_size)
     for j in _snake_rows(task, n_tasks, len(keys)):
         order = np.argsort(keys[j], kind="stable")
         sk = keys[j][order]
@@ -316,7 +313,7 @@ def _gathered_task_pairs(
             ([0], np.flatnonzero(sk[1:] != sk[:-1]) + 1, [len(sk)])
         )
         run = np.diff(bounds)
-        kept = (run >= 2) & (run <= drop_above)
+        kept = (run >= 2) & (run <= cap)
         if not kept.any():
             continue
         pos = order[np.repeat(kept, run)]
@@ -326,7 +323,7 @@ def _gathered_task_pairs(
             # emit only from the first row sharing a KEPT block
             for i in range(j):
                 ki = keys[i]
-                dup = (ki[pa_] == ki[pb_]) & (sizes[i][pa_] <= drop_above)
+                dup = (ki[pa_] == ki[pb_]) & (sizes[i][pa_] <= cap)
                 if dup.any():
                     pa_, pb_ = pa_[~dup], pb_[~dup]
             keep = prune_keep(lens, hists, pa_, pb_, threshold)

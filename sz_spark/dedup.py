@@ -40,7 +40,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Word n-gram Jaccard similarity join.
 
@@ -62,8 +61,9 @@ def ngram_jaccard_pairs(
     Everything is lazy and lineage-replayable; the former DISK_ONLY
     persist + eager localCheckpoint (and its non-replayable-frame
     contract, ADVICE r4) are gone because no subtree is consumed twice
-    without an exchange to reuse.  ``materialize`` is retained for API
-    compatibility and ignored.
+    without an exchange to reuse.  The chain is blocking.block_pairs'
+    minus its cross-key dedup: a pair's multiplicity IS the
+    intersection count.
     """
     sh = _distinct_shingles_exploded(docs, text_col, n)
     if max_shingle_freq is not None:
@@ -196,11 +196,7 @@ def simhash_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     * token hash = low 60 bits of md5(token) — a PRF both engines share,
       so the signature has an exact DuckDB twin (SIMHASH_SQL)
     * per-bit balance = sum over the token multiset of (2*bit - 1)
-    * signature bit b set iff balance_b > 0
-
-    The vectorized-NumPy variant (kernels.simhash64 via simhash64_udf)
-    remains for library callers needing 64-bit signatures over arbitrary
-    pre-tokenized bytes."""
+    * signature bit b set iff balance_b > 0"""
     b = SIMHASH_BITS
     hs = F.transform(
         F.split(F.col(text_col), " "),
@@ -297,48 +293,31 @@ def simhash_near_pairs(
         return packed
 
     combos = _block_combinations(n_blocks, keep)
+    # each (table, key) is one blocking.block_pairs key (band_id,
+    # band_hash): the cap's window count runs BEFORE any list is
+    # collected, and the within-bucket lower triangle is emitted
+    # in-array instead of a self-join.  The ids are (doc_id, simhash)
+    # structs, ordered by doc_id first (field-lexicographic), so pair
+    # orientation matches the join's a.doc_id < b.doc_id.
     tables = sigs.select(
-        "doc_id",
-        "simhash",
+        F.struct("doc_id", "simhash").alias("doc"),
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(t).alias("t"), key_expr(c).alias("key"))
+                    F.struct(F.lit(t).alias("band_id"), key_expr(c).alias("band_hash"))
                     for t, c in enumerate(combos)
                 ]
             )
         ).alias("s"),
-    ).select("doc_id", "simhash", F.col("s.t").alias("t"), F.col("s.key").alias("key"))
-    # Fused two-shuffle plan (same shape as blocking.block_pairs): the
-    # cap runs as a window count BEFORE any list is collected (the same
-    # exchange then feeds the collect_list), and the within-bucket lower
-    # triangle is emitted in-array instead of a self-join.  least/
-    # greatest on the (doc_id, simhash) struct orders by doc_id first
-    # (field-lexicographic), so pair orientation matches the join's
-    # a.doc_id < b.doc_id.
-    if max_bucket_size > 0:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("t", "key")
-        tables = (
-            tables.withColumn("_bs", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bs") <= max_bucket_size)
-            .drop("_bs")
-        )
-    blocks = (
-        tables.groupBy("t", "key")
-        .agg(F.collect_list(F.struct("doc_id", "simhash")).alias("ids"))
-        .filter(F.size("ids") >= 2)
+    ).select("doc", "s.band_id", "s.band_hash")
+    pairs, _ = blocking.block_pairs(
+        tables, id_col="doc", max_block_size=max_bucket_size or None
     )
-    cand = (
-        blocking.explode_lower_triangle(blocks, "ids", out=("pa", "pb"))
-        .select(
-            F.col("pa.doc_id").alias("id_a"),
-            F.col("pb.doc_id").alias("id_b"),
-            F.col("pa.simhash").alias("sig_a"),
-            F.col("pb.simhash").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = pairs.select(
+        F.col("id_a.doc_id").alias("id_a"),
+        F.col("id_b.doc_id").alias("id_b"),
+        F.col("id_a.simhash").alias("sig_a"),
+        F.col("id_b.simhash").alias("sig_b"),
     )
     return cand.withColumn(
         "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
@@ -429,15 +408,15 @@ def embedding_near_pairs_lsh(
     from sz_spark import ann
 
     bk = ann.hyperplane_buckets(embeddings, dim, n_bits, n_tables)
-    # in-array pair emission: one groupBy shuffle per the fused pattern
-    # (blocking.block_pairs) instead of the within-bucket self-join
-    blocks = (
-        bk.groupBy("table", "bucket")
-        .agg(F.collect_list("vec_id").alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    cand = blocking.explode_lower_triangle(blocks, "ids").dropDuplicates(
-        ["id_a", "id_b"]
+    # in-array pair emission (blocking.block_pairs, uncapped) instead of
+    # the within-bucket self-join
+    cand, _ = blocking.block_pairs(
+        bk.select(
+            F.col("table").alias("band_id"),
+            F.col("bucket").alias("band_hash"),
+            "vec_id",
+        ),
+        id_col="vec_id",
     )
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")

@@ -40,12 +40,14 @@ class PipelineConfig:
     # construction (sz_spark.transcripts docstring) — 0.94 splits with
     # guaranteed margin on both sides
     threshold: float = 0.94
-    max_block_size: int = 64
-    # the block-size cap: blocks of more than max(max_block_size,
-    # salt_up_to) members are suppressed as stop-bands (reported in
-    # suppressed_blocks); every smaller block emits all its pairs
-    # in-array, unsalted (blocking.block_pairs)
-    salt_up_to: int = 1024
+    # the block-size cap: blocks of more than max_block_size members
+    # are suppressed as stop-bands (reported in suppressed_blocks);
+    # every smaller block emits all its pairs in-array, unsalted
+    # (blocking.block_pairs); None means uncapped
+    max_block_size: int | None = 1024
+    # unread by the library (no block is salted); perfbench's funnel
+    # still takes max(salt_up_to, max_block_size) as the cap
+    salt_up_to: int = 0
     checkpoint_dir: str | None = None
     cc_max_iterations: int = 20
 
@@ -119,7 +121,8 @@ def run_pipeline(
     if not suppressed:
         # `pairs` resumed from its checkpoint: the join tier's stats frame
         suppressed.append(blocking.block_pairs(
-            blocking.bands_from_features(feats, id_col="did"), **_block_kw(cfg)
+            blocking.bands_from_features(feats, id_col="did"),
+            id_col="did", max_block_size=cfg.max_block_size,
         )[1])
     if not gather_bcs:
         # join tier, or `pairs` resumed from its checkpoint: one agg.
@@ -158,13 +161,6 @@ def run_pipeline(
     }
 
 
-def _block_kw(cfg: PipelineConfig) -> dict:
-    return dict(
-        id_col="did", max_block_size=cfg.max_block_size,
-        salt_up_to=cfg.salt_up_to,
-    )
-
-
 def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame, list]:
     """run_pipeline's ``pairs`` stage frame — the prune survivors (did
     ids, id_a < id_b) — plus the suppressed-block stats (band_id,
@@ -185,16 +181,16 @@ def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataF
         spark = feats.sparkSession
         prune_bc = scoring.build_prune_broadcast(feats)
         pairs = blocking.block_pairs_gathered(
-            spark, prune_bc, cfg.threshold,
-            max_block_size=cfg.max_block_size, salt_up_to=cfg.salt_up_to,
+            spark, prune_bc, cfg.threshold, cfg.max_block_size
         )
         suppressed = blocking.suppressed_blocks_gathered(
-            spark, prune_bc.value,
-            max_block_size=cfg.max_block_size, salt_up_to=cfg.salt_up_to,
+            spark, prune_bc.value, cfg.max_block_size
         )
         return pairs, suppressed, [prune_bc]
     bands = blocking.bands_from_features(feats, id_col="did")
-    candidates, suppressed = blocking.block_pairs(bands, **_block_kw(cfg))
+    candidates, suppressed = blocking.block_pairs(
+        bands, id_col="did", max_block_size=cfg.max_block_size
+    )
     # prune BEFORE attaching texts: the prunes need only (len, hist)
     # per side and drop ~95% of candidates; the doc bytes join only the
     # survivors (measured funnel in scoring.attach_prune_attrs)

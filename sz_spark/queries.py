@@ -503,9 +503,9 @@ def str_segmentation_ops(spark, sf):
     25-char White_Space set), TR29 grapheme clusters via Java \\X (the
     NFC-composability oracle trick — non-composing sequences pinned in
     test_graphemes_vs_codepoints), UAX-29 sentences (core rules,
-    udfs.sentence_segments), UAX-14 line-break opportunities (regex
+    uax29.sentence_segments), UAX-14 line-break opportunities (regex
     twin columns + the full LB1-LB31 engine in n_lb_opps_full —
-    sz_spark.uax14), UAX-29 word segmentation (udfs.wordbreak_segments with
+    sz_spark.uax14), UAX-29 word segmentation (uax29.wordbreak_segments with
     full vendored property tables — Katakana, WB15/16 regional
     indicators, ZWJ emoji — pytest-pinned; the cross-engine row checks
     the tiling invariant on letters+spaces), and the separator-RUN
@@ -977,32 +977,24 @@ def er_minhash_bands(spark, sf):
 
 
 def _md5_band_pairs(docs: DataFrame, text_col: str = "doc") -> DataFrame:
-    # In-array pair emission (blocking.lower_triangle_pairs): ONE
-    # groupBy shuffle collects each band block's ids and the lower
-    # triangle is emitted JVM-side — no self-join, and therefore no
-    # shared band table needing a localCheckpoint (the r4 design; its
-    # cache-vs-checkpoint rationale lives in blocking.block_pairs).
-    # Identical pair set to the oracle's SQL self-join.
+    # Uncapped blocking.block_pairs over the md5 band rows: in-array
+    # pair emission, no self-join — the identical pair set to the
+    # oracle's SQL self-join.
     bands = blocking.shingle_minhash_bands(docs, text_col=text_col)
     long = bands.select(
         "conv_id",
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(i).alias("band_id"), F.col(f"band_{i}").alias("bh"))
+                    F.struct(
+                        F.lit(i).alias("band_id"), F.col(f"band_{i}").alias("band_hash")
+                    )
                     for i in range(4)
                 ]
             )
         ).alias("b"),
-    ).select("conv_id", F.col("b.band_id").alias("band_id"), F.col("b.bh").alias("bh"))
-    blocks = (
-        long.groupBy("band_id", "bh")
-        .agg(F.collect_list("conv_id").alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    return blocking.explode_lower_triangle(blocks, "ids").dropDuplicates(
-        ["id_a", "id_b"]
-    )
+    ).select("conv_id", "b.band_id", "b.band_hash")
+    return blocking.block_pairs(long)[0]
 
 
 def er_candidate_pairs(spark, sf):

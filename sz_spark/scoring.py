@@ -248,7 +248,9 @@ def scoring_fanout(df: DataFrame) -> int:
 
 def score_pairs(pairs_with_texts: DataFrame, bounded: float) -> DataFrame:
     """(*carry, doc_a, doc_b, len_a, len_b) -> (*carry, edit_distance,
-    sim), sim = 1 - edit_distance / max(len_a, len_b).
+    sim), sim = 1 - edit_distance / max(len_a, len_b), and 1.0 for two
+    empty docs (kernels.normalized_edit_similarity's value; the
+    division would raise DIVIDE_BY_ZERO under ANSI mode).
 
     The banded DP is exact below the τ = ``bounded`` bound (~10x cheaper
     than the full DP); distances of sub-τ pairs come back clamped, which
@@ -288,8 +290,10 @@ def score_pairs(pairs_with_texts: DataFrame, bounded: float) -> DataFrame:
         + [T.StructField("edit_distance", T.LongType(), False)]
     )
     out = src.mapInArrow(make_bounded_lev_arrow_fn(bounded), out_schema)
+    longer = F.greatest("len_a", "len_b").cast("double")
     return out.withColumn(
         "sim",
-        F.lit(1.0)
-        - F.col("edit_distance") / F.greatest("len_a", "len_b").cast("double"),
+        F.when(longer == 0, F.lit(1.0)).otherwise(
+            F.lit(1.0) - F.col("edit_distance") / longer
+        ),
     )

@@ -23,8 +23,10 @@ def build_session(
     pipeline conf block and worker prewarm as a ``local[N]`` test
     session.  The settings that only matter for a JVM this call
     launches itself (driver memory, GC/JIT thread caps, scratch dir, UI
-    off, the shuffle-partition default) apply only to a ``local``
-    master.  ``extra`` is applied last, so its keys win.
+    off) apply only to a ``local`` master passed here.  A local master,
+    passed or submitted, whose launch conf leaves the shuffle width
+    unset gets its ``defaultParallelism`` instead of Spark's 200.
+    ``extra`` is applied last, so its keys win.
     """
     builder = SparkSession.builder.appName(app_name)
     cores = _local_cores(master)
@@ -32,8 +34,6 @@ def build_session(
         builder = builder.master(master)
     if cores is not None:
         builder = _local_conf(builder, cores)
-        if shuffle_partitions is None:
-            shuffle_partitions = cores
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = (
@@ -65,7 +65,14 @@ def build_session(
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    if (
+        shuffle_partitions is None
+        and _local_cores(sc.master) is not None
+        and not sc.getConf().contains("spark.sql.shuffle.partitions")
+    ):
+        spark.conf.set("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
+    sc.setLogLevel("WARN")
     _prewarm_python_workers(spark)
     return spark
 

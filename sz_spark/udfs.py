@@ -441,9 +441,6 @@ def make_utf8_norm_udf(form: str = "NFC"):
     return norm
 
 
-from sz_spark.uax29 import sentence_segments, wordbreak_segments  # scalar twins (tests)
-
-
 def _batch_texts(texts: pd.Series) -> list[str]:
     return ["" if s is None else str(s) for s in texts]
 
@@ -530,17 +527,6 @@ def bytesum_udf(texts: pd.Series) -> pd.Series:
             for t in _to_bytes(texts)
         ]
     )
-
-
-@pandas_udf(T.LongType())
-def simhash64_udf(token_arrays: pd.Series) -> pd.Series:
-    """64-bit SimHash over a pre-tokenized array column; returned as the
-    signed-int64 bit pattern (Spark has no u64)."""
-    toks = [
-        [] if arr is None else [t.encode() for t in arr] for arr in token_arrays
-    ]
-    sigs = K.simhash64(toks)
-    return pd.Series(sigs.astype("int64"))
 
 
 @pandas_udf(T.IntegerType())

@@ -96,6 +96,34 @@ def test_triangle_struct_elements_use_jvm_path(spark):
     assert out.count() == 3
 
 
+def test_block_pairs_uncapped_equals_brute_force(spark):
+    """Uncapped block_pairs == every unordered pair of ids sharing a
+    (band_id, band_hash) key, once: (1, 2) shares two keys, key (1, 30)
+    holds one id only, and the suppressed frame is empty."""
+    import itertools
+
+    rows = [
+        (1, 0, 10), (2, 0, 10), (3, 0, 10),
+        (1, 1, 20), (2, 1, 20), (4, 1, 20),
+        (5, 1, 30),
+        (4, 2, 10), (5, 2, 10),
+    ]
+    bands = spark.createDataFrame(rows, "conv_id long, band_id int, band_hash long")
+    want = {
+        (a, b)
+        for key in {(r[1], r[2]) for r in rows}
+        for a, b in itertools.combinations(
+            sorted(r[0] for r in rows if (r[1], r[2]) == key), 2
+        )
+    }
+    pairs, suppressed = blocking.block_pairs(bands)
+    got = [tuple(r) for r in pairs.collect()]
+    assert sorted(got) == sorted(want) == [
+        (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (4, 5)
+    ]
+    assert suppressed.count() == 0
+
+
 def test_triangle_chunked_large_block(spark):
     # one block far above the flush threshold exercises output chunking
     n = 1500  # ~1.1M pairs > the 256k flush bound

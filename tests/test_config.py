@@ -7,6 +7,8 @@ import importlib.util
 import os
 import re
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: every SZ_* environment variable sz_spark reads; a new switch must be
@@ -51,3 +53,35 @@ def test_run_pipeline_flag_defaults_are_pipeline_config():
     assert script._config(script._parser().parse_args(base)) == PipelineConfig()
     cfg = script._config(script._parser().parse_args(base + ["--ndim", "64"]))
     assert cfg == PipelineConfig(ndim=64)
+
+
+@pytest.fixture(scope="module")
+def spark():
+    from sz_spark.session import build_session
+
+    s = build_session(master="local[2]", app_name="config-tests")
+    yield s
+    s.stop()
+
+
+def test_max_block_size_flag_is_the_block_cap(spark):
+    """--max-block-size 8 suppresses every block of more than 8 docs:
+    on a corpus whose one shared key holds 9 docs, that block is the
+    only suppressed one and no pair is emitted."""
+    from sz_spark.pipeline import pairs_stage
+
+    script = _run_pipeline_script()
+    args = ["--sf-dir", "in", "--output", "out", "--max-block-size", "8"]
+    cfg = script._config(script._parser().parse_args(args))
+    # 9 docs share the prefix key 7; every band key is a singleton
+    feats = spark.createDataFrame(
+        [(d, 10, 7, [100 + d], bytes(192)) for d in range(9)],
+        "did long, len int, pk long, bk array<long>, hist binary",
+    )
+    pairs, suppressed, bcs = pairs_stage(feats, cfg)
+    try:
+        assert [tuple(r) for r in suppressed.collect()] == [(-1, 7, 9)]
+        assert pairs.count() == 0
+    finally:
+        for bc in bcs:
+            bc.unpersist()

@@ -47,6 +47,7 @@ print(json.dumps({
     "batch": spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
     "coalesce": spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled"),
     "tz": spark.conf.get("spark.sql.session.timeZone"),
+    "shuffle": spark.conf.get("spark.sql.shuffle.partitions"),
 }))
 spark.stop()
 """
@@ -54,13 +55,15 @@ spark.stop()
 
 def test_build_session_keeps_submitted_master():
     """build_session() leaves the master to spark-submit and still
-    applies the pipeline conf block."""
+    applies the pipeline conf block, and the local master's width
+    sets the shuffle partitions."""
     got = json.loads(_run(["-c", _SESSION_PROBE]).strip().splitlines()[-1])
     assert got == {
         "master": "local[2]",
         "batch": "4096",
         "coalesce": "false",
         "tz": "UTC",
+        "shuffle": "2",
     }
 
 

@@ -58,13 +58,32 @@ def test_deterministic_across_parallelism(spark):
     assert outs[0].equals(outs[1])
 
 
+def test_empty_conversations_cluster_together(spark):
+    """Two empty conversations (one empty turn each) next to two
+    identical ones: the run completes under ANSI mode (a pair of empty
+    docs scores sim 1.0, not 0/0) and each pair forms one cluster."""
+    from sz_spark.pipeline import PipelineConfig, run_pipeline
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    tr = spark.createDataFrame(
+        [("e1", 0, ""), ("e2", 0, ""), ("d1", 0, text), ("d2", 0, text)],
+        "conv_id string, turn_idx int, text string",
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    stages = run_pipeline(spark, tr, PipelineConfig())
+    got = {r["conv_id"]: r["cluster_id"] for r in stages["clusters"].collect()}
+    assert got == {"e1": "e1", "e2": "e1", "d1": "d1", "d2": "d1"}
+    sims = {(r["id_a"], r["id_b"]): r["sim"] for r in stages["scored"].collect()}
+    assert sims[("e1", "e2")] == 1.0
+
+
 def test_block_pairs_fused_equals_salted_join(spark):
     """block_pairs (window cap + in-array pair emission + cross-band
     dedup) == itertools.combinations over every block that survives
-    the cap, on the skew fixture (a block below max_block_size, one
-    between max_block_size and salt_up_to, one suppressed) plus
-    multi-band overlap for the dedup; the suppressed stats list exactly
-    the blocks above the cap."""
+    the cap, on the skew fixture (a small block, a 40-member block
+    under the cap, one suppressed) plus multi-band overlap for the
+    dedup; the suppressed stats list exactly the blocks above the
+    cap."""
     import itertools
     from collections import defaultdict
 
@@ -90,7 +109,7 @@ def test_block_pairs_fused_equals_salted_join(spark):
         for pair in itertools.combinations(sorted(ids), 2)
     }
     assert len(want) == 40 * 39 // 2 + 5 * 4 // 2  # no huge%d pair
-    new, sup = blocking.block_pairs(bands, max_block_size=8, salt_up_to=cap)
+    new, sup = blocking.block_pairs(bands, max_block_size=cap)
     got = [tuple(r) for r in new.select("id_a", "id_b").collect()]
     assert set(got) == want and len(got) == len(want)  # set AND no dups
     assert [tuple(r) for r in sup.collect()] == [
@@ -420,7 +439,7 @@ def test_prune_pairs_arrow_matches_expression_twin(spark):
     feats = blocking.doc_features(docs, id_col="did", ndim=96, n_bands=24)
     pairs, _ = blocking.block_pairs(
         blocking.bands_from_features(feats, id_col="did"),
-        id_col="did", max_block_size=64, salt_up_to=1024,
+        id_col="did", max_block_size=1024,
     )
     attrs = scoring.attach_prune_attrs(pairs, feats.select("did", "len", "hist"))
     got = sorted(map(tuple, scoring.prune_pairs_arrow(attrs, 0.94).collect()))
@@ -486,26 +505,25 @@ def _gathered_pairs(spark, feats, threshold, **block_kw):
         bc.unpersist()
 
 
-def _pairs_dealt(bc_value, n_tasks, threshold, max_block_size, salt_up_to):
+def _pairs_dealt(bc_value, n_tasks, threshold, max_block_size):
     """The gather tier's worker function called directly, with the key
     rows dealt to ``n_tasks`` tasks."""
     from sz_spark import blocking
 
-    drop_above = blocking._drop_above(max_block_size, salt_up_to)
     out = []
     for task in range(n_tasks):
         for a, b in blocking._gathered_task_pairs(
-            bc_value, task, n_tasks, drop_above, threshold
+            bc_value, task, n_tasks, max_block_size, threshold
         ):
             out.extend(zip(a.tolist(), b.tolist()))
     return out
 
 
 @pytest.mark.parametrize(
-    "max_block_size,salt_up_to,shuffled",
-    [(64, 1024, False), (8, 16, False), (4, 0, False), (64, 1024, True)],
+    "max_block_size,shuffled",
+    [(1024, False), (16, False), (4, False), (1024, True)],
 )
-def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled):
+def test_fused_pairs_match_join_tier(spark, max_block_size, shuffled):
     """blocking.block_pairs_gathered (blocks rebuilt from the broadcast
     keys, first-kept-block emission + in-pass prune) must keep EXACTLY
     the join tier's pair set — block_pairs' dedup, then
@@ -520,7 +538,7 @@ def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled
     from sz_spark import blocking, scoring
 
     cfg, docs, feats = _gather_fixture(spark)
-    kw = dict(max_block_size=max_block_size, salt_up_to=salt_up_to)
+    kw = dict(max_block_size=max_block_size)
     want = set(_pair_rows(_join_tier_pairs(
         blocking.bands_from_features(feats, id_col="did"),
         docs, feats, cfg.threshold, **kw,
@@ -531,7 +549,7 @@ def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled
     got = _gathered_pairs(spark, feats, cfg.threshold, **kw)
     assert set(got) == want and len(got) == len(want) > 0
     assert all(a < b for a, b in got)
-    if salt_up_to == 0:
+    if max_block_size == 4:
         bands = blocking.bands_from_features(feats, id_col="did")
         _, sup = blocking.block_pairs(bands, id_col="did", **kw)
         want_sup = sorted(sup.collect())
@@ -544,17 +562,15 @@ def test_fused_pairs_match_join_tier(spark, max_block_size, salt_up_to, shuffled
             bc.unpersist()
 
 
-@pytest.mark.parametrize("max_block_size,salt_up_to", [(64, 1024), (4, 0)])
-def test_gathered_pairs_independent_of_task_count(
-    spark, max_block_size, salt_up_to
-):
+@pytest.mark.parametrize("max_block_size", [1024, 4])
+def test_gathered_pairs_independent_of_task_count(spark, max_block_size):
     """The key rows dealt to one task, to the session's width, and to
     more tasks than there are key rows give the same pair set, each
     pair once: results must not depend on core count."""
     from sz_spark import scoring
 
     cfg, _, feats = _gather_fixture(spark)
-    kw = dict(max_block_size=max_block_size, salt_up_to=salt_up_to)
+    kw = dict(max_block_size=max_block_size)
     want = sorted(_gathered_pairs(spark, feats, cfg.threshold, **kw))
     assert want
     bc = scoring.build_prune_broadcast(feats)
@@ -580,7 +596,7 @@ def test_fused_pairs_first_collision_in_suppressed_block(spark):
         "did long, len int, pk long, bk array<long>, hist binary",
     )
     bands = blocking.bands_from_features(feats, id_col="did")
-    kw = dict(max_block_size=4, salt_up_to=0)
+    kw = dict(max_block_size=4)
     got = _gathered_pairs(spark, feats, 0.9, **kw)
     want = _pair_rows(_join_tier_pairs(bands, None, feats, 0.9, **kw))
     assert sorted(got) == sorted(want) == [(1, 2), (3, 4)]
@@ -623,7 +639,7 @@ def test_gathered_pairs_hot_doc_and_stop_band(spark):
         rows, "did long, len int, pk long, bk array<long>, hist binary"
     )
     bands = blocking.bands_from_features(feats, id_col="did")
-    kw = dict(max_block_size=cap, salt_up_to=0)
+    kw = dict(max_block_size=cap)
     _, sup = blocking.block_pairs(bands, id_col="did", **kw)
     assert [r["block_size"] for r in sup.collect()] == [30]
     want = _pair_rows(_join_tier_pairs(bands, None, feats, 0.9, **kw))

@@ -264,7 +264,7 @@ def test_simhash_query_is_pure_jvm(spark):
 def test_wordbreaks_uax29_core():
     """The rules that make UAX-29 non-trivial, vs hand-derived
     segmentations (reference surface utf8_wordbreaks.h)."""
-    from sz_spark.udfs import wordbreak_segments as wb
+    from sz_spark.uax29 import wordbreak_segments as wb
 
     assert wb("don't stop") == ["don't", " ", "stop"]
     assert wb("1,234.5 x") == ["1,234.5", " ", "x"]
@@ -306,7 +306,7 @@ def test_sentences_full_uax29():
     reference defers the Lower-lookahead the same way,
     utf8_sentences/serial.h:184-255), SB8a continuers, SB9 closer
     attachment, SB10/11 space attachment, tiling invariant."""
-    from sz_spark.udfs import sentence_segments as sb
+    from sz_spark.uax29 import sentence_segments as sb
 
     assert sb("One. Two! Three? Four.") == ["One. ", "Two! ", "Three? ", "Four."]
     # SB8: lowercase after terminator+space continues the sentence

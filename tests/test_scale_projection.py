@@ -31,7 +31,8 @@ def test_worst_case_pairs_is_cap_governed_and_dominates():
     # cap bound must dominate the measured expectation (skew immunity)
     assert p.pairs_worst_case > p.pairs
     # and scale linearly with the cap knob
-    p2 = Projection(n_turns=1e12, knobs=PipelineKnobs(max_block_size=128))
+    cap = PipelineKnobs().max_block_size
+    p2 = Projection(n_turns=1e12, knobs=PipelineKnobs(max_block_size=2 * cap))
     assert p2.pairs_worst_case > p.pairs_worst_case * 1.9
 
 
