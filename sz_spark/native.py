@@ -4,10 +4,11 @@ The NumPy kernels in sz_spark.kernels remain the reference
 implementation and the always-available fallback.  This module
 compiles the C twins (sz_spark/*.c, written to mirror the NumPy math
 op-for-op) with the system gcc on first use, caches the shared object
-under the system temp dir keyed by a hash of the source + compiler
-flags, and loads it through ctypes.  Guide §4.2 ("do the heavy lifting
-in native code inside the UDF"): Spark keeps distribution/shuffles/IO;
-the per-batch inner loops run compiled.
+in ``cache_dir()`` keyed by a hash of the source + compiler flags, and
+loads it through ctypes.  The same directory holds the driver JVM's
+class-data-sharing archive (``session._ClassArchive``).  Guide §4.2
+("do the heavy lifting in native code inside the UDF"): Spark keeps
+distribution/shuffles/IO; the per-batch inner loops run compiled.
 
 Everything here is best-effort: any failure (no compiler, read-only
 temp, load error) disables the native path for the process and the
@@ -50,16 +51,21 @@ def _source_path() -> str:
     return os.path.join(os.path.dirname(os.path.abspath(__file__)), "szfp_native.c")
 
 
+def cache_dir() -> str:
+    """``SZ_NATIVE_CACHE``, else ``<tmp>/sz_native_<uid>`` (not created)."""
+    return os.environ.get("SZ_NATIVE_CACHE") or os.path.join(
+        tempfile.gettempdir(), f"sz_native_{os.getuid()}"
+    )
+
+
 def _build() -> ctypes.CDLL | None:
     src = _source_path()
     with open(src, "rb") as fh:
         blob = fh.read()
     key = hashlib.sha256(blob + b"\0" + " ".join(_CFLAGS).encode()).hexdigest()[:16]
-    cache_dir = os.environ.get("SZ_NATIVE_CACHE") or os.path.join(
-        tempfile.gettempdir(), f"sz_native_{os.getuid()}"
-    )
-    os.makedirs(cache_dir, exist_ok=True)
-    so_path = os.path.join(cache_dir, f"szfp_{key}.so")
+    cache = cache_dir()
+    os.makedirs(cache, exist_ok=True)
+    so_path = os.path.join(cache, f"szfp_{key}.so")
     if not os.path.exists(so_path):
         tmp = f"{so_path}.{os.getpid()}.tmp"
         cmd = ["gcc", *_CFLAGS, "-o", tmp, src, "-lm"]

@@ -2,11 +2,21 @@
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import fcntl
+import hashlib
 import logging
 import os
 import re
+import shutil
+import subprocess
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from sz_spark import native
 
 
 def build_session(
@@ -23,48 +33,22 @@ def build_session(
     pipeline conf block and worker prewarm as a ``local[N]`` test
     session.  The settings that only matter for a JVM this call
     launches itself (driver memory, GC/JIT thread caps, scratch dir, UI
-    off) apply only to a ``local`` master passed here.  A local master,
-    passed or submitted, whose launch conf leaves the shuffle width
-    unset gets its ``defaultParallelism`` instead of Spark's 200.
+    off, the class-data-sharing archive of ``_ClassArchive``) apply
+    only to a ``local`` master passed here.  A local master, passed or
+    submitted, whose launch conf leaves the shuffle width unset gets
+    its ``defaultParallelism`` instead of Spark's 200.
     ``extra`` is applied last, so its keys win.
     """
     builder = SparkSession.builder.appName(app_name)
-    cores = _local_cores(master)
     if master is not None:
         builder = builder.master(master)
-    if cores is not None:
-        builder = _local_conf(builder, cores)
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    builder = (
-        builder
-        # AQE: runtime re-planning + skew-join splitting — the Spark
-        # analog of the reference's two-tier small/large work scheduling
-        # (similarities/serial.hpp:3296-3395).  Partition COALESCING is
-        # off: AQE sizes post-shuffle partitions by shuffle BYTES, and
-        # this engine's heavy stages are Arrow/pandas UDFs whose cost is
-        # CPU per row on surrogate-long keys — tiny bytes, huge compute —
-        # so byte-driven coalescing collapses exactly the parallelism the
-        # explicit 4x-waves repartitions create (scoring.py documents why
-        # AQE cannot see Python CPU cost).  Measured on the 975k-turn
-        # probe, same session, 8 cores: 29.7/33.5 s with coalescing off
-        # vs 57.4/62.5 s with it on (~1.9x), identical clusters; the
-        # 2-core side improved 80-88 -> 74.6 s.  At 100 TB the explicit
-        # shuffle-partition sizing (scripts/scale_projection.py) already
-        # bounds partition size; skew-join splitting — the part of AQE
-        # that protects the band/pair joins from hot keys — stays ON.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow is the zero-copy tape the reference's Strs already speaks
-        # (python/stringzilla.c:392-395) — mandatory for pandas UDFs
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    for k, v in (extra or {}).items():
+    conf, archive = _session_conf(master, shuffle_partitions, extra)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with archive.launch_env() if archive else contextlib.nullcontext():
+        spark = builder.getOrCreate()
+    if archive is not None:
+        archive.launched(spark)
     sc = spark.sparkContext
     if (
         shuffle_partitions is None
@@ -77,6 +61,55 @@ def build_session(
     return spark
 
 
+def _session_conf(
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra: dict[str, str] | None,
+) -> tuple[dict[str, str], _ClassArchive | None]:
+    """``build_session``'s conf, in the order it is applied, and the
+    class archive the driver JVM it launches maps (None: no archive)."""
+    cores = _local_cores(master)
+    conf = _local_conf(cores) if cores is not None else {}
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(
+        {
+            # AQE: runtime re-planning + skew-join splitting — the Spark
+            # analog of the reference's two-tier small/large work
+            # scheduling (similarities/serial.hpp:3296-3395).  Partition
+            # COALESCING is off: AQE sizes post-shuffle partitions by
+            # shuffle BYTES, and this engine's heavy stages are
+            # Arrow/pandas UDFs whose cost is CPU per row on surrogate-long
+            # keys — tiny bytes, huge compute — so byte-driven coalescing
+            # collapses exactly the parallelism the explicit 4x-waves
+            # repartitions create (scoring.py documents why AQE cannot see
+            # Python CPU cost).  Measured on the 975k-turn probe, same
+            # session, 8 cores: 29.7/33.5 s with coalescing off vs
+            # 57.4/62.5 s with it on (~1.9x), identical clusters; the
+            # 2-core side improved 80-88 -> 74.6 s.  At 100 TB the
+            # explicit shuffle-partition sizing
+            # (scripts/scale_projection.py) already bounds partition size;
+            # skew-join splitting — the part of AQE that protects the
+            # band/pair joins from hot keys — stays ON.
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.adaptive.skewJoin.enabled": "true",
+            # Arrow is the zero-copy tape the reference's Strs already
+            # speaks (python/stringzilla.c:392-395) — mandatory for pandas
+            # UDFs
+            "spark.sql.execution.arrow.pyspark.enabled": "true",
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+            "spark.sql.session.timeZone": "UTC",
+        }
+    )
+    conf.update(extra or {})
+    archive = _ClassArchive.for_launch(conf) if cores is not None else None
+    if archive is not None:
+        opts = conf.get("spark.driver.extraJavaOptions", "")
+        conf["spark.driver.extraJavaOptions"] = f"{opts} {archive.java_options}".strip()
+    return conf, archive
+
+
 def _local_cores(master: str | None) -> int | None:
     """Worker threads of a ``local``, ``local[N]``, ``local[*]`` or
     ``local[N,F]`` master; None for any other master, or none given."""
@@ -87,11 +120,12 @@ def _local_cores(master: str | None) -> int | None:
     return int(n) if n.isdigit() else (os.cpu_count() or 32)
 
 
-def _local_conf(builder: SparkSession.Builder, cores: int) -> SparkSession.Builder:
+def _local_conf(cores: int) -> dict[str, str]:
     """Settings for the driver JVM a local master runs everything in."""
-    builder = builder.config("spark.ui.enabled", "false").config(
-        "spark.driver.memory", os.environ.get("SZ_SPARK_DRIVER_MEM", "32g")
-    )
+    conf = {
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SZ_SPARK_DRIVER_MEM", "32g"),
+    }
     # Size the JVM's BACKGROUND parallelism to the session's core budget
     # instead of the machine's.  HotSpot picks GC/JIT thread counts from
     # os.cpu_count(), so a local[2] probe JVM on a 32-core box runs ~23
@@ -107,11 +141,10 @@ def _local_conf(builder: SparkSession.Builder, cores: int) -> SparkSession.Build
     # thrash.
     if cores < (os.cpu_count() or 32):
         gc_threads = max(2, cores)
-        builder = builder.config(
-            "spark.driver.extraJavaOptions",
+        conf["spark.driver.extraJavaOptions"] = (
             f"-XX:ParallelGCThreads={gc_threads} "
             f"-XX:ConcGCThreads={max(1, gc_threads // 4)} "
-            f"-XX:CICompilerCount={max(2, min(cores, 12))}",
+            f"-XX:CICompilerCount={max(2, min(cores, 12))}"
         )
     # Shuffle/spill scratch.  Spark reads SPARK_LOCAL_DIRS ahead of
     # spark.local.dir, and real clusters hand it node-local NVMe that
@@ -121,24 +154,324 @@ def _local_conf(builder: SparkSession.Builder, cores: int) -> SparkSession.Build
     if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
         scratch = "/dev/shm/sz_spark_local"
         os.makedirs(scratch, exist_ok=True)
-        builder = builder.config("spark.local.dir", scratch)
-    return builder
+        conf["spark.local.dir"] = scratch
+    return conf
+
+
+#: first word of a HotSpot static class-data-sharing archive
+#: (0xf00baba2, little-endian)
+_ARCHIVE_MAGIC = b"\xa2\xab\x0b\xf0"
+
+#: java options that already decide class sharing, or the pointer
+#: encoding an archive must match, for the driver JVM
+_USER_SHARING = re.compile(
+    r"-Xshare:|-XX:(?:SharedArchiveFile|ArchiveClassesAtExit|DumpLoadedClassList"
+    r"|SharedClassListFile|ObjectAlignmentInBytes)=|-XX:[+-]UseCompressed"
+)
+
+#: JDK 17 maps an archive only into a JVM with the compressed-oops mode
+#: it was dumped with, and a heap this large (the 32g default driver
+#: memory) runs without compressed oops
+_WIDE_HEAP = 32 << 30
+
+#: shift of each ``-Xmx`` size suffix
+_SIZE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}
+
+#: launch inputs that put class path entries besides the conf dir and
+#: ``$SPARK_HOME/jars`` on the driver JVM; the archive key covers neither
+_CLASSPATH_ENV = (
+    "SPARK_DIST_CLASSPATH",
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+    "SPARK_PREPEND_CLASSES",
+)
+
+#: a ``_ClassArchive`` file in the cache dir: key, recorder pid, kind
+_ARCHIVE_FILE = re.compile(
+    r"spark_cds_([0-9a-f]{16})_(?:coops|wide)(?:\.(\d+))?"
+    r"\.(?:jsa|jsa\.tmp|classlist|log(?:\.\d+)?)"
+)
+
+
+class _ClassArchive:
+    """The class-data-sharing (CDS) archive a local driver JVM maps.
+
+    Launching the driver JVM and creating the SparkContext is almost all
+    class loading.  On a 4-core box the launch took 7.4-8.3 s and the
+    first job 2.8-3.6 s; with the archive mapped, 3.8-4.7 s and
+    1.4-1.9 s.
+
+    - *Where:* ``native.cache_dir()``, next to the compiled kernel, as
+      ``spark_cds_<key>_<mode>.jsa``.  The key hashes the JDK (realpath
+      and stat of the ``java`` spark-class runs, and its ``release``
+      file) and the name, size and mtime of every
+      ``$SPARK_HOME/jars/*.jar``: nothing that changes from process to
+      process.  JDK 17 maps an archive only into a JVM with the
+      compressed-oops mode it was dumped with, so a driver heap of
+      32 GiB or more (``wide``, the default ``32g``) and a smaller one
+      (``coops``) each get their own archive, dumped with the
+      recording JVM's ``-Xmx``, as the JDK keeps
+      ``classes_nocoops.jsa`` next to ``classes.jsa``.
+    - *Recording:* a launch that finds no archive has its JVM list the
+      classes it loads (``-XX:DumpLoadedClassList``), which costs the
+      launch nothing measurable.  At interpreter exit the list is dumped
+      into a static archive (``-Xshare:dump``, which runs interpreted:
+      ~40 s of one core, once per key) under a temporary name.  The file
+      is renamed into place only after the dumping JVM has exited and
+      only if it carries the archive magic.  One dump runs per cache at
+      a time (an flock); a recorder that finds the lock taken drops its
+      list.  The published list stays as ``spark_cds_<key>.classlist``;
+      publishing deletes what dead recorders left and every other key's
+      files.  Recording at JVM exit instead (``-XX:ArchiveClassesAtExit``)
+      cost the recording launch +2.8 s and its first job +1.8 s.
+    - *Rejection:* the JVM keeps its default ``-Xshare:auto``, so an
+      archive it cannot map (say, a truncated file) only costs speed.
+      ``java.vm.info`` then lacks "sharing"; the archive is dumped again
+      at exit from the kept list, or deleted when that fails, so the
+      next launch records a new one.
+    - *Eligibility:* a static archive needs a class path without
+      non-empty directories, and Spark puts its conf dir first.  The
+      archive is used only when the effective conf dir is missing or
+      holds only ``*.template`` files, which Spark never reads; the
+      launch alone then runs with ``SPARK_CONF_DIR`` at an empty
+      directory in the cache.  A real config file there, java options
+      that already decide class sharing (``-Xshare:off`` opts out), or
+      extra class path entries leave the launch as it was.
+    - ``-Xlog:cds`` goes to ``spark_cds_<key>.log``, never to stdout.
+    """
+
+    def __init__(self, cache: str, key: str, java: str, heap: str):
+        self.cache = cache
+        self.key = key
+        self.java = java
+        self.heap = heap
+        mode = "wide" if _heap_bytes(heap) >= _WIDE_HEAP else "coops"
+        self.base = os.path.join(cache, f"spark_cds_{key}_{mode}")
+        self.path = self.base + ".jsa"
+        self.classlist = self.base + ".classlist"
+        self.recording = f"{self.base}.{os.getpid()}.classlist"
+        self.conf_dir = os.path.join(cache, "spark_conf_empty")
+        #: identity of the archive this launch maps; None: it records one
+        self.found = _archive_identity(self.path)
+
+    @classmethod
+    def for_launch(cls, conf: dict[str, str]) -> _ClassArchive | None:
+        """The archive for a driver JVM launched with ``conf``, or None
+        when no JVM is launched or the launch is not eligible."""
+        if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+            return None
+        spark_home = _find_spark_home()
+        heap = conf.get("spark.driver.memory", "1g")  # spark-submit passes -Xmx<heap>
+        java_opts = " ".join(
+            [
+                conf.get("spark.driver.defaultJavaOptions", ""),
+                conf.get("spark.driver.extraJavaOptions", ""),
+                os.environ.get("JAVA_TOOL_OPTIONS", ""),
+                os.environ.get("JDK_JAVA_OPTIONS", ""),
+            ]
+        )
+        if (
+            not _only_templates(
+                os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+            )
+            or _USER_SHARING.search(java_opts)
+            or "spark.driver.extraClassPath" in conf
+            or any(os.environ.get(name) for name in _CLASSPATH_ENV)
+            or _heap_bytes(heap) is None
+        ):
+            return None
+        java = _java_binary()
+        cache = os.path.abspath(native.cache_dir())
+        # the cache path goes unquoted into -Xlog, -cp and the java options
+        if java is None or not re.fullmatch(r"[\w./+@-]+", cache):
+            return None
+        try:
+            archive = cls(cache, _archive_key(java, spark_home), java, heap)
+            os.makedirs(archive.conf_dir, exist_ok=True)
+            if os.listdir(archive.conf_dir):
+                return None
+        except OSError:
+            return None
+        return archive
+
+    @property
+    def java_options(self) -> str:
+        share = (
+            f"-XX:SharedArchiveFile={self.path}"
+            if self.found
+            else f"-XX:DumpLoadedClassList={self.recording}"
+        )
+        return f"{share} -Xlog:cds*=off -Xlog:cds:file={self.base}.log::filecount=1"
+
+    @contextlib.contextmanager
+    def launch_env(self):
+        """``SPARK_CONF_DIR`` at the empty conf dir, for the launch only."""
+        before = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = self.conf_dir
+        try:
+            yield
+        finally:
+            if before is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = before
+
+    def launched(self, spark: SparkSession) -> None:
+        """Dump the archive at exit if this launch recorded a class list
+        or its JVM rejected the archive."""
+        system = spark.sparkContext._jvm.java.lang.System
+        if self.found and "sharing" in system.getProperty("java.vm.info"):
+            return
+        atexit.register(self._publish, system.getProperty("java.class.path"))
+
+    def _publish(self, classpath: str) -> None:
+        source = self.classlist if self.found else self.recording
+        tmp = f"{self.base}.{os.getpid()}.jsa.tmp"
+        try:
+            with open(os.path.join(self.cache, "spark_cds.lock"), "a") as lock:
+                try:
+                    fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                except BlockingIOError:
+                    return  # another process is dumping
+                if _archive_identity(self.path) != self.found:
+                    return  # published or replaced since this launch
+                if os.path.exists(source) and self._dump(source, classpath, tmp):
+                    os.replace(tmp, self.path)
+                    if source != self.classlist:
+                        os.replace(source, self.classlist)
+                    self._sweep()
+                elif self.found:
+                    os.unlink(self.path)  # rejected, not redone: the next launch records
+        except OSError as exc:
+            logging.getLogger(__name__).warning("class archive not published: %s", exc)
+        finally:
+            for name in (tmp, self.recording):
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(name)
+
+    def _dump(self, source: str, classpath: str, out: str) -> bool:
+        """Dump the class list ``source`` into the archive file ``out``."""
+        logging.getLogger(__name__).warning(
+            "dumping the driver JVM's class archive %s "
+            "(once per JDK and Spark jar set)", self.path
+        )
+        with open(self.base + ".log", "ab") as log:
+            try:
+                done = subprocess.run(
+                    [
+                        self.java,
+                        f"-Xmx{self.heap}",
+                        "-Xshare:dump",
+                        f"-XX:SharedClassListFile={source}",
+                        f"-XX:SharedArchiveFile={out}",
+                        "-cp",
+                        classpath,
+                    ],
+                    stdin=subprocess.DEVNULL,
+                    stdout=log,
+                    stderr=subprocess.STDOUT,
+                    timeout=600,
+                )
+            except subprocess.SubprocessError:
+                return False
+        return done.returncode == 0 and _archive_identity(out) is not None
+
+    def _sweep(self) -> None:
+        """Delete what dead recorders left and every other key's files."""
+        for name in os.listdir(self.cache):
+            m = _ARCHIVE_FILE.fullmatch(name)
+            if m is None:
+                continue
+            key, pid = m.groups()
+            if (not _alive(int(pid))) if pid else key != self.key:
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(os.path.join(self.cache, name))
+
+
+def _only_templates(conf_dir: str) -> bool:
+    """Whether Spark reads nothing from ``conf_dir``: it is missing or
+    holds only ``*.template`` files."""
+    try:
+        names = os.listdir(conf_dir)
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+    return all(name.endswith(".template") for name in names)
+
+
+def _java_binary() -> str | None:
+    """The ``java`` spark-class runs: ``$JAVA_HOME/bin/java``, else the
+    one on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java")
+
+
+def _archive_key(java: str, spark_home: str) -> str:
+    """Hash of the JDK behind ``java`` and of the Spark jar set."""
+    h = hashlib.sha256()
+    real = os.path.realpath(java)
+    st = os.stat(real)
+    h.update(f"{real}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+    with contextlib.suppress(FileNotFoundError):
+        with open(os.path.join(os.path.dirname(os.path.dirname(real)), "release"), "rb") as fh:
+            h.update(fh.read())
+    jars = os.path.join(spark_home, "jars")
+    h.update(f"\0{jars}\0".encode())
+    for name in sorted(os.listdir(jars)):
+        if name.endswith(".jar"):
+            st = os.stat(os.path.join(jars, name))
+            h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+    return h.hexdigest()[:16]
+
+
+def _heap_bytes(size: str) -> int | None:
+    """Bytes of an ``-Xmx`` size such as ``2g``; None if malformed."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)", size.strip().lower())
+    return int(m.group(1)) << _SIZE_SHIFT[m.group(2)] if m else None
+
+
+def _archive_identity(path: str) -> tuple[int, int, int] | None:
+    """(inode, size, mtime) of a file that starts with the archive
+    magic; None for any other file or none."""
+    try:
+        with open(path, "rb") as fh:
+            if fh.read(len(_ARCHIVE_MAGIC)) != _ARCHIVE_MAGIC:
+                return None
+            st = os.fstat(fh.fileno())
+    except OSError:
+        return None
+    return st.st_ino, st.st_size, st.st_mtime_ns
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:
     """Prestart the Python worker pool and its heavy imports.
 
     A fresh session's FIRST Arrow-UDF stage pays worker spawn + numpy/
-    pyarrow/pandas imports + the JVM's Arrow-stream codepath warmup —
-    measured ~1.9 s at local[8] on an earlier 32-core box (2.58 s first
-    stage vs 0.69 s after); those numbers predate the 4-core box the
-    benchmark now runs on.  Long-lived executors amortize this across
-    jobs via spark.python.worker.reuse; a short-lived session pays it
-    inside its first real query unless the pool is prestarted at build
-    time, which is what this does: one tiny mapInArrow pass (two tasks
-    per worker slot) that performs the worker-side imports and touches
-    the compiled kernel twin so its dlopen (or first-time gcc build, on
-    a cold cache) also happens here rather than inside a timed stage.
+    pyarrow/pandas imports + the JVM's Arrow-stream codepath warmup.
+    Measured at local[4] on a 4-core box: the first JVM job took 3.2 s
+    (0.3 s the second time), the first Python worker start 2.8 s
+    (0.3-0.4 s after that) and the worker imports ~1.3-1.5 s.  With the
+    driver's class archive mapped (``_ClassArchive``) the first JVM job
+    drops to 1.4-1.9 s, and this prewarm, at about 3.3-3.4 s, is the
+    largest part of ``build_session``.  Long-lived executors amortize
+    this across jobs via spark.python.worker.reuse; a short-lived
+    session pays it inside its first real query unless the pool is
+    prestarted at build time, which is what this does: one tiny
+    mapInArrow pass (two tasks per worker slot) that performs the
+    worker-side imports and touches the compiled kernel twin so its
+    dlopen (or first-time gcc build, on a cold cache) also happens here
+    rather than inside a timed stage.
     Importing ``sz_spark`` there also installs the package's checked
     zipimporter invalidation (``sz_spark/__init__.py``) in every pooled
     worker, so no timed task pays the per-task re-read of pyspark.zip.

@@ -1,22 +1,34 @@
-"""The package's checked zipimporter invalidation, without Spark.
+"""Process start-up: the package's checked zipimporter invalidation and
+the driver JVM's class-data-sharing archive.
 
-Each test imports from a fresh zip on ``sys.path``, so the zipimporter
-under test is the one the path hooks create, and invalidates it through
-``importlib.invalidate_caches()`` -- the call PySpark's worker makes at
-the start of every task.
+The zipimporter tests import from a fresh zip on ``sys.path``, so the
+zipimporter under test is the one the path hooks create, and invalidate
+it through ``importlib.invalidate_caches()`` -- the call PySpark's
+worker makes at the start of every task.
+
+The archive tests check its key and eligibility without a JVM, then
+launch sessions in fresh processes over a temporary ``SZ_NATIVE_CACHE``.
 """
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
+import re
+import shutil
+import subprocess
 import sys
 import zipfile
 import zipimport
 
 import pytest
+from pyspark import SparkContext
 
 import sz_spark
+from sz_spark import session
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: fixed entry timestamp: archives with equal names and bodies are then
 #: byte-for-byte the same size
@@ -129,3 +141,226 @@ def test_reimport_and_reload_do_not_wrap_twice():
     sz_spark._install_checked_zip_invalidation()
     assert zipimport.zipimporter.invalidate_caches is installed
     assert not getattr(installed.__wrapped__, "_sz_checked", False)
+
+
+# -- the driver JVM's class archive: key and eligibility (no JVM) --------
+
+
+@pytest.fixture
+def install(tmp_path, monkeypatch):
+    """A fake JDK and Spark home (conf dir with templates only), a fresh
+    cache, and no gateway up; returns their paths."""
+    jdk = tmp_path / "jdk"
+    (jdk / "bin").mkdir(parents=True)
+    (jdk / "bin" / "java").write_bytes(b"java")
+    (jdk / "release").write_text('JAVA_VERSION="17.0.1"\n')
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    for name in ("a.jar", "b.jar"):
+        (home / "jars" / name).write_bytes(b"jar " + name.encode())
+    (home / "conf").mkdir()
+    (home / "conf" / "spark-defaults.conf.template").write_text("")
+    (home / "conf" / "log4j2.properties.template").write_text("")
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.setenv("SZ_NATIVE_CACHE", str(tmp_path / "cache"))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    for name in ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "PYSPARK_GATEWAY_PORT",
+                 *session._CLASSPATH_ENV):
+        monkeypatch.delenv(name, raising=False)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    return {"jdk": jdk, "home": home, "cache": tmp_path / "cache"}
+
+
+def _key(install):
+    return session._archive_key(session._java_binary(), str(install["home"]))
+
+
+def _archive_flags(conf):
+    return re.findall(r"-XX:(?:SharedArchiveFile|DumpLoadedClassList)=|-Xlog:cds",
+                      conf.get("spark.driver.extraJavaOptions", ""))
+
+
+def test_archive_key_ignores_per_process_env(install, monkeypatch, tmp_path):
+    key = _key(install)
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", f"-Djava.io.tmpdir={tmp_path}")
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    assert _key(install) == key
+
+
+def test_archive_key_follows_jars_and_jdk(install):
+    keys = {_key(install)}
+    jar = install["home"] / "jars" / "a.jar"
+    jar.write_bytes(jar.read_bytes() + b"!")
+    keys.add(_key(install))
+    st = jar.stat()
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    keys.add(_key(install))
+    (install["jdk"] / "release").write_text('JAVA_VERSION="17.0.2"\n')
+    keys.add(_key(install))
+    (install["jdk"] / "bin" / "java").write_bytes(b"other java")
+    keys.add(_key(install))
+    assert len(keys) == 5
+
+
+@pytest.mark.parametrize("conf_dir_set", [True, False])
+def test_template_conf_dir_launches_with_the_empty_conf_dir(install, monkeypatch, conf_dir_set):
+    templates = str(install["home"] / "conf")
+    if conf_dir_set:
+        monkeypatch.setenv("SPARK_CONF_DIR", templates)
+    conf, archive = session._session_conf("local[2]", None, None)
+    assert archive is not None
+    assert "-XX:DumpLoadedClassList=" in _archive_flags(conf)  # empty cache: record
+    for _ in range(2):  # the second time the body raises
+        with pytest.raises(RuntimeError), archive.launch_env():
+            assert os.environ["SPARK_CONF_DIR"] == archive.conf_dir
+            assert os.listdir(archive.conf_dir) == []
+            raise RuntimeError
+        assert os.environ.get("SPARK_CONF_DIR") == (templates if conf_dir_set else None)
+
+
+def test_heap_size_picks_the_compressed_oops_archive(install):
+    paths = {}
+    for heap in ("1g", "31g", "32g", "64g"):
+        _, archive = session._session_conf("local[2]", None, {"spark.driver.memory": heap})
+        paths[heap] = archive.path
+    assert paths["1g"] == paths["31g"] != paths["32g"] == paths["64g"]
+    assert paths["1g"].replace("_coops.", "_wide.") == paths["32g"]
+    _, archive = session._session_conf("local[2]", None, {"spark.driver.memory": "2gb"})
+    assert archive is None  # not a size the JVM reads
+
+
+@pytest.mark.parametrize("real_file", ["spark-defaults.conf", "log4j2.properties"])
+def test_real_conf_file_leaves_the_launch_as_it_was(install, real_file):
+    (install["home"] / "conf" / real_file).write_text("")
+    env = dict(os.environ)
+    conf, archive = session._session_conf("local[2]", None, None)
+    assert archive is None
+    assert _archive_flags(conf) == []
+    assert dict(os.environ) == env
+    assert not install["cache"].exists()
+
+
+@pytest.mark.parametrize("master", [None, "spark://host:7077", "yarn"])
+def test_submitted_master_gets_no_archive(install, master):
+    conf, archive = session._session_conf(master, None, None)
+    assert archive is None
+    assert "spark.driver.extraJavaOptions" not in conf
+
+
+def test_opt_out_and_running_gateway_compute_nothing(install, monkeypatch):
+    extra = {"spark.driver.defaultJavaOptions": "-Xshare:off"}
+    conf, archive = session._session_conf("local[2]", None, extra)
+    assert archive is None and _archive_flags(conf) == []
+
+    def no_key(*args):
+        raise AssertionError("archive key computed")
+
+    monkeypatch.setattr(session, "_archive_key", no_key)
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    conf, archive = session._session_conf("local[2]", None, None)
+    assert archive is None and _archive_flags(conf) == []
+
+
+# -- the driver JVM's class archive: real launches -------------------------
+
+_LAUNCH = """
+import json, sys
+from sz_spark.session import build_session
+
+spark = build_session(
+    master="local[2]",
+    app_name="archive-test",
+    extra={"spark.driver.defaultJavaOptions": "-Xlog:class+load=info:file=" + sys.argv[1]},
+)
+print(json.dumps(spark.range(1000).selectExpr("sum(id) AS s").collect()[0].s))
+"""
+
+
+def _spawn(cache, class_log) -> subprocess.Popen:
+    env = dict(
+        os.environ,
+        SZ_NATIVE_CACHE=str(cache),
+        SZ_SPARK_DRIVER_MEM="1g",
+        PYSPARK_PYTHON=sys.executable,
+        PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
+    )
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    return subprocess.Popen(
+        [sys.executable, "-c", _LAUNCH, str(class_log)],
+        cwd=REPO, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+    )
+
+
+def _result(proc: subprocess.Popen) -> int:
+    out, err = proc.communicate(timeout=900)
+    assert proc.returncode == 0, err[-4000:]
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def _launch(cache, class_log) -> int:
+    return _result(_spawn(cache, class_log))
+
+
+def _published(cache) -> list[str]:
+    return sorted(n for n in os.listdir(cache) if n.endswith(".jsa"))
+
+
+def _left_behind(cache) -> list[str]:
+    """Temporary files: a recorder's class list or an unpublished dump."""
+    return [n for n in os.listdir(cache) if re.search(r"\.\d+\.(?:classlist|jsa\.tmp)$", n)]
+
+
+def _maps_spark_classes(class_log) -> bool:
+    with open(class_log, encoding="utf-8", errors="replace") as fh:
+        return any(
+            "org.apache.spark.SparkContext source: shared objects file" in line for line in fh
+        )
+
+
+@pytest.fixture(scope="module")
+def recorded(tmp_path_factory):
+    """A cache whose first launch recorded and published the archive."""
+    if not session._only_templates(
+        os.environ.get("SPARK_CONF_DIR") or os.path.join(session._find_spark_home(), "conf")
+    ):
+        pytest.skip("the Spark conf dir holds config files: no archive is used")
+    root = tmp_path_factory.mktemp("archive")
+    cache = root / "cache"
+    got = _launch(cache, root / "record.log")
+    return {"cache": cache, "root": root, "result": got}
+
+
+def test_fresh_cache_publishes_one_archive_the_next_launch_maps(recorded):
+    cache, root = recorded["cache"], recorded["root"]
+    assert recorded["result"] == 499500
+    assert not _maps_spark_classes(root / "record.log")
+    assert len(_published(cache)) == 1
+    assert _left_behind(cache) == []
+    assert _launch(cache, root / "mapped.log") == recorded["result"]
+    assert _maps_spark_classes(root / "mapped.log")
+    assert len(_published(cache)) == 1
+
+
+def test_truncated_archive_still_launches_and_is_replaced(recorded, tmp_path):
+    cache = tmp_path / "cache"
+    shutil.copytree(recorded["cache"], cache)
+    (name,) = _published(cache)
+    size = os.path.getsize(cache / name)
+    os.chmod(cache / name, 0o644)  # the JVM writes archives read-only
+    with open(cache / name, "r+b") as fh:
+        fh.truncate(1 << 20)
+    assert _launch(cache, tmp_path / "truncated.log") == recorded["result"]
+    assert not _maps_spark_classes(tmp_path / "truncated.log")
+    assert _published(cache) == [name]
+    assert session._archive_identity(str(cache / name)) is not None
+    assert os.path.getsize(cache / name) > size // 2
+    assert _left_behind(cache) == []
+
+
+def test_concurrent_first_launches_publish_at_most_one_archive(recorded, tmp_path):
+    cache = tmp_path / "cache"
+    procs = [_spawn(cache, tmp_path / f"first{i}.log") for i in range(2)]
+    assert [_result(p) for p in procs] == [recorded["result"]] * 2
+    assert len(_published(cache)) <= 1
+    assert _left_behind(cache) == []
