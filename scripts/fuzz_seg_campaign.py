@@ -29,9 +29,9 @@ sys.path.insert(0, os.path.join(_ROOT, "tests"))
 from test_uax_vec import POOL  # noqa: E402
 
 from sz_spark import uax_vec as V  # noqa: E402
-from sz_spark.uax14 import linebreak_segments  # noqa: E402
-from sz_spark.uax29 import sentence_segments, wordbreak_segments  # noqa: E402
-from sz_spark.uax29_graphemes import grapheme_segments  # noqa: E402
+from uax14 import linebreak_segments  # noqa: E402
+from uax29 import sentence_segments, wordbreak_segments  # noqa: E402
+from uax29_graphemes import grapheme_segments  # noqa: E402
 
 
 def _assigned_pool(rng: random.Random, n: int) -> list[int]:

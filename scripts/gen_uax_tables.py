@@ -2,10 +2,10 @@
 """Generate sz_spark/uax_tables_gen.py: full-coverage run-length tables
 for every Unicode segmentation property the engines consume.
 
-Sweeps the scalar classifiers in sz_spark.uax29 / uax14 /
-uax29_graphemes (which are themselves 100%-conformance-tested against
-the reference's UCD-17 tables) over all 0x110000 codepoints and emits
-one (STARTS, PROPS) run-length pair per property.  The vectorized
+Sweeps the scalar classifiers in tests/uax29.py, tests/uax14.py and
+tests/uax29_graphemes.py (which are themselves 100%-conformance-tested
+against the reference's UCD-17 tables) over all 0x110000 codepoints and
+emits one (STARTS, PROPS) run-length pair per property.  The vectorized
 engines in sz_spark.uax_vec look properties up with
 ``PROPS[np.searchsorted(STARTS, cps, 'right') - 1]``; by construction
 the table equals the scalar classifier at every codepoint
@@ -15,7 +15,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tests"))  # the scalar classifiers
 
 N = 0x110000
 
@@ -33,13 +35,13 @@ def rle(fn):
 
 
 def main():
-    from sz_spark.uax14 import line_break_class
-    from sz_spark.uax29 import (
+    from uax14 import _quote_side, is_east_asian, is_extpict_cn, line_break_class
+    from uax29 import (
         is_extended_pictographic,
         sentence_break_property,
         word_break_property,
     )
-    from sz_spark.uax29_graphemes import grapheme_break_property, indic_conjunct_break
+    from uax29_graphemes import grapheme_break_property, indic_conjunct_break
 
     tables = {}
     for name, fn in (
@@ -50,11 +52,11 @@ def main():
         ("INCB", indic_conjunct_break),
         ("EXTPICT", lambda cp: 1 if is_extended_pictographic(cp) else 0),
         # general-category quote side: 1 = Pi, 2 = Pf (LB15a/LB15b)
-        ("QSIDE", __import__("sz_spark.uax14", fromlist=["_quote_side"])._quote_side),
+        ("QSIDE", _quote_side),
         # East-Asian-Width F/W/H flag (LB19/LB30 refinements)
-        ("EAW", lambda cp: 1 if __import__("sz_spark.uax14", fromlist=["is_east_asian"]).is_east_asian(cp) else 0),
+        ("EAW", lambda cp: 1 if is_east_asian(cp) else 0),
         # unassigned Extended_Pictographic (LB30b second clause)
-        ("EPCN", lambda cp: 1 if __import__("sz_spark.uax14", fromlist=["is_extpict_cn"]).is_extpict_cn(cp) else 0),
+        ("EPCN", lambda cp: 1 if is_extpict_cn(cp) else 0),
     ):
         t0 = time.time()
         starts, props = rle(fn)
@@ -66,8 +68,8 @@ def main():
         "",
         "Run-length property tables over the full Unicode space",
         "(0x000000-0x10FFFF), one value change per entry, derived from the",
-        "conformance-tested scalar classifiers in sz_spark.uax29 / uax14 /",
-        "uax29_graphemes (public UCD data).  Consumed by sz_spark.uax_vec.",
+        "conformance-tested scalar classifiers in tests/uax29.py, uax14.py and",
+        "uax29_graphemes.py (public UCD data).  Consumed by sz_spark.uax_vec.",
         '"""',
         "",
     ]
@@ -75,8 +77,7 @@ def main():
         out.append(f"{name}_STARTS = {starts!r}")
         out.append(f"{name}_PROPS = {props!r}")
         out.append("")
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "sz_spark", "uax_tables_gen.py")
+    path = os.path.join(_ROOT, "sz_spark", "uax_tables_gen.py")
     with open(path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {path} ({os.path.getsize(path)} bytes)", file=sys.stderr)

@@ -19,8 +19,8 @@ Design note: the reference computes rolling hashes in exact-integer f64
 (every intermediate provably < 2^52, see serial.hpp:489-508 asserts), so
 the identical values are reproducible in uint64 modular arithmetic.  We
 implement the production path in uint64 (vectorized across a batch of
-texts x fingerprint dimensions) and keep an IEEE-faithful f64 mirror for
-conformance testing: the two must agree bit-for-bit.
+texts x fingerprint dimensions); an IEEE-faithful f64 mirror in
+tests/oracles.py must agree with it bit-for-bit.
 
 All kernels are vectorized across the *batch* axis (the reference's
 "candidate lane" design, similarities/serial.hpp:613-693) — the right
@@ -436,180 +436,6 @@ def _fp_padded_flat(
     # `count` that are NOT real count-of-min data (ADVICE r2); zeros make
     # the "counts not computed" contract unmistakable to callers
     return hashes, counts
-
-
-def _fingerprint_padded_batch_grouped(
-    batch: list[bytes], params: FingerprintParams
-) -> tuple[np.ndarray, np.ndarray]:
-    """Width-group-major batch kernel over a length-ASCENDING batch.
-    Round-1 production path, retained as a structurally independent
-    differential twin of the fused kernel (tests assert equality).
-
-    Three structural speedups over a naive loop, all exactness-preserving:
-
-    * dims sharing a window width process together, so the discarded-byte
-      gather is ONE padded column per step (not a per-dim fancy index);
-    * the modular reduction is the reference's own f64 Barrett pass
-      (floor-multiply by 1/m + clamp) — proven == integer ``x mod m``
-      because every intermediate stays an exact integer < 2^53
-      (fingerprints/serial.hpp:489-508; cross-checked in tests against
-      both the big-int and the IEEE-mirror oracles).  f64 multiply+floor
-      vectorizes ~10x faster than uint64 division in NumPy;
-    * the batch arrives sorted by length, so rows still active at byte
-      position p form a contiguous SUFFIX — updates run on slices, no
-      masks anywhere in the hot loop.
-    """
-    b = len(batch)
-    ndim = params.ndim
-    lengths = np.asarray([len(t) for t in batch], dtype=np.int64)
-    assert b == 0 or (np.diff(lengths) >= 0).all(), "batch must be length-sorted"
-    max_len = int(lengths.max()) if b else 0
-    widths = params.widths  # (D,) int64
-
-    terms = np.zeros((b, max_len + 1), dtype=np.float64)
-    for i, t in enumerate(batch):
-        if t:
-            terms[i, : len(t)] = np.frombuffer(t, dtype=np.uint8)
-    terms += 1.0  # byte + 1, exact in f64
-
-    sentinel = np.float64(2.0**60)  # larger than any state < 2^42
-    hashes = np.full((b, ndim), MAX_HASH_U32, dtype=np.uint32)
-    counts = np.zeros((b, ndim), dtype=np.uint32)
-
-    for w in np.unique(widths):
-        dims = np.nonzero(widths == w)[0]
-        mult = params.mult[dims].astype(np.float64)[None, :]  # (1, G)
-        mod = params.mod[dims].astype(np.float64)[None, :]
-        inv_mod = 1.0 / mod
-        disc = params.disc[dims].astype(np.float64)[None, :]
-        g = len(dims)
-        w = int(w)
-        state = np.zeros((b, g), dtype=np.float64)
-        minv = np.full((b, g), sentinel, dtype=np.float64)
-        count = np.zeros((b, g), dtype=np.float64)
-
-        def barrett(x, m, im):
-            r = x - np.floor(x * im) * m
-            r += m * (r < 0.0)
-            r -= m * (r >= m)
-            return r
-
-        prefix_end = min(w, max_len)
-        for p in range(prefix_end):
-            k = int(np.searchsorted(lengths, p, side="right"))
-            s = state[k:]
-            x = s * mult + terms[k:, p][:, None]
-            state[k:] = barrett(x, mod, inv_mod)
-        # boundary: first full window (texts with length >= w)
-        j0 = int(np.searchsorted(lengths, w, side="left"))
-        minv[j0:] = state[j0:]
-        count[j0:] = 1.0
-
-        for p in range(w, max_len):
-            k = int(np.searchsorted(lengths, p, side="right"))
-            s = state[k:]
-            x = s * mult + terms[k:, p][:, None] + disc * terms[k:, p - w][:, None]
-            s = barrett(x, mod, inv_mod)
-            state[k:] = s
-            mv = minv[k:]
-            c = count[k:]
-            c *= s >= mv
-            c += s <= mv
-            np.minimum(mv, s, out=mv)
-
-        set_mask = minv < sentinel
-        hashes[:, dims] = np.where(
-            set_mask,
-            minv.astype(np.uint64) & _U64(MAX_HASH_U32),
-            np.uint64(MAX_HASH_U32),
-        ).astype(np.uint32)
-        counts[:, dims] = np.where(set_mask, count, 0.0).astype(np.uint32)
-
-    return hashes, counts
-
-
-def fingerprint_one_scalar(
-    text: bytes, ndim: int = 128, widths: Sequence[int] | None = None, seed: int = 0
-) -> tuple[list[int], list[int]]:
-    """Slow, independent scalar oracle in pure-Python big-int arithmetic.
-
-    Used only by tests to cross-check :func:`fingerprints` (the same
-    differential-testing strategy as the reference's in-test NumPy
-    Wagner-Fischer oracle, test/similarities.py:48-66).
-    """
-    params = fingerprint_params(ndim, widths, seed)
-    out_h, out_c = [], []
-    data = list(text)
-    for d in range(ndim):
-        w = int(params.widths[d])
-        m = int(params.mod[d])
-        mul = int(params.mult[d])
-        if len(data) < w:
-            out_h.append(MAX_HASH_U32)
-            out_c.append(0)
-            continue
-        state = 0
-        for i in range(w):
-            state = (state * mul + data[i] + 1) % m
-        best, cnt = state, 1
-        for i in range(w, len(data)):
-            state = (state * mul + data[i] + 1 - (data[i - w] + 1) * pow(mul, w, m)) % m
-            if state < best:
-                best, cnt = state, 1
-            elif state == best:
-                cnt += 1
-        out_h.append(best & MAX_HASH_U32)
-        out_c.append(cnt)
-    return out_h, out_c
-
-
-def fingerprint_one_f64(
-    text: bytes, ndim: int = 128, widths: Sequence[int] | None = None, seed: int = 0
-) -> tuple[list[int], list[int]]:
-    """IEEE-f64 mirror of the reference's floating path, for conformance.
-
-    Follows the exact op sequence of fingerprints/serial.hpp:1240-1264
-    (two-reduction roll with the negative discarding multiplier and the
-    clamped Barrett mod of :1309-1321).  Tests assert it agrees with the
-    uint64 production path bit-for-bit, evidencing that our integers ARE
-    the reference's f64 states.
-    """
-    params = fingerprint_params(ndim, widths, seed)
-    out_h, out_c = [], []
-    data = list(text)
-    for d in range(ndim):
-        w = int(params.widths[d])
-        m = float(params.mod[d])
-        mul = float(params.mult[d])
-        inv_m = 1.0 / m
-        neg_disc = 1.0
-        for _ in range(w - 1):
-            neg_disc = np.fmod(neg_disc * mul, m)
-        neg_disc = -neg_disc
-
-        def barrett(x: float) -> float:
-            q = np.floor(x * inv_m)
-            r = x - q * m
-            r += m * (r < 0.0)
-            r -= m * (r >= m)
-            return float(r)
-
-        if len(data) < w:
-            out_h.append(MAX_HASH_U32)
-            out_c.append(0)
-            continue
-        state = 0.0
-        for i in range(w):
-            state = barrett(state * mul + (data[i] + 1.0))
-        best, cnt = state, 1
-        for i in range(w, len(data)):
-            state = barrett(neg_disc * (data[i - w] + 1.0) + state)
-            state = barrett(state * mul + (data[i] + 1.0))
-            cnt = cnt * (state >= best) + (state <= best)
-            best = min(best, state)
-        out_h.append(int(best) & MAX_HASH_U32)
-        out_c.append(int(cnt))
-    return out_h, out_c
 
 
 class FingerprintStream:
@@ -1224,58 +1050,6 @@ def expand_class_costs(byte_to_class: np.ndarray, class_costs: np.ndarray) -> np
     return cc[b2c[:, None], b2c[None, :]]
 
 
-def levenshtein_scalar(a: bytes, b: bytes) -> int:
-    """Slow Wagner-Fischer oracle for tests — mirrors the reference's own
-    in-test baseline (test/similarities.py:48-66)."""
-    if not a:
-        return len(b)
-    if not b:
-        return len(a)
-    prev = list(range(len(a) + 1))
-    for i, cb in enumerate(b, 1):
-        cur = [i] + [0] * len(a)
-        for j, ca in enumerate(a, 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-        prev = cur
-    return prev[-1]
-
-
-def gotoh_scalar(
-    a: bytes,
-    b: bytes,
-    sub,
-    gap_open: int,
-    gap_extend: int,
-    minimize: bool,
-    local: bool,
-) -> int:
-    """Slow full-Gotoh (explicit E/F/H) oracle — validates the vectorized
-    kernel's no-reopen shortcut."""
-    big = 1 << 40
-    worst = big if minimize else -big
-    pick = min if minimize else max
-    la, lb = len(a), len(b)
-    H = [[0] * (la + 1) for _ in range(lb + 1)]
-    E = [[worst] * (la + 1) for _ in range(lb + 1)]
-    F = [[worst] * (la + 1) for _ in range(lb + 1)]
-    if not local:
-        for j in range(1, la + 1):
-            H[0][j] = gap_open + gap_extend * (j - 1)
-        for i in range(1, lb + 1):
-            H[i][0] = gap_open + gap_extend * (i - 1)
-    best = 0
-    for i in range(1, lb + 1):
-        for j in range(1, la + 1):
-            E[i][j] = pick(H[i][j - 1] + gap_open, E[i][j - 1] + gap_extend)
-            F[i][j] = pick(H[i - 1][j] + gap_open, F[i - 1][j] + gap_extend)
-            h = pick(pick(E[i][j], F[i][j]), H[i - 1][j - 1] + sub(a[j - 1], b[i - 1]))
-            if local:
-                h = max(h, 0)
-                best = max(best, h)
-            H[i][j] = h
-    return best if local else H[lb][la]
-
-
 # ---------------------------------------------------------------------------
 # Jaro-Winkler (pipeline extra — NOT reference-derived; Winkler 1990)
 # ---------------------------------------------------------------------------
@@ -1375,48 +1149,6 @@ def fnv1a_splitmix_batch(tokens: Sequence[bytes]) -> np.ndarray:
                 h = out[active]
                 out[active] = (h ^ mat[active, p].astype(_U64)) * prime
     return splitmix64(out)
-
-
-def simhash64(tokens_per_doc: Sequence[Sequence[bytes]], seed: int = 0) -> np.ndarray:
-    """64-bit SimHash over token multisets (pipeline extra), fully
-    vectorized: one flat FNV batch over every token, per-bit ±1 balances
-    segment-summed per doc, sign -> signature bits.
-
-    Token hash is splitmix64 over an FNV-1a fold so it is deterministic
-    and platform-independent (+seed, matching the scalar definition)."""
-    n_docs = len(tokens_per_doc)
-    out = np.zeros(n_docs, dtype=np.uint64)
-    if n_docs == 0:
-        return out
-    counts = np.asarray([len(t) for t in tokens_per_doc], dtype=np.int64)
-    flat = [t for toks in tokens_per_doc for t in toks]
-    if not flat:
-        return out
-    with np.errstate(over="ignore"):
-        h = fnv1a_splitmix_batch(flat) + _U64(seed & 0xFFFFFFFFFFFFFFFF)
-    # (n_tokens, 64) ±1 bit matrix via unpackbits (C-speed; broadcasted
-    # uint64 shifts are ~20x slower), segment-summed per document.
-    # little-endian byte view => column j is bit j of the uint64.
-    bits = np.unpackbits(
-        np.ascontiguousarray(h).view(np.uint8).reshape(-1, 8),
-        axis=1,
-        bitorder="little",
-    )
-    pm = bits.astype(np.int32) * 2 - 1
-    starts = np.zeros(n_docs, dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    nonempty = counts > 0
-    # segment sums as cumsum differences (np.add.reduceat over wide rows
-    # is ~10x slower than one contiguous cumsum + two gathers); int32 is
-    # safe for < 2^31 tokens per batch (Arrow batches are ~10^4 rows)
-    csum = np.zeros((pm.shape[0] + 1, 64), dtype=np.int32)
-    np.cumsum(pm, axis=0, out=csum[1:])
-    ends = starts + counts
-    sums = csum[ends[nonempty]] - csum[starts[nonempty]]
-    sig_bits = (sums > 0).astype(np.uint64)
-    weights = _U64(1) << np.arange(64, dtype=_U64)
-    out[nonempty] = (sig_bits * weights[None, :]).sum(axis=1, dtype=np.uint64)
-    return out
 
 
 def hash_bytes_u64(data: bytes, seed: int = 0) -> int:

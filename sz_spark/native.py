@@ -14,7 +14,8 @@ Everything here is best-effort: any failure (no compiler, read-only
 temp, load error) disables the native path for the process and the
 NumPy kernels take over — correctness never depends on this module.
 Set SZ_NO_NATIVE=1 to force the NumPy path (the differential tests use
-this to compare both).
+this to compare both); any value other than unset, '', '0' or '1' raises
+ValueError.
 """
 
 from __future__ import annotations
@@ -101,8 +102,11 @@ def get_lib() -> ctypes.CDLL | None:
     global _lib, _tried
     if _tried:
         return _lib
+    raw = os.environ.get("SZ_NO_NATIVE", "")
+    if raw not in ("", "0", "1"):
+        raise ValueError(f"SZ_NO_NATIVE must be unset, '', '0' or '1', got {raw!r}")
     _tried = True
-    if os.environ.get("SZ_NO_NATIVE") == "1":
+    if raw == "1":
         return None
     try:
         _lib = _build()

@@ -6,9 +6,10 @@ stop-band suppression -> length + histogram prune -> banded-DP
 edit-similarity scoring -> threshold -> connected components -> entity
 clusters.
 
-Each stage is resumable via CheckpointManager; evaluation computes
+Each stage is resumable via CheckpointManager; evaluate_pairs computes
 pairwise precision/recall/F1 against the synthetic ground truth at a
-fixed blocking key, per the BASELINE.json metric.
+fixed blocking key, per the BASELINE.json metric (tests/test_pipeline.py
+test_f1_gate builds the labeled transcripts and runs it).
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from pyspark.sql import functions as F
 
 from sz_spark import blocking, canonicalize as canon, clustering, scoring
 from sz_spark.lineage import CheckpointManager
-from sz_spark.transcripts import build_transcripts
 
 
 @dataclass
@@ -279,16 +279,3 @@ def evaluate_pairs(
         "f1": f1,
     }
 
-
-def run_on_sf_dir(
-    spark: SparkSession, sf_dir: str, cfg: PipelineConfig | None = None
-) -> dict:
-    """Convenience: synth transcripts from sf_dir docs, run, evaluate."""
-    cfg = cfg or PipelineConfig()
-    transcripts = build_transcripts(spark, sf_dir, with_entity_id=True)
-    stages = run_pipeline(spark, transcripts.drop("entity_id"), cfg)
-    docs_ent = canon.canonicalize(transcripts, carry=["entity_id"]).select(
-        "conv_id", "entity_id"
-    )
-    metrics = evaluate_pairs(stages["scored"], docs_ent, cfg.threshold)
-    return {"stages": stages, "metrics": metrics}

@@ -505,7 +505,7 @@ def str_segmentation_ops(spark, sf):
     test_graphemes_vs_codepoints), UAX-29 sentences (core rules,
     uax29.sentence_segments), UAX-14 line-break opportunities (regex
     twin columns + the full LB1-LB31 engine in n_lb_opps_full —
-    sz_spark.uax14), UAX-29 word segmentation (uax29.wordbreak_segments with
+    sz_spark.uax_vec), UAX-29 word segmentation (uax29.wordbreak_segments with
     full vendored property tables — Katakana, WB15/16 regional
     indicators, ZWJ emoji — pytest-pinned; the cross-engine row checks
     the tiling invariant on letters+spaces), and the separator-RUN

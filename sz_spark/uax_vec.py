@@ -1,12 +1,12 @@
 """Vectorized (table-driven NumPy) UAX-29 / UAX-14 segmentation engines.
 
-The scalar engines (sz_spark.uax29 / uax14 / uax29_graphemes — direct
-per-codepoint transcriptions of the reference's serial kernels,
-utf8_wordbreaks/serial.h, utf8_sentences/serial.h:184-255,
-utf8_linebreaks/serial.h, utf8_graphemes/serial.h:105-205) are
-correctness-gold but interpret one Python step per codepoint.  This
-module re-expresses each rule chain as whole-array NumPy over an entire
-Arrow batch at once:
+The scalar engines (tests/uax29.py, tests/uax14.py,
+tests/uax29_graphemes.py — direct per-codepoint transcriptions of the
+reference's serial kernels, utf8_wordbreaks/serial.h,
+utf8_sentences/serial.h:184-255, utf8_linebreaks/serial.h,
+utf8_graphemes/serial.h:105-205) are the tests' correctness gold but
+interpret one Python step per codepoint.  This module re-expresses each
+rule chain as whole-array NumPy over an entire Arrow batch at once:
 
 * property lookup: ``PROPS[searchsorted(STARTS, cps, 'right') - 1]``
   over the generated full-coverage run tables (sz_spark.uax_tables_gen);
@@ -17,6 +17,9 @@ Arrow batch at once:
   run-length-from-last-non-RI arithmetic;
 * the rule chains as a first-match-wins cascade over an undecided mask,
   in exactly the scalar engines' rule order.
+
+Property class codes come from sz_spark.uax_classes, the run tables
+from sz_spark.uax_tables_gen; this module imports nothing else.
 
 Batch trick: the texts of a batch are joined with a single LF
 (U+000A) separator and segmented in ONE pass.  LF is a hard barrier in
@@ -38,10 +41,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from sz_spark import uax_classes as _C
 from sz_spark import uax_tables_gen as _T
-from sz_spark import uax14 as _L
-from sz_spark import uax29 as _W
-from sz_spark import uax29_graphemes as _G
 
 # --- property lookup tables -------------------------------------------------
 
@@ -151,29 +152,29 @@ def _lut(size, members):
 
 # WB LUTs are sized 19 so they accept the extended WSegSpace class code
 # (_WBX_WSEG = 18, plain class Other) used by the fused fast path.
-_WB_IGN = _lut(19, (_W.EXTEND, _W.FORMAT, _W.ZWJ))
-_WB_NEWL = _lut(19, (_W.CR, _W.LF, _W.NEWLINE))
-_WB_AH = _lut(19, (_W.ALETTER, _W.HEBREW))
-_WB_MIDNLQ = _lut(19, (_W.MIDNUMLET, _W.SINGLE_QUOTE))
-_WSEG_ARR = np.asarray(sorted(_W._WSEGSPACE_CPS), dtype=np.int64)
+_WB_IGN = _lut(19, (_C.EXTEND, _C.FORMAT, _C.ZWJ))
+_WB_NEWL = _lut(19, (_C.CR, _C.LF, _C.NEWLINE))
+_WB_AH = _lut(19, (_C.ALETTER, _C.HEBREW))
+_WB_MIDNLQ = _lut(19, (_C.MIDNUMLET, _C.SINGLE_QUOTE))
+_WSEG_ARR = np.asarray(sorted(_C._WSEGSPACE_CPS), dtype=np.int64)
 
-_SB_IGN = _lut(15, (_W.S_EXTEND, _W.S_FORMAT))
-_SB_PARA = _lut(15, (_W.S_SEP, _W.S_CR, _W.S_LF))
-_SB_BLOCK = _lut(15, _W._SB8_BLOCKERS)
-_SB_TERM = _lut(15, (_W.S_ATERM, _W.S_STERM))
-_SB_CLOSE1 = _lut(15, (_W.S_CLOSE,))
-_SB_SP1 = _lut(15, (_W.S_SP,))
+_SB_IGN = _lut(15, (_C.S_EXTEND, _C.S_FORMAT))
+_SB_PARA = _lut(15, (_C.S_SEP, _C.S_CR, _C.S_LF))
+_SB_BLOCK = _lut(15, _C._SB8_BLOCKERS)
+_SB_TERM = _lut(15, (_C.S_ATERM, _C.S_STERM))
+_SB_CLOSE1 = _lut(15, (_C.S_CLOSE,))
+_SB_SP1 = _lut(15, (_C.S_SP,))
 
 _NLB = 44  # Line_Break classes incl. newest-TR14 AK/AP/AS/VF/VI/HH + CB
-_LB_NONABS = _lut(_NLB, (_L.LB_BK, _L.LB_CR, _L.LB_LF, _L.LB_NL, _L.LB_SP, _L.LB_ZW))
-_LB_MAND = _lut(_NLB, (_L.LB_BK, _L.LB_CR, _L.LB_LF, _L.LB_NL))
-_LB_ATTACH = _lut(_NLB, (_L.LB_CM, _L.LB_ZWJ))
-_LB13_SET = _lut(_NLB, (_L.LB_CL, _L.LB_CP, _L.LB_EX, _L.LB_SY))  # IS: LB15.3/15.4
-_LB_IDEM = _lut(_NLB, (_L.LB_ID, _L.LB_EB, _L.LB_EM))
-_LB_ALHL = _lut(_NLB, (_L.LB_AL, _L.LB_HL))
-_LB15A_LEFT = _lut(_NLB, _L._LB15A_LEFT)
-_LB15B_RIGHT = _lut(_NLB, _L._LB15B_RIGHT)
-_LB20A_LEFT = _lut(_NLB, _L._LB20A_LEFT)
+_LB_NONABS = _lut(_NLB, (_C.LB_BK, _C.LB_CR, _C.LB_LF, _C.LB_NL, _C.LB_SP, _C.LB_ZW))
+_LB_MAND = _lut(_NLB, (_C.LB_BK, _C.LB_CR, _C.LB_LF, _C.LB_NL))
+_LB_ATTACH = _lut(_NLB, (_C.LB_CM, _C.LB_ZWJ))
+_LB13_SET = _lut(_NLB, (_C.LB_CL, _C.LB_CP, _C.LB_EX, _C.LB_SY))  # IS: LB15.3/15.4
+_LB_IDEM = _lut(_NLB, (_C.LB_ID, _C.LB_EB, _C.LB_EM))
+_LB_ALHL = _lut(_NLB, (_C.LB_AL, _C.LB_HL))
+_LB15A_LEFT = _lut(_NLB, _C._LB15A_LEFT)
+_LB15B_RIGHT = _lut(_NLB, _C._LB15B_RIGHT)
+_LB20A_LEFT = _lut(_NLB, _C._LB20A_LEFT)
 
 
 # --- cascade helper ---------------------------------------------------------
@@ -225,9 +226,9 @@ def _build_wb_pair_tables():
     0=no-break, or a context-rule code; DEFAULT is the outcome when
     that context rule's condition fails (the rest of the chain walked
     to its first terminal match)."""
-    ah = set((_W.ALETTER, _W.HEBREW))
-    midnlq = set((_W.MIDNUMLET, _W.SINGLE_QUOTE))
-    newl = set((_W.CR, _W.LF, _W.NEWLINE))
+    ah = set((_C.ALETTER, _C.HEBREW))
+    midnlq = set((_C.MIDNUMLET, _C.SINGLE_QUOTE))
+    newl = set((_C.CR, _C.LF, _C.NEWLINE))
 
     def chain(p, q):
         """Yield (kind, value) decisions in scalar-rule order:
@@ -236,33 +237,33 @@ def _build_wb_pair_tables():
             yield "T", 1  # de-ignored after newline
         if p in ah and q in ah:
             yield "T", 0  # WB5
-        if p in ah and (q == _W.MIDLETTER or q in midnlq):
+        if p in ah and (q == _C.MIDLETTER or q in midnlq):
             yield "C", _C6  # WB6: next base AHLetter
-        if (p == _W.MIDLETTER or p in midnlq) and q in ah:
+        if (p == _C.MIDLETTER or p in midnlq) and q in ah:
             yield "C", _C7  # WB7: prev-prev base AHLetter
-        if p == _W.HEBREW and q == _W.SINGLE_QUOTE:
+        if p == _C.HEBREW and q == _C.SINGLE_QUOTE:
             yield "T", 0  # WB7a
-        if p == _W.HEBREW and q == _W.DOUBLE_QUOTE:
+        if p == _C.HEBREW and q == _C.DOUBLE_QUOTE:
             yield "C", _C7B  # WB7b: next base Hebrew
-        if p == _W.DOUBLE_QUOTE and q == _W.HEBREW:
+        if p == _C.DOUBLE_QUOTE and q == _C.HEBREW:
             yield "C", _C7C  # WB7c: prev-prev base Hebrew
-        if p == _W.NUMERIC and q == _W.NUMERIC:
+        if p == _C.NUMERIC and q == _C.NUMERIC:
             yield "T", 0  # WB8
-        if p in ah and q == _W.NUMERIC:
+        if p in ah and q == _C.NUMERIC:
             yield "T", 0  # WB9
-        if p == _W.NUMERIC and q in ah:
+        if p == _C.NUMERIC and q in ah:
             yield "T", 0  # WB10
-        if (p == _W.MIDNUM or p in midnlq) and q == _W.NUMERIC:
+        if (p == _C.MIDNUM or p in midnlq) and q == _C.NUMERIC:
             yield "C", _C11  # WB11: prev-prev base Numeric
-        if p == _W.NUMERIC and (q == _W.MIDNUM or q in midnlq):
+        if p == _C.NUMERIC and (q == _C.MIDNUM or q in midnlq):
             yield "C", _C12  # WB12: next base Numeric
-        if p == _W.KATAKANA and q == _W.KATAKANA:
+        if p == _C.KATAKANA and q == _C.KATAKANA:
             yield "T", 0  # WB13
-        if (p in ah or p in (_W.NUMERIC, _W.KATAKANA, _W.EXTENDNUMLET)) and q == _W.EXTENDNUMLET:
+        if (p in ah or p in (_C.NUMERIC, _C.KATAKANA, _C.EXTENDNUMLET)) and q == _C.EXTENDNUMLET:
             yield "T", 0  # WB13a
-        if p == _W.EXTENDNUMLET and (q in ah or q in (_W.NUMERIC, _W.KATAKANA)):
+        if p == _C.EXTENDNUMLET and (q in ah or q in (_C.NUMERIC, _C.KATAKANA)):
             yield "T", 0  # WB13b
-        if p == _W.RI and q == _W.RI:
+        if p == _C.RI and q == _C.RI:
             yield "C", _CRI  # WB15/16: RI pair parity
         yield "T", 1  # WB999
 
@@ -285,7 +286,7 @@ def _build_wb_pair_tables():
 
 _WB_ACT, _WB_DFT = _build_wb_pair_tables()
 _WSEG_BMP = np.zeros(0x10000, dtype=bool)
-_WSEG_BMP[list(_W._WSEGSPACE_CPS)] = True
+_WSEG_BMP[list(_C._WSEGSPACE_CPS)] = True
 
 # --- fused fast-path tables: extended 19-class props (18 = WSegSpace, a
 # raw-codepoint set in the scalar engine, plain Word_Break class Other —
@@ -308,17 +309,17 @@ def _build_wbx_tables():
     chain in rule order — WB3, WB3a, WB3b, [WB3c/WB4 unreachable: ZWJ /
     Extend / Format pairs get the _WBX_SLOW marker], WB3d, then the
     post-fold chain of _build_wb_pair_tables."""
-    igns = (_W.EXTEND, _W.FORMAT, _W.ZWJ)
-    newl = (_W.CR, _W.LF, _W.NEWLINE)
+    igns = (_C.EXTEND, _C.FORMAT, _C.ZWJ)
+    newl = (_C.CR, _C.LF, _C.NEWLINE)
     act = np.full((19, 19), 1, dtype=np.int8)
     dft = np.full((19, 19), 1, dtype=np.int8)
     for pe in range(19):
         for qe in range(19):
-            p = _W.OTHER if pe == _WBX_WSEG else pe
-            q = _W.OTHER if qe == _WBX_WSEG else qe
+            p = _C.OTHER if pe == _WBX_WSEG else pe
+            q = _C.OTHER if qe == _WBX_WSEG else qe
             if p in igns or q in igns:
                 act[pe, qe] = dft[pe, qe] = _WBX_SLOW
-            elif p == _W.CR and q == _W.LF:
+            elif p == _C.CR and q == _C.LF:
                 act[pe, qe] = dft[pe, qe] = 0  # WB3
             elif p in newl or q in newl:
                 act[pe, qe] = dft[pe, qe] = 1  # WB3a / WB3b
@@ -346,20 +347,20 @@ def word_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None) ->
         return np.zeros(0, dtype=bool)
     px = wbx_props(cps)  # extended classes: WSegSpace = _WBX_WSEG
     # three int8 compares beat a LUT gather for the ignorable mask
-    ign = (px == _W.EXTEND) | (px == _W.FORMAT) | (px == _W.ZWJ)
+    ign = (px == _C.EXTEND) | (px == _C.FORMAT) | (px == _C.ZWJ)
     any_ign = bool(ign.any())
 
     if any_ign:
         d = np.full(n - 1, -1, dtype=np.int8)
         idx = np.arange(n)
         props = px.copy()
-        props[px == _WBX_WSEG] = _W.OTHER
+        props[px == _WBX_WSEG] = _C.OTHER
         P, Q = props[:-1], props[1:]
 
-        _rule(d, (P == _W.CR) & (Q == _W.LF), 0)  # WB3
+        _rule(d, (P == _C.CR) & (Q == _C.LF), 0)  # WB3
         _rule(d, _WB_NEWL[P], 1)  # WB3a
         _rule(d, _WB_NEWL[Q], 1)  # WB3b
-        zwj_left = (P == _W.ZWJ) & (d == -1)
+        zwj_left = (P == _C.ZWJ) & (d == -1)
         if zwj_left.any():  # WB3c (raw adjacency, lazy ExtPict gather)
             sub = np.flatnonzero(zwj_left)
             ep_sub = extpict(cps[1:][sub])
@@ -410,7 +411,7 @@ def word_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None) ->
                 karr_s = nb_ext[sub + 2]
             else:
                 karr_s = sub + 2
-            kp_s = np.where(karr_s < n, props[np.minimum(karr_s, n - 1)], _W.OTHER)
+            kp_s = np.where(karr_s < n, props[np.minimum(karr_s, n - 1)], _C.OTHER)
         # lookback: element base before the left base
         need_j2 = (acts_s == _C7) | (acts_s == _C7C) | (acts_s == _C11)
         if need_j2.any():
@@ -419,14 +420,14 @@ def word_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None) ->
                 j2_s = np.where(jarr_s >= 1, lb_at[np.maximum(jarr_s - 1, 0)], -1)
             else:
                 j2_s = sub - 1  # element base == position on the fast path
-            j2p_s = np.where(j2_s >= 0, props[np.maximum(j2_s, 0)], _W.OTHER)
+            j2p_s = np.where(j2_s >= 0, props[np.maximum(j2_s, 0)], _C.OTHER)
         for code, cond in (
             (_C6, (lambda: _WB_AH[kp_s])),
-            (_C7B, (lambda: kp_s == _W.HEBREW)),
-            (_C12, (lambda: kp_s == _W.NUMERIC)),
+            (_C7B, (lambda: kp_s == _C.HEBREW)),
+            (_C12, (lambda: kp_s == _C.NUMERIC)),
             (_C7, (lambda: _WB_AH[j2p_s])),
-            (_C7C, (lambda: j2p_s == _W.HEBREW)),
-            (_C11, (lambda: j2p_s == _W.NUMERIC)),
+            (_C7C, (lambda: j2p_s == _C.HEBREW)),
+            (_C11, (lambda: j2p_s == _C.NUMERIC)),
         ):
             m_ = acts_s == code
             if m_.any():
@@ -445,7 +446,7 @@ def word_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None) ->
                 el_props = props
                 mlen = len(el_props)
                 rj = sub  # element rank == position on the fast path
-            ri_run_incl = _run_ending_incl(el_props == _W.RI, np.arange(mlen))
+            ri_run_incl = _run_ending_incl(el_props == _C.RI, np.arange(mlen))
             even = m_ & ((ri_run_incl[rj] - 1) % 2 == 0)
             d[sub[even]] = 0
             d[sub[m_ & ~even]] = 1
@@ -472,26 +473,26 @@ def _build_sbx_table():
     _SBX_SCAN — SB8's forward blocker scan (ATerm behind, non-blocker Q,
                 rest-of-chain would break),
     _SBX_WALK — P in {Sp, Close}: the SATerm Close* Sp* walk decides."""
-    blockers = _W._SB8_BLOCKERS
-    para = (_W.S_SEP, _W.S_CR, _W.S_LF)
-    igns = (_W.S_EXTEND, _W.S_FORMAT)
+    blockers = _C._SB8_BLOCKERS
+    para = (_C.S_SEP, _C.S_CR, _C.S_LF)
+    igns = (_C.S_EXTEND, _C.S_FORMAT)
 
     def tail(p, q, k2):
         """Chain outcome after SB7 given the walk result k2: 0/1/'scan'."""
-        if k2 not in (_W.S_ATERM, _W.S_STERM):
+        if k2 not in (_C.S_ATERM, _C.S_STERM):
             return 0  # SB998
         scan = False
-        if k2 == _W.S_ATERM:  # SB8
+        if k2 == _C.S_ATERM:  # SB8
             if q in blockers:
-                if q == _W.S_LOWER:
+                if q == _C.S_LOWER:
                     return 0
             else:
                 scan = True  # outcome 0 if the next blocker is Lower
-        if q in (_W.S_SCONTINUE, _W.S_ATERM, _W.S_STERM):
+        if q in (_C.S_SCONTINUE, _C.S_ATERM, _C.S_STERM):
             return 0  # SB8a
-        if p != _W.S_SP and q == _W.S_CLOSE:
+        if p != _C.S_SP and q == _C.S_CLOSE:
             return 0  # SB9 (sp_seen == (p is Sp))
-        if q == _W.S_SP or q in para:
+        if q == _C.S_SP or q in para:
             return 0  # SB10
         return "scan" if scan else 1  # SB11
 
@@ -500,19 +501,19 @@ def _build_sbx_table():
         for q in range(15):
             if p in igns or q in igns:
                 act[p, q] = _SBX_SLOW
-            elif p == _W.S_CR and q == _W.S_LF:
+            elif p == _C.S_CR and q == _C.S_LF:
                 act[p, q] = 0  # SB3
             elif p in para:
                 act[p, q] = 1  # SB4
-            elif p == _W.S_ATERM and q == _W.S_NUMERIC:
+            elif p == _C.S_ATERM and q == _C.S_NUMERIC:
                 act[p, q] = 0  # SB6
-            elif p == _W.S_ATERM and q == _W.S_UPPER:
+            elif p == _C.S_ATERM and q == _C.S_UPPER:
                 act[p, q] = _SBX_SB7  # default (tail with k2=ATerm) is 1
-            elif p in (_W.S_SP, _W.S_CLOSE):
+            elif p in (_C.S_SP, _C.S_CLOSE):
                 # walk result k2 is any non-Sp/Close class (or Other for
                 # out-of-text); bake only if the outcome is invariant
                 outs = {tail(p, q, k2) for k2 in range(15)
-                        if k2 not in (_W.S_SP, _W.S_CLOSE, *igns)}
+                        if k2 not in (_C.S_SP, _C.S_CLOSE, *igns)}
                 act[p, q] = outs.pop() if len(outs) == 1 and "scan" not in outs else _SBX_WALK
             else:
                 t = tail(p, q, p)
@@ -553,7 +554,7 @@ def _sbx_scan(d, cand, props, n):
         first = np.argmax(bw, axis=1)
         hit = ai[has]
         pos = lo[has] + first[has]
-        res[hit] = np.where(props[pos] == _W.S_LOWER, 0, 1)
+        res[hit] = np.where(props[pos] == _C.S_LOWER, 0, 1)
         active[hit] = False
         cur[ai[~has]] += W
         active &= cur < n
@@ -571,7 +572,7 @@ def sentence_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
         return np.zeros(0, dtype=bool)
     props = sb_props(cps)
     # two int8 compares beat a LUT gather for the ignorable mask
-    ign = (props == _W.S_EXTEND) | (props == _W.S_FORMAT)
+    ign = (props == _C.S_EXTEND) | (props == _C.S_FORMAT)
     any_ign = bool(ign.any())
 
     if not any_ign:
@@ -610,21 +611,21 @@ def sentence_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
                 else:
                     s7 = text_start_of[p7 + 1]
                 ok = j2 >= s7
-                j2p = np.where(ok, props[np.maximum(j2, 0)], _W.S_OTHER)
-                hit = (j2p == _W.S_UPPER) | (j2p == _W.S_LOWER)
+                j2p = np.where(ok, props[np.maximum(j2, 0)], _C.S_OTHER)
+                hit = (j2p == _C.S_UPPER) | (j2p == _C.S_LOWER)
                 d[p7[hit]] = 0
                 d[p7[~hit]] = 1  # baked default: tail(ATerm, Upper) = 1
             mw = acts_s == _SBX_WALK
             if mw.any():  # P in {Sp, Close}: SATerm Close* Sp* walk
                 pw = sub[mw]
-                is_sp = props == _W.S_SP
+                is_sp = props == _C.S_SP
                 j = pw.copy()
                 sp_here = is_sp[j]
                 if sp_here.any():  # skip the Sp run (runs never span the
                     rs = _run_starts(is_sp)  # LF separator: LF is not Sp)
                     st = rs[np.searchsorted(rs, j[sp_here], side="right") - 1]
                     j[sp_here] = st - 1
-                is_cl = props == _W.S_CLOSE
+                is_cl = props == _C.S_CLOSE
                 inb = j >= 0
                 cl_here = np.zeros(len(j), dtype=bool)
                 cl_here[inb] = is_cl[j[inb]]
@@ -632,7 +633,7 @@ def sentence_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
                     rc = _run_starts(is_cl)
                     st = rc[np.searchsorted(rc, j[cl_here], side="right") - 1]
                     j[cl_here] = st - 1
-                k2cls = np.where(j >= 0, props[np.maximum(j, 0)], _W.S_OTHER)
+                k2cls = np.where(j >= 0, props[np.maximum(j, 0)], _C.S_OTHER)
                 saterm = _SB_TERM[k2cls]
                 d[pw[~saterm]] = 0  # SB998
                 if saterm.any():
@@ -641,11 +642,11 @@ def sentence_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
                     Qs = props[ps + 1]
                     sp_seen = is_sp[ps]  # element base == position
                     out = np.ones(len(ps), dtype=np.int8)
-                    atm = k2s == _W.S_ATERM
-                    out[atm & (Qs == _W.S_LOWER)] = 0  # SB8, blocker=Q
-                    out[(Qs == _W.S_SCONTINUE) | _SB_TERM[Qs]] = 0  # SB8a
-                    out[(~sp_seen) & (Qs == _W.S_CLOSE)] = 0  # SB9
-                    out[(Qs == _W.S_SP) | _SB_PARA[Qs]] = 0  # SB10
+                    atm = k2s == _C.S_ATERM
+                    out[atm & (Qs == _C.S_LOWER)] = 0  # SB8, blocker=Q
+                    out[(Qs == _C.S_SCONTINUE) | _SB_TERM[Qs]] = 0  # SB8a
+                    out[(~sp_seen) & (Qs == _C.S_CLOSE)] = 0  # SB9
+                    out[(Qs == _C.S_SP) | _SB_PARA[Qs]] = 0  # SB10
                     need = atm & ~_SB_BLOCK[Qs] & (out == 1)
                     keep = ~need
                     d[ps[keep]] = out[keep]
@@ -669,7 +670,7 @@ def sentence_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
     d = dec[1:]
     P, Q = props[:-1], props[1:]
 
-    _rule(d, (P == _W.S_CR) & (Q == _W.S_LF), 0)  # SB3
+    _rule(d, (P == _C.S_CR) & (Q == _C.S_LF), 0)  # SB3
     _rule(d, _SB_PARA[P], 1)  # SB4
     _rule(d, _SB_IGN[Q], 0)  # SB5
     jarr = lb_at[:-1]
@@ -681,18 +682,18 @@ def sentence_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
     # its own (non-SATerm) base, so SB998 attaches — never a break
     # (reference parity: tests/test_seg_reference_vectors.py)
     _rule(d, _SB_PARA[jp], 0)
-    _rule(d, (jp == _W.S_ATERM) & (Q == _W.S_NUMERIC), 0)  # SB6
+    _rule(d, (jp == _C.S_ATERM) & (Q == _C.S_NUMERIC), 0)  # SB6
 
     j2 = np.where(jarr >= 1, lb_at[np.maximum(jarr - 1, 0)], -1)
     j2_ok = (j2 >= 0) & (j2 >= s_i)
-    j2p = np.where(j2_ok, props[np.maximum(j2, 0)], _W.S_OTHER)
-    _rule(d, (jp == _W.S_ATERM) & (Q == _W.S_UPPER)
-          & ((j2p == _W.S_UPPER) | (j2p == _W.S_LOWER)), 0)  # SB7
+    j2p = np.where(j2_ok, props[np.maximum(j2, 0)], _C.S_OTHER)
+    _rule(d, (jp == _C.S_ATERM) & (Q == _C.S_UPPER)
+          & ((j2p == _C.S_UPPER) | (j2p == _C.S_LOWER)), 0)  # SB7
 
     # Fast path: a batch with no SATerm at all decides every remaining
     # position at SB998 (no terminator behind) — skip the element walk,
     # the forward scan and the tail rules entirely.
-    if not np.any((props == _W.S_ATERM) | (props == _W.S_STERM)):
+    if not np.any((props == _C.S_ATERM) | (props == _C.S_STERM)):
         d[d == -1] = 0
         return dec == 1
 
@@ -705,31 +706,31 @@ def sentence_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
         ranks = np.cumsum(~ign) - 1
         rj = np.clip(ranks[np.maximum(jarr, 0)], 0, m - 1)
     if m:
-        is_sp = el_cls == _W.S_SP
-        is_cl = el_cls == _W.S_CLOSE
+        is_sp = el_cls == _C.S_SP
+        is_cl = el_cls == _C.S_CLOSE
         last_nonsp = _last_le(~is_sp, e_idx)
         last_noncl = _last_le(~is_cl, e_idx)
         e1 = np.where(is_sp, last_nonsp, e_idx)  # skip Sp* ending at e
         e1c = np.maximum(e1, 0)
         k2 = np.where(e1 >= 0, np.where(is_cl[e1c], last_noncl[e1c], e1), -1)
-        k2_cls = np.where(k2 >= 0, el_cls[np.maximum(k2, 0)], _W.S_OTHER)
+        k2_cls = np.where(k2 >= 0, el_cls[np.maximum(k2, 0)], _C.S_OTHER)
         k2_cls_i = k2_cls[rj]
         sp_seen = is_sp[rj]
     else:  # all-ignorable batch: every position already decided above
-        k2_cls_i = np.full(n - 1, _W.S_OTHER, dtype=np.int64)
+        k2_cls_i = np.full(n - 1, _C.S_OTHER, dtype=np.int64)
         sp_seen = np.zeros(n - 1, dtype=bool)
-    saterm_behind = (k2_cls_i == _W.S_ATERM) | (k2_cls_i == _W.S_STERM)
+    saterm_behind = (k2_cls_i == _C.S_ATERM) | (k2_cls_i == _C.S_STERM)
     _rule(d, ~saterm_behind, 0)  # SB998: no terminator behind
 
     # SB8: ATerm Close* Sp* x (non-blocker)* Lower — raw forward scan
     nxtb = _next_ge(_SB_BLOCK[props], idx, n)
     barr = nxtb[1:]
     b_ok = barr < n
-    bcls = np.where(b_ok, props[np.minimum(barr, n - 1)], _W.S_OTHER)
-    _rule(d, (k2_cls_i == _W.S_ATERM) & (bcls == _W.S_LOWER), 0)  # SB8
-    _rule(d, (Q == _W.S_SCONTINUE) | (Q == _W.S_ATERM) | (Q == _W.S_STERM), 0)  # SB8a
-    _rule(d, (~sp_seen) & (Q == _W.S_CLOSE), 0)  # SB9
-    _rule(d, (Q == _W.S_SP) | _SB_PARA[Q], 0)  # SB9/SB10
+    bcls = np.where(b_ok, props[np.minimum(barr, n - 1)], _C.S_OTHER)
+    _rule(d, (k2_cls_i == _C.S_ATERM) & (bcls == _C.S_LOWER), 0)  # SB8
+    _rule(d, (Q == _C.S_SCONTINUE) | (Q == _C.S_ATERM) | (Q == _C.S_STERM), 0)  # SB8a
+    _rule(d, (~sp_seen) & (Q == _C.S_CLOSE), 0)  # SB9
+    _rule(d, (Q == _C.S_SP) | _SB_PARA[Q], 0)  # SB9/SB10
     d[d == -1] = 1  # SB11
     return dec == 1
 
@@ -741,26 +742,26 @@ def _build_gb_pair_table() -> np.ndarray:
     """GB3-GB9b as one (B, A) table: 0 no-break, 1 break, 2 undecided
     (falls through to the GB9c/GB11/GB12 context rules, then GB999)."""
     t = np.full((14, 14), 2, dtype=np.int8)
-    ctl = (_G.G_CONTROL, _G.G_CR, _G.G_LF)
+    ctl = (_C.G_CONTROL, _C.G_CR, _C.G_LF)
     for b in range(14):
         for a in range(14):
-            if b == _G.G_CR and a == _G.G_LF:
+            if b == _C.G_CR and a == _C.G_LF:
                 t[b, a] = 0  # GB3
             elif b in ctl:
                 t[b, a] = 1  # GB4
             elif a in ctl:
                 t[b, a] = 1  # GB5
-            elif b == _G.G_L and a in (_G.G_L, _G.G_V, _G.G_LV, _G.G_LVT):
+            elif b == _C.G_L and a in (_C.G_L, _C.G_V, _C.G_LV, _C.G_LVT):
                 t[b, a] = 0  # GB6
-            elif b in (_G.G_LV, _G.G_V) and a in (_G.G_V, _G.G_T):
+            elif b in (_C.G_LV, _C.G_V) and a in (_C.G_V, _C.G_T):
                 t[b, a] = 0  # GB7
-            elif b in (_G.G_LVT, _G.G_T) and a == _G.G_T:
+            elif b in (_C.G_LVT, _C.G_T) and a == _C.G_T:
                 t[b, a] = 0  # GB8
-            elif a in (_G.G_EXTEND, _G.G_ZWJ):
+            elif a in (_C.G_EXTEND, _C.G_ZWJ):
                 t[b, a] = 0  # GB9
-            elif a == _G.G_SPACINGMARK:
+            elif a == _C.G_SPACINGMARK:
                 t[b, a] = 0  # GB9a
-            elif b == _G.G_PREPEND:
+            elif b == _C.G_PREPEND:
                 t[b, a] = 0  # GB9b
     # Bake GB999 for pairs no context rule can reach, so prose batches
     # skip the context block entirely: GB9c needs the cp left of the
@@ -769,7 +770,7 @@ def _build_gb_pair_table() -> np.ndarray:
     for b in range(14):
         for a in range(14):
             if t[b, a] == 2 and not (
-                b in (_G.G_EXTEND, _G.G_ZWJ) or (b == _G.G_RI and a == _G.G_RI)
+                b in (_C.G_EXTEND, _C.G_ZWJ) or (b == _C.G_RI and a == _C.G_RI)
             ):
                 t[b, a] = 1
     return t
@@ -798,21 +799,21 @@ def grapheme_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
         idx = np.arange(n)
         # GB9c — only if a Linker exists (InCB lookup is one BMP gather)
         incb = incb_props(cps)
-        if np.any(incb == _G.INCB_LINKER):
-            le = (incb == _G.INCB_LINKER) | (incb == _G.INCB_EXTEND)
+        if np.any(incb == _C.INCB_LINKER):
+            le = (incb == _C.INCB_LINKER) | (incb == _C.INCB_EXTEND)
             last_non_le = _last_le(~le, idx)
-            lcs = np.cumsum(incb == _G.INCB_LINKER)
+            lcs = np.cumsum(incb == _C.INCB_LINKER)
             jg = last_non_le[:-1]
             lin_between = lcs[:-1] - np.where(jg >= 0, lcs[np.maximum(jg, 0)], 0)
-            gb9c = undec & (incb[1:] == _G.INCB_CONSONANT) & (jg >= 0) \
-                & (incb[np.maximum(jg, 0)] == _G.INCB_CONSONANT) & (lin_between > 0)
+            gb9c = undec & (incb[1:] == _C.INCB_CONSONANT) & (jg >= 0) \
+                & (incb[np.maximum(jg, 0)] == _C.INCB_CONSONANT) & (lin_between > 0)
             dec[gb9c] = 0
             undec = dec == 2
         # GB11 — only if a ZWJ survives to this stage
-        zwj_left = undec & (B == _G.G_ZWJ)
+        zwj_left = undec & (B == _C.G_ZWJ)
         if zwj_left.any():
             ep = extpict(cps)
-            last_nonext = _last_le(props != _G.G_EXTEND, idx)
+            last_nonext = _last_le(props != _C.G_EXTEND, idx)
             j11 = np.full(n - 1, -1, dtype=np.int64)
             if n >= 2:
                 j11[1:] = last_nonext[:-2]
@@ -820,9 +821,9 @@ def grapheme_boundaries(cps: np.ndarray, text_start_of: np.ndarray | None = None
             dec[gb11] = 0
             undec = dec == 2
         # GB12/13 — only for adjacent RI pairs
-        ri_pair = undec & (B == _G.G_RI) & (A == _G.G_RI)
+        ri_pair = undec & (B == _C.G_RI) & (A == _C.G_RI)
         if ri_pair.any():
-            ri_run_incl = _run_ending_incl(props == _G.G_RI, idx)
+            ri_run_incl = _run_ending_incl(props == _C.G_RI, idx)
             dec[ri_pair & (ri_run_incl[:-1] % 2 == 1)] = 0
             undec = dec == 2
         dec[undec] = 1  # GB999
@@ -869,7 +870,7 @@ def _build_lb_pair_tables(ascii_mode: bool = False):
     _A_TERM0 = {_LCB_19, _LCB_30R, _LCB_30L}
     # ctx bits whose runtime condition is constant-FALSE under ASCII
     _A_DROP = {_LCB_15A, _LCB_15B, _LCB_21A, _LCB_28A, _LCB_RI, _LCB_30CN}
-    L = _L
+    L = _C
     mand = (L.LB_BK, L.LB_CR, L.LB_LF, L.LB_NL)
     alhl = (L.LB_AL, L.LB_HL)
     idem = (L.LB_ID, L.LB_EB, L.LB_EM)
@@ -1040,7 +1041,7 @@ def _build_lb_sp_tables(ascii_mode: bool = False):
     only quote-/IS-adjacent spaces take the sparse ctx path.
     ``ascii_mode``: no Pi/Pf exists, so LB15a/LB15b drop (statically
     false); LB15.3 (ahead == NU) stays contextual."""
-    L = _L
+    L = _C
 
     def chain(nsc, a):
         if nsc == L.LB_ZW:
@@ -1096,14 +1097,14 @@ def _ascii_lb_ok() -> bool:
     VF/VI for LB28a, RI for LB30a; U+25CC is trivially >= 0x80)."""
     cps = np.arange(0x80)
     cls = set(lb_classes(cps).tolist())
-    banned = {_L.LB_HL, _L.LB_AK, _L.LB_AP, _L.LB_AS, _L.LB_VF, _L.LB_VI,
-              _L.LB_RI}
+    banned = {_C.LB_HL, _C.LB_AK, _C.LB_AP, _C.LB_AS, _C.LB_VF, _C.LB_VI,
+              _C.LB_RI}
     return (
         not (cls & banned)
         and not eaw_flags(cps).any()
         and not epcn_flags(cps).any()
         and not qside_props(cps).any()
-        and _L.DOTTED_CIRCLE >= 0x80
+        and _C.DOTTED_CIRCLE >= 0x80
     )
 
 
@@ -1136,7 +1137,7 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
     # most Latin corpora carry no CM/ZWJ): clusters are the codepoints
     # themselves — the fold, the flatnonzero and the re-gathers vanish.
     # Two int8 compares beat a LUT gather for the attach mask.
-    attach = (C == _L.LB_CM) | (C == _L.LB_ZWJ)
+    attach = (C == _C.LB_CM) | (C == _C.LB_ZWJ)
     has_attach = bool(attach.any())
     if has_attach:
         idx = np.arange(n)
@@ -1146,9 +1147,9 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
         cs[0] = True
         starts = np.flatnonzero(cs)
         ccls = C[starts]
-        ccls = np.where(_LB_ATTACH[ccls], _L.LB_AL, ccls).astype(np.int64)  # LB10
+        ccls = np.where(_LB_ATTACH[ccls], _C.LB_AL, ccls).astype(np.int64)  # LB10
         base_cps = cps[starts]  # cluster base codepoints (Pi/Pf, U+25CC)
-        lb8a_left = C[starts[1:] - 1] == _L.LB_ZWJ if len(starts) > 1 else None
+        lb8a_left = C[starts[1:] - 1] == _C.LB_ZWJ if len(starts) > 1 else None
     else:
         starts = None  # cluster k IS codepoint k; positions come free
         ccls = C  # int8 is a valid (non-negative) LUT index; no copy
@@ -1204,9 +1205,9 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
             # single-space shortcut: when no SP cluster is preceded by
             # another SP (checked sparsely), the nearest non-SP to the
             # left is simply subs-1 — the full accumulate is skipped
-            left_sp = (subs > 0) & (ccls[np.maximum(subs - 1, 0)] == _L.LB_SP)
+            left_sp = (subs > 0) & (ccls[np.maximum(subs - 1, 0)] == _C.LB_SP)
             if left_sp.any():
-                lastnonsp = _last_le(ccls != _L.LB_SP, k_idx())
+                lastnonsp = _last_le(ccls != _C.LB_SP, k_idx())
                 jcl = lastnonsp[subs]
             else:
                 jcl = subs - 1
@@ -1245,7 +1246,7 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
                 # LB15.3: SP x IS NU is a break opportunity
                 b153 = (bits & _SPB_153) != 0
                 if b153.any():
-                    ok = pending & b153 & (ahead2 == _L.LB_NU)
+                    ok = pending & b153 & (ahead2 == _C.LB_NU)
                     d[s2[ok]] = 1
                     pending[ok] = False
                 d[s2[pending]] = SPDFT[nsc2[pending] + 1, A2[pending]]
@@ -1299,8 +1300,8 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
                     eaw_prev2[in_l] = eaw_flags(
                         base_cps[np.maximum(subc - 1, 0)][in_l]
                     )
-                aq = A_c == _L.LB_QU
-                bq = B_c == _L.LB_QU
+                aq = A_c == _C.LB_QU
+                bq = B_c == _C.LB_QU
                 return (
                     (aq & (qA_c != 1))
                     | (bq & (qB_c != 2))
@@ -1314,35 +1315,35 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
             # LB20a: (sot|allowed) (HY|HH) x (AL|HL)
             ctx_rule(_LCB_20A, lambda: (c2_c < 0) | _LB20A_LEFT[np.maximum(c2_c, 0)])
             # LB21a: HL (HY|HH) x [^HL]
-            ctx_rule(_LCB_21A, lambda: c2_c == _L.LB_HL)
+            ctx_rule(_LCB_21A, lambda: c2_c == _C.LB_HL)
 
             # LB25 (newest TR14): the contextual numeric-regex clauses —
             # "NU (SY|IS)*" run state for the left-context forms, and a
             # two-cluster lookahead for (PO|PR) x OP IS? NU
             b25 = pending & ((bits & _LCB_25) != 0)
             if b25.any():
-                syis = (ccls == _L.LB_SY) | (ccls == _L.LB_IS)
+                syis = (ccls == _C.LB_SY) | (ccls == _C.LB_IS)
                 lastnon = _last_le(~syis, k_idx())
                 # run open at cluster k iff the nearest non-(SY|IS)
                 # cluster at-or-before k is NU (the LF batch separator
                 # is non-(SY|IS), so runs never cross texts)
                 run_open = (lastnon >= 0) & (
-                    ccls[np.maximum(lastnon, 0)] == _L.LB_NU
+                    ccls[np.maximum(lastnon, 0)] == _C.LB_NU
                 )
-                close_l = (B_c == _L.LB_CL) | (B_c == _L.LB_CP)
+                close_l = (B_c == _C.LB_CL) | (B_c == _C.LB_CP)
                 run_idx = np.where(close_l, subc - 1, subc)
                 run_l = (run_idx >= 0) & run_open[np.maximum(run_idx, 0)]
-                rp = (A_c == _L.LB_PO) | (A_c == _L.LB_PR)
-                lp = (B_c == _L.LB_PO) | (B_c == _L.LB_PR)
+                rp = (A_c == _C.LB_PO) | (A_c == _C.LB_PR)
+                lp = (B_c == _C.LB_PO) | (B_c == _C.LB_PR)
                 ahead2_c = np.where(
                     subc + 3 < K, ccls[np.minimum(subc + 3, K - 1)], -1
                 )
                 cond = (
                     (rp & run_l)
-                    | (lp & (A_c == _L.LB_OP) & (ahead_c == _L.LB_NU))
-                    | (lp & (A_c == _L.LB_OP) & (ahead_c == _L.LB_IS)
-                       & (ahead2_c == _L.LB_NU))
-                    | ((A_c == _L.LB_NU) & run_open[subc])
+                    | (lp & (A_c == _C.LB_OP) & (ahead_c == _C.LB_NU))
+                    | (lp & (A_c == _C.LB_OP) & (ahead_c == _C.LB_IS)
+                       & (ahead2_c == _C.LB_NU))
+                    | ((A_c == _C.LB_NU) & run_open[subc])
                 )
                 ok = b25 & cond
                 d[subc[ok]] = 0
@@ -1350,21 +1351,21 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
 
             # LB28a: aksara clusters (Dotted Circle acts as a base)
             def lb28a_cond():
-                dl = base_cps[subc] == _L.DOTTED_CIRCLE
-                dr = base_cps[subc + 1] == _L.DOTTED_CIRCLE
+                dl = base_cps[subc] == _C.DOTTED_CIRCLE
+                dr = base_cps[subc + 1] == _C.DOTTED_CIRCLE
                 d2 = np.zeros(len(subc), dtype=bool)
                 in_l = subc >= 1
                 if in_l.any():
                     d2[in_l] = (
-                        base_cps[np.maximum(subc - 1, 0)][in_l] == _L.DOTTED_CIRCLE
+                        base_cps[np.maximum(subc - 1, 0)][in_l] == _C.DOTTED_CIRCLE
                     )
-                base_l = (B_c == _L.LB_AK) | (B_c == _L.LB_AS) | dl
-                base_r = (A_c == _L.LB_AK) | (A_c == _L.LB_AS) | dr
-                r1 = (B_c == _L.LB_AP) & base_r
-                r2 = base_l & ((A_c == _L.LB_VF) | (A_c == _L.LB_VI))
-                r3 = (B_c == _L.LB_VI) & ((A_c == _L.LB_AK) | dr) \
-                    & ((c2_c == _L.LB_AK) | (c2_c == _L.LB_AS) | d2)
-                r4 = base_l & base_r & (ahead_c == _L.LB_VF)
+                base_l = (B_c == _C.LB_AK) | (B_c == _C.LB_AS) | dl
+                base_r = (A_c == _C.LB_AK) | (A_c == _C.LB_AS) | dr
+                r1 = (B_c == _C.LB_AP) & base_r
+                r2 = base_l & ((A_c == _C.LB_VF) | (A_c == _C.LB_VI))
+                r3 = (B_c == _C.LB_VI) & ((A_c == _C.LB_AK) | dr) \
+                    & ((c2_c == _C.LB_AK) | (c2_c == _C.LB_AS) | d2)
+                r4 = base_l & base_r & (ahead_c == _C.LB_VF)
                 return r1 | r2 | r3 | r4
 
             ctx_rule(_LCB_28A, lb28a_cond)
@@ -1376,7 +1377,7 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
             # LB30a: RI pair parity
             ri_bit = pending & ((bits & _LCB_RI) != 0)
             if ri_bit.any():
-                ri_run = _run_ending_incl(ccls == _L.LB_RI, k_idx())
+                ri_run = _run_ending_incl(ccls == _C.LB_RI, k_idx())
                 ok = ri_bit & (ri_run[subc] % 2 == 1)
                 d[subc[ok]] = 0
                 pending[ok] = False

@@ -1,8 +1,11 @@
 """The configuration surface: the SZ_* environment switches the library
-reads and the flag defaults of scripts/run_pipeline.py."""
+reads, the modules it ships, and the flag defaults of
+scripts/run_pipeline.py."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import importlib.util
 import os
 import re
@@ -32,6 +35,57 @@ def test_switch_inventory():
             with open(os.path.join(pkg, name), encoding="utf-8") as fh:
                 found.update(read.findall(fh.read()))
     assert found == SWITCHES
+
+
+#: the files a user or the benchmark runs; every sz_spark module must be
+#: reachable from one of them
+ENTRY_POINTS = ("scripts/*.py", "bench.py", "bench_extra.py", "perfbench/**/*.py",
+                "__spark_entry__.py")
+
+
+def _imported_modules(path: str) -> set[str]:
+    """Dotted names of every module an import statement in ``path`` names
+    (``from sz_spark import x`` yields both ``sz_spark`` and ``sz_spark.x``;
+    the caller keeps the ones that are modules)."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            out.add(node.module)
+            out.update(f"{node.module}.{a.name}" for a in node.names)
+    return out
+
+
+def test_every_module_is_reached_from_an_entry_point():
+    """Each sz_spark/*.py module is imported, directly or through other
+    sz_spark modules, by an entry point: a second implementation that
+    only tests use belongs in tests/."""
+    pkg = os.path.join(REPO, "sz_spark")
+    modules = {n[:-3] for n in os.listdir(pkg) if n.endswith(".py")}
+    todo = [p for pat in ENTRY_POINTS
+            for p in glob.glob(os.path.join(REPO, pat), recursive=True)]
+    reached = {"__init__"}
+    while todo:
+        for name in _imported_modules(todo.pop()):
+            head, _, mod = name.partition(".")
+            if head == "sz_spark" and mod in modules and mod not in reached:
+                reached.add(mod)
+                todo.append(os.path.join(pkg, mod + ".py"))
+    assert modules - reached == set()
+
+
+def test_package_imports_nothing_from_tests():
+    """No sz_spark module imports a tests/ module (oracles, the scalar
+    UAX engines, test files)."""
+    test_modules = {"tests"} | {
+        os.path.basename(p)[:-3] for p in glob.glob(os.path.join(REPO, "tests", "*.py"))
+    }
+    for path in glob.glob(os.path.join(REPO, "sz_spark", "*.py")):
+        heads = {n.split(".")[0] for n in _imported_modules(path)}
+        assert heads & test_modules == set(), path
 
 
 def _run_pipeline_script():

@@ -79,6 +79,17 @@ def test_fallback_when_disabled(monkeypatch):
     monkeypatch.setattr(native, "_tried", False)
 
 
+@pytest.mark.parametrize("value", ["true", " 1"])
+def test_no_native_rejects_unknown_values(monkeypatch, value):
+    """A value get_lib does not recognise raises instead of silently
+    keeping the native path."""
+    monkeypatch.setattr(native, "_tried", False)
+    monkeypatch.setattr(native, "_lib", None)
+    monkeypatch.setenv("SZ_NO_NATIVE", value)
+    with pytest.raises(ValueError, match="SZ_NO_NATIVE"):
+        native.get_lib()
+
+
 # ---------------------------------------------------------------------------
 # banded bounded Levenshtein: native twin vs NumPy chunks
 # ---------------------------------------------------------------------------

@@ -26,10 +26,17 @@ def spark():
 
 
 def test_f1_gate(spark):
-    from sz_spark.pipeline import PipelineConfig, run_on_sf_dir
+    from sz_spark import canonicalize as canon
+    from sz_spark.pipeline import PipelineConfig, evaluate_pairs, run_pipeline
+    from sz_spark.transcripts import build_transcripts
 
-    res = run_on_sf_dir(spark, SF_DIR, PipelineConfig())
-    m = res["metrics"]
+    cfg = PipelineConfig()
+    transcripts = build_transcripts(spark, SF_DIR, with_entity_id=True)
+    stages = run_pipeline(spark, transcripts.drop("entity_id"), cfg)
+    docs_ent = canon.canonicalize(transcripts, carry=["entity_id"]).select(
+        "conv_id", "entity_id"
+    )
+    m = evaluate_pairs(stages["scored"], docs_ent, cfg.threshold)
     assert m["precision"] >= 0.99, m
     assert m["recall"] >= 0.99, m
     assert m["f1"] >= 0.99, m

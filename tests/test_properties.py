@@ -118,7 +118,7 @@ def test_splitmix64_python_int_parity(x):
 def test_wordbreaks_tiling_property(t):
     """UAX-29 segmentation is a TILING for arbitrary unicode input:
     segments are non-empty and concatenate back to the input."""
-    from sz_spark.uax29 import wordbreak_segments
+    from uax29 import wordbreak_segments
 
     segs = wordbreak_segments(t)
     assert "".join(segs) == t

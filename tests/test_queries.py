@@ -264,7 +264,7 @@ def test_simhash_query_is_pure_jvm(spark):
 def test_wordbreaks_uax29_core():
     """The rules that make UAX-29 non-trivial, vs hand-derived
     segmentations (reference surface utf8_wordbreaks.h)."""
-    from sz_spark.uax29 import wordbreak_segments as wb
+    from uax29 import wordbreak_segments as wb
 
     assert wb("don't stop") == ["don't", " ", "stop"]
     assert wb("1,234.5 x") == ["1,234.5", " ", "x"]
@@ -301,12 +301,12 @@ def test_graphemes_vs_codepoints(spark):
 
 
 def test_sentences_full_uax29():
-    """UAX-29 sentence rules SB1-SB11 (sz_spark.uax29.sentence_segments):
+    """UAX-29 sentence rules SB1-SB11 (tests/uax29.py sentence_segments):
     SB8 lowercase continuation THROUGH neutral runs (digits/spaces — the
     reference defers the Lower-lookahead the same way,
     utf8_sentences/serial.h:184-255), SB8a continuers, SB9 closer
     attachment, SB10/11 space attachment, tiling invariant."""
-    from sz_spark.uax29 import sentence_segments as sb
+    from uax29 import sentence_segments as sb
 
     assert sb("One. Two! Three? Four.") == ["One. ", "Two! ", "Three? ", "Four."]
     # SB8: lowercase after terminator+space continues the sentence

@@ -34,9 +34,9 @@ import numpy as np
 import pytest
 
 from sz_spark import uax_vec as V
-from sz_spark.uax14 import linebreak_segments
-from sz_spark.uax29 import sentence_segments, wordbreak_segments
-from sz_spark.uax29_graphemes import grapheme_segments
+from uax14 import linebreak_segments
+from uax29 import sentence_segments, wordbreak_segments
+from uax29_graphemes import grapheme_segments
 
 _VECTORS_PATH = os.path.join(os.path.dirname(__file__), "data", "szseg_vectors.json")
 

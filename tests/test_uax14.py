@@ -4,7 +4,7 @@ utf8_linebreaks/serial.h LB1-LB31)."""
 
 from __future__ import annotations
 
-from sz_spark.uax14 import (
+from uax14 import (
     line_break_class,
     linebreak_opportunities,
     linebreak_segments as lb,
@@ -90,7 +90,7 @@ def test_hebrew_hyphen_lb21a():
 
 
 def test_class_spot_checks():
-    from sz_spark import uax14 as m
+    import uax14 as m
 
     assert line_break_class(0x0020) == m.LB_SP
     assert line_break_class(0x00A0) == m.LB_GL
@@ -184,7 +184,7 @@ def test_line_break_class_full_unicode_conformance():
             return 20
         return c
 
-    from sz_spark import uax14 as m
+    import uax14 as m
 
     mymap = {m.LB_AL: 29, m.LB_BK: 1, m.LB_CR: 2, m.LB_LF: 3, m.LB_NL: 5,
              m.LB_SP: 10, m.LB_ZW: 8, m.LB_WJ: 7, m.LB_GL: 9, m.LB_CM: 4,
@@ -348,7 +348,7 @@ def test_eaw_epcn_flags_full_unicode_conformance():
                 return palette[astral_idx[i]]
         return palette[0]
 
-    from sz_spark.uax14 import is_east_asian, is_extpict_cn
+    from uax14 import is_east_asian, is_extpict_cn
 
     bad = []
     for cp in range(0x110000):

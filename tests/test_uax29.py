@@ -8,7 +8,7 @@ reference surface utf8_wordbreaks/serial.h:240-341)."""
 
 from __future__ import annotations
 
-from sz_spark.uax29 import (
+from uax29 import (
     is_extended_pictographic,
     word_break_property,
     wordbreak_segments as wb,
@@ -173,7 +173,7 @@ def test_word_break_property_full_unicode_conformance():
         i = bisect.bisect_right(lo, cp) - 1
         return cls[i] if i >= 0 and lo[i] <= cp <= hi[i] else 0
 
-    import sz_spark.uax29 as u
+    import uax29 as u
 
     to_ref = {u.OTHER: 0, u.CR: 1, u.LF: 2, u.NEWLINE: 3, u.EXTEND: 4,
               u.ZWJ: 5, u.FORMAT: 6, u.RI: 7, u.ALETTER: 8, u.HEBREW: 9,
@@ -237,7 +237,7 @@ def test_sentence_break_property_full_unicode_conformance():
         i = bisect.bisect_right(alo, cp) - 1
         return acls[i] if i >= 0 and alo[i] <= cp <= ahi[i] else 0
 
-    import sz_spark.uax29 as u
+    import uax29 as u
 
     to_ref = {u.S_OTHER: 0, u.S_CR: 1, u.S_LF: 2, u.S_SEP: 4, u.S_EXTEND: 3,
               u.S_FORMAT: 5, u.S_SP: 6, u.S_LOWER: 7, u.S_UPPER: 8,

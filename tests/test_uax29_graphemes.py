@@ -4,7 +4,7 @@ full-space property sweep against the reference's UCD-17 tables
 
 from __future__ import annotations
 
-from sz_spark.uax29_graphemes import (
+from uax29_graphemes import (
     grapheme_break_property,
     grapheme_segments as gs,
     indic_conjunct_break,
@@ -106,7 +106,7 @@ def test_property_full_unicode_conformance():
         i = bisect.bisect_right(alo, cp) - 1
         return id_to_desc[aid[i]] if i >= 0 and alo[i] <= cp <= ahi[i] else 0
 
-    from sz_spark.uax29 import is_extended_pictographic
+    from uax29 import is_extended_pictographic
 
     bad = []
     for cp in range(0x110000):

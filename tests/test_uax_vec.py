@@ -16,15 +16,21 @@ import numpy as np
 import pytest
 
 from sz_spark import uax_vec as V
-from sz_spark.uax14 import line_break_class, linebreak_opportunities
-from sz_spark.uax29 import (
+from uax14 import (
+    _quote_side,
+    is_east_asian,
+    is_extpict_cn,
+    line_break_class,
+    linebreak_opportunities,
+)
+from uax29 import (
     is_extended_pictographic,
     sentence_break_property,
     sentence_segments,
     word_break_property,
     wordbreak_segments,
 )
-from sz_spark.uax29_graphemes import (
+from uax29_graphemes import (
     grapheme_break_property,
     grapheme_segments,
     indic_conjunct_break,
@@ -105,7 +111,9 @@ def _fuzz_texts(n=400, seed=20240817):
 
 def test_property_tables_match_scalar_full_space():
     """The generated run tables == the scalar classifiers at every one
-    of the 0x110000 codepoints (the generation invariant)."""
+    of the 0x110000 codepoints (the generation invariant), read through
+    the lookups the engines use: the BMP direct-index table below
+    0x10000, the run-table search above."""
     cps = np.arange(0x110000)
     for name, table, fn in (
         ("WB", V.wb_props, word_break_property),
@@ -113,6 +121,9 @@ def test_property_tables_match_scalar_full_space():
         ("LB", V.lb_classes, line_break_class),
         ("GCB", V.gcb_props, grapheme_break_property),
         ("INCB", V.incb_props, indic_conjunct_break),
+        ("QSIDE", V.qside_props, _quote_side),
+        ("EAW", V.eaw_flags, is_east_asian),
+        ("EPCN", V.epcn_flags, is_extpict_cn),
     ):
         tv = table(cps)
         sv = np.fromiter((fn(int(c)) for c in cps), dtype=np.int64, count=len(cps))

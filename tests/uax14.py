@@ -23,6 +23,11 @@ second pass the chain is REFERENCE-COMPLETE: East-Asian-aware
 LB19/LB30 (EAW flag decoded from the reference tables), the CB class
 with LB20, and LB30b's unassigned-ExtPict clause are all live; the
 conformance sweep runs with ZERO class folds.
+
+A test oracle: sz_spark.uax_vec runs the same rules vectorized and
+tests/test_uax_vec.py compares the two.  The classifiers also feed
+scripts/gen_uax_tables.py; the class codes live in
+sz_spark.uax_classes.
 """
 
 from __future__ import annotations
@@ -30,21 +35,15 @@ from __future__ import annotations
 import unicodedata
 from functools import lru_cache
 
-from sz_spark.uax29 import _HEBREW_RANGES, _in_ranges, is_extended_pictographic
-
-# Line_Break classes (subset relevant to the rule chain; AK/AP/AS/VF/
-# VI are the Brahmic aksara classes and HH the unambiguous hyphen of
-# the newest TR14, live since round 4)
-(
-    LB_AL, LB_BK, LB_CR, LB_LF, LB_NL, LB_SP, LB_ZW, LB_WJ, LB_GL, LB_CM,
-    LB_ZWJ, LB_B2, LB_BA, LB_BB, LB_HY, LB_CL, LB_CP, LB_EX, LB_IN, LB_NS,
-    LB_OP, LB_QU, LB_IS, LB_NU, LB_PO, LB_PR, LB_SY, LB_HL, LB_ID, LB_EB,
-    LB_EM, LB_RI, LB_JL, LB_JV, LB_JT, LB_H2, LB_H3,
-    LB_AK, LB_AP, LB_AS, LB_VF, LB_VI, LB_HH, LB_CB,
-) = range(44)
-
-#: Dotted Circle U+25CC — acts as an aksara base in LB28a.
-DOTTED_CIRCLE = 0x25CC
+from sz_spark.uax_classes import (
+    DOTTED_CIRCLE, LB_AK, LB_AL, LB_AP, LB_AS, LB_B2, LB_BA, LB_BB, LB_BK,
+    LB_CB, LB_CL, LB_CM, LB_CP, LB_CR, LB_EB, LB_EM, LB_EX, LB_GL, LB_H2,
+    LB_H3, LB_HH, LB_HL, LB_HY, LB_ID, LB_IN, LB_IS, LB_JL, LB_JT, LB_JV,
+    LB_LF, LB_NL, LB_NS, LB_NU, LB_OP, LB_PO, LB_PR, LB_QU, LB_RI, LB_SP,
+    LB_SY, LB_VF, LB_VI, LB_WJ, LB_ZW, LB_ZWJ, _LB15A_LEFT, _LB15B_RIGHT,
+    _LB20A_LEFT,
+)
+from uax29 import _HEBREW_RANGES, _in_ranges, is_extended_pictographic
 
 _BA_CPS = frozenset(
     [0x0009, 0x00AD, 0x058A, 0x2010, 0x2012, 0x2013]
@@ -1022,16 +1021,6 @@ def _collapse(cps: list[int]) -> tuple[list[int], list[int]]:
             while i < n and line_break_class(cps[i]) in (LB_CM, LB_ZWJ):
                 i += 1  # LB9: marks attach
     return starts, classes
-
-
-#: allowed left context for LB15a (reference serial.h:298-315; CB is not
-#: modeled — folded to AL — a documented delta)
-_LB15A_LEFT = frozenset((LB_BK, LB_CR, LB_LF, LB_NL, LB_OP, LB_QU, LB_GL, LB_SP, LB_ZW))
-#: allowed right context for LB15b (reference serial.h:316-337)
-_LB15B_RIGHT = frozenset((LB_SP, LB_GL, LB_WJ, LB_CL, LB_QU, LB_CP, LB_EX,
-                          LB_IS, LB_SY, LB_BK, LB_CR, LB_LF, LB_NL, LB_ZW))
-#: allowed context two-left for LB20a (reference serial.h:371-386)
-_LB20A_LEFT = frozenset((LB_BK, LB_CR, LB_LF, LB_NL, LB_SP, LB_ZW, LB_GL, LB_CB))
 
 
 def _quote_side(cp: int) -> int:
