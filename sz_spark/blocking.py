@@ -69,20 +69,21 @@ def doc_features(
     and the gather tier's block-key broadcast from it, so the corpus
     text crosses the JVM->Python boundary a single time (guide §4.1)
     and the checkpoint stores ~26 longs + 192 B per document instead of
-    the 3.3M-row exploded band table."""
+    the 3.3M-row exploded band table.
+
+    The Python pass runs on ``docs``' own partitions: the caller hands
+    in a frame already spread across the cores (the pipeline's
+    ``canonical_docs`` checkpoint comes out of canonicalize's groupBy at
+    shuffle width); a single-partition scan would run it on one core."""
     from pyspark.sql import types as T
 
-    from sz_spark.udfs import make_doc_features_arrow_fn, spread_for_python
+    from sz_spark.udfs import make_doc_features_arrow_fn
 
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    src = spread_for_python(
-        docs.select(
-            F.col(id_col),
-            F.length(F.col(text_col)).alias("len"),
-            _prefix_key(text_col, prefix_len).alias("pk"),
-            F.encode(F.col(text_col), "utf-8").alias("_t"),
-        ),
-        4 * parallelism,
+    src = docs.select(
+        F.col(id_col),
+        F.length(F.col(text_col)).alias("len"),
+        _prefix_key(text_col, prefix_len).alias("pk"),
+        F.encode(F.col(text_col), "utf-8").alias("_t"),
     )
     fn = make_doc_features_arrow_fn(
         ndim=ndim, widths=widths, seed=seed, n_bands=n_bands,
@@ -497,24 +498,13 @@ def shingle_minhash_bands(
     bit-identical to that expression form (md5 hex is md5 hex; byte
     order == hex-string order), which tests/test_blocking.py keeps as
     its oracle.
+
+    Like :func:`doc_features`, the Python pass runs on ``docs``' own
+    partitions; a caller with a bare scan spreads it first.
     """
     from pyspark.sql import types as T
 
-    # Spread the md5 work before entering Python when the input is
-    # under-partitioned: a small corpus scans as ONE parquet partition,
-    # which would run the whole signature pass on a single core (guide
-    # §2 — the optimizer cannot see Python CPU cost behind an opaque
-    # mapInArrow; measured 1.36 -> 1.00 s on the 5k-doc sf0.1 scan).
-    # When the upstream already spread the docs (e.g. canonicalize's
-    # groupBy leaves one partition per core) the extra round-robin
-    # exchange only costs (measured +0.3 s on the er_* chain), so it is
-    # skipped — the partition probe is plan-time only, no job runs.
-    from sz_spark.udfs import spread_for_python
-
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    src = spread_for_python(
-        docs.select(id_col, F.col(text_col).alias("_t")), parallelism
-    )
+    src = docs.select(id_col, F.col(text_col).alias("_t"))
     out_schema = T.StructType(
         [src.schema[id_col]]
         + [T.StructField(f"band_{b}", T.StringType(), False) for b in range(n_bands)]

@@ -1124,38 +1124,10 @@ def normalized_edit_similarity(a: Sequence[bytes], b: Sequence[bytes]) -> np.nda
     return np.where(denom == 0, 1.0, 1.0 - dist / np.maximum(denom, 1.0))
 
 
-def fnv1a_splitmix_batch(tokens: Sequence[bytes]) -> np.ndarray:
-    """Vectorized :func:`hash_bytes_u64` (seed 0) over a token batch.
-
-    FNV-1a is sequential over a token's bytes but independent across
-    tokens, so the loop runs over BYTE POSITIONS (max token length, a
-    few dozen) with all tokens updated per step — never per token/byte
-    in Python.  Bit-identical to the scalar path (tested)."""
-    n = len(tokens)
-    out = np.full(n, _U64(0xCBF29CE484222325), dtype=_U64)
-    if n == 0:
-        return out
-    lens = np.asarray([len(t) for t in tokens], dtype=np.int64)
-    max_len = int(lens.max()) if n else 0
-    if max_len:
-        mat = np.zeros((n, max_len), dtype=np.uint8)
-        for i, t in enumerate(tokens):
-            if t:
-                mat[i, : len(t)] = np.frombuffer(t, dtype=np.uint8)
-        prime = _U64(0x100000001B3)
-        with np.errstate(over="ignore"):
-            for p in range(max_len):
-                active = lens > p
-                h = out[active]
-                out[active] = (h ^ mat[active, p].astype(_U64)) * prime
-    return splitmix64(out)
-
-
 def hash_bytes_u64(data: bytes, seed: int = 0) -> int:
     """Deterministic 64-bit polynomial hash of a byte string (FNV-1a-like,
     then splitmix64-mixed).  An interchangeable PRF in the sense of
-    SURVEY.md §2.7 — NOT the reference's AES-based sz_hash.  Scalar
-    conformance twin of :func:`fnv1a_splitmix_batch`."""
+    SURVEY.md §2.7 — NOT the reference's AES-based sz_hash."""
     h = 0xCBF29CE484222325 ^ (seed & 0xFFFFFFFFFFFFFFFF)
     for byte in data:
         h ^= byte

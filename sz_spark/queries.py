@@ -1461,7 +1461,7 @@ def _fp_rows_arrow(d: DataFrame, text_col, ndim: int, seed: int = 0) -> DataFram
     from sz_spark.udfs import make_fingerprint_arrow_fn
 
     # AQE sizes by bytes and cannot see the kernel's CPU cost — spread
-    # the docs before entering Python (same policy as blocking/scoring)
+    # the docs before entering Python (as dedup_minhash_lsh does)
     par = d.sparkSession.sparkContext.defaultParallelism
     src = d.repartition(4 * par).select(
         "doc_id", F.encode(text_col, "utf-8").alias("_t")
@@ -1633,7 +1633,12 @@ def dedup_ngram_jaccard(spark, sf):
 
 
 def dedup_minhash_lsh(spark, sf):
+    # The documents scan arrives as ONE parquet partition at small scale,
+    # which would run the whole md5 signature pass on one core: the
+    # optimizer cannot see Python CPU cost behind an opaque mapInArrow.
+    # Spread it first (measured 1.36 -> 1.00 s on the 5k-doc sf0.1 scan).
     d = _t(spark, sf, "documents").withColumnRenamed("doc_id", "conv_id")
+    d = d.repartition(spark.sparkContext.defaultParallelism)
     return _md5_band_pairs(d, text_col="text")
 
 

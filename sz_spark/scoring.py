@@ -32,7 +32,6 @@ from sz_spark.udfs import (
     make_bounded_lev_arrow_fn,
     prune_keep,
     unpack_histograms,
-    upstream_width,
 )
 
 
@@ -224,28 +223,6 @@ def build_prune_broadcast(feats: DataFrame):
     )
 
 
-def scoring_fanout(df: DataFrame) -> int:
-    """Round-robin width for the DP scoring stage.
-
-    The wave policy lives in the SESSION's shuffle-partition sizing
-    (session.build_session defaults it to 1x cores; a session sized
-    wider lets uneven DP cost ride out in waves); re-fanning WIDER than
-    both the session parallelism and the upstream width only multiplies
-    Python task overhead (measured: 128 tasks for a 4.5k-pair frame at
-    local[32] cost 1.8-9 s vs 0.75 s at the upstream's 32).  Under-partitioned
-    inputs (a bare scan) still spread to 4x cores, matching
-    udfs.spread_for_python — the optimizer cannot see Python CPU cost.
-    The width probe (udfs.upstream_width) is plan-time only — no job
-    runs (the naive .rdd probe would eagerly execute a shuffle-bearing
-    plan's map stages under AQE and the real query would run them
-    again)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    n_in = upstream_width(df)
-    if n_in < par:
-        return 4 * par
-    return min(4 * par, n_in)
-
-
 def score_pairs(pairs_with_texts: DataFrame, bounded: float) -> DataFrame:
     """(*carry, doc_a, doc_b, len_a, len_b) -> (*carry, edit_distance,
     sim), sim = 1 - edit_distance / max(len_a, len_b), and 1.0 for two
@@ -262,23 +239,18 @@ def score_pairs(pairs_with_texts: DataFrame, bounded: float) -> DataFrame:
     """
     from pyspark.sql import types as T
 
-    # AQE coalesces the (byte-wise tiny) pair shuffle down to a couple of
-    # partitions, which would serialize the DP — its CPU cost is
-    # invisible to the optimizer.  Spread the batch explicitly across
-    # the cluster before entering Python.
-    # The repartition stays UNCONDITIONAL (unlike the band entrances'
-    # adaptive spread): the pair stream arrives hash-partitioned by its
-    # JOIN KEY (id_b), so one hot document's pairs — whose DP cost all
-    # scales with that document's length — cluster into a single
-    # partition; round-robin is the skew cure, not just a fan-out
-    # (measured at the 8-core probe: skipping it cost ~2 s of straggler
-    # wall).  The WIDTH adapts (scoring_fanout): it used to be a blind
-    # 4x cores, which turned a 4.5k-pair registry query at local[32]
-    # into 128 Python tasks — measured 1.8-9 s of pure task/scheduler
-    # overhead vs 0.75 s at the upstream width.
-    pairs_with_texts = pairs_with_texts.repartition(
-        scoring_fanout(pairs_with_texts)
+    # Round-robin before the DP, always: the pairs arrive hash-partitioned
+    # by attach_texts' join key, so one hot document's pairs (whose DP
+    # cost scales with its length) share one partition — measured ~2 s
+    # of straggler wall at 8 cores without it.  The width is the one
+    # those joins produce, spark.sql.shuffle.partitions, capped at 4x
+    # cores (a wider fan-out only multiplies Python task overhead).
+    sess = pairs_with_texts.sparkSession
+    width = min(
+        4 * sess.sparkContext.defaultParallelism,
+        int(sess.conf.get("spark.sql.shuffle.partitions")),
     )
+    pairs_with_texts = pairs_with_texts.repartition(width)
     carry = [c for c in pairs_with_texts.columns if c not in ("doc_a", "doc_b")]
     src = pairs_with_texts.select(
         *carry,

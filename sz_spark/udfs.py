@@ -101,80 +101,6 @@ def make_sw_udf(substitution=None, gap_open=-1, gap_extend=-1):
 # buffers directly — zero per-row objects, zero copies on ingest.
 
 
-#: logical operators that put an exchange between the source and ``df``
-#: (line-anchored: plan tree lines start with indentation/branch glyphs,
-#: so column aliases in expression lists cannot false-match)
-_SHUFFLE_NODE_RE = None
-
-
-def upstream_width(df) -> int:
-    """Partition count ``df`` will execute with — WITHOUT running jobs.
-
-    The naive probe (``df.rdd.getNumPartitions()``) is only plan-time
-    for exchange-free lineage (scans, checkpoints, map-only chains).
-    Under AQE, converting a plan that CONTAINS exchanges to an RDD
-    materializes its shuffle map stages as real jobs — which the
-    subsequent action then re-executes (a new query execution gets new
-    shuffle ids, so nothing is reused): the probe would silently run
-    most of the query twice.  So shuffle-bearing plans report the
-    session's configured shuffle width instead — which is exactly what
-    their output width will be — and only exchange-free plans use the
-    (job-free) RDD probe.  Returns 0 when nothing can be determined,
-    which includes shuffle-bearing plans while AQE partition coalescing
-    is on: the post-shuffle width then depends on shuffle bytes, not on
-    the configured width, so callers repartition rather than risk a
-    Python stage on one or two coalesced partitions."""
-    import re
-
-    global _SHUFFLE_NODE_RE
-    if _SHUFFLE_NODE_RE is None:
-        _SHUFFLE_NODE_RE = re.compile(
-            r"(?m)^[\s:+-]*(Join|Aggregate|Repartition|"
-            r"RepartitionByExpression|Rebalance|Window|Deduplicate|Sort)\b"
-        )
-    sess = df.sparkSession
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # pragma: no cover — internals moved; stay safe
-        plan = None
-    if plan is None or _SHUFFLE_NODE_RE.search(plan):
-        try:
-            if all(
-                sess.conf.get(key).strip().lower() == "true"
-                for key in (
-                    "spark.sql.adaptive.enabled",
-                    "spark.sql.adaptive.coalescePartitions.enabled",
-                )
-            ):
-                return 0
-            return int(sess.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:  # pragma: no cover
-            return 0
-    try:
-        return df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover — never fail the query path
-        return 0
-
-
-def spread_for_python(df, target_partitions: int):
-    """Round-robin repartition ONLY when ``df`` has fewer partitions
-    than the session's parallelism.
-
-    Opaque Python stages (mapInArrow / pandas UDFs) run on however many
-    partitions the input happens to have, and the optimizer cannot see
-    their per-row CPU cost (guide §2, §4): a small parquet scan arrives
-    as ONE partition and would run the whole kernel single-core.  But
-    when the upstream plan already spread the rows (a groupBy/join
-    leaves spark.sql.shuffle.partitions partitions), the extra exchange
-    only costs — measured +0.3-1 s of pure task/scheduler overhead per
-    query at bench scale.  The width probe (:func:`upstream_width`) is
-    plan-time only — no job runs."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if upstream_width(df) < par:
-        return df.repartition(target_partitions)
-    return df
-
-
 def arrow_binary_flat(arr) -> tuple:
     """Zero-copy (data uint8[], offsets int64[n+1]) view of an Arrow
     binary/string array — the layout kernels.*_flat ingest natively.

@@ -88,6 +88,16 @@ def test_package_imports_nothing_from_tests():
         assert heads & test_modules == set(), path
 
 
+def test_package_parses_no_plans():
+    """No sz_spark module reaches through ``_jdf`` or reads a
+    ``queryExecution``: partition widths come from the caller or the
+    session conf, never from a plan string."""
+    for path in glob.glob(os.path.join(REPO, "sz_spark", "*.py")):
+        with open(path, encoding="utf-8") as fh:
+            text = fh.read()
+        assert "_jdf" not in text and "queryExecution" not in text, path
+
+
 def _run_pipeline_script():
     spec = importlib.util.spec_from_file_location(
         "run_pipeline_script", os.path.join(REPO, "scripts", "run_pipeline.py")

@@ -380,15 +380,6 @@ def test_fingerprint_fused_equals_grouped():
         assert (h1 == h3).all(), widths
 
 
-def test_simhash_batch_equals_scalar_hash():
-    """fnv1a_splitmix_batch is bit-identical to the scalar PRF."""
-    from sz_spark import kernels as K
-
-    toks = [b"", b"a", b"hello world", b"\xff\x00\x10" * 5]
-    got = K.fnv1a_splitmix_batch(toks)
-    assert all(int(x) == K.hash_bytes_u64(t) for x, t in zip(got, toks))
-
-
 def test_hasher_incremental_vs_one_shot():
     """sz.Hasher parity (reference test/hash.py:51-80): streaming over
     any chunk split equals the one-shot hash; digest is repeatable and

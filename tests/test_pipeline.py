@@ -820,31 +820,48 @@ def test_workers_keep_the_checked_zip_invalidation(spark):
     assert all(checked for _, _, checked in imported), rows
 
 
-def test_upstream_width(spark):
-    """Scan: the RDD's width; shuffle plan: the configured width, or 0
-    (unknown) once AQE may coalesce its partitions."""
-    from pyspark.sql import functions as F
+def test_partition_width_policy(spark):
+    """Widths come from the session conf, never from the plan:
+    score_pairs round-robins attach_texts' output to min(4 x cores,
+    spark.sql.shuffle.partitions), AQE coalescing or not;
+    doc_features and shingle_minhash_bands run on their input's
+    partitions; dedup_minhash_lsh spreads its documents scan to
+    defaultParallelism."""
+    import re
 
-    from sz_spark.udfs import spread_for_python, upstream_width
+    from sz_spark import blocking, scoring
+    from sz_spark.queries import dedup_minhash_lsh
 
-    scan = spark.range(100, numPartitions=3)
-    grouped = scan.groupBy((F.col("id") % 7).alias("k")).count()
-    assert upstream_width(scan) == 3
-    assert upstream_width(grouped) == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
+    def round_robin(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [int(n) for n in re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)]
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} says hello to the world") for i in range(6)],
+        "conv_id long, doc string",
     )
-
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "true")
+    pairs = spark.createDataFrame([(0, 1), (2, 3), (4, 5)], "id_a long, id_b long")
+    assert spark.sparkContext.defaultParallelism == 8
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
     try:
-        assert upstream_width(grouped) == 0
-        assert upstream_width(scan) == 3
-        spread = spread_for_python(grouped, 16)
-        plan = spread._jdf.queryExecution().executedPlan().toString()
-        assert "RoundRobinPartitioning(16)" in plan
+        for width, coalesce, n in (
+            (8, "false", 8), (3, "false", 3), (64, "false", 32), (8, "true", 8),
+        ):
+            spark.conf.set(keys[0], str(width))
+            spark.conf.set(keys[1], coalesce)
+            wt = scoring.attach_texts(pairs, docs)
+            assert round_robin(scoring.score_pairs(wt, bounded=0.5)) == [n], (
+                width, coalesce,
+            )
     finally:
-        spark.conf.set(key, saved)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+    assert round_robin(blocking.doc_features(docs)) == []
+    assert round_robin(blocking.shingle_minhash_bands(docs)) == []
+    assert round_robin(dedup_minhash_lsh(spark, SF_DIR)) == [8]
 
 
 def test_pipeline_gather_tiers_identical(spark, monkeypatch):

@@ -335,17 +335,24 @@ def test_cache_lifecycle_no_storage_residue(spark):
     blocks may linger for the rest of a shared session (VERDICT r3
     wrong #1 — the un-unpersisted band/shingle caches were the prime
     suspect for the driver bench's 5.6x er_pair_scores_lev regression).
-    Runs the three storage-heavy queries back-to-back TWICE and asserts
-    persisted-RDD count does not grow across rounds and drains to ~0
-    (ContextCleaner is async, so poll briefly)."""
+    Runs the three storage-heavy queries back-to-back three times and
+    asserts the persisted RDDs created by these runs do not grow across
+    rounds and drain to ~0 (ContextCleaner is async, so poll briefly).
+    RDDs persisted before the first round (earlier tests sharing the
+    session, still being finalized) are not counted."""
     import gc
     import time
 
     heavy = ("dedup_ngram_jaccard", "dedup_minhash_lsh", "er_pair_scores_lev")
     qs = entry_mod.queries()
 
-    def persisted_count() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    def persisted() -> dict:
+        return {int(k): v.rdd() for k, v in spark.sparkContext._jsc.getPersistentRDDs().items()}
+
+    before = set(persisted())
+
+    def lingering() -> dict:
+        return {i: r for i, r in persisted().items() if i not in before}
 
     counts = []
     for _ in range(3):
@@ -354,20 +361,23 @@ def test_cache_lifecycle_no_storage_residue(spark):
             df.count()
             del df
         gc.collect()
-        n = persisted_count()
+        left = lingering()
         for _ in range(40):  # ContextCleaner + py4j finalizers are async
-            if n == 0:
+            if not left:
                 break
             time.sleep(0.25)
             gc.collect()
             spark.sparkContext._jvm.System.gc()
-            n = persisted_count()
-        counts.append(n)
+            left = lingering()
+        counts.append(len(left))
+    detail = "; ".join(
+        f"rdd {i} {r.name()!r} created at {r.getCreationSite()}" for i, r in left.items()
+    )
     # the checkpointed band tables die with their result DataFrames: the
     # persisted count must PLATEAU (bounded by in-flight finalization),
     # never accumulate round over round
-    assert counts[2] <= max(counts[1], 2), f"storage residue accumulating: {counts}"
-    assert counts[2] <= 2, f"persisted RDDs lingering after actions: {counts}"
+    assert counts[2] <= max(counts[1], 2), f"storage residue accumulating: {counts}: {detail}"
+    assert counts[2] <= 2, f"persisted RDDs lingering after actions: {counts}: {detail}"
 
 
 def test_engine_rng_sample_determinism(spark):
