@@ -14,8 +14,8 @@ Modes:
       dump .explain("formatted") of registry queries to
       <out_dir>/<name>_<suffix>.txt (default suffix 'before', default
       all registry queries), with the per-session ids (``plan_id=N``,
-      ``#N`` expression ids) stripped so a ``diff -r`` of two dumps
-      shows only real plan changes.
+      ``#N`` expression ids, ``RDD[N]`` ids) stripped so a ``diff -r``
+      of two dumps shows only real plan changes.
 
 Per-stage walls of the real pipeline come from
 ``python3 perfbench/run.py --trace 1``.
@@ -137,9 +137,12 @@ def mode_plans(out_dir: str, suffix: str, names: list[str]) -> None:
 
 
 def _strip_plan_ids(plan: str) -> str:
-    """``plan`` without the ids Spark numbers per session: ``, [plan_id=N]``
-    and the digits of ``name#N`` expression ids (``id#12L`` -> ``id#L``)."""
-    return re.sub(r"#\d+", "#", re.sub(r",? ?\[plan_id=\d+\]", "", plan))
+    """``plan`` without the ids Spark numbers per session: ``, [plan_id=N]``,
+    the digits of ``name#N`` expression ids (``id#12L`` -> ``id#L``) and
+    the RDD ids of ExistingRDD scans (``MapPartitionsRDD[183]`` ->
+    ``MapPartitionsRDD[]``)."""
+    plan = re.sub(r",? ?\[plan_id=\d+\]", "", plan)
+    return re.sub(r"RDD\[\d+\]", "RDD[]", re.sub(r"#\d+", "#", plan))
 
 
 if __name__ == "__main__":

@@ -71,6 +71,7 @@ def main() -> int:
     if not args.sf_dir and not args.transcripts:
         p.error("one of --sf-dir / --transcripts is required")
 
+    from sz_spark import blocking
     from sz_spark.pipeline import run_pipeline
     from sz_spark.session import build_session
     from sz_spark.transcripts import build_transcripts
@@ -92,7 +93,10 @@ def main() -> int:
         "n_turns": n_turns,
         "n_conversations": clusters.count(),
         "n_clusters": clusters.select("cluster_id").distinct().count(),
-        "suppressed_blocks": stages["suppressed_blocks"].count(),
+        "suppressed_blocks": blocking.suppressed_blocks(
+            blocking.bands_from_features(stages["doc_features"], id_col="did"),
+            cfg.max_block_size,
+        ).count(),
         "wall_sec": round(time.time() - t0, 2),
         "output": args.output,
     }

@@ -16,9 +16,11 @@ Scale design: above the gather gate, banding is the pipeline's ONE
 deliberate shuffle before pair scoring (:func:`block_pairs`); below it
 the blocks come from the broadcast block keys in one narrow pass
 (:func:`block_pairs_gathered`).  Oversized blocks (stop-band
-signatures) are suppressed on both tiers — the classic LSH guard; at
-10^12 turns a single hot band would otherwise generate O(n^2) pairs.
-AQE skew-join handles residual imbalance.
+signatures) are suppressed inside pair emission on both tiers — the
+classic LSH guard; at 10^12 turns a single hot band would otherwise
+generate O(n^2) pairs.  Both tiers return pairs only: the list of
+suppressed blocks is a report, built on demand from the band rows by
+:func:`suppressed_blocks`.  AQE skew-join handles residual imbalance.
 """
 
 from __future__ import annotations
@@ -141,11 +143,10 @@ def block_pairs(
     bands: DataFrame,
     id_col: str = "conv_id",
     max_block_size: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Every unordered in-block pair (id_a < id_b), once, from rows
-    keyed by (band_id, band_hash), plus the suppressed-block stats
-    frame (band_id, band_hash, block_size): the one operator that turns
-    keyed rows into in-block pairs.  Callers select their own key
+) -> DataFrame:
+    """Every unordered in-block pair (id_a, id_b), id_a < id_b, once,
+    from rows keyed by (band_id, band_hash): the one operator that
+    turns keyed rows into in-block pairs.  Callers select their own key
     columns as band_id/band_hash.
 
     Plan: the ids are grouped per key, each block's list is collected
@@ -155,13 +156,12 @@ def block_pairs(
     cap, a window count on the same hash partitioning drops blocks of
     more than ``max_block_size`` members (stop-bands) BEFORE any list is
     collected, so a pathological block can never OOM an aggregation
-    task; the suppressed-stats agg reuses that exchange.  Per-block work
-    is then bounded by cap^2 cheap emissions in one task, so no block
-    needs salting across reducers.  ``None`` means uncapped (the
-    suppressed frame is empty).  This is the join tier's blocking;
-    below the gather gate the pipeline builds the same blocks from the
-    broadcast keys with no band rows and no shuffle
-    (:func:`block_pairs_gathered`)."""
+    task; :func:`suppressed_blocks` lists the dropped blocks.  Per-block
+    work is then bounded by cap^2 cheap emissions in one task, so no
+    block needs salting across reducers.  ``None`` means uncapped.
+    This is the join tier's blocking; below the gather gate the
+    pipeline builds the same blocks from the broadcast keys with no
+    band rows and no shuffle (:func:`block_pairs_gathered`)."""
     keys = ("band_id", "band_hash")
     if max_block_size is None:
         blocks = (
@@ -169,30 +169,31 @@ def block_pairs(
             .agg(F.collect_list(F.col(id_col)).alias("ids"))
             .filter(F.size("ids") >= 2)
         )
-        suppressed = blocks.select(
-            *keys, F.size("ids").cast("long").alias("block_size")
-        ).filter(F.lit(False))
     else:
         from pyspark.sql import Window
 
-        sized = bands.withColumn(
-            "block_size", F.count(F.lit(1)).over(Window.partitionBy(*keys))
-        )
         size = F.col("block_size")
-        suppressed = (
-            sized.filter(size > max_block_size)
-            .groupBy(*keys)
-            .agg(F.first("block_size").alias("block_size"))
-        )
         blocks = (
-            sized.filter((size <= max_block_size) & (size >= 2))
+            bands.withColumn(
+                "block_size", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+            )
+            .filter((size <= max_block_size) & (size >= 2))
             .groupBy(*keys)
             .agg(F.collect_list(F.col(id_col)).alias("ids"))
         )
-    pairs = explode_lower_triangle(blocks, "ids").dropDuplicates(
-        ["id_a", "id_b"]
+    return explode_lower_triangle(blocks, "ids").dropDuplicates(["id_a", "id_b"])
+
+
+def suppressed_blocks(bands: DataFrame, max_block_size: int | None = None) -> DataFrame:
+    """The stop-band blocks both pairs tiers drop: (band_id, band_hash,
+    block_size) of every key of ``bands`` holding more than
+    ``max_block_size`` rows; empty when uncapped.  A lazy report for
+    run summaries — neither tier reads it to emit pairs."""
+    return (
+        bands.groupBy("band_id", "band_hash")
+        .agg(F.count(F.lit(1)).alias("block_size"))
+        .filter(F.col("block_size") > _cap(max_block_size))
     )
-    return pairs, suppressed
 
 
 def block_pairs_gathered(
@@ -244,29 +245,6 @@ def block_pairs_gathered(
                     )
 
     return spark.range(n_tasks, numPartitions=n_tasks).mapInArrow(fn, out_schema)
-
-
-def suppressed_blocks_gathered(
-    spark, value, max_block_size: int | None = None
-) -> DataFrame:
-    """:func:`block_pairs`' suppressed-block stats (band_id, band_hash,
-    block_size), built on the driver from a prune broadcast's ``value``
-    (scoring.build_prune_broadcast): every (key row, key) whose block
-    size is above ``max_block_size``, once, with band_id = row - 1."""
-    import numpy as np
-    import pyarrow as pa
-
-    keys, sizes = value[3], value[4]
-    row, col = np.nonzero(sizes > _cap(max_block_size))
-    blocks, first = np.unique(
-        np.stack([row, keys[row, col]]), axis=1, return_index=True
-    )
-    tbl = pa.table({
-        "band_id": pa.array(blocks[0] - 1, pa.int32()),
-        "band_hash": blocks[1],
-        "block_size": sizes[row[first], col[first]].astype(np.int64),
-    })
-    return spark.createDataFrame(tbl, "band_id int, band_hash long, block_size long")
 
 
 def _cap(max_block_size: int | None) -> float:

@@ -26,14 +26,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-EXACT_DUP_SQL = """
-SELECT md5(text) AS text_hash, count(*) AS n_docs, min(doc_id) AS keep_doc_id
-FROM documents
-GROUP BY md5(text)
-HAVING count(*) > 1
-"""
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -310,7 +302,7 @@ def simhash_near_pairs(
             )
         ).alias("s"),
     ).select("doc", "s.band_id", "s.band_hash")
-    pairs, _ = blocking.block_pairs(
+    pairs = blocking.block_pairs(
         tables, id_col="doc", max_block_size=max_bucket_size or None
     )
     cand = pairs.select(
@@ -410,7 +402,7 @@ def embedding_near_pairs_lsh(
     bk = ann.hyperplane_buckets(embeddings, dim, n_bits, n_tables)
     # in-array pair emission (blocking.block_pairs, uncapped) instead of
     # the within-bucket self-join
-    cand, _ = blocking.block_pairs(
+    cand = blocking.block_pairs(
         bk.select(
             F.col("table").alias("band_id"),
             F.col("bucket").alias("band_hash"),

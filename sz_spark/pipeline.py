@@ -41,7 +41,7 @@ class PipelineConfig:
     # guaranteed margin on both sides
     threshold: float = 0.94
     # the block-size cap: blocks of more than max_block_size members
-    # are suppressed as stop-bands (reported in suppressed_blocks);
+    # are suppressed as stop-bands (listed by blocking.suppressed_blocks);
     # every smaller block emits all its pairs in-array, unsalted
     # (blocking.block_pairs); None means uncapped
     max_block_size: int | None = 1024
@@ -57,13 +57,16 @@ def run_pipeline(
     transcripts: DataFrame,
     cfg: PipelineConfig | None = None,
 ) -> dict[str, DataFrame]:
-    """Returns {'docs', 'pairs', 'scored', 'clusters', 'suppressed_blocks'}.
+    """Returns {'docs', 'doc_features', 'pairs', 'scored', 'clusters'}.
 
-    ``pairs`` holds the candidate pairs (surrogate ``did`` ids, id_a <
-    id_b) that SURVIVE the length + histogram prune — on both tiers, so
-    a ``pairs`` checkpoint resumes straight into scoring; the raw
-    deduplicated candidate set is never materialized.  ``scored`` holds
-    those pairs' edit distances and similarities under conv_ids."""
+    ``doc_features`` holds the per-doc block keys and prune attributes
+    (blocking.doc_features); blocking.suppressed_blocks lists the
+    stop-band blocks from them on demand.  ``pairs`` holds the
+    candidate pairs (surrogate ``did`` ids, id_a < id_b) that SURVIVE
+    the length + histogram prune — on both tiers, so a ``pairs``
+    checkpoint resumes straight into scoring; the raw deduplicated
+    candidate set is never materialized.  ``scored`` holds those pairs'
+    edit distances and similarities under conv_ids."""
     cfg = cfg or PipelineConfig()
     ckpt = CheckpointManager(spark, cfg.checkpoint_dir)
 
@@ -71,8 +74,8 @@ def run_pipeline(
     # and the candidate-pair set are shuffled several times each, and a
     # string conv_id costs ~3x the bytes of a long in UnsafeRow format.
     # xxhash64 is deterministic across runs/executors; the collision
-    # probability for n docs is n^2/2^65 (~2e-9 at 1M docs), and the
-    # guard below makes one fail loudly.  conv_id comes back only where
+    # probability for n docs is n^2/2^65 (~2e-9 at 1M docs), and
+    # pairs_stage makes one fail loudly.  conv_id comes back only where
     # the texts join the (small) prune-survivor set, and in the clusters.
     docs = ckpt.stage(
         "canonical_docs",
@@ -100,39 +103,21 @@ def run_pipeline(
     feats = ckpt.stage("doc_features", _feats)
 
     # the gather tier's broadcast, released (executor blocks) once
-    # `pairs` is materialized — the checkpoint truncates the lineage,
-    # so nothing re-executes the kernel that captured it; unpersist
-    # (not destroy) keeps the driver copy as a safety net
+    # `pairs` is materialized or has failed — the checkpoint truncates
+    # the lineage, so nothing re-executes the kernel that captured it;
+    # unpersist (not destroy) keeps the driver copy as a safety net
     gather_bcs: list = []
-    suppressed: list = []
 
     def _pairs():
-        out, sup, bcs = pairs_stage(feats, cfg)
-        suppressed.append(sup)
+        out, bcs = pairs_stage(feats, cfg)
         gather_bcs.extend(bcs)
-        for bc in bcs:
-            ids = bc.value[0]  # id-sorted: a collision is a repeat
-            _check_surrogate_keys(len(ids), len(ids) - int((ids[1:] == ids[:-1]).sum()))
         return out
 
-    pairs = ckpt.stage("pairs", _pairs)
-    for bc in gather_bcs:
-        bc.unpersist()
-    if not suppressed:
-        # `pairs` resumed from its checkpoint: the join tier's stats frame
-        suppressed.append(blocking.block_pairs(
-            blocking.bands_from_features(feats, id_col="did"),
-            id_col="did", max_block_size=cfg.max_block_size,
-        )[1])
-    if not gather_bcs:
-        # join tier, or `pairs` resumed from its checkpoint: one agg.
-        # canonicalize emits one row per conv_id (groupBy), so
-        # count(*) == countDistinct(did) iff no collision.
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col("did")).alias("n_did"),
-        ).collect()[0]
-        _check_surrogate_keys(row["n"], row["n_did"])
+    try:
+        pairs = ckpt.stage("pairs", _pairs)
+    finally:
+        for bc in gather_bcs:
+            bc.unpersist()
 
     scored = ckpt.stage("scored", lambda: scored_stage(pairs, docs, cfg))
 
@@ -154,42 +139,51 @@ def run_pipeline(
 
     return {
         "docs": docs,
+        "doc_features": feats,
         "pairs": pairs,
         "scored": scored,
         "clusters": clusters,
-        "suppressed_blocks": suppressed[0],
     }
 
 
-def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame, list]:
+def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, list]:
     """run_pipeline's ``pairs`` stage frame — the prune survivors (did
-    ids, id_a < id_b) — plus the suppressed-block stats (band_id,
-    band_hash, block_size) and the broadcasts it captured, to unpersist
-    once the frame is materialized.
+    ids, id_a < id_b) — and the broadcasts it captured, to unpersist
+    once the frame is materialized.  Raises on a did collision before
+    it returns, so a collision never leaves a ``pairs`` checkpoint.
 
     Two tiers (scoring.py "Gathered" block).  Below the gate every
     doc's prune attributes and block keys ship ONCE per worker, and
     blocking.block_pairs_gathered rebuilds the blocks from those keys
     in one narrow pass (no band rows, no exchange): each candidate
     leaves exactly one block and is pruned in the same pass; the
-    suppressed stats come from the broadcast's block sizes.  Beyond
-    the gate (SZ_GATHER_MAX_DOCS=0 puts every non-empty corpus there)
-    the band rows are shuffled into blocks, the candidates
-    deduplicated, and their (len, hist) joined on.  Both tiers keep
-    the identical pair set (tests/test_pipeline.py parity tests)."""
+    broadcast's sorted ids show a collision as a repeat.  Beyond the
+    gate (SZ_GATHER_MAX_DOCS=0 puts every non-empty corpus there) one
+    aggregate over ``feats`` checks the ids, the band rows are shuffled
+    into blocks, the candidates deduplicated, and their (len, hist)
+    joined on.  Both tiers keep the identical pair set
+    (tests/test_pipeline.py parity tests)."""
     if scoring.gather_gate(feats):
-        spark = feats.sparkSession
         prune_bc = scoring.build_prune_broadcast(feats)
+        ids = prune_bc.value[0]  # id-sorted: a collision is a repeat
+        try:
+            _check_surrogate_keys(len(ids), len(ids) - int((ids[1:] == ids[:-1]).sum()))
+        except RuntimeError:
+            prune_bc.unpersist()
+            raise
         pairs = blocking.block_pairs_gathered(
-            spark, prune_bc, cfg.threshold, cfg.max_block_size
+            feats.sparkSession, prune_bc, cfg.threshold, cfg.max_block_size
         )
-        suppressed = blocking.suppressed_blocks_gathered(
-            spark, prune_bc.value, cfg.max_block_size
-        )
-        return pairs, suppressed, [prune_bc]
-    bands = blocking.bands_from_features(feats, id_col="did")
-    candidates, suppressed = blocking.block_pairs(
-        bands, id_col="did", max_block_size=cfg.max_block_size
+        return pairs, [prune_bc]
+    # doc_features emits one row per canonical doc, and canonicalize
+    # one per conv_id, so count(*) == countDistinct(did) iff no collision
+    row = feats.agg(
+        F.count(F.lit(1)).alias("n"), F.count_distinct(F.col("did")).alias("n_did")
+    ).collect()[0]
+    _check_surrogate_keys(row["n"], row["n_did"])
+    candidates = blocking.block_pairs(
+        blocking.bands_from_features(feats, id_col="did"),
+        id_col="did", max_block_size=cfg.max_block_size,
     )
     # prune BEFORE attaching texts: the prunes need only (len, hist)
     # per side and drop ~95% of candidates; the doc bytes join only the
@@ -197,7 +191,7 @@ def pairs_stage(feats: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataF
     attrs = scoring.attach_prune_attrs(
         candidates, feats.select("did", "len", "hist")
     )
-    return scoring.prune_pairs_arrow(attrs, cfg.threshold), suppressed, []
+    return scoring.prune_pairs_arrow(attrs, cfg.threshold), []
 
 
 def scored_stage(pairs: DataFrame, docs: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -754,9 +754,7 @@ def szs_hash_multiseed(spark, sf):
     semantics per SURVEY.md §2.7 (values are ours, not sz_hash's): the
     registered PRF is the low 60 bits of md5(seed || '|' || text), which
     both engines compute natively (JVM md5 + conv — zero Python), giving
-    a hard cross-engine value check of the seeded-family contract.  A
-    pure-JVM xxhash64 multiseed (udfs.hash_multiseed_xxhash) is the
-    production feature-hashing path, property-tested in pytest.
+    a hard cross-engine value check of the seeded-family contract.
 
     Output is one scalar row per (doc, seed) — array columns crash the
     driver canonicalizer (CORRECTNESS_r01)."""
@@ -994,7 +992,7 @@ def _md5_band_pairs(docs: DataFrame, text_col: str = "doc") -> DataFrame:
             )
         ).alias("b"),
     ).select("conv_id", "b.band_id", "b.band_hash")
-    return blocking.block_pairs(long)[0]
+    return blocking.block_pairs(long)
 
 
 def er_candidate_pairs(spark, sf):

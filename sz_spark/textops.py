@@ -34,9 +34,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 _LANG_ORDER = tuple(LANG_STOPWORDS)  # priority order for argmax ties
 
-# legacy tiny set still used by quality_score's stopword ratio
-STOPWORDS = {"en": ("the", "a", "of")}
-
 
 def _hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))

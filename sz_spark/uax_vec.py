@@ -155,23 +155,17 @@ def _lut(size, members):
 _WB_IGN = _lut(19, (_C.EXTEND, _C.FORMAT, _C.ZWJ))
 _WB_NEWL = _lut(19, (_C.CR, _C.LF, _C.NEWLINE))
 _WB_AH = _lut(19, (_C.ALETTER, _C.HEBREW))
-_WB_MIDNLQ = _lut(19, (_C.MIDNUMLET, _C.SINGLE_QUOTE))
 _WSEG_ARR = np.asarray(sorted(_C._WSEGSPACE_CPS), dtype=np.int64)
 
 _SB_IGN = _lut(15, (_C.S_EXTEND, _C.S_FORMAT))
 _SB_PARA = _lut(15, (_C.S_SEP, _C.S_CR, _C.S_LF))
 _SB_BLOCK = _lut(15, _C._SB8_BLOCKERS)
 _SB_TERM = _lut(15, (_C.S_ATERM, _C.S_STERM))
-_SB_CLOSE1 = _lut(15, (_C.S_CLOSE,))
-_SB_SP1 = _lut(15, (_C.S_SP,))
 
 _NLB = 44  # Line_Break classes incl. newest-TR14 AK/AP/AS/VF/VI/HH + CB
 _LB_NONABS = _lut(_NLB, (_C.LB_BK, _C.LB_CR, _C.LB_LF, _C.LB_NL, _C.LB_SP, _C.LB_ZW))
 _LB_MAND = _lut(_NLB, (_C.LB_BK, _C.LB_CR, _C.LB_LF, _C.LB_NL))
 _LB_ATTACH = _lut(_NLB, (_C.LB_CM, _C.LB_ZWJ))
-_LB13_SET = _lut(_NLB, (_C.LB_CL, _C.LB_CP, _C.LB_EX, _C.LB_SY))  # IS: LB15.3/15.4
-_LB_IDEM = _lut(_NLB, (_C.LB_ID, _C.LB_EB, _C.LB_EM))
-_LB_ALHL = _lut(_NLB, (_C.LB_AL, _C.LB_HL))
 _LB15A_LEFT = _lut(_NLB, _C._LB15A_LEFT)
 _LB15B_RIGHT = _lut(_NLB, _C._LB15B_RIGHT)
 _LB20A_LEFT = _lut(_NLB, _C._LB20A_LEFT)
@@ -285,8 +279,6 @@ def _build_wb_pair_tables():
 
 
 _WB_ACT, _WB_DFT = _build_wb_pair_tables()
-_WSEG_BMP = np.zeros(0x10000, dtype=bool)
-_WSEG_BMP[list(_C._WSEGSPACE_CPS)] = True
 
 # --- fused fast-path tables: extended 19-class props (18 = WSegSpace, a
 # raw-codepoint set in the scalar engine, plain Word_Break class Other —
@@ -1405,8 +1397,6 @@ def linebreak_decisions(cps: np.ndarray, text_start_of: np.ndarray | None = None
 
 
 # --- batched text API --------------------------------------------------------
-
-_SEP = 0x0A  # LF: hard barrier in all four annexes (module docstring)
 
 
 def _concat_batch(texts):

@@ -407,15 +407,6 @@ def make_translate_lut_udf(lut: bytes):
     return translate
 
 
-def hash_multiseed_xxhash(col, seeds=(0, 1, 42, 314159)):
-    """Pure-JVM multiseed hashing (sz.hash_multiseed analog, hash.h:173):
-    one xxhash64 per seed, no Python anywhere.  This is the production
-    feature-hashing path; the registry's md5-PRF variant exists for the
-    DuckDB cross-engine check (SURVEY.md §2.7 interchangeable-PRF
-    stance).  Returns array<long>, one element per seed."""
-    return F.array(*[F.xxhash64(col, F.lit(int(s))) for s in seeds])
-
-
 def make_sz_hash_exact_udf(seed: int = 0):
     """Arrow-batched pandas UDF computing the EXACT AES-based `sz.hash`
     (hash.h:139, README.md:752-830) via sz_spark.szhash — bit-identical
@@ -423,10 +414,9 @@ def make_sz_hash_exact_udf(seed: int = 0):
     tests/test_szhash.py).  Returns the u64 hash as its int64 bit
     pattern, the repo's 'u64 hashes in signed types' convention.
 
-    Use this when porting STORED sz-hash values; the interchangeable-PRF
-    xxhash64 path (hash_multiseed_xxhash) stays the default for
-    blocking/dedup where only PRF quality matters, since it never leaves
-    the JVM.
+    Use this when porting STORED sz-hash values; blocking and dedup
+    hash with Spark's xxhash64 (an interchangeable PRF, e.g.
+    blocking._prefix_key), which never leaves the JVM.
 
     NULL convention: NULL inputs hash as the empty string (both map to
     hash(b"") via the batch's None -> b"" coercion), NOT to NULL.  When

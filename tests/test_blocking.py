@@ -99,7 +99,7 @@ def test_triangle_struct_elements_use_jvm_path(spark):
 def test_block_pairs_uncapped_equals_brute_force(spark):
     """Uncapped block_pairs == every unordered pair of ids sharing a
     (band_id, band_hash) key, once: (1, 2) shares two keys, key (1, 30)
-    holds one id only, and the suppressed frame is empty."""
+    holds one id only, and uncapped no block is suppressed."""
     import itertools
 
     rows = [
@@ -116,12 +116,11 @@ def test_block_pairs_uncapped_equals_brute_force(spark):
             sorted(r[0] for r in rows if (r[1], r[2]) == key), 2
         )
     }
-    pairs, suppressed = blocking.block_pairs(bands)
-    got = [tuple(r) for r in pairs.collect()]
+    got = [tuple(r) for r in blocking.block_pairs(bands).collect()]
     assert sorted(got) == sorted(want) == [
         (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (4, 5)
     ]
-    assert suppressed.count() == 0
+    assert blocking.suppressed_blocks(bands).collect() == []
 
 
 def test_triangle_chunked_large_block(spark):

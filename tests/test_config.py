@@ -77,6 +77,70 @@ def test_every_module_is_reached_from_an_entry_point():
     assert modules - reached == set()
 
 
+#: where a sz_spark name may be read: the entry points, the package and
+#: its tests
+READERS = (*ENTRY_POINTS, "sz_spark/*.py", "tests/**/*.py")
+
+
+def _bound_names(t: ast.AST):
+    """The module names an assignment target binds or fills: ``x``,
+    each of ``x, y`` and the base ``x`` of ``x[i]`` / ``x.attr``."""
+    if isinstance(t, (ast.Tuple, ast.List)):
+        for e in t.elts:
+            yield from _bound_names(e)
+    else:
+        while isinstance(t, (ast.Subscript, ast.Attribute)):
+            t = t.value
+        if isinstance(t, ast.Name):
+            yield t.id
+
+
+def _module_bindings(body: list, out: dict) -> dict:
+    """name -> the module-level statements (also inside module-level
+    if/try/for/with blocks) that bind or fill it; imports excluded."""
+    for stmt in body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.setdefault(stmt.name, []).append(stmt)
+            continue
+        if isinstance(stmt, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+            for t in targets:
+                for name in _bound_names(t):
+                    out.setdefault(name, []).append(stmt)
+        for block in ("body", "orelse", "finalbody"):
+            _module_bindings(getattr(stmt, block, []), out)
+        for handler in getattr(stmt, "handlers", []):
+            _module_bindings(handler.body, out)
+    return out
+
+
+def test_every_package_name_is_read():
+    """Every module-level name a sz_spark/*.py file defines is read
+    (a Name or an attribute load) somewhere in READERS, outside the
+    statements that bind or fill it: a dead function or table fails
+    here even when its module is reached."""
+    files = {p for pat in READERS for p in glob.glob(os.path.join(REPO, pat), recursive=True)}
+    trees = {}
+    for path in files:
+        with open(path, encoding="utf-8") as fh:
+            trees[path] = ast.parse(fh.read(), path)
+    reads: dict[str, list] = {}
+    for path, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Name, ast.Attribute)) and isinstance(node.ctx, ast.Load):
+                name = node.id if isinstance(node, ast.Name) else node.attr
+                reads.setdefault(name, []).append((path, node))
+    dead = []
+    for path in sorted(glob.glob(os.path.join(REPO, "sz_spark", "*.py"))):
+        for name, stmts in _module_bindings(trees[path].body, {}).items():
+            if name.startswith("__") and name.endswith("__"):
+                continue
+            own = {id(n) for s in stmts for n in ast.walk(s)}
+            if not any(p != path or id(n) not in own for p, n in reads.get(name, [])):
+                dead.append(f"{os.path.basename(path)}:{name}")
+    assert dead == []
+
+
 def test_package_imports_nothing_from_tests():
     """No sz_spark module imports a tests/ module (oracles, the scalar
     UAX engines, test files)."""
@@ -132,6 +196,7 @@ def test_max_block_size_flag_is_the_block_cap(spark):
     """--max-block-size 8 suppresses every block of more than 8 docs:
     on a corpus whose one shared key holds 9 docs, that block is the
     only suppressed one and no pair is emitted."""
+    from sz_spark import blocking
     from sz_spark.pipeline import pairs_stage
 
     script = _run_pipeline_script()
@@ -142,7 +207,10 @@ def test_max_block_size_flag_is_the_block_cap(spark):
         [(d, 10, 7, [100 + d], bytes(192)) for d in range(9)],
         "did long, len int, pk long, bk array<long>, hist binary",
     )
-    pairs, suppressed, bcs = pairs_stage(feats, cfg)
+    pairs, bcs = pairs_stage(feats, cfg)
+    suppressed = blocking.suppressed_blocks(
+        blocking.bands_from_features(feats, id_col="did"), cfg.max_block_size
+    )
     try:
         assert [tuple(r) for r in suppressed.collect()] == [(-1, 7, 9)]
         assert pairs.count() == 0

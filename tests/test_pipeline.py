@@ -89,8 +89,7 @@ def test_block_pairs_fused_equals_salted_join(spark):
     dedup) == itertools.combinations over every block that survives
     the cap, on the skew fixture (a small block, a 40-member block
     under the cap, one suppressed) plus multi-band overlap for the
-    dedup; the suppressed stats list exactly the blocks above the
-    cap."""
+    dedup; suppressed_blocks lists exactly the blocks above the cap."""
     import itertools
     from collections import defaultdict
 
@@ -116,9 +115,10 @@ def test_block_pairs_fused_equals_salted_join(spark):
         for pair in itertools.combinations(sorted(ids), 2)
     }
     assert len(want) == 40 * 39 // 2 + 5 * 4 // 2  # no huge%d pair
-    new, sup = blocking.block_pairs(bands, max_block_size=cap)
+    new = blocking.block_pairs(bands, max_block_size=cap)
     got = [tuple(r) for r in new.select("id_a", "id_b").collect()]
     assert set(got) == want and len(got) == len(want)  # set AND no dups
+    sup = blocking.suppressed_blocks(bands, cap)
     assert [tuple(r) for r in sup.collect()] == [
         (b, h, len(ids)) for (b, h), ids in blocks.items() if len(ids) > cap
     ] == [(0, 333, 200)]
@@ -185,7 +185,7 @@ def test_scored_stage_joins_only_the_texts(spark):
 
     cfg, docs, feats = _gather_fixture(spark)
     docs = docs.localCheckpoint()  # as the pipeline's stages are
-    pairs, _, bcs = pairs_stage(feats, cfg)
+    pairs, bcs = pairs_stage(feats, cfg)
     try:
         scored = scored_stage(pairs.localCheckpoint(), docs, cfg)
         plan = scored._jdf.queryExecution().executedPlan().toString()
@@ -310,19 +310,67 @@ def test_checkpoint_root_unsupported_scheme(spark, root):
         CheckpointManager(spark, root)
 
 
-def test_surrogate_collision_guard(spark, monkeypatch):
-    """ADVICE r4: a did collision must fail loudly, not corrupt clusters.
-    Real xxhash64 collisions are ~2e-9 at 1M docs, so force one by
-    patching the surrogate to a constant and assert the guard raises."""
+@pytest.mark.parametrize("tier", ["gather", "join"])
+def test_surrogate_collision_guard(spark, monkeypatch, tmp_path, tier):
+    """ADVICE r4: a did collision must fail loudly, not corrupt clusters,
+    on both pairs tiers, and before the ``pairs`` checkpoint is written
+    (a resume would otherwise skip the check).  Real xxhash64 collisions
+    are ~2e-9 at 1M docs, so force one by patching the surrogate to a
+    constant and assert the guard raises."""
     from pyspark.sql import functions as F
 
     import sz_spark.pipeline as P
     from sz_spark.transcripts import build_transcripts
 
+    if tier == "join":
+        monkeypatch.setenv("SZ_GATHER_MAX_DOCS", "0")
+    else:
+        monkeypatch.delenv("SZ_GATHER_MAX_DOCS", raising=False)
+    ck = str(tmp_path / "ckpt")
     tr = build_transcripts(spark, SF_DIR)
     monkeypatch.setattr(P.F, "xxhash64", lambda *cols: F.lit(7).cast("long"))
     with pytest.raises(RuntimeError, match="collision"):
-        P.run_pipeline(spark, tr, P.PipelineConfig())
+        P.run_pipeline(spark, tr, P.PipelineConfig(checkpoint_dir=ck))
+    assert os.path.exists(os.path.join(ck, "doc_features", "data", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(ck, "pairs", "data", "_SUCCESS"))
+
+
+def test_gather_broadcast_released_when_pairs_fail(spark, monkeypatch):
+    """A ``pairs`` stage that fails after the gather tier broadcast its
+    keys still unpersists the broadcast: a session that outlives the
+    failed run must not keep its executor blocks."""
+    from pyspark.broadcast import Broadcast
+
+    import sz_spark.pipeline as P
+    from sz_spark import scoring
+    from sz_spark.lineage import CheckpointManager
+    from sz_spark.transcripts import build_transcripts
+
+    built, released = [], []
+    build, materialize, unpersist = (
+        scoring.build_prune_broadcast, CheckpointManager.materialize, Broadcast.unpersist
+    )
+
+    def spy_build(feats):
+        built.append(build(feats))
+        return built[-1]
+
+    def failing_materialize(self, stage, df):
+        if stage == "pairs":
+            raise OSError("pairs write failed")
+        return materialize(self, stage, df)
+
+    def spy_unpersist(self, *args, **kwargs):
+        released.append(self)
+        return unpersist(self, *args, **kwargs)
+
+    monkeypatch.delenv("SZ_GATHER_MAX_DOCS", raising=False)
+    monkeypatch.setattr(scoring, "build_prune_broadcast", spy_build)
+    monkeypatch.setattr(CheckpointManager, "materialize", failing_materialize)
+    monkeypatch.setattr(Broadcast, "unpersist", spy_unpersist)
+    with pytest.raises(OSError, match="pairs write failed"):
+        P.run_pipeline(spark, build_transcripts(spark, SF_DIR), P.PipelineConfig())
+    assert len(built) == 1 and built[0] in released
 
 
 def test_arrow_transport_parity(spark):
@@ -444,7 +492,7 @@ def test_prune_pairs_arrow_matches_expression_twin(spark):
         build_transcripts(spark, "/root/testdata/sf0.001")
     ).withColumn("did", F.xxhash64("conv_id"))
     feats = blocking.doc_features(docs, id_col="did", ndim=96, n_bands=24)
-    pairs, _ = blocking.block_pairs(
+    pairs = blocking.block_pairs(
         blocking.bands_from_features(feats, id_col="did"),
         id_col="did", max_block_size=1024,
     )
@@ -489,7 +537,7 @@ def _join_tier_pairs(bands, docs, feats, threshold, **block_kw):
     """The join tier's pairs stage: dedup, attach (len, hist), prune."""
     from sz_spark import blocking, scoring
 
-    cand, _ = blocking.block_pairs(bands, id_col="did", **block_kw)
+    cand = blocking.block_pairs(bands, id_col="did", **block_kw)
     attrs = scoring.attach_prune_attrs(cand, feats.select("did", "len", "hist"))
     return scoring.prune_pairs_arrow(attrs, threshold)
 
@@ -537,12 +585,10 @@ def test_fused_pairs_match_join_tier(spark, max_block_size, shuffled):
     attach_prune_attrs + prune_pairs_arrow — with no duplicate rows,
     including under a cap that suppresses blocks (a pair whose first
     collision is suppressed must come from its next kept band) and
-    under shuffled input order; under the cap that suppresses blocks in
-    several bands, the gather tier's suppressed-block stats (from the
-    broadcast's sizes) equal the join tier's."""
+    under shuffled input order."""
     from pyspark.sql import functions as F
 
-    from sz_spark import blocking, scoring
+    from sz_spark import blocking
 
     cfg, docs, feats = _gather_fixture(spark)
     kw = dict(max_block_size=max_block_size)
@@ -556,17 +602,6 @@ def test_fused_pairs_match_join_tier(spark, max_block_size, shuffled):
     got = _gathered_pairs(spark, feats, cfg.threshold, **kw)
     assert set(got) == want and len(got) == len(want) > 0
     assert all(a < b for a, b in got)
-    if max_block_size == 4:
-        bands = blocking.bands_from_features(feats, id_col="did")
-        _, sup = blocking.block_pairs(bands, id_col="did", **kw)
-        want_sup = sorted(sup.collect())
-        assert len({b for b, _, _ in want_sup}) > 1  # the suppressed leg is not vacuous
-        bc = scoring.build_prune_broadcast(feats)
-        try:
-            got_sup = blocking.suppressed_blocks_gathered(spark, bc.value, **kw)
-            assert sorted(got_sup.collect()) == want_sup
-        finally:
-            bc.unpersist()
 
 
 @pytest.mark.parametrize("max_block_size", [1024, 4])
@@ -618,9 +653,9 @@ def test_gathered_pairs_hot_doc_and_stop_band(spark):
     """Hand-built feature table: doc 0 shares a key with other docs in
     EVERY key row (a hot document), and band 2 holds one block larger
     than the cap (a stop-band).  The gather tier must emit exactly the
-    join tier's pair set, each pair once, and the same suppressed-block
-    stats."""
-    from sz_spark import blocking, scoring
+    join tier's pair set, each pair once, and suppressed_blocks must
+    list the stop-band block alone."""
+    from sz_spark import blocking
 
     cap = 8
     n = 40
@@ -647,8 +682,11 @@ def test_gathered_pairs_hot_doc_and_stop_band(spark):
     )
     bands = blocking.bands_from_features(feats, id_col="did")
     kw = dict(max_block_size=cap)
-    _, sup = blocking.block_pairs(bands, id_col="did", **kw)
-    assert [r["block_size"] for r in sup.collect()] == [30]
+    sup = blocking.suppressed_blocks(bands, cap)
+    assert sup.schema.simpleString() == (
+        "struct<band_id:int,band_hash:bigint,block_size:bigint>"
+    )
+    assert [tuple(r) for r in sup.collect()] == [(2, 300, 30)]
     want = _pair_rows(_join_tier_pairs(bands, None, feats, 0.9, **kw))
     got = _gathered_pairs(spark, feats, 0.9, **kw)
     assert len(got) == len(set(got))
@@ -657,15 +695,6 @@ def test_gathered_pairs_hot_doc_and_stop_band(spark):
     # doc 0 (did 1) pairs with 1-3 (prefix), 4-9 but not 5 (bands 0-1),
     # 10-12 and 30-33 (band 3); the stop-band adds nothing
     assert len(hot) == 3 + 5 + 7
-    # the gather tier's suppressed stats, from the broadcast's sizes,
-    # equal the join tier's window count
-    bc = scoring.build_prune_broadcast(feats)
-    try:
-        gathered = blocking.suppressed_blocks_gathered(spark, bc.value, **kw)
-    finally:
-        bc.unpersist()
-    assert [f.dataType for f in gathered.schema] == [f.dataType for f in sup.schema]
-    assert sorted(gathered.collect()) == sorted(sup.collect()) == [(2, 300, 30)]
 
 
 def test_gathered_pairs_plan_has_no_exchange(spark):
@@ -674,7 +703,7 @@ def test_gathered_pairs_plan_has_no_exchange(spark):
     from sz_spark.pipeline import pairs_stage
 
     cfg, _, feats = _gather_fixture(spark)
-    pairs, _, bcs = pairs_stage(feats, cfg)
+    pairs, bcs = pairs_stage(feats, cfg)
     assert bcs, "the fixture must take the gather tier"
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     for bc in bcs:
