@@ -22,13 +22,18 @@ def _install_checked_zip_invalidation() -> None:
     PySpark's ``worker_util.setup_spark_files`` calls
     ``importlib.invalidate_caches()`` at the start of EVERY Python task.
     On CPython 3.11 that reaches each zipimporter in
-    ``sys.path_importer_cache`` -- about 16 of them over
-    ``$SPARK_HOME/python/lib/pyspark.zip`` once pyspark's subpackages are
-    imported -- and each one re-parses the archive's ~1,300-entry
-    central directory in pure Python.  Measured on a 4-core box (warm
-    ``local[4]``, identity ``mapInArrow``, median of 7 in each of two
-    sessions), 32 tasks took 2.9-3.4 s with that re-read and 1.0 s
-    without it.
+    ``sys.path_importer_cache`` and each one re-parses its archive's
+    central directory in pure Python.  Where workers import pyspark
+    from ``$SPARK_HOME/python/lib/pyspark.zip``, that is about 16
+    zipimporters over its ~1,300 entries once pyspark's subpackages are
+    imported.  Measured on a 4-core box (warm ``local[4]``, identity
+    ``mapInArrow``, median of 7 in each of two sessions), 32 tasks took
+    2.9-3.4 s with that re-read and 1.0 s without it.  The workers of a
+    ``local[N]`` session that ``session.build_session`` launches import
+    pyspark from an extracted tree instead (``session._worker_tree``),
+    which leaves four zipimporters, over the top level of the two zips
+    and of the spark-core jar Spark also puts on the worker path;
+    sessions on a submitted master still import from the zip.
 
     The method is checked, not stubbed: an archive shipped or replaced
     with ``SparkContext.addPyFile`` after a worker started must still
@@ -40,10 +45,11 @@ def _install_checked_zip_invalidation() -> None:
     re-read; the check stays correct there, since it only ever skips
     unchanged archives.
 
-    This is installed on import rather than from a custom
-    ``spark.python.daemon.module``: with ``spark-submit --py-files
-    sz_spark.zip`` the package joins a worker's ``sys.path`` only inside
-    ``setup_spark_files``, so a daemon module from it could not start.
+    This is installed on import rather than from the daemon module:
+    with ``spark-submit --py-files sz_spark.zip`` the package joins a
+    worker's ``sys.path`` only inside ``setup_spark_files``, so the
+    daemon cannot import it, and a submitted master keeps PySpark's own
+    daemon.
 
     Idempotent: a second import or a ``reload`` of the package leaves the
     installed method as it is."""

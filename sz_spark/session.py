@@ -5,12 +5,14 @@ from __future__ import annotations
 import atexit
 import contextlib
 import fcntl
+import glob
 import hashlib
 import logging
 import os
 import re
 import shutil
 import subprocess
+import zipfile
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
@@ -107,6 +109,11 @@ def _session_conf(
     if archive is not None:
         opts = conf.get("spark.driver.extraJavaOptions", "")
         conf["spark.driver.extraJavaOptions"] = f"{opts} {archive.java_options}".strip()
+    tree = _worker_tree(conf) if cores is not None else None
+    if tree is not None:
+        conf["spark.python.daemon.module"] = _DAEMON_MODULE
+        path = conf.get("spark.executorEnv.PYTHONPATH")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(p for p in (path, tree) if p)
     return conf, archive
 
 
@@ -378,14 +385,9 @@ class _ClassArchive:
 
     def _sweep(self) -> None:
         """Delete what dead recorders left and every other key's files."""
-        for name in os.listdir(self.cache):
-            m = _ARCHIVE_FILE.fullmatch(name)
-            if m is None:
-                continue
-            key, pid = m.groups()
-            if (not _alive(int(pid))) if pid else key != self.key:
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(os.path.join(self.cache, name))
+        for path in _stale(self.cache, _ARCHIVE_FILE, self.key):
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(path)
 
 
 def _only_templates(conf_dir: str) -> bool:
@@ -444,6 +446,15 @@ def _archive_identity(path: str) -> tuple[int, int, int] | None:
     return st.st_ino, st.st_size, st.st_mtime_ns
 
 
+def _stale(cache: str, pattern: re.Pattern, key: str):
+    """Paths in ``cache`` whose names ``pattern`` matches (groups: key,
+    pid) that a dead process left, or that belong to another key."""
+    for name in os.listdir(cache):
+        m = pattern.fullmatch(name)
+        if m is not None and ((not _alive(int(m[2]))) if m[2] else m[1] != key):
+            yield os.path.join(cache, name)
+
+
 def _alive(pid: int) -> bool:
     try:
         os.kill(pid, 0)
@@ -452,6 +463,139 @@ def _alive(pid: int) -> bool:
     except PermissionError:
         pass
     return True
+
+
+#: the daemon module a local session's Python workers start from, kept
+#: in the worker tree next to the pyspark it imports
+_DAEMON_MODULE = "sz_pyspark_daemon"
+
+#: ``sz_pyspark_daemon.py``.  Self-contained: with ``--py-files``
+#: deployments ``sz_spark`` joins a worker's ``sys.path`` only inside
+#: ``setup_spark_files``, after the daemon forked.
+_DAEMON_SOURCE = '''"""PySpark's Python daemon, started from this bytecode-cached tree.
+
+Spark puts pyspark.zip and py4j's zip ahead of this directory on the
+daemon's PYTHONPATH, so the directory moves itself to the front.  The
+tree exists to hold bytecode, so pyspark's imports write it even under
+PYTHONDONTWRITEBYTECODE.
+"""
+
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+dont_write_bytecode, sys.dont_write_bytecode = sys.dont_write_bytecode, False
+from pyspark import daemon  # noqa: E402
+
+sys.dont_write_bytecode = dont_write_bytecode
+
+if __name__ == "__main__":
+    daemon.manager()
+'''
+
+#: a worker tree in the cache dir: key, publisher pid of a temp dir
+_TREE_DIR = re.compile(r"pyspark_([0-9a-f]{16})(?:\.(\d+)\.tmp)?")
+
+
+def _worker_tree(conf: dict[str, str]) -> str | None:
+    """The bytecode-cached copy of pyspark and py4j a local session's
+    Python daemon imports, published if missing; None when no JVM is
+    launched or the launch is not eligible.
+
+    Workers import pyspark from ``$SPARK_HOME/python/lib/pyspark.zip``,
+    which holds ~1,170 ``.py`` files and no bytecode, so every daemon
+    start compiled pyspark from source: in a fresh interpreter,
+    ``import pyspark.daemon`` took 0.76-1.10 s from the zip and
+    0.24-0.28 s from an extracted tree with ``__pycache__``.
+
+    - *Where:* ``native.cache_dir()/pyspark_<key>/``, holding both zips
+      extracted and ``sz_pyspark_daemon.py``.  The first daemon over a
+      new tree writes its ``__pycache__``, also under
+      ``PYTHONDONTWRITEBYTECODE``.
+    - *Key:* the realpath, size and mtime of ``pyspark.zip`` and of
+      every ``py4j-*-src.zip`` beside it (the entries
+      ``PythonWorkerFactory`` puts first on a worker's ``PYTHONPATH``),
+      and the daemon module's source.
+    - *Publishing:* extract into ``pyspark_<key>.<pid>.tmp``, then
+      rename; a publisher that loses the race deletes its temp dir.
+      Publishing deletes other keys' trees and dead publishers' temp
+      dirs.  It takes ~0.2 s and 19 MB, once per key.
+    - *Eligibility:* as ``_ClassArchive``'s launch, plus a
+      ``pyspark.zip`` (a pip-only install has none, and its workers
+      already import bytecode) and no ``spark.python.daemon.module`` of
+      the user's (``extra``, ``PYSPARK_SUBMIT_ARGS`` or
+      ``spark-defaults.conf``).
+    """
+    spark_home = _find_spark_home()
+    if (
+        SparkContext._gateway is not None
+        or "PYSPARK_GATEWAY_PORT" in os.environ
+        or "spark.python.daemon.module" in conf
+        or _sets_daemon_module(spark_home)
+    ):
+        return None
+    lib = os.path.join(spark_home, "python", "lib")
+    zips = [os.path.join(lib, "pyspark.zip")]
+    if not os.path.isfile(zips[0]):
+        return None
+    zips += sorted(glob.glob(os.path.join(lib, "py4j-*-src.zip")))
+    try:
+        return _publish_tree(os.path.abspath(native.cache_dir()), _tree_key(zips), zips)
+    except (OSError, zipfile.BadZipFile) as exc:
+        logging.getLogger(__name__).warning("pyspark worker tree not published: %s", exc)
+        return None
+
+
+def _sets_daemon_module(spark_home: str) -> bool:
+    """Whether ``PYSPARK_SUBMIT_ARGS`` or the ``spark-defaults.conf``
+    spark-submit reads sets ``spark.python.daemon.module``."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf"), errors="replace") as fh:
+            defaults = fh.read()
+    except OSError:
+        defaults = ""
+    return any(
+        re.search(r"(?m)^\s*spark\.python\.daemon\.module[\s=:]", text)
+        for text in (defaults, os.environ.get("PYSPARK_SUBMIT_ARGS", "").replace(" ", "\n"))
+    )
+
+
+def _tree_key(zips: list[str]) -> str:
+    """Hash of the zips a worker tree is extracted from and of the
+    daemon module."""
+    h = hashlib.sha256(_DAEMON_SOURCE.encode())
+    for path in zips:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+        h.update(f"\0{real}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
+def _publish_tree(cache: str, key: str, zips: list[str]) -> str:
+    """The worker tree ``pyspark_<key>`` in ``cache``, extracted from
+    ``zips`` unless it is there."""
+    tree = os.path.join(cache, f"pyspark_{key}")
+    if os.path.isdir(tree):
+        return tree
+    tmp = f"{tree}.{os.getpid()}.tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        for path in zips:
+            with zipfile.ZipFile(path) as zf:
+                zf.extractall(tmp)
+        with open(os.path.join(tmp, f"{_DAEMON_MODULE}.py"), "w") as fh:
+            fh.write(_DAEMON_SOURCE)
+        try:
+            os.rename(tmp, tree)
+        except OSError:
+            if not os.path.isdir(tree):
+                raise  # not a lost race
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    for path in _stale(cache, _TREE_DIR, key):
+        shutil.rmtree(path, ignore_errors=True)
+    return tree
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:
@@ -463,8 +607,13 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     (0.3 s the second time), the first Python worker start 2.8 s
     (0.3-0.4 s after that) and the worker imports ~1.3-1.5 s.  With the
     driver's class archive mapped (``_ClassArchive``) the first JVM job
-    drops to 1.4-1.9 s, and this prewarm, at about 3.3-3.4 s, is the
-    largest part of ``build_session``.  Long-lived executors amortize
+    drops to 1.4-1.9 s.  Timed with perfbench's session recipe (three
+    runs each), this prewarm then took 3.9-4.4 s, the largest part of
+    ``build_session`` (the launch before it: 3.4-3.9 s), and with the
+    daemon importing pyspark from the bytecode-cached tree
+    (``_worker_tree``) it takes 2.8-3.4 s.  Its mapInArrow shares the
+    worker pool of the pipeline's Arrow and pandas UDFs: one daemon
+    serves them all.  Long-lived executors amortize
     this across jobs via spark.python.worker.reuse; a short-lived
     session pays it inside its first real query unless the pool is
     prestarted at build time, which is what this does: one tiny

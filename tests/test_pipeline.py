@@ -65,6 +65,31 @@ def test_deterministic_across_parallelism(spark):
     assert outs[0].equals(outs[1])
 
 
+def test_clusters_independent_of_input_row_order(spark):
+    """The same transcript rows in a seeded shuffled order (and another
+    partitioning) give the same clusters and the same kept scored
+    pairs."""
+    from sz_spark.pipeline import PipelineConfig, run_pipeline
+    from sz_spark.transcripts import build_transcripts
+
+    tr = build_transcripts(spark, SF_DIR)
+    shuffled = spark.createDataFrame(
+        tr.toPandas().sample(frac=1.0, random_state=1234), schema=tr.schema
+    )
+    outs = []
+    for frame in (tr, shuffled):
+        stages = run_pipeline(spark, frame, PipelineConfig())
+        outs.append(
+            tuple(
+                stages[name].orderBy(*keys).toPandas().reset_index(drop=True)
+                for name, keys in (("clusters", ["conv_id"]), ("scored", ["id_a", "id_b"]))
+            )
+        )
+    for got, want in zip(outs[1], outs[0]):
+        assert len(want) > 0
+        assert got.equals(want)
+
+
 def test_empty_conversations_cluster_together(spark):
     """Two empty conversations (one empty turn each) next to two
     identical ones: the run completes under ANSI mode (a pair of empty

@@ -1,13 +1,15 @@
-"""Process start-up: the package's checked zipimporter invalidation and
-the driver JVM's class-data-sharing archive.
+"""Process start-up: the package's checked zipimporter invalidation,
+the driver JVM's class-data-sharing archive and the Python workers'
+bytecode-cached pyspark tree.
 
 The zipimporter tests import from a fresh zip on ``sys.path``, so the
 zipimporter under test is the one the path hooks create, and invalidate
 it through ``importlib.invalidate_caches()`` -- the call PySpark's
 worker makes at the start of every task.
 
-The archive tests check its key and eligibility without a JVM, then
-launch sessions in fresh processes over a temporary ``SZ_NATIVE_CACHE``.
+The archive and tree tests check their keys and eligibility without a
+JVM, then launch sessions in fresh processes over a temporary
+``SZ_NATIVE_CACHE``.
 """
 
 from __future__ import annotations
@@ -262,6 +264,140 @@ def test_opt_out_and_running_gateway_compute_nothing(install, monkeypatch):
     assert archive is None and _archive_flags(conf) == []
 
 
+# -- the Python workers' pyspark tree (no JVM) ----------------------------
+
+
+@pytest.fixture
+def worker_zips(install):
+    """``pyspark.zip`` and a py4j source zip in the fake Spark home;
+    returns their paths."""
+    lib = install["home"] / "python" / "lib"
+    lib.mkdir(parents=True)
+    zips = [lib / "pyspark.zip", lib / "py4j-0.10.9.9-src.zip"]
+    _write_zip(zips[0], {"pyspark/__init__": "__version__ = 'fake'\n"})
+    _write_zip(zips[1], {"py4j/__init__": ""})
+    return zips
+
+
+def _tree_conf(conf):
+    return {k: conf[k] for k in ("spark.python.daemon.module", "spark.executorEnv.PYTHONPATH")
+            if k in conf}
+
+
+def _trees(cache) -> list[str]:
+    return sorted(n for n in os.listdir(cache) if n.startswith("pyspark_"))
+
+
+def _zips_key(worker_zips) -> str:
+    return session._tree_key([str(z) for z in worker_zips])
+
+
+def _dead_pid() -> int:
+    proc = subprocess.Popen([sys.executable, "-c", ""])
+    proc.wait()
+    return proc.pid
+
+
+def test_local_master_daemon_imports_the_tree(install, worker_zips):
+    conf, _ = session._session_conf("local[2]", None, None)
+    tree = conf["spark.executorEnv.PYTHONPATH"]
+    assert conf["spark.python.daemon.module"] == session._DAEMON_MODULE
+    assert tree == str(install["cache"] / f"pyspark_{_zips_key(worker_zips)}")
+    assert sorted(os.listdir(tree)) == ["py4j", "pyspark", "sz_pyspark_daemon.py"]
+    with open(os.path.join(tree, "sz_pyspark_daemon.py")) as fh:
+        assert fh.read() == session._DAEMON_SOURCE
+    assert "sz_spark" not in session._DAEMON_SOURCE  # not on a --py-files daemon's path
+    assert _trees(install["cache"]) == [os.path.basename(tree)]
+
+
+@pytest.mark.parametrize("master", [None, "spark://host:7077", "yarn"])
+def test_submitted_master_gets_no_tree(install, worker_zips, master):
+    conf, _ = session._session_conf(master, None, None)
+    assert _tree_conf(conf) == {}
+    assert not install["cache"].exists()
+
+
+def test_users_daemon_module_missing_zip_or_gateway_get_no_tree(install, worker_zips, monkeypatch):
+    extra = {"spark.python.daemon.module": "my_daemon"}
+    conf, _ = session._session_conf("local[2]", None, extra)
+    assert _tree_conf(conf) == extra
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--conf spark.python.daemon.module=d pyspark-shell")
+    assert _tree_conf(session._session_conf("local[2]", None, None)[0]) == {}
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS")
+    defaults = install["home"] / "conf" / "spark-defaults.conf"
+    defaults.write_text("spark.python.daemon.module=my_daemon\n")
+    assert _tree_conf(session._session_conf("local[2]", None, None)[0]) == {}
+    defaults.unlink()
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert _tree_conf(session._session_conf("local[2]", None, None)[0]) == {}
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    worker_zips[0].unlink()  # a pip-only install: no pyspark.zip
+    assert _tree_conf(session._session_conf("local[2]", None, None)[0]) == {}
+    assert not install["cache"].exists() or _trees(install["cache"]) == []
+
+
+def test_users_worker_pythonpath_is_kept(install, worker_zips):
+    user = os.pathsep.join(["/opt/a", "/opt/b"])
+    conf, _ = session._session_conf("local[2]", None, {"spark.executorEnv.PYTHONPATH": user})
+    path = conf["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
+    assert path[:2] == ["/opt/a", "/opt/b"]
+    assert os.path.basename(path[2]).startswith("pyspark_") and len(path) == 3
+
+
+def test_tree_key_follows_the_zips(worker_zips):
+    keys = {_zips_key(worker_zips)}
+    for z in worker_zips:
+        st = z.stat()
+        os.utime(z, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        keys.add(_zips_key(worker_zips))
+        z.write_bytes(z.read_bytes() + b"\0")
+        keys.add(_zips_key(worker_zips))
+    assert len(keys) == 5
+
+
+def test_publishing_sweeps_other_keys_and_dead_temp_dirs(install, worker_zips):
+    cache = install["cache"]
+    key = _zips_key(worker_zips)
+    stale = {
+        f"pyspark_{'0' * 16}": "other key",
+        f"pyspark_{key}.{_dead_pid()}.tmp": "dead publisher",
+        f"pyspark_{'1' * 16}.{_dead_pid()}.tmp": "dead publisher of another key",
+    }
+    live = f"pyspark_{'2' * 16}.{os.getppid()}.tmp"
+    for name in (*stale, live):
+        (cache / name).mkdir(parents=True)
+        (cache / name / "sz_pyspark_daemon.py").write_text("raise SystemExit(1)\n")
+    conf, _ = session._session_conf("local[2]", None, None)
+    assert conf["spark.executorEnv.PYTHONPATH"] == str(cache / f"pyspark_{key}")
+    assert _trees(cache) == sorted([f"pyspark_{key}", live])
+
+
+def test_leftover_temp_dir_is_never_used(install, worker_zips):
+    cache = install["cache"]
+    key = _zips_key(worker_zips)
+    own = cache / f"pyspark_{key}.{os.getpid()}.tmp"  # left by a failed publish
+    own.mkdir(parents=True)
+    (own / "sz_pyspark_daemon.py").write_text("raise SystemExit(1)\n")
+    tree = session._session_conf("local[2]", None, None)[0]["spark.executorEnv.PYTHONPATH"]
+    assert tree == str(cache / f"pyspark_{key}")
+    with open(os.path.join(tree, "sz_pyspark_daemon.py")) as fh:
+        assert fh.read() == session._DAEMON_SOURCE
+    assert _trees(cache) == [f"pyspark_{key}"]
+
+
+def test_publisher_that_loses_the_race_uses_the_winners_tree(install, worker_zips, monkeypatch):
+    rename = os.rename
+
+    def winner_first(src, dst):
+        os.makedirs(os.path.join(dst, "pyspark"))  # another publisher's rename
+        return rename(src, dst)
+
+    monkeypatch.setattr(session.os, "rename", winner_first)
+    tree = session._session_conf("local[2]", None, None)[0]["spark.executorEnv.PYTHONPATH"]
+    assert os.listdir(tree) == ["pyspark"]
+    assert _trees(install["cache"]) == [os.path.basename(tree)]
+
+
 # -- the driver JVM's class archive: real launches -------------------------
 
 _LAUNCH = """
@@ -364,3 +500,78 @@ def test_concurrent_first_launches_publish_at_most_one_archive(recorded, tmp_pat
     assert [_result(p) for p in procs] == [recorded["result"]] * 2
     assert len(_published(cache)) <= 1
     assert _left_behind(cache) == []
+
+
+# -- the Python workers' pyspark tree: a real launch ------------------------
+
+_WORKERS = """
+import json
+import pandas as pd
+import pyarrow as pa
+import pyspark
+from pyspark.sql import functions as F
+from sz_spark.session import build_session
+
+spark = build_session(master="local[2]", app_name="worker-tree-test",
+                      extra={"spark.driver.defaultJavaOptions": "-Xshare:off"})
+
+def report(batches):
+    import pyspark
+    for batch in batches:
+        n = batch.num_rows
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pyspark.__file__] * n), pa.array([pyspark.__version__] * n)],
+            ["file", "version"])
+
+workers = spark.range(4, numPartitions=4).mapInArrow(report, "file string, version string")
+
+@F.pandas_udf("long")
+def plus_one(s: pd.Series) -> pd.Series:
+    return s + 1
+
+assert spark.range(8, numPartitions=4).select(plus_one("id")).count() == 8
+jvm = spark.sparkContext._jvm.java.lang.ProcessHandle.current()
+print(json.dumps({
+    "workers": sorted({tuple(r) for r in workers.collect()}),
+    "driver_version": pyspark.__version__,
+    "tree": spark.conf.get("spark.executorEnv.PYTHONPATH"),
+    "children": [p.info().commandLine().orElse("") for p in jvm.children().toArray()],
+}))
+"""
+
+
+@pytest.fixture(scope="module")
+def worker_launch(tmp_path_factory):
+    """A local[2] session over a fresh cache, after one mapInArrow and
+    one pandas_udf job."""
+    if not os.path.isfile(os.path.join(session._find_spark_home(), "python", "lib",
+                                       "pyspark.zip")):
+        pytest.skip("no pyspark.zip: workers import the installed pyspark")
+    env = dict(
+        os.environ,
+        SZ_NATIVE_CACHE=str(tmp_path_factory.mktemp("workers") / "cache"),
+        SZ_SPARK_DRIVER_MEM="1g",
+        PYSPARK_PYTHON=sys.executable,
+        PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
+    )
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    done = subprocess.run([sys.executable, "-c", _WORKERS], cwd=REPO, env=env,
+                          capture_output=True, text=True, timeout=900)
+    assert done.returncode == 0, done.stderr[-4000:]
+    return json.loads(done.stdout.strip().splitlines()[-1])
+
+
+def test_workers_import_pyspark_from_the_tree(worker_launch):
+    tree = worker_launch["tree"]
+    assert re.fullmatch(r"pyspark_[0-9a-f]{16}", os.path.basename(tree))
+    assert worker_launch["workers"] == [
+        [os.path.join(tree, "pyspark", "__init__.py"), worker_launch["driver_version"]]
+    ]
+    assert os.path.isdir(os.path.join(tree, "pyspark", "__pycache__"))
+
+
+def test_prewarm_warms_the_pool_the_pipeline_uses(worker_launch):
+    """The prewarm's mapInArrow, a mapInArrow and a pandas_udf share one
+    worker pool: the JVM has one Python daemon."""
+    daemons = [c for c in worker_launch["children"] if f"-m {session._DAEMON_MODULE}" in c]
+    assert len(daemons) == 1, worker_launch["children"]
