@@ -100,7 +100,9 @@ def connected_components(
     driver; raise local_threshold only with driver memory to back it.
     Larger graphs (collected up to the gate once, then dropped) run
     alternating large-star/small-star rounds fully distributed, each
-    round checkpointed so a failed run resumes mid-stage.
+    round checkpointed so a failed run resumes mid-stage; they raise
+    RuntimeError, not a partial clustering, if ``max_iterations`` rounds
+    end unconverged.
 
     ``checkpoint``: optional callable ``(df, round_idx) -> df`` that
     persists the intermediate edge set and returns a lineage-truncated
@@ -140,6 +142,11 @@ def connected_components(
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {max_iterations} "
+            "rounds; raise PipelineConfig.cc_max_iterations"
+        )
 
     # after convergence every edge points node -> component minimum
     members = cur.select(

@@ -250,10 +250,16 @@ def fingerprints_flat(
     return hashes, counts
 
 
-def _fingerprint_padded_batch(
-    batch: list[bytes], params: FingerprintParams, with_counts: bool = True
+def _fp_padded_flat(
+    data: np.ndarray,
+    starts: np.ndarray,
+    lengths: np.ndarray,
+    params: FingerprintParams,
+    with_counts: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Fused all-dims batch kernel over a length-ASCENDING batch.
+    """Fused all-dims kernel over a length-ASCENDING batch of rows
+    ``data[starts[i]:][:lengths[i]]``, gathered into the padded layout in
+    one vectorized step (no per-row Python in the transport).
 
     ``with_counts=False`` skips the count-of-min bookkeeping (3 of the
     ~13 memory passes per position) for consumers that only need the
@@ -284,21 +290,6 @@ def _fingerprint_padded_batch(
     guarded by the uint64 == f64-mirror == big-int conformance suite
     (tests/test_kernels.py).
     """
-    data, offsets = flat_from_bytes(list(batch))
-    return _fp_padded_flat(
-        data, offsets[:-1], np.diff(offsets), params, with_counts=with_counts
-    )
-
-
-def _fp_padded_flat(
-    data: np.ndarray,
-    starts: np.ndarray,
-    lengths: np.ndarray,
-    params: FingerprintParams,
-    with_counts: bool = True,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Flat-layout core of :func:`_fingerprint_padded_batch` — same math,
-    vectorized-gather padded fill (no per-row Python in the transport)."""
     b = len(starts)
     ndim = params.ndim
     lengths = np.asarray(lengths, dtype=np.int64)
@@ -436,95 +427,6 @@ def _fp_padded_flat(
     # `count` that are NOT real count-of-min data (ADVICE r2); zeros make
     # the "counts not computed" contract unmistakable to callers
     return hashes, counts
-
-
-class FingerprintStream:
-    """Incremental fingerprinting: feed a document in arbitrary chunks,
-    get exactly the one-shot fingerprint (the reference's streaming
-    contract — ``fingerprint_chunk`` with ``passed_progress``,
-    fingerprints/serial.hpp:1196-1231, and ``Hasher.update``,
-    hash.h:268: streaming equals one-shot).
-
-    State per dimension: the rolling-hash state, the running minimum and
-    its count, plus a tail buffer of the last ``max(width)`` bytes so
-    the discard term of windows spanning a chunk boundary is available.
-
-    Note: this path iterates per byte (a conformance/streaming artifact,
-    ~1000x slower than the batch kernel) — use :func:`fingerprints` for
-    bulk work and this class where data genuinely arrives incrementally.
-    """
-
-    def __init__(self, ndim: int = 128, widths: Sequence[int] | None = None, seed: int = 0):
-        self.params = fingerprint_params(ndim, widths, seed)
-        self._max_w = int(self.params.widths.max())
-        self._tail = b""
-        self._progress = 0  # global byte offset consumed so far
-        m = self.params
-        self._state = np.zeros(m.ndim, dtype=np.float64)
-        self._minv = np.full(m.ndim, 2.0**60, dtype=np.float64)
-        self._count = np.zeros(m.ndim, dtype=np.float64)
-
-    def update(self, chunk: bytes) -> "FingerprintStream":
-        if not chunk:
-            return self
-        p = self.params
-        # local buffer = retained tail + new chunk; global offset of its
-        # first byte:
-        buf = self._tail + chunk
-        base = self._progress - len(self._tail)
-        terms = np.frombuffer(buf, dtype=np.uint8).astype(np.float64) + 1.0
-
-        mult = p.mult.astype(np.float64)
-        mod = p.mod.astype(np.float64)
-        inv_mod = 1.0 / mod
-        disc = p.disc.astype(np.float64)
-        widths = p.widths
-
-        def barrett(x):
-            r = x - np.floor(x * inv_mod) * mod
-            r += mod * (r < 0.0)
-            r -= mod * (r >= mod)
-            return r
-
-        for g_off in range(self._progress, self._progress + len(chunk)):
-            i = g_off - base  # index into buf
-            new_term = terms[i]
-            # GLOBAL offsets decide the phase — a dim is in its prefix
-            # until the whole stream has provided w bytes
-            in_prefix = g_off < widths  # (D,)
-            old_local = g_off - widths - base
-            old_term = np.where(
-                in_prefix, 0.0, terms[np.clip(old_local, 0, None)]
-            )
-            x = self._state * mult + new_term + disc * old_term
-            self._state = barrett(x)
-            boundary = g_off == widths - 1  # window just completed
-            if boundary.any():
-                self._minv = np.where(boundary, self._state, self._minv)
-                self._count = np.where(boundary, 1.0, self._count)
-            rolling = ~in_prefix
-            if rolling.any():
-                ge = (self._state >= self._minv) | ~rolling
-                le = (self._state <= self._minv) & rolling
-                self._count = self._count * ge + le
-                self._minv = np.where(
-                    rolling & (self._state < self._minv), self._state, self._minv
-                )
-        self._progress += len(chunk)
-        self._tail = buf[-self._max_w :]  # next chunk discards back to p-w
-        return self
-
-    def digest(self) -> tuple[np.ndarray, np.ndarray]:
-        """(min_hashes u32, min_counts u32) — identical to
-        :func:`fingerprints` over the concatenation of all chunks."""
-        never = self._minv >= 2.0**60
-        hashes = np.where(
-            never,
-            np.uint64(MAX_HASH_U32),
-            self._minv.astype(np.uint64) & _U64(MAX_HASH_U32),
-        ).astype(np.uint32)
-        counts = np.where(never, 0.0, self._count).astype(np.uint32)
-        return hashes, counts
 
 
 def merge_count_min_sketches(
@@ -709,45 +611,6 @@ def levenshtein_batch(
     return out
 
 
-def levenshtein_batch_bounded(
-    a: Sequence[bytes], b: Sequence[bytes], bound: int
-) -> np.ndarray:
-    """Banded unit-cost Levenshtein: exact when dist <= bound, else
-    returns bound+1.
-
-    The ER pipeline thresholds on ``sim = 1 - dist/max(len) >= τ``, so it
-    only needs exact distances up to ``(1-τ)*max(len)`` — the classic
-    banded-DP trick (SURVEY.md §4 'bounded scorer with exactness
-    preserved below the bound').  Work drops from O(La*Lb) to
-    O(max(L)*(2*bound+1)) per pair, vectorized across the pair batch.
-
-    Band coordinates: cell (i, j) lives at d = j - i + k (k = bound), so
-    the substitution parent is prev[d], the deletion parent prev[d+1],
-    and insertions resolve along d with the same running-cummin trick as
-    :func:`_gotoh_batch`.
-    """
-    da, oa = flat_from_bytes(list(a))
-    db, ob = flat_from_bytes(list(b))
-    return levenshtein_batch_bounded_flat(da, oa, db, ob, bound)
-
-
-def levenshtein_batch_bounded_flat(
-    da: np.ndarray,
-    oa: np.ndarray,
-    db: np.ndarray,
-    ob: np.ndarray,
-    bound: int,
-) -> np.ndarray:
-    """:func:`levenshtein_batch_bounded` over the flat Arrow-style
-    (data, offsets) layout on both sides — the zero-copy entry for
-    Arrow-native pair scoring (udfs / scoring.score_pairs)."""
-    oa = np.asarray(oa, dtype=np.int64)
-    ob = np.asarray(ob, dtype=np.int64)
-    return bounded_lev_ladder(
-        da, oa[:-1], np.diff(oa), db, ob[:-1], np.diff(ob), bound
-    )
-
-
 def bounded_lev_ladder(
     da: np.ndarray,
     sa: np.ndarray,
@@ -758,11 +621,11 @@ def bounded_lev_ladder(
     bound: int,
     first_rung: int = 16,
 ) -> np.ndarray:
-    """Iterative-deepening wrapper over :func:`bounded_lev_flat`:
-    score the batch with a narrow band first, escalate ONLY the pairs
-    the small band clamps (classic exponential band search, cf. Myers'
-    O(nd) refinement; similarities/serial.hpp:2948-2994 tiers by input
-    size the same way).
+    """Iterative-deepening wrapper over :func:`bounded_lev_flat` (same
+    contract): score the batch with a narrow band first, escalate ONLY
+    the pairs the small band clamps (classic exponential band search,
+    cf. Myers' O(nd) refinement; similarities/serial.hpp:2948-2994 tiers
+    by input size the same way).
 
     Output-identical to one full-bound pass: the banded DP is exact
     whenever dist <= band, so rung successes (dist <= first_rung) equal
@@ -791,9 +654,20 @@ def bounded_lev_flat(
     lens_b: np.ndarray,
     bound: int,
 ) -> np.ndarray:
-    """Starts/lengths form of :func:`levenshtein_batch_bounded_flat` —
-    rows may be ARBITRARY (fancy-indexed) slices of the flat buffers, so
-    Arrow callers can chunk by length without re-packing."""
+    """Banded unit-cost Levenshtein of ``da[sa[i]:][:a_len[i]]`` against
+    ``db[sb[i]:][:lens_b[i]]``: exact when dist <= bound, else bound+1.
+    Rows may be ARBITRARY (fancy-indexed) slices of the flat buffers, so
+    Arrow callers can chunk by length without re-packing.
+
+    The ER pipeline thresholds on ``sim = 1 - dist/max(len) >= τ``, so it
+    only needs exact distances up to ``(1-τ)*max(len)`` — the classic
+    banded-DP trick (SURVEY.md §4 'bounded scorer with exactness
+    preserved below the bound').  Work drops from O(La*Lb) to
+    O(max(L)*(2*bound+1)) per pair, vectorized across the pair batch.
+    Band coordinates: cell (i, j) lives at d = j - i + k (k = bound), so
+    the substitution parent is prev[d], the deletion parent prev[d+1],
+    and insertions resolve along d with the same running-cummin trick as
+    :func:`_gotoh_batch`."""
     oa, ob = sa, sb
     b_len = lens_b
     n = len(a_len)
@@ -1104,131 +978,3 @@ def jaro_winkler_batch(a: Sequence[str], b: Sequence[str]) -> np.ndarray:
     return np.asarray(
         [jaro_winkler_similarity(x, y) for x, y in zip(a, b)], dtype=np.float64
     )
-
-
-# ---------------------------------------------------------------------------
-# Derived similarity helpers
-# ---------------------------------------------------------------------------
-
-
-def normalized_edit_similarity(a: Sequence[bytes], b: Sequence[bytes]) -> np.ndarray:
-    """``1 - dist/max(len)`` — the pair score the ER pipeline thresholds."""
-    n = len(a)
-    if n == 0:
-        return np.zeros(0, dtype=np.float64)
-    dist = levenshtein_batch(a, b).astype(np.float64)
-    denom = np.maximum(
-        np.asarray([len(x) for x in a], dtype=np.float64),
-        np.asarray([len(x) for x in b], dtype=np.float64),
-    )
-    return np.where(denom == 0, 1.0, 1.0 - dist / np.maximum(denom, 1.0))
-
-
-def hash_bytes_u64(data: bytes, seed: int = 0) -> int:
-    """Deterministic 64-bit polynomial hash of a byte string (FNV-1a-like,
-    then splitmix64-mixed).  An interchangeable PRF in the sense of
-    SURVEY.md §2.7 — NOT the reference's AES-based sz_hash."""
-    h = 0xCBF29CE484222325 ^ (seed & 0xFFFFFFFFFFFFFFFF)
-    for byte in data:
-        h ^= byte
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return int(splitmix64(np.uint64(h)))
-
-
-class Hasher:
-    """hashlib-shaped incremental surface for the library's seeded
-    64-bit PRF — the reference's ``sz.Hasher`` / ``sz_hash_state_*``
-    API (hash.h:259-276; python test surface test/hash.py:51-80:
-    ``update`` chains, ``digest`` is an int, ``hexdigest`` is the
-    016x rendering, ``reset`` reuses the object).  Streaming equals
-    one-shot :func:`hash_bytes_u64` BY CONSTRUCTION: the FNV fold is
-    byte-sequential state, and the splitmix64 finalizer runs at digest
-    time without disturbing it, so ``digest()`` is repeatable and
-    ``update`` can continue afterwards."""
-
-    _MASK = 0xFFFFFFFFFFFFFFFF
-    _PRIME = 0x100000001B3
-
-    def __init__(self, seed: int = 0):
-        self._seed = seed
-        self.reset()
-
-    def reset(self) -> "Hasher":
-        self._h = 0xCBF29CE484222325 ^ (self._seed & self._MASK)
-        return self
-
-    def update(self, chunk: bytes) -> "Hasher":
-        h = self._h
-        for byte in chunk:
-            h = ((h ^ byte) * self._PRIME) & self._MASK
-        self._h = h
-        return self
-
-    def copy(self) -> "Hasher":
-        c = Hasher(self._seed)
-        c._h = self._h
-        return c
-
-    def digest(self) -> int:
-        return int(splitmix64(np.uint64(self._h)))
-
-    def hexdigest(self) -> str:
-        return format(self.digest(), "016x")
-
-
-class Sha256:
-    """Incremental SHA-256 (reference ``sz.Sha256`` /
-    ``sz_sha256_state_*``, hash.h:277-300) — hashlib-backed (byte-exact
-    SHA-256 is SHA-256), exposed for API parity: update/digest/
-    hexdigest/copy/reset."""
-
-    def __init__(self):
-        import hashlib
-
-        self._factory = hashlib.sha256
-        self._state = self._factory()
-
-    def reset(self) -> "Sha256":
-        self._state = self._factory()
-        return self
-
-    def update(self, chunk: bytes) -> "Sha256":
-        self._state.update(chunk)
-        return self
-
-    def copy(self) -> "Sha256":
-        c = Sha256.__new__(Sha256)
-        c._factory = self._factory
-        c._state = self._state.copy()
-        return c
-
-    def digest(self) -> bytes:
-        return self._state.digest()
-
-    def hexdigest(self) -> str:
-        return self._state.hexdigest()
-
-
-class HmacSha256:
-    """Incremental RFC-2104 HMAC-SHA256 (reference hmac_sha256 surface,
-    hash.h:283-300) built on :class:`Sha256`: the inner hash streams
-    through ``update`` chunks; ``digest`` folds the outer pass.
-    Streaming == one-shot ``hmac.new(key, msg, sha256)`` for any chunk
-    split (pytest test_hasher_incremental)."""
-
-    def __init__(self, key: bytes):
-        if len(key) > 64:
-            key = Sha256().update(key).digest()
-        k = key.ljust(64, b"\x00")
-        self._opad = bytes(b ^ 0x5C for b in k)
-        self._inner = Sha256().update(bytes(b ^ 0x36 for b in k))
-
-    def update(self, chunk: bytes) -> "HmacSha256":
-        self._inner.update(chunk)
-        return self
-
-    def digest(self) -> bytes:
-        return Sha256().update(self._opad + self._inner.copy().digest()).digest()
-
-    def hexdigest(self) -> str:
-        return self.digest().hex()

@@ -6,10 +6,9 @@ stop-band suppression -> length + histogram prune -> banded-DP
 edit-similarity scoring -> threshold -> connected components -> entity
 clusters.
 
-Each stage is resumable via CheckpointManager; evaluate_pairs computes
-pairwise precision/recall/F1 against the synthetic ground truth at a
-fixed blocking key, per the BASELINE.json metric (tests/test_pipeline.py
-test_f1_gate builds the labeled transcripts and runs it).
+Each stage is resumable via CheckpointManager.  The BASELINE.json
+pairwise F1 is measured by tests/test_pipeline.py test_f1_gate with
+tests/oracles.py evaluate_pairs, not by a stage.
 """
 
 from __future__ import annotations
@@ -218,58 +217,3 @@ def _check_surrogate_keys(n_docs: int, n_distinct: int) -> None:
             f"-> {n_distinct} distinct dids; rerun with a string key "
             "or a salted surrogate"
         )
-
-
-def evaluate_pairs(
-    scored: DataFrame,
-    docs_with_entity: DataFrame,
-    threshold: float,
-) -> dict[str, float]:
-    """Pairwise P/R/F1 on labeled pairs at the pipeline's blocking key.
-
-    A candidate pair is labeled positive iff both conversations derive
-    from the same ground-truth entity; predicted positive iff sim >= τ.
-    Recall additionally counts ground-truth pairs the blocking missed
-    (they are false negatives even though never scored).
-    """
-    ent = docs_with_entity.select("conv_id", "entity_id")
-    labeled = (
-        scored.join(ent.withColumnRenamed("conv_id", "id_a"), "id_a")
-        .withColumnRenamed("entity_id", "ent_a")
-        .join(ent.withColumnRenamed("conv_id", "id_b"), "id_b")
-        .withColumnRenamed("entity_id", "ent_b")
-        .withColumn("label", (F.col("ent_a") == F.col("ent_b")).cast("int"))
-        .withColumn("pred", (F.col("sim") >= threshold).cast("int"))
-    )
-    agg = labeled.agg(
-        F.sum(F.col("label") * F.col("pred")).alias("tp"),
-        F.sum((1 - F.col("label")) * F.col("pred")).alias("fp"),
-        F.sum(F.col("label") * (1 - F.col("pred"))).alias("fn_scored"),
-    ).collect()[0]
-    tp = agg["tp"] or 0
-    fp = agg["fp"] or 0
-    fn = agg["fn_scored"] or 0
-
-    # ground-truth pairs missed by blocking entirely
-    total_true = (
-        ent.groupBy("entity_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("t"))
-        .collect()[0]["t"]
-        or 0
-    )
-    fn_missed = int(total_true) - tp - fn
-    fn_total = fn + max(fn_missed, 0)
-
-    precision = tp / (tp + fp) if tp + fp else 1.0
-    recall = tp / (tp + fn_total) if tp + fn_total else 1.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
-    return {
-        "tp": float(tp),
-        "fp": float(fp),
-        "fn": float(fn_total),
-        "precision": precision,
-        "recall": recall,
-        "f1": f1,
-    }
-

@@ -799,8 +799,7 @@ def q_prf_sample_shuffle(spark, sf):
     that defines the permutation order.  Unlike engine-RNG sampling
     this is exactly reproducible across engines, executors, and
     retries — the property a 100 TB pipeline actually wants from
-    seeded sample/shuffle; the engine-RNG variants live in
-    q_sample_seeded_rng (rows-only by nature)."""
+    seeded sample/shuffle, and engine-RNG sampling cannot give."""
     d = _t(spark, sf, "documents")
     h = F.conv(
         F.substring(F.md5(F.concat(F.lit("s42|"), F.col("doc_id").cast("string"))), 1, 15),
@@ -821,24 +820,6 @@ SELECT doc_id,
 FROM documents
 WHERE ('0x' || substr(md5('s42|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 10 = 0
 """
-
-
-def q_sample_seeded_rng(spark, sf):
-    """Engine-RNG seeded sampling, without and with replacement
-    (Strs.sample, stringzilla.c:8016) — rows-only like all
-    engine-specific RNG; the cross-engine-checkable PRF variant is
-    q_prf_sample_shuffle.  Not registered with the driver since r5
-    (replaced by szs_cms_merge per VERDICT r4 #2 — engine-RNG output
-    can never be hash-oracled); determinism across runs/parallelism is
-    pinned by tests/test_queries.py::test_engine_rng_sample_determinism."""
-    d = _t(spark, sf, "documents")
-    wor = d.sample(fraction=0.1, seed=42).select(
-        "doc_id", F.lit("wor").alias("method")
-    )
-    wr = d.sample(withReplacement=True, fraction=0.2, seed=42).select(
-        "doc_id", F.lit("wr").alias("method")
-    )
-    return wor.unionByName(wr)
 
 
 #: szs_cms_merge geometry: D dims per sketch, K partial sketches folded.

@@ -226,8 +226,8 @@ def build_prune_broadcast(feats: DataFrame):
 def score_pairs(pairs_with_texts: DataFrame, bounded: float) -> DataFrame:
     """(*carry, doc_a, doc_b, len_a, len_b) -> (*carry, edit_distance,
     sim), sim = 1 - edit_distance / max(len_a, len_b), and 1.0 for two
-    empty docs (kernels.normalized_edit_similarity's value; the
-    division would raise DIVIDE_BY_ZERO under ANSI mode).
+    empty docs (two equal strings; the division would raise
+    DIVIDE_BY_ZERO under ANSI mode).
 
     The banded DP is exact below the τ = ``bounded`` bound (~10x cheaper
     than the full DP); distances of sub-τ pairs come back clamped, which

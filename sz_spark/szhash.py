@@ -15,8 +15,8 @@ Validated two ways (tests/test_szhash.py): (1) BIT-EXACT against 138
 frozen ground-truth vectors generated by compiling the reference's own
 serial kernel (scripts/gen_szhash_vectors.c -> tests/data/
 szhash_vectors.json: every <=16/32/48/64 ladder branch, 64-byte chunk
-boundaries up to 1 KiB, three seeds, multiseed, fill_random, and the
-streaming state at four chunk splits); (2) against an independently-
+boundaries up to 1 KiB, three seeds, multiseed, and the streaming
+state at four chunk splits); (2) against an independently-
 derived FIPS-197 column-major AES construction plus the published
 algebraic properties (seed/length sensitivity, ladder continuity,
 chunking invariance of the streaming state).
@@ -232,13 +232,6 @@ def sz_hash(text: bytes, seed: int = 0) -> int:
     return int(sz_hash_flat(data, np.array([0, len(text)]), seed)[0])
 
 
-def sz_hash_batch(texts, seed: int = 0) -> np.ndarray:
-    from sz_spark.kernels import flat_from_bytes
-
-    data, offsets = flat_from_bytes(list(texts))
-    return sz_hash_flat(data, offsets, seed)
-
-
 def sz_hash_multiseed(text: bytes, seeds) -> np.ndarray:
     """`sz.hash_multiseed`: per-seed replay over the same text lanes —
     identical to sz_hash(text, seed) per seed (serial.h:703-735)."""
@@ -295,25 +288,3 @@ class SzHasher:
         mix = aesenc(aesenc(mixed[0], mixed[1]), aesenc(mixed[2], mixed[3]))
         res = aesenc(aesenc(mix, kwl), mix)
         return int(_u64(res)[0, 0])
-
-
-def sz_fill_random(length: int, nonce: int = 0) -> bytes:
-    """Exact `sz.random` / `sz_fill_random` byte stream (AES-CTR with one
-    AESENC round, hash/serial.h:953-968): block L is
-    AESENC([nonce+L, nonce+L], [nonce ^ pi[2L%8], nonce ^ pi[2L%8+1]]),
-    rotating through the first 512 bits of pi; output truncated to
-    `length`.  Vectorized: all blocks in one aesenc call."""
-    if length <= 0:
-        return b""
-    n_blocks = (length + 15) // 16
-    lanes = np.arange(n_blocks, dtype=np.uint64)
-    nn = np.uint64(nonce)
-    inp = np.empty((n_blocks, 2), dtype=np.uint64)
-    inp[:, 0] = nn + lanes
-    inp[:, 1] = nn + lanes
-    key = np.empty((n_blocks, 2), dtype=np.uint64)
-    key[:, 0] = nn ^ PI[2 * (lanes % np.uint64(4))]
-    key[:, 1] = nn ^ PI[2 * (lanes % np.uint64(4)) + np.uint64(1)]
-    out = aesenc(inp.view(np.uint8).reshape(n_blocks, 16),
-                 key.view(np.uint8).reshape(n_blocks, 16))
-    return out.reshape(-1).tobytes()[:length]

@@ -101,10 +101,6 @@ _EAW_BMP = _bmp_lut(_EAW_STARTS, _EAW_PROPS)
 _EPCN_BMP = _bmp_lut(_EPCN_STARTS, _EPCN_PROPS)
 
 
-def wb_props(cps):
-    return _lookup(_WB_STARTS, _WB_PROPS, cps, _WB_BMP)
-
-
 def sb_props(cps):
     return _lookup(_SB_STARTS, _SB_PROPS, cps, _SB_BMP)
 

@@ -407,31 +407,6 @@ def make_translate_lut_udf(lut: bytes):
     return translate
 
 
-def make_sz_hash_exact_udf(seed: int = 0):
-    """Arrow-batched pandas UDF computing the EXACT AES-based `sz.hash`
-    (hash.h:139, README.md:752-830) via sz_spark.szhash — bit-identical
-    to the reference (pinned against 138 compiled-kernel vectors,
-    tests/test_szhash.py).  Returns the u64 hash as its int64 bit
-    pattern, the repo's 'u64 hashes in signed types' convention.
-
-    Use this when porting STORED sz-hash values; blocking and dedup
-    hash with Spark's xxhash64 (an interchangeable PRF, e.g.
-    blocking._prefix_key), which never leaves the JVM.
-
-    NULL convention: NULL inputs hash as the empty string (both map to
-    hash(b"") via the batch's None -> b"" coercion), NOT to NULL.  When
-    porting stored values whose source kept NULLs, mask first:
-    ``F.when(col.isNotNull(), sz_hash_exact(col))``."""
-    from sz_spark.szhash import sz_hash_batch
-
-    @pandas_udf(T.LongType())
-    def sz_hash_exact(texts: pd.Series) -> pd.Series:
-        h = sz_hash_batch(_to_bytes(texts), seed=seed)
-        return pd.Series(h.astype("int64"))
-
-    return sz_hash_exact
-
-
 @pandas_udf(T.LongType())
 def bytesum_udf(texts: pd.Series) -> pd.Series:
     """Additive byte checksum (sz.bytesum, hash.h:110)."""

@@ -1,9 +1,12 @@
 """Reference implementations the differential tests compare production
-operators against.  Each computes the same values as its production
-counterpart by a different route — Spark expressions where production
-runs an Arrow batch, plain Python/NumPy on the driver, or a scalar or
-width-grouped loop where sz_spark.kernels runs a fused NumPy kernel —
-and none of them runs in the pipeline or the query registry.
+operators against, and the measures that only tests take.  Each
+reference computes the same values as its production counterpart by a
+different route — Spark expressions where production runs an Arrow
+batch, plain Python/NumPy on the driver, the full DP where production
+runs a banded one, or a scalar or width-grouped loop where
+sz_spark.kernels runs a fused NumPy kernel.  ``evaluate_pairs`` scores a
+pipeline run against ground truth.  Nothing here runs in the pipeline
+or the query registry.
 """
 
 from __future__ import annotations
@@ -12,7 +15,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sz_spark.kernels import MAX_HASH_U32, FingerprintParams, fingerprint_params
+from sz_spark.kernels import (
+    MAX_HASH_U32,
+    FingerprintParams,
+    fingerprint_params,
+    levenshtein_batch,
+)
 from sz_spark.textops import word_shingles
 
 
@@ -404,3 +412,68 @@ def gotoh_scalar(
                 best = max(best, h)
             H[i][j] = h
     return best if local else H[lb][la]
+
+
+def normalized_edit_similarity(a: list[bytes], b: list[bytes]) -> np.ndarray:
+    """``1 - dist/max(len)`` by the full DP, and 1.0 for two empty
+    strings: scoring.score_pairs' ``sim``."""
+    if not a:
+        return np.zeros(0, dtype=np.float64)
+    dist = levenshtein_batch(a, b).astype(np.float64)
+    denom = np.maximum([len(x) for x in a], [len(x) for x in b]).astype(np.float64)
+    return np.where(denom == 0, 1.0, 1.0 - dist / np.maximum(denom, 1.0))
+
+
+def evaluate_pairs(
+    scored: DataFrame,
+    docs_with_entity: DataFrame,
+    threshold: float,
+) -> dict[str, float]:
+    """Pairwise P/R/F1 on labeled pairs at the pipeline's blocking key.
+
+    A candidate pair is labeled positive iff both conversations derive
+    from the same ground-truth entity; predicted positive iff sim >= τ.
+    Recall additionally counts ground-truth pairs the blocking missed
+    (they are false negatives even though never scored).
+    """
+    ent = docs_with_entity.select("conv_id", "entity_id")
+    labeled = (
+        scored.join(ent.withColumnRenamed("conv_id", "id_a"), "id_a")
+        .withColumnRenamed("entity_id", "ent_a")
+        .join(ent.withColumnRenamed("conv_id", "id_b"), "id_b")
+        .withColumnRenamed("entity_id", "ent_b")
+        .withColumn("label", (F.col("ent_a") == F.col("ent_b")).cast("int"))
+        .withColumn("pred", (F.col("sim") >= threshold).cast("int"))
+    )
+    agg = labeled.agg(
+        F.sum(F.col("label") * F.col("pred")).alias("tp"),
+        F.sum((1 - F.col("label")) * F.col("pred")).alias("fp"),
+        F.sum(F.col("label") * (1 - F.col("pred"))).alias("fn_scored"),
+    ).collect()[0]
+    tp = agg["tp"] or 0
+    fp = agg["fp"] or 0
+    fn = agg["fn_scored"] or 0
+
+    # ground-truth pairs missed by blocking entirely
+    total_true = (
+        ent.groupBy("entity_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("t"))
+        .collect()[0]["t"]
+        or 0
+    )
+    fn_missed = int(total_true) - tp - fn
+    fn_total = fn + max(fn_missed, 0)
+
+    precision = tp / (tp + fp) if tp + fp else 1.0
+    recall = tp / (tp + fn_total) if tp + fn_total else 1.0
+    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
+    return {
+        "tp": float(tp),
+        "fp": float(fp),
+        "fn": float(fn_total),
+        "precision": precision,
+        "recall": recall,
+        "f1": f1,
+    }
+

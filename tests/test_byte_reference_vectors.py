@@ -96,8 +96,9 @@ def test_sha256_matches_reference(vectors):
     """The compiled reference's incremental SHA-256 (hash.h:283-331) is
     FIPS 180-4 SHA-256: every frozen digest — one-shot, 1-byte drip, and
     irregular 7/64/rest chunkings of the same input — equals hashlib's.
-    This closes the loop on the repo's sha256/hmac surface, which is
-    built on hashlib (kernels.py sha256/hmac kernels)."""
+    This closes the loop on the repo's sha256/hmac surface: Spark's
+    ``F.sha2`` in ``queries.str_hash_ops``, whose RFC-2104 composition
+    test_queries.py::test_hmac_rfc2104 checks against hashlib."""
     import hashlib
 
     cases = vectors["sha256"]

@@ -165,3 +165,14 @@ def test_tiers_agree_on_non_ascii_ids(spark):
     distributed = _assign(spark, edges, local_threshold=0)
     assert local == distributed == oracle_components(edges)
     assert local["\U00010000"] == "\uffff"
+
+
+def test_distributed_tier_fails_loudly_when_rounds_run_out(spark):
+    """A 64-node path needs more than 3 large-star/small-star rounds: the
+    distributed tier raises instead of returning a partial clustering,
+    and the default round budget gives the one component."""
+    path = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(63)]
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds.*cc_max_iterations"):
+        _assign(spark, path, local_threshold=0, max_iterations=3)
+    got = _assign(spark, path, local_threshold=0)
+    assert set(got.values()) == {"p00"} and len(got) == 64

@@ -37,8 +37,8 @@ def test_switch_inventory():
     assert found == SWITCHES
 
 
-#: the files a user or the benchmark runs; every sz_spark module must be
-#: reachable from one of them
+#: the files a user or the benchmark runs; every top-level sz_spark
+#: definition must be reached from one of them
 ENTRY_POINTS = ("scripts/*.py", "bench.py", "bench_extra.py", "perfbench/**/*.py",
                 "__spark_entry__.py")
 
@@ -59,24 +59,6 @@ def _imported_modules(path: str) -> set[str]:
     return out
 
 
-def test_every_module_is_reached_from_an_entry_point():
-    """Each sz_spark/*.py module is imported, directly or through other
-    sz_spark modules, by an entry point: a second implementation that
-    only tests use belongs in tests/."""
-    pkg = os.path.join(REPO, "sz_spark")
-    modules = {n[:-3] for n in os.listdir(pkg) if n.endswith(".py")}
-    todo = [p for pat in ENTRY_POINTS
-            for p in glob.glob(os.path.join(REPO, pat), recursive=True)]
-    reached = {"__init__"}
-    while todo:
-        for name in _imported_modules(todo.pop()):
-            head, _, mod = name.partition(".")
-            if head == "sz_spark" and mod in modules and mod not in reached:
-                reached.add(mod)
-                todo.append(os.path.join(pkg, mod + ".py"))
-    assert modules - reached == set()
-
-
 #: where a sz_spark name may be read: the entry points, the package and
 #: its tests
 READERS = (*ENTRY_POINTS, "sz_spark/*.py", "tests/**/*.py")
@@ -95,11 +77,14 @@ def _bound_names(t: ast.AST):
             yield t.id
 
 
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
 def _module_bindings(body: list, out: dict) -> dict:
     """name -> the module-level statements (also inside module-level
     if/try/for/with blocks) that bind or fill it; imports excluded."""
     for stmt in body:
-        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        if isinstance(stmt, _DEFS):
             out.setdefault(stmt.name, []).append(stmt)
             continue
         if isinstance(stmt, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
@@ -114,11 +99,102 @@ def _module_bindings(body: list, out: dict) -> dict:
     return out
 
 
+def _reads(node: ast.AST):
+    """The names a subtree reads: Name loads and attribute loads."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            yield n.id
+        elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            yield n.attr
+
+
+def unreached(root: str, entry_points=ENTRY_POINTS, package: str = "sz_spark"):
+    """(top-level ``def``/``class`` statements of ``package/*.py`` that no
+    entry point reaches as ``module.py:name``, modules none of whose
+    bindings is reached as ``module.py``), each sorted.
+
+    A name is reached when an entry-point file reads it, when a reached
+    binding's statements read it, or when a top-level statement of a live
+    module reads it (a ``REGISTRY`` dict reaches its values that way).  A
+    module is live once one of its bindings is reached; ``__init__`` always
+    is, since importing any module runs it.  Names are matched without
+    their module, so same-named definitions are reached together, and
+    reads from ``tests/`` reach nothing."""
+
+    def parse(path):
+        with open(path, encoding="utf-8") as fh:
+            return ast.parse(fh.read(), path)
+
+    bindings: dict[str, list] = {}  # name -> [(module, statement)]
+    loose = {}  # module -> top-level statements that run on import
+    for path in sorted(glob.glob(os.path.join(root, package, "*.py"))):
+        mod, body = os.path.basename(path), parse(path).body
+        for name, stmts in _module_bindings(body, {}).items():
+            bindings.setdefault(name, []).extend((mod, s) for s in stmts)
+        loose[mod] = [s for s in body if not isinstance(s, _DEFS + (ast.Import, ast.ImportFrom))]
+    todo = [n for pat in entry_points
+            for p in glob.glob(os.path.join(root, pat), recursive=True) for n in _reads(parse(p))]
+    reached, live = set(), set()
+
+    def wake(mod):
+        if mod not in live:
+            live.add(mod)
+            todo.extend(n for s in loose.get(mod, ()) for n in _reads(s))
+
+    wake("__init__.py")
+    while todo:
+        name = todo.pop()
+        if name in reached or name not in bindings:
+            continue
+        reached.add(name)
+        for mod, stmt in bindings[name]:
+            wake(mod)
+            todo.extend(_reads(stmt))
+    dead = sorted(f"{mod}:{name}" for name, bs in bindings.items() if name not in reached
+                  for mod, s in bs if isinstance(s, _DEFS))
+    return dead, sorted(set(loose) - live)
+
+
+def test_every_definition_is_reached_from_an_entry_point():
+    """Every top-level function and class in sz_spark/*.py, and so every
+    module, is reached from an entry point: code that only tests call
+    belongs in tests/."""
+    assert unreached(REPO) == ([], [])
+
+
+def test_reachability_scan_reports_what_only_tests_call(tmp_path):
+    """On a package with one function an entry point calls, one reached
+    only through a module-level registry dict and one only a test calls,
+    the scan reports exactly the third; a module only tests import is
+    reported as a whole."""
+    files = {
+        "pkg/__init__.py": "",
+        "pkg/mod.py": (
+            "def called():\n    return 1\n\n"
+            "def registered():\n    return 2\n\n"
+            "def tested():\n    return 3\n\n"
+            "REGISTRY = {'r': registered}\n"
+        ),
+        "pkg/orphan.py": "LIMIT = 4\n",
+        "bin/run.py": "from pkg.mod import REGISTRY, called\nprint(called(), REGISTRY)\n",
+        "tests/test_mod.py": (
+            "from pkg import orphan\nfrom pkg.mod import tested\n\n"
+            "def test_it():\n    assert tested() < orphan.LIMIT\n"
+        ),
+    }
+    for rel, text in files.items():
+        (tmp_path / rel).parent.mkdir(exist_ok=True)
+        (tmp_path / rel).write_text(text)
+    assert unreached(str(tmp_path), ("bin/*.py",), "pkg") == (["mod.py:tested"], ["orphan.py"])
+
+
 def test_every_package_name_is_read():
     """Every module-level name a sz_spark/*.py file defines is read
     (a Name or an attribute load) somewhere in READERS, outside the
-    statements that bind or fill it: a dead function or table fails
-    here even when its module is reached."""
+    statements that bind or fill it.  Reads from tests/ count here, since
+    enum members such as uax_classes.G_OTHER are read only by the scalar
+    oracles there; functions and classes must also pass the stricter
+    reachability guard above."""
     files = {p for pat in READERS for p in glob.glob(os.path.join(REPO, pat), recursive=True)}
     trees = {}
     for path in files:

@@ -120,26 +120,6 @@ def test_fingerprints_all_same_char():
         assert c[0, d] == 50 - int(w) + 1
 
 
-def test_fingerprint_stream_equals_one_shot():
-    """Streaming (arbitrary chunking) == one-shot — the reference's
-    incremental-hash contract (fingerprint_chunk/passed_progress,
-    Hasher.update)."""
-    rng = random.Random(5)
-    for n in (0, 1, 5, 31, 64, 200, 700):
-        t = rand_bytes(rng, n)
-        exp_h, exp_c = K.fingerprints([t], ndim=16, seed=0)
-        for cuts in ([len(t)], [1] * len(t), [7, 3, 50, len(t)], [0, 2, len(t)]):
-            s = K.FingerprintStream(ndim=16, seed=0)
-            pos = 0
-            for c in cuts:
-                s.update(t[pos : pos + c])
-                pos += c
-            s.update(t[pos:])
-            h, c2 = s.digest()
-            assert (h == exp_h[0]).all(), (n, cuts)
-            assert (c2 == exp_c[0]).all(), (n, cuts)
-
-
 def test_merge_count_min_sketches_equals_whole():
     """Chunked fingerprint + merge == one-shot (streaming property,
     fingerprints/serial.hpp:601-625)."""
@@ -223,6 +203,14 @@ def test_levenshtein_affine_vs_gotoh_scalar():
             assert got[i] == exp, (a[i], b[i], gap_open, gap_extend)
 
 
+def _bounded_lev(a: list[bytes], b: list[bytes], bound: int) -> np.ndarray:
+    """The production bounded DP (kernels.bounded_lev_ladder) over two
+    lists of byte strings."""
+    da, oa = K.flat_from_bytes(a)
+    db, ob = K.flat_from_bytes(b)
+    return K.bounded_lev_ladder(da, oa[:-1], np.diff(oa), db, ob[:-1], np.diff(ob), bound)
+
+
 def test_levenshtein_bounded_exact_below_bound():
     rng = random.Random(31)
     a, b = [], []
@@ -231,7 +219,7 @@ def test_levenshtein_bounded_exact_below_bound():
         b.append(rand_bytes(rng, rng.randint(0, 60)))
     exact = K.levenshtein_batch(a, b)
     for bound in (0, 1, 3, 10, 25, 80):
-        got = K.levenshtein_batch_bounded(a, b, bound)
+        got = _bounded_lev(a, b, bound)
         exp = np.minimum(exact, bound + 1)
         assert (got == exp).all(), f"bound={bound}"
 
@@ -264,9 +252,9 @@ def test_levenshtein_ladder_identical_to_single_pass():
 
 
 def test_levenshtein_bounded_edges():
-    assert list(K.levenshtein_batch_bounded([b"", b"abc", b"abc"], [b"", b"", b"abc"], 5)) == [0, 3, 0]
+    assert list(_bounded_lev([b"", b"abc", b"abc"], [b"", b"", b"abc"], 5)) == [0, 3, 0]
     # infeasible length gap clamps immediately
-    assert list(K.levenshtein_batch_bounded([b"aaaaaaaaaa"], [b""], 3)) == [4]
+    assert list(_bounded_lev([b"aaaaaaaaaa"], [b""], 3)) == [4]
 
 
 def test_levenshtein_utf8_codepoints():
@@ -355,7 +343,7 @@ def test_jaro_winkler_vs_duckdb():
 
 
 def test_normalized_edit_similarity():
-    s = K.normalized_edit_similarity([b"abcd", b"", b"abc"], [b"abcd", b"", b"xyz"])
+    s = oracles.normalized_edit_similarity([b"abcd", b"", b"abc"], [b"abcd", b"", b"xyz"])
     assert s[0] == 1.0 and s[1] == 1.0 and s[2] == 0.0
 
 
@@ -363,78 +351,18 @@ def test_fingerprint_fused_equals_grouped():
     """The fused production kernel vs the structurally independent
     width-grouped twin (round-1 path) — plus the with_counts=False fast
     path's hash identity."""
-    import numpy as np
-
-    from sz_spark import kernels as K
-
     texts = sorted(
         [b"", b"a", b"ab" * 30, b"x" * 47, b"y" * 48, bytes(range(256)) * 4],
         key=len,
     )
+    data, offsets = K.flat_from_bytes(texts)
     for widths in [None, (16, 24, 32, 48), (3,), (48,), (5, 3, 9)]:
         p = K.fingerprint_params(128, widths, 0)
-        h1, c1 = K._fingerprint_padded_batch(texts, p)
+        h1, c1 = K._fp_padded_flat(data, offsets[:-1], np.diff(offsets), p)
         h2, c2 = oracles.fingerprint_padded_batch_grouped(texts, p)
-        h3, _ = K._fingerprint_padded_batch(texts, p, with_counts=False)
+        h3, _ = K._fp_padded_flat(data, offsets[:-1], np.diff(offsets), p, with_counts=False)
         assert (h1 == h2).all() and (c1 == c2).all(), widths
         assert (h1 == h3).all(), widths
-
-
-def test_hasher_incremental_vs_one_shot():
-    """sz.Hasher parity (reference test/hash.py:51-80): streaming over
-    any chunk split equals the one-shot hash; digest is repeatable and
-    non-destructive; hexdigest is the 016x rendering; reset + replay
-    reproduces; copy() forks state."""
-    from sz_spark import kernels as K
-
-    data = b"hello world, this is a streaming hash conformance payload"
-    for seed in (0, 1, 42, 2**63):
-        one_shot = K.hash_bytes_u64(data, seed)
-        for cuts in ((6,), (1, 2, 3), (0, 20, 20), (len(data),)):
-            h = K.Hasher(seed)
-            pos = 0
-            for c in cuts:
-                h.update(data[pos : pos + c])
-                pos += c
-            h.update(data[pos:])
-            assert h.digest() == one_shot, (seed, cuts)
-            assert h.digest() == one_shot  # repeatable
-            assert h.hexdigest() == format(one_shot, "016x")
-        h = K.Hasher(seed).update(data)
-        fork = h.copy()
-        h.update(b"divergent tail")
-        assert fork.digest() == one_shot
-        assert h.digest() != one_shot
-        assert h.reset().update(data).digest() == one_shot
-
-
-def test_sha256_and_hmac_incremental():
-    """Incremental Sha256/HmacSha256 == hashlib/hmac one-shot for every
-    chunk split, including digest-then-continue (hash.h:277-300)."""
-    import hashlib
-    import hmac as hmac_mod
-
-    from sz_spark import kernels as K
-
-    data = b"abcdefgh" * 13 + b"tail"
-    key_short = b"k3y"
-    key_long = b"K" * 100  # > block size: pre-hashed per RFC-2104
-    assert K.Sha256().update(data).hexdigest() == hashlib.sha256(data).hexdigest()
-    s = K.Sha256()
-    for i in range(0, len(data), 7):
-        s.update(data[i : i + 7])
-    assert s.digest() == hashlib.sha256(data).digest()
-    for key in (key_short, key_long):
-        ref = hmac_mod.new(key, data, hashlib.sha256)
-        m = K.HmacSha256(key)
-        for i in range(0, len(data), 11):
-            m.update(data[i : i + 11])
-        assert m.hexdigest() == ref.hexdigest()
-        # digest() is non-destructive: more updates keep matching
-        mid = K.HmacSha256(key).update(data[:20])
-        _ = mid.digest()
-        mid.update(data[20:])
-        assert mid.digest() == ref.digest()
 
 
 def test_gotoh_sql_oracle_random_differential():

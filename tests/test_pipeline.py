@@ -27,7 +27,9 @@ def spark():
 
 def test_f1_gate(spark):
     from sz_spark import canonicalize as canon
-    from sz_spark.pipeline import PipelineConfig, evaluate_pairs, run_pipeline
+    from oracles import evaluate_pairs
+
+    from sz_spark.pipeline import PipelineConfig, run_pipeline
     from sz_spark.transcripts import build_transcripts
 
     cfg = PipelineConfig()
@@ -400,9 +402,10 @@ def test_gather_broadcast_released_when_pairs_fail(spark, monkeypatch):
 
 def test_arrow_transport_parity(spark):
     """Bounded Arrow scoring (score_pairs) == the full-DP reference
-    kernels.levenshtein_batch on every pair it keeps (sim >= τ), and
-    every pair it drops really scores below τ."""
-    import numpy as np
+    kernels.levenshtein_batch and oracles.normalized_edit_similarity on
+    every pair it keeps (sim >= τ), and every pair it drops really scores
+    below τ."""
+    import oracles
     from pyspark.sql import functions as F
 
     from sz_spark import canonicalize as canon, kernels as K, scoring
@@ -425,12 +428,9 @@ def test_arrow_transport_parity(spark):
     }
     ref = wt.select("id_a", "id_b", "doc_a", "doc_b", "len_a", "len_b").collect()
     assert len(got) == len(ref) > 0
-    dist = K.levenshtein_batch(
-        [r["doc_a"].encode() for r in ref], [r["doc_b"].encode() for r in ref]
-    )
-    sims = 1.0 - dist / np.maximum(
-        [r["len_a"] for r in ref], [r["len_b"] for r in ref]
-    ).astype(np.float64)
+    a, b = [r["doc_a"].encode() for r in ref], [r["doc_b"].encode() for r in ref]
+    dist = K.levenshtein_batch(a, b)
+    sims = oracles.normalized_edit_similarity(a, b)
     n_kept = 0
     for r, d, sim in zip(ref, dist.tolist(), sims.tolist()):
         g_dist, g_sim = got[r["id_a"], r["id_b"]]

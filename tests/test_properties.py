@@ -38,7 +38,9 @@ def test_levenshtein_triangle_inequality(a, b, c):
 @given(a=BYTES, b=BYTES, bound=st.integers(min_value=0, max_value=90))
 def test_bounded_levenshtein_consistent(a, b, bound):
     exact = int(K.levenshtein_batch([a], [b])[0])
-    got = int(K.levenshtein_batch_bounded([a], [b], bound)[0])
+    da, oa = K.flat_from_bytes([a])
+    db, ob = K.flat_from_bytes([b])
+    got = int(K.bounded_lev_ladder(da, oa[:-1], np.diff(oa), db, ob[:-1], np.diff(ob), bound)[0])
     assert got == min(exact, bound + 1)
 
 

@@ -378,19 +378,3 @@ def test_cache_lifecycle_no_storage_residue(spark):
     # never accumulate round over round
     assert counts[2] <= max(counts[1], 2), f"storage residue accumulating: {counts}: {detail}"
     assert counts[2] <= 2, f"persisted RDDs lingering after actions: {counts}: {detail}"
-
-
-def test_engine_rng_sample_determinism(spark):
-    """q_sample_seeded_rng left the driver registry in r5 (replaced by
-    the oracleable szs_cms_merge) — pin its contract here instead:
-    seeded engine-RNG sampling is deterministic across runs and
-    parallelism (the property retries/speculative tasks rely on)."""
-    from sz_spark.queries import q_sample_seeded_rng
-
-    a = q_sample_seeded_rng(spark, SF_DIR).toPandas()
-    b = q_sample_seeded_rng(spark, SF_DIR).toPandas()
-    key = ["method", "doc_id"]
-    assert a.sort_values(key).reset_index(drop=True).equals(
-        b.sort_values(key).reset_index(drop=True)
-    )
-    assert set(a["method"]) == {"wor", "wr"} and len(a) > 0

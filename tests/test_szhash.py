@@ -18,6 +18,10 @@ Correctness is established by four independent layers:
    4-lane fold for long inputs;
 4. streaming == one-shot at every chunk split (the reference's
    sz_hash_state_update/digest contract, hash/serial.h:601-657).
+
+``sz_fill_random`` (sz.random's AES-CTR stream) is defined here rather
+than in sz_spark.szhash: nothing in the library generates random bytes,
+and the same frozen vectors pin it to the compiled reference.
 """
 
 from __future__ import annotations
@@ -27,14 +31,44 @@ import random
 import numpy as np
 import pytest
 
+from sz_spark.kernels import flat_from_bytes
 from sz_spark.szhash import (
+    PI,
     SBOX,
     SzHasher,
     aesenc,
     sz_hash,
-    sz_hash_batch,
+    sz_hash_flat,
     sz_hash_multiseed,
 )
+
+
+def sz_hash_batch(texts: list[bytes], seed: int = 0) -> np.ndarray:
+    """szhash.sz_hash_flat over a list of byte strings."""
+    data, offsets = flat_from_bytes(texts)
+    return sz_hash_flat(data, offsets, seed)
+
+
+def sz_fill_random(length: int, nonce: int = 0) -> bytes:
+    """Exact `sz.random` / `sz_fill_random` byte stream (AES-CTR with one
+    AESENC round, hash/serial.h:953-968): block L is
+    AESENC([nonce+L, nonce+L], [nonce ^ pi[2L%8], nonce ^ pi[2L%8+1]]),
+    rotating through the first 512 bits of pi; output truncated to
+    `length`.  Vectorized: all blocks in one aesenc call."""
+    if length <= 0:
+        return b""
+    n_blocks = (length + 15) // 16
+    lanes = np.arange(n_blocks, dtype=np.uint64)
+    nn = np.uint64(nonce)
+    inp = np.empty((n_blocks, 2), dtype=np.uint64)
+    inp[:, 0] = nn + lanes
+    inp[:, 1] = nn + lanes
+    key = np.empty((n_blocks, 2), dtype=np.uint64)
+    key[:, 0] = nn ^ PI[2 * (lanes % np.uint64(4))]
+    key[:, 1] = nn ^ PI[2 * (lanes % np.uint64(4)) + np.uint64(1)]
+    out = aesenc(inp.view(np.uint8).reshape(n_blocks, 16),
+                 key.view(np.uint8).reshape(n_blocks, 16))
+    return out.reshape(-1).tobytes()[:length]
 
 
 def _aesenc_fips(state16: bytes, key16: bytes) -> bytes:
@@ -132,8 +166,6 @@ def test_multiseed_is_per_seed_replay():
 
 
 def test_fill_random_structure():
-    from sz_spark.szhash import PI, sz_fill_random, aesenc
-
     # block L == AESENC([nonce+L]*2, [nonce ^ pi[2L%8 .. +1]]) — check the
     # first two blocks against a hand-built scalar construction
     nonce = 12345
@@ -210,8 +242,6 @@ def test_reference_vectors_multiseed():
 
 
 def test_reference_vectors_fill_random():
-    from sz_spark.szhash import sz_fill_random
-
     for row in _VECTORS["fill_random"]:
         got = sz_fill_random(row["len"], row["nonce"])
         assert list(got) == row["bytes"], (row["nonce"], row["len"])
@@ -225,27 +255,3 @@ def test_reference_vectors_streaming():
         for i in range(0, len(data), row["chunk"]):
             h.update(data[i : i + row["chunk"]])
         assert h.digest() == row["hash"], (row["len"], row["chunk"])
-
-
-def test_sz_hash_exact_udf_on_spark():
-    """The Arrow UDF surface (udfs.make_sz_hash_exact_udf) returns the
-    exact AES sz.hash for DataFrame columns — same values as the
-    pinned NumPy batch kernel, as int64 bit patterns."""
-    import numpy as np
-    import pytest
-
-    pytest.importorskip("pyspark")
-    from sz_spark.session import build_session
-    from sz_spark.szhash import sz_hash_batch
-    from sz_spark.udfs import make_sz_hash_exact_udf
-
-    spark = build_session(master="local[2]", shuffle_partitions=2, app_name="szhash-udf")
-    try:
-        texts = ["", "a", "hello world", "x" * 63, "y" * 64, "z" * 65, "π unicode ✓"]
-        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
-        udf = make_sz_hash_exact_udf(seed=42)
-        got = {r["i"]: r["h"] for r in df.select("i", udf("t").alias("h")).collect()}
-        want = sz_hash_batch([t.encode() for t in texts], seed=42).astype("int64")
-        assert [got[i] for i in range(len(texts))] == [int(v) for v in want]
-    finally:
-        spark.stop()

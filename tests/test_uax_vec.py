@@ -116,7 +116,7 @@ def test_property_tables_match_scalar_full_space():
     0x10000, the run-table search above."""
     cps = np.arange(0x110000)
     for name, table, fn in (
-        ("WB", V.wb_props, word_break_property),
+        ("WB", lambda c: V._lookup(V._WB_STARTS, V._WB_PROPS, c, V._WB_BMP), word_break_property),
         ("SB", V.sb_props, sentence_break_property),
         ("LB", V.lb_classes, line_break_class),
         ("GCB", V.gcb_props, grapheme_break_property),
