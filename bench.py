@@ -197,7 +197,9 @@ def _tree_cpu_sec() -> float | None:
         return None
 
 
-def _run_pipeline_probe(cores: int, sf_dir: str, scale_k: int) -> dict:
+def _run_pipeline_probe(
+    cores: int, sf_dir: str, scale_k: int, driver_memory: str | None = None
+) -> dict:
     from sz_spark.pipeline import PipelineConfig, run_pipeline
     from sz_spark.session import build_session
     from sz_spark.transcripts import build_transcripts_from_documents
@@ -211,6 +213,7 @@ def _run_pipeline_probe(cores: int, sf_dir: str, scale_k: int) -> dict:
         master=f"local[{cores}]",
         shuffle_partitions=4 * cores,
         app_name=f"bench_scale_{cores}",
+        extra={"spark.driver.memory": driver_memory} if driver_memory else None,
     )
     docs, scale_k = replicated_documents(spark, sf_dir, scale_k)
     transcripts = build_transcripts_from_documents(docs).localCheckpoint()
@@ -232,7 +235,11 @@ def _run_pipeline_probe(cores: int, sf_dir: str, scale_k: int) -> dict:
     }
 
 
-def _probe_cmd(cores: int, sf_dir: str, scale_k: int) -> list:
+def _probe_cmd(
+    cores: int, sf_dir: str, scale_k: int, driver_memory: str | None = None
+) -> list:
+    """``bench.py --scale-probe cores sf_dir scale_k [driver_memory]``;
+    without a driver memory the probe's session keeps build_session's."""
     return [
         sys.executable,
         os.path.abspath(__file__),
@@ -240,6 +247,7 @@ def _probe_cmd(cores: int, sf_dir: str, scale_k: int) -> list:
         str(cores),
         sf_dir,
         str(scale_k),
+        *([driver_memory] if driver_memory else []),
     ]
 
 
@@ -408,17 +416,15 @@ def run_weak_scaling(low: int, high: int, sf_dir: str, scale_k: int) -> list:
     import subprocess
 
     n = max(high // low, 1)
+    b0 = _box_sample()
     # cap each copy's driver JVM: n concurrent 32g heaps on a 125g box
     # would page; the probe job itself needs far less
-    env = dict(os.environ, SZ_SPARK_DRIVER_MEM="8g")
-    b0 = _box_sample()
     procs = [
         subprocess.Popen(
-            _probe_cmd(low, sf_dir, scale_k),
+            _probe_cmd(low, sf_dir, scale_k, driver_memory="8g"),
             stdout=subprocess.PIPE,
             stderr=subprocess.DEVNULL,
             text=True,
-            env=env,
         )
         for _ in range(n)
     ]
@@ -819,6 +825,10 @@ def main() -> None:
 if __name__ == "__main__":
     if len(sys.argv) >= 2 and sys.argv[1] == "--scale-probe":
         cores, sf_dir, scale_k = int(sys.argv[2]), sys.argv[3], int(sys.argv[4])
-        print(json.dumps(_run_pipeline_probe(cores, sf_dir, scale_k)), flush=True)
+        driver_memory = sys.argv[5] if len(sys.argv) > 5 else None
+        print(
+            json.dumps(_run_pipeline_probe(cores, sf_dir, scale_k, driver_memory)),
+            flush=True,
+        )
     else:
         main()

@@ -7,9 +7,6 @@ Modes:
       min-of-2 per-query wall at local[$SPARK_GRAFT_CPUS or nproc], the same
       timing policy as bench.py's headline loop (count() action, warm
       JVM/footers/worker pool).  Default: bench.py's HEADLINE list.
-  python bench_extra.py probe [cores] [scale_k]
-      one flagship-pipeline scaling probe in a fresh subprocess —
-      identical to bench.py --scale-probe (cores default 8).
   python bench_extra.py plans <out_dir> [suffix] [name ...]
       dump .explain("formatted") of registry queries to
       <out_dir>/<name>_<suffix>.txt (default suffix 'before', default
@@ -93,25 +90,6 @@ def mode_queries(names: list[str]) -> None:
     spark.stop()
 
 
-def mode_probe(cores: int, scale_k: int) -> None:
-    import subprocess
-
-    out = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench.py"),
-            "--scale-probe",
-            str(cores),
-            SF_DIR,
-            str(scale_k),
-        ],
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    print(out.stdout.strip().splitlines()[-1])
-
-
 def mode_plans(out_dir: str, suffix: str, names: list[str]) -> None:
     import contextlib
     import io
@@ -149,10 +127,6 @@ if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if mode == "queries":
         mode_queries(sys.argv[2:])
-    elif mode == "probe":
-        cores = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-        scale_k = int(sys.argv[3]) if len(sys.argv) > 3 else 16
-        mode_probe(cores, scale_k)
     elif mode == "plans":
         out_dir = sys.argv[2] if len(sys.argv) > 2 else "plans/r06"
         suffix = sys.argv[3] if len(sys.argv) > 3 else "before"

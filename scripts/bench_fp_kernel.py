@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Single-core microbenchmark of kernels.fingerprints (the bands stage
 hot kernel): throughput vs batch_bytes, to size the strip-mined batch so
-its working set stays cache-resident.
+its working set stays cache-resident.  Runs the blocking configuration
+(blocking.NDIM dimensions over blocking.FP_WIDTHS).
 """
 import os
 import sys
@@ -11,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
 
 from sz_spark import kernels as K
-from sz_spark.blocking import DEFAULT_FP_WIDTHS, DEFAULT_NDIM
+from sz_spark.blocking import FP_SEED, FP_WIDTHS, NDIM
 
 rng = np.random.default_rng(0)
 # synthetic docs shaped like the probe's canonical docs (~500 bytes)
@@ -24,7 +25,7 @@ total = sum(len(t) for t in texts)
 for bb_log in (24, 22, 21, 20, 19, 18):
     t0 = time.time()
     h, _ = K.fingerprints(
-        texts, ndim=DEFAULT_NDIM, widths=DEFAULT_FP_WIDTHS, seed=0,
+        texts, ndim=NDIM, widths=FP_WIDTHS, seed=FP_SEED,
         batch_bytes=1 << bb_log, with_counts=False,
     )
     dt = time.time() - t0

@@ -37,7 +37,7 @@ if os.path.isdir(os.path.join(_repo_root, "sz_spark")) and _repo_root not in sys
 
 
 #: flags that set a PipelineConfig field of the same name
-_CONFIG_FLAGS = ("checkpoint_dir", "threshold", "ndim", "max_block_size")
+_CONFIG_FLAGS = ("checkpoint_dir", "threshold", "max_block_size")
 
 
 def _parser() -> argparse.ArgumentParser:
@@ -50,7 +50,6 @@ def _parser() -> argparse.ArgumentParser:
     unset = argparse.SUPPRESS
     p.add_argument("--checkpoint-dir", default=unset)
     p.add_argument("--threshold", type=float, default=unset)
-    p.add_argument("--ndim", type=int, default=unset)
     p.add_argument("--max-block-size", type=int, default=unset)
     return p
 

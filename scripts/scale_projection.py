@@ -41,11 +41,11 @@ ROW_OVERHEAD = 24
 
 @dataclass
 class PipelineKnobs:
-    ndim: int = 96
-    n_bands: int = 24
-    rows_per_band: int = 4
+    """The pipeline values the projection reads; their defaults are the
+    pipeline's own, pinned by tests/test_scale_projection.py."""
+
+    n_bands: int = 24  # blocking.N_BANDS
     max_block_size: int = 1024  # PipelineConfig's block-size cap
-    threshold: float = 0.94
     cc_gate_edges: int = 2_000_000  # driver union-find fast path cap
 
 

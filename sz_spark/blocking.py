@@ -28,43 +28,49 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Measured: with the layered prefix key, candidate recall is 1.00000 at
-# sf0.001 AND sf0.1 for 64, 96, and 128 dims with near-identical
-# candidate counts — 64 dims would halve the fingerprint cost on THIS
-# corpus, but 128 stays the default: it is the robust setting for
-# corpora without a strong prefix attribute, where the minhash bands
-# carry recall alone.
-DEFAULT_NDIM = 128
 # Blocking fingerprints use LARGER window widths than the engine default
 # {3..31}: tiny windows over a small vocabulary are shared by every
 # document (zero discrimination), while 16-48-byte windows span multiple
 # words/salts.  Measured on the sf0.001 corpus: default widths at r=4
 # give 51k candidates; these widths give ~410 at 100% true-pair recall.
-DEFAULT_FP_WIDTHS = (16, 24, 32, 48)
-# 32 bands x 4 rows: at pair similarity ~0.95 the per-dim minhash
+FP_WIDTHS = (16, 24, 32, 48)
+# 4 rows per band: at pair similarity ~0.95 the per-dim minhash
 # agreement on SHORT docs can dip to ~0.7 (the edit window covers a
 # large text fraction); r=8 then misses ~5-6% of true pairs while r=4
 # keeps the measured miss rate at 0 with barely more candidates.
-DEFAULT_BANDS = 32
-DEFAULT_ROWS = 4
+ROWS_PER_BAND = 4
+# 24 bands: measured A/B at sf0.1 (BASELINE.md), recall/F1 = 1.000000 at
+# 128, 96 and 64 dims alike (the layered prefix key carries the short
+# docs), while 96 dims cut the pipeline wall ~45%.  64 also held on
+# THIS corpus; 96 keeps a robustness margin for corpora whose band
+# agreement is weaker.
+N_BANDS = 24
+# the fingerprint dimensions the bands read, and so the ones computed
+NDIM = N_BANDS * ROWS_PER_BAND
+FP_SEED = 0
+# The layered prefix block key (band_id -1), unioned with the minhash
+# bands, is the ER-classic "block on a strong attribute" key.  Short
+# documents have too few rolling windows for reliable band agreement
+# (measured: 14/3753 true pairs at sf0.1 were 2-turn docs missed by all
+# 32 bands then in use); their shared conversation-handle prefix
+# recovers them.  The prefix must COVER the strong attribute: the
+# synthetic corpus's conversation handle is 49 bytes ('u' + 6 digits
+# x 8).  A 32-byte prefix cut it mid-handle, so every block mixed
+# dozens of entities sharing leading digits; at 56 bytes each prefix
+# block is one entity (its 2-3 conversation variants), recall is
+# identical (same-entity variants share the WHOLE handle by
+# construction), and the prefix layer's pair cost is O(n).  The block
+# cap applies to prefix blocks like any other.
+PREFIX_LEN = 56
 
 
-def doc_features(
-    docs: DataFrame,
-    text_col: str = "doc",
-    id_col: str = "conv_id",
-    ndim: int = DEFAULT_NDIM,
-    widths=DEFAULT_FP_WIDTHS,
-    seed: int = 0,
-    n_bands: int = DEFAULT_BANDS,
-    rows_per_band: int = DEFAULT_ROWS,
-    prefix_len: int = 56,
-) -> DataFrame:
+def doc_features(docs: DataFrame, id_col: str = "conv_id") -> DataFrame:
     """docs -> (id, len, pk long, bk array<long>, hist binary): the
     fused per-document feature table — the block keys (``pk`` the
-    layered prefix key, :func:`_prefix_key`; ``bk`` the LSH band keys,
-    udfs.band_keys) AND the packed prune histogram
-    (udfs.pack_histograms) from ONE pass over the doc bytes.
+    layered prefix key over the first PREFIX_LEN characters of ``doc``;
+    ``bk`` the N_BANDS LSH band keys, udfs.band_keys) AND the packed
+    prune histogram (udfs.pack_histograms) from ONE pass over the doc
+    bytes.
 
     The pipeline materializes this narrow frame once and derives the
     band explosion (:func:`bands_from_features`), the prune attributes
@@ -83,13 +89,9 @@ def doc_features(
 
     src = docs.select(
         F.col(id_col),
-        F.length(F.col(text_col)).alias("len"),
-        _prefix_key(text_col, prefix_len).alias("pk"),
-        F.encode(F.col(text_col), "utf-8").alias("_t"),
-    )
-    fn = make_doc_features_arrow_fn(
-        ndim=ndim, widths=widths, seed=seed, n_bands=n_bands,
-        rows_per_band=rows_per_band,
+        F.length(F.col("doc")).alias("len"),
+        F.xxhash64(F.substring(F.col("doc"), 1, PREFIX_LEN)).alias("pk"),
+        F.encode(F.col("doc"), "utf-8").alias("_t"),
     )
     out_schema = T.StructType(
         [
@@ -100,26 +102,7 @@ def doc_features(
             T.StructField("hist", T.BinaryType(), False),
         ]
     )
-    return src.mapInArrow(fn, out_schema)
-
-
-def _prefix_key(text_col: str, prefix_len: int):
-    """The layered prefix block key (band_id -1), unioned with the
-    minhash bands — the ER-classic "block on a strong attribute" key.
-    Short documents have too few rolling windows for reliable band
-    agreement (measured: 14/3753 true pairs at sf0.1 were 2-turn docs
-    missed by all 32 bands); their shared conversation-handle prefix
-    recovers them.
-
-    ``prefix_len`` must COVER the strong attribute: the synthetic
-    corpus's conversation handle is 49 bytes ('u' + 6 digits x 8).  A
-    32-byte prefix cut it mid-handle, so every block mixed dozens of
-    entities sharing leading digits; at 56 bytes each prefix block is
-    one entity (its 2-3 conversation variants), recall is identical
-    (same-entity variants share the WHOLE handle by construction), and
-    the prefix layer's pair cost is O(n).  The block cap applies to
-    prefix blocks like any other."""
-    return F.xxhash64(F.substring(F.col(text_col), 1, prefix_len))
+    return src.mapInArrow(make_doc_features_arrow_fn(), out_schema)
 
 
 def bands_from_features(

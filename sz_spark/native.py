@@ -13,9 +13,8 @@ distribution/shuffles/IO; the per-batch inner loops run compiled.
 Everything here is best-effort: any failure (no compiler, read-only
 temp, load error) disables the native path for the process and the
 NumPy kernels take over — correctness never depends on this module.
-Set SZ_NO_NATIVE=1 to force the NumPy path (the differential tests use
-this to compare both); any value other than unset, '', '0' or '1' raises
-ValueError.
+The differential tests (tests/test_native_fp.py) compare both paths by
+calling the twins directly against the NumPy kernels.
 """
 
 from __future__ import annotations
@@ -98,16 +97,11 @@ def _build() -> ctypes.CDLL | None:
 
 
 def get_lib() -> ctypes.CDLL | None:
-    """Compiled library, or None when unavailable/disabled."""
+    """Compiled library, or None when it cannot be built or loaded."""
     global _lib, _tried
     if _tried:
         return _lib
-    raw = os.environ.get("SZ_NO_NATIVE", "")
-    if raw not in ("", "0", "1"):
-        raise ValueError(f"SZ_NO_NATIVE must be unset, '', '0' or '1', got {raw!r}")
     _tried = True
-    if raw == "1":
-        return None
     try:
         _lib = _build()
     except Exception as exc:  # noqa: BLE001 — never fail the query path

@@ -24,17 +24,9 @@ from sz_spark.lineage import CheckpointManager
 
 @dataclass
 class PipelineConfig:
-    # r4 measured A/B at sf0.1 (BASELINE.md): recall/F1 = 1.000000 at
-    # ndim 128/96/64 alike (the layered prefix key carries short docs),
-    # while 96 dims cut the pipeline wall ~45% — promoted per VERDICT r3
-    # #6.  64 also held on THIS corpus but 96 keeps a robustness margin
-    # for corpora whose band agreement is weaker; the blocking library
-    # default stays 128 for prefix-less corpora (blocking.DEFAULT_NDIM).
-    ndim: int = 96
-    fp_widths: tuple = blocking.DEFAULT_FP_WIDTHS
-    n_bands: int = 24
-    rows_per_band: int = blocking.DEFAULT_ROWS
-    seed: int = 0
+    """The knobs an entry point sets; the blocking parameters are
+    constants of sz_spark.blocking (N_BANDS x ROWS_PER_BAND = NDIM)."""
+
     # true variants sit >= 0.96, cross-entity pairs <= 0.905 by the salt
     # construction (sz_spark.transcripts docstring) — 0.94 splits with
     # guaranteed margin on both sides
@@ -88,18 +80,9 @@ def run_pipeline(
     # text crosses the JVM->Python boundary once, and the checkpoint
     # stores the narrow 133k-row feature table instead of the exploded
     # band table.
-    def _feats():
-        return blocking.doc_features(
-            docs,
-            id_col="did",
-            ndim=cfg.ndim,
-            widths=cfg.fp_widths,
-            seed=cfg.seed,
-            n_bands=cfg.n_bands,
-            rows_per_band=cfg.rows_per_band,
-        )
-
-    feats = ckpt.stage("doc_features", _feats)
+    feats = ckpt.stage(
+        "doc_features", lambda: blocking.doc_features(docs, id_col="did")
+    )
 
     # the gather tier's broadcast, released (executor blocks) once
     # `pairs` is materialized or has failed — the checkpoint truncates

@@ -34,9 +34,10 @@ def build_session(
     ``PYSPARK_SUBMIT_ARGS``); a cluster deployment then gets the same
     pipeline conf block and worker prewarm as a ``local[N]`` test
     session.  The settings that only matter for a JVM this call
-    launches itself (driver memory, GC/JIT thread caps, scratch dir, UI
-    off, the class-data-sharing archive of ``_ClassArchive``) apply
-    only to a ``local`` master passed here.  A local master, passed or
+    launches itself (driver memory, 32g unless ``extra`` sets
+    ``spark.driver.memory``; GC/JIT thread caps, scratch dir, UI off,
+    the class-data-sharing archive of ``_ClassArchive``) apply only to
+    a ``local`` master passed here.  A local master, passed or
     submitted, whose launch conf leaves the shuffle width unset gets
     its ``defaultParallelism`` instead of Spark's 200.
     ``extra`` is applied last, so its keys win.
@@ -131,7 +132,8 @@ def _local_conf(cores: int) -> dict[str, str]:
     """Settings for the driver JVM a local master runs everything in."""
     conf = {
         "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SZ_SPARK_DRIVER_MEM", "32g"),
+        # a caller's own heap goes through build_session(extra=...)
+        "spark.driver.memory": "32g",
     }
     # Size the JVM's BACKGROUND parallelism to the session's core budget
     # instead of the machine's.  HotSpot picks GC/JIT thread counts from

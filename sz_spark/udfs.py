@@ -9,7 +9,6 @@ Python at all.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -216,24 +215,19 @@ def prune_keep(lens, hists, ia, ib, threshold: float, step: int = 4096):
     return keep
 
 
-def make_doc_features_arrow_fn(
-    ndim: int = 128,
-    widths=None,
-    seed: int = 0,
-    n_bands: int = 32,
-    rows_per_band: int = 4,
-):
+def make_doc_features_arrow_fn():
     """Fused per-document feature kernel: RecordBatch (id, len, pk,
     text binary) -> (id, len, pk, bk array<long>, hist binary).
 
     One pass over the doc bytes computes BOTH the LSH band keys
-    (:func:`band_keys` over the fingerprints) and the packed prune
-    histogram (:func:`pack_histograms`) — the corpus crosses the
-    JVM->Python boundary once, and the pipeline materializes one narrow
-    feature table (guide §4.1: pass whole batches once, derive
-    everything needed).  ``len`` (F.length, characters) and ``pk`` (the
-    prefix block key) are computed JVM-side and carried through."""
-    assert n_bands * rows_per_band <= ndim
+    (:func:`band_keys` over the blocking.NDIM fingerprint dimensions)
+    and the packed prune histogram (:func:`pack_histograms`) — the
+    corpus crosses the JVM->Python boundary once, and the pipeline
+    materializes one narrow feature table (guide §4.1: pass whole
+    batches once, derive everything needed).  ``len`` (F.length,
+    characters) and ``pk`` (the prefix block key) are computed JVM-side
+    and carried through."""
+    from sz_spark.blocking import FP_SEED, FP_WIDTHS, N_BANDS, NDIM, ROWS_PER_BAND
 
     def fn(batches):
         import numpy as np
@@ -245,14 +239,14 @@ def make_doc_features_arrow_fn(
                 continue
             data, off = arrow_binary_flat(batch.column(3))
             h, _c = K.fingerprints_flat(
-                data, off, ndim=ndim, widths=widths, seed=seed, with_counts=False
+                data, off, ndim=NDIM, widths=FP_WIDTHS, seed=FP_SEED, with_counts=False
             )
             lst = pa.ListArray.from_arrays(
                 pa.array(
-                    np.arange(0, (n + 1) * n_bands, n_bands, dtype=np.int32),
+                    np.arange(0, (n + 1) * N_BANDS, N_BANDS, dtype=np.int32),
                     type=pa.int32(),
                 ),
-                pa.array(band_keys(h, n_bands, rows_per_band).reshape(-1), type=pa.int64()),
+                pa.array(band_keys(h, N_BANDS, ROWS_PER_BAND).reshape(-1), type=pa.int64()),
             )
             yield pa.RecordBatch.from_arrays(
                 [*batch.columns[:3], lst, pack_histograms(data, off)],

@@ -203,19 +203,22 @@ def test_distinct_shingles_arrow_vs_exprs(spark):
 def test_doc_features_matches_unfused_paths(spark):
     """blocking.doc_features must match independent references for
     every column: ``pk`` the xxhash64 of the 56-character prefix,
-    ``bk`` kernels.fingerprints + the splitmix64 band combine, ``len``
-    the codepoint length and ``hist`` the per-document bincount."""
+    ``bk`` 96-dim kernels.fingerprints + the splitmix64 combine of 24
+    bands of 4, ``len`` the codepoint length and ``hist`` the
+    per-document bincount."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from sz_spark import canonicalize as canon, kernels as K
     from sz_spark.transcripts import build_transcripts
 
-    n_bands, rows_per_band = 24, blocking.DEFAULT_ROWS
+    n_bands, rows_per_band = blocking.N_BANDS, blocking.ROWS_PER_BAND
+    assert (blocking.NDIM, blocking.FP_WIDTHS, blocking.FP_SEED) == (96, (16, 24, 32, 48), 0)
+    assert (n_bands, rows_per_band, blocking.PREFIX_LEN) == (24, 4, 56)
     docs = canon.canonicalize(
         build_transcripts(spark, "/root/testdata/sf0.001")
     ).withColumn("did", F.xxhash64("conv_id"))
-    feats = blocking.doc_features(docs, id_col="did", ndim=96, n_bands=n_bands)
+    feats = blocking.doc_features(docs, id_col="did")
     got = {r["did"]: r for r in feats.collect()}
 
     ref = docs.select(
@@ -223,7 +226,9 @@ def test_doc_features_matches_unfused_paths(spark):
     ).collect()
     assert len(ref) == len(got) > 0
     texts = [r["doc"].encode() for r in ref]
-    h, _ = K.fingerprints(texts, ndim=96, widths=blocking.DEFAULT_FP_WIDTHS)
+    h, _ = K.fingerprints(
+        texts, ndim=blocking.NDIM, widths=blocking.FP_WIDTHS, seed=blocking.FP_SEED
+    )
     h = h.astype(np.uint64)
     keys = np.empty((len(texts), n_bands), dtype=np.uint64)
     for b in range(n_bands):

@@ -1,5 +1,5 @@
 """The configuration surface: the SZ_* environment switches the library
-reads, the modules it ships, and the flag defaults of
+reads, the modules it ships and what they import, and the flags of
 scripts/run_pipeline.py."""
 
 from __future__ import annotations
@@ -19,8 +19,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SWITCHES = {
     "SZ_GATHER_MAX_DOCS",
     "SZ_NATIVE_CACHE",
-    "SZ_NO_NATIVE",
-    "SZ_SPARK_DRIVER_MEM",
 }
 
 
@@ -38,8 +36,10 @@ def test_switch_inventory():
 
 
 #: the files a user or the benchmark runs; every top-level sz_spark
-#: definition must be reached from one of them
-ENTRY_POINTS = ("scripts/*.py", "bench.py", "bench_extra.py", "perfbench/**/*.py",
+#: definition must be reached from one of them.  ``perfbench/*.py`` is not
+#: recursive: the benchmark extracts a pyspark/py4j tree under
+#: ``perfbench/_work/``, whose reads are not the benchmark's
+ENTRY_POINTS = ("scripts/*.py", "bench.py", "bench_extra.py", "perfbench/*.py",
                 "__spark_entry__.py")
 
 
@@ -217,6 +217,34 @@ def test_every_package_name_is_read():
     assert dead == []
 
 
+def unused_imports(root: str, package: str = "sz_spark") -> list[str]:
+    """``module.py:name`` for every name a module-level import of
+    ``package/*.py`` binds that its module never loads (``__future__``
+    imports and ``__init__.py`` exempt), sorted."""
+    out = []
+    for path in sorted(glob.glob(os.path.join(root, package, "*.py"))):
+        if os.path.basename(path) == "__init__.py":
+            continue
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        bound = []
+        for stmt in tree.body:
+            if isinstance(stmt, ast.Import):
+                bound += [a.asname or a.name.split(".")[0] for a in stmt.names]
+            elif isinstance(stmt, ast.ImportFrom) and stmt.module != "__future__":
+                bound += [a.asname or a.name for a in stmt.names]
+        loaded = {n.id for n in ast.walk(tree)
+                  if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+        out += [f"{os.path.basename(path)}:{name}" for name in bound if name not in loaded]
+    return sorted(out)
+
+
+def test_every_package_import_is_read():
+    """No sz_spark module imports a name at module level that it never
+    reads (the definition guards above do not look at imports)."""
+    assert unused_imports(REPO) == []
+
+
 def test_package_imports_nothing_from_tests():
     """No sz_spark module imports a tests/ module (oracles, the scalar
     UAX engines, test files)."""
@@ -238,6 +266,19 @@ def test_package_parses_no_plans():
         assert "_jdf" not in text and "queryExecution" not in text, path
 
 
+def test_pipeline_config_fields():
+    """PipelineConfig holds the values an entry point sets; the blocking
+    parameters are constants of sz_spark.blocking.  A new field must be
+    added here on purpose."""
+    import dataclasses
+
+    from sz_spark.pipeline import PipelineConfig
+
+    assert [f.name for f in dataclasses.fields(PipelineConfig)] == [
+        "threshold", "max_block_size", "salt_up_to", "checkpoint_dir", "cc_max_iterations",
+    ]
+
+
 def _run_pipeline_script():
     spec = importlib.util.spec_from_file_location(
         "run_pipeline_script", os.path.join(REPO, "scripts", "run_pipeline.py")
@@ -249,14 +290,17 @@ def _run_pipeline_script():
 
 def test_run_pipeline_flag_defaults_are_pipeline_config():
     """With no pipeline flags the script runs PipelineConfig() exactly;
-    a set flag changes only its own field."""
+    a set flag changes only its own field, and the blocking constants
+    have no flag."""
     from sz_spark.pipeline import PipelineConfig
 
     script = _run_pipeline_script()
     base = ["--sf-dir", "in", "--output", "out"]
     assert script._config(script._parser().parse_args(base)) == PipelineConfig()
-    cfg = script._config(script._parser().parse_args(base + ["--ndim", "64"]))
-    assert cfg == PipelineConfig(ndim=64)
+    cfg = script._config(script._parser().parse_args(base + ["--threshold", "0.9"]))
+    assert cfg == PipelineConfig(threshold=0.9)
+    with pytest.raises(SystemExit):
+        script._parser().parse_args(base + ["--ndim", "96"])
 
 
 @pytest.fixture(scope="module")

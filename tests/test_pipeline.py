@@ -516,7 +516,7 @@ def test_prune_pairs_arrow_matches_expression_twin(spark):
     docs = canon.canonicalize(
         build_transcripts(spark, "/root/testdata/sf0.001")
     ).withColumn("did", F.xxhash64("conv_id"))
-    feats = blocking.doc_features(docs, id_col="did", ndim=96, n_bands=24)
+    feats = blocking.doc_features(docs, id_col="did")
     pairs = blocking.block_pairs(
         blocking.bands_from_features(feats, id_col="did"),
         id_col="did", max_block_size=1024,
@@ -551,10 +551,7 @@ def _gather_fixture(spark):
     docs = canon.canonicalize(
         build_transcripts(spark, SF_DIR)
     ).withColumn("did", F.xxhash64("conv_id"))
-    feats = blocking.doc_features(
-        docs, id_col="did", ndim=cfg.ndim, widths=cfg.fp_widths,
-        seed=cfg.seed, n_bands=cfg.n_bands, rows_per_band=cfg.rows_per_band,
-    )
+    feats = blocking.doc_features(docs, id_col="did")
     return cfg, docs, feats.localCheckpoint()
 
 

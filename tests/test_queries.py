@@ -5,8 +5,6 @@ at sf0.01 (row count + schema-ish + order-insensitive value equality).
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pandas as pd
 import pytest

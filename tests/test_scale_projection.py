@@ -62,10 +62,32 @@ def test_partition_count_respects_target():
 
 
 def test_markdown_renders():
+    """The projection renders clean, and SCALE_PROJECTION.md is what
+    the script renders today."""
     md = render_markdown()
     assert "100 TB" in md and "Envelope: **clean**" in md
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "SCALE_PROJECTION.md")
+    with open(path, encoding="utf-8") as fh:
+        assert fh.read() == md
 
 
 def test_calibration_constants_match_docstring():
     assert abs(CAL["turns_per_doc"] - 7.309) < 0.01
     assert abs(CAL["pairs_per_doc"] - 0.461) < 0.01
+
+
+def test_knob_defaults_are_the_pipeline_defaults():
+    """PipelineKnobs copies no value by hand that the pipeline changed:
+    the band count, the block cap and the connected-components driver
+    gate are the pipeline's defaults."""
+    import inspect
+
+    from sz_spark import blocking, clustering
+    from sz_spark.pipeline import PipelineConfig
+
+    knobs = PipelineKnobs()
+    gate = inspect.signature(clustering.connected_components).parameters["local_threshold"]
+    assert knobs.n_bands == blocking.N_BANDS
+    assert knobs.max_block_size == PipelineConfig().max_block_size
+    assert knobs.cc_gate_edges == gate.default

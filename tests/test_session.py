@@ -407,7 +407,10 @@ from sz_spark.session import build_session
 spark = build_session(
     master="local[2]",
     app_name="archive-test",
-    extra={"spark.driver.defaultJavaOptions": "-Xlog:class+load=info:file=" + sys.argv[1]},
+    extra={
+        "spark.driver.memory": "1g",
+        "spark.driver.defaultJavaOptions": "-Xlog:class+load=info:file=" + sys.argv[1],
+    },
 )
 print(json.dumps(spark.range(1000).selectExpr("sum(id) AS s").collect()[0].s))
 """
@@ -417,7 +420,6 @@ def _spawn(cache, class_log) -> subprocess.Popen:
     env = dict(
         os.environ,
         SZ_NATIVE_CACHE=str(cache),
-        SZ_SPARK_DRIVER_MEM="1g",
         PYSPARK_PYTHON=sys.executable,
         PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
     )
@@ -513,7 +515,8 @@ from pyspark.sql import functions as F
 from sz_spark.session import build_session
 
 spark = build_session(master="local[2]", app_name="worker-tree-test",
-                      extra={"spark.driver.defaultJavaOptions": "-Xshare:off"})
+                      extra={"spark.driver.memory": "1g",
+                             "spark.driver.defaultJavaOptions": "-Xshare:off"})
 
 def report(batches):
     import pyspark
@@ -550,7 +553,6 @@ def worker_launch(tmp_path_factory):
     env = dict(
         os.environ,
         SZ_NATIVE_CACHE=str(tmp_path_factory.mktemp("workers") / "cache"),
-        SZ_SPARK_DRIVER_MEM="1g",
         PYSPARK_PYTHON=sys.executable,
         PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
     )
