@@ -116,10 +116,12 @@ def mode_plans(out_dir: str, suffix: str, names: list[str]) -> None:
 
 def _strip_plan_ids(plan: str) -> str:
     """``plan`` without the ids Spark numbers per session: ``, [plan_id=N]``,
-    the digits of ``name#N`` expression ids (``id#12L`` -> ``id#L``) and
+    the digits of ``name#N`` expression ids (``id#12L`` -> ``id#L``),
     the RDD ids of ExistingRDD scans (``MapPartitionsRDD[183]`` ->
-    ``MapPartitionsRDD[]``)."""
+    ``MapPartitionsRDD[]``) and the counter in lambda variable names
+    (``lambda x_19#`` -> ``lambda x_#``)."""
     plan = re.sub(r",? ?\[plan_id=\d+\]", "", plan)
+    plan = re.sub(r"\blambda (\w+?)_\d+#", r"lambda \1_#", plan)
     return re.sub(r"RDD\[\d+\]", "RDD[]", re.sub(r"#\d+", "#", plan))
 
 

@@ -247,9 +247,8 @@ def render_markdown() -> str:
         "bounding both aggregation-state memory and per-task emission at "
         "cap and cap^2 respectively) — there is no pair self-join left "
         "to skew, and no block is salted.  AQE handles residual "
-        "partition imbalance.  Knobs: ndim/n_bands trade recall for band "
-        "rows; max_block_size bounds per-block pair work and DP — larger "
-        "blocks are suppressed."
+        "partition imbalance.  Knob: max_block_size bounds per-block pair "
+        "work and DP — larger blocks are suppressed."
     )
     out.append("")
     return "\n".join(out)

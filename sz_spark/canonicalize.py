@@ -32,12 +32,10 @@ def canonicalize(transcripts: DataFrame, carry: list[str] | None = None) -> Data
     """
     carry = carry or []
     aggs = [
+        # sort_array and the struct-field projection are codegen'd;
+        # array_sort and transform (a lambda) would run interpreted
         F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("turn_idx", "text"))),
-                lambda s: s["text"],
-            ),
-            SEP,
+            F.sort_array(F.collect_list(F.struct("turn_idx", "text")))["text"], SEP
         ).alias("doc"),
         F.count(F.lit(1)).alias("n_turns"),
     ] + [F.first(c).alias(c) for c in carry]

@@ -35,11 +35,17 @@ def build_session(
     pipeline conf block and worker prewarm as a ``local[N]`` test
     session.  The settings that only matter for a JVM this call
     launches itself (driver memory, 32g unless ``extra`` sets
-    ``spark.driver.memory``; GC/JIT thread caps, scratch dir, UI off,
-    the class-data-sharing archive of ``_ClassArchive``) apply only to
-    a ``local`` master passed here.  A local master, passed or
-    submitted, whose launch conf leaves the shuffle width unset gets
-    its ``defaultParallelism`` instead of Spark's 200.
+    ``spark.driver.memory``; the JIT policy; GC/JIT thread caps,
+    scratch dir, UI off, the class-data-sharing archive of
+    ``_ClassArchive``) apply only to a ``local`` master passed here.
+    The JIT policy is C1 only (``-XX:TieredStopAtLevel=1``, see
+    ``_C1_ONLY``); a JIT flag in any of the driver's java options
+    (``-XX:TieredStopAtLevel=``, ``-XX:[+-]TieredCompilation``,
+    ``-XX:CompilationMode=``, ``-Xint``, ``-Xcomp``) wins, so
+    ``extra={"spark.driver.defaultJavaOptions":
+    "-XX:TieredStopAtLevel=4"}`` opts back into tiered C2.  A local
+    master, passed or submitted, whose launch conf leaves the shuffle
+    width unset gets its ``defaultParallelism`` instead of Spark's 200.
     ``extra`` is applied last, so its keys win.
     """
     builder = SparkSession.builder.appName(app_name)
@@ -106,16 +112,61 @@ def _session_conf(
         }
     )
     conf.update(extra or {})
+    if cores is not None and not _USER_JIT.search(_java_options(conf)):
+        _add_java_options(conf, _C1_ONLY)
     archive = _ClassArchive.for_launch(conf) if cores is not None else None
     if archive is not None:
-        opts = conf.get("spark.driver.extraJavaOptions", "")
-        conf["spark.driver.extraJavaOptions"] = f"{opts} {archive.java_options}".strip()
+        _add_java_options(conf, archive.java_options)
     tree = _worker_tree(conf) if cores is not None else None
     if tree is not None:
         conf["spark.python.daemon.module"] = _DAEMON_MODULE
         path = conf.get("spark.executorEnv.PYTHONPATH")
         conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(p for p in (path, tree) if p)
     return conf, archive
+
+
+#: the driver JVM's JIT policy: C1 only.  At the pipeline's scale the
+#: driver mostly runs short-lived framework code and freshly generated
+#: code, and C2's compiler threads compete with the tasks for the cores.
+#: perfbench on a 4-core box, tiered C2 -> C1 only, medians of 10
+#: alternating pairs, C1 winning all 10 on every metric: ``warm_cpu_s``
+#: 3.16 -> 1.86 s (dup_heavy) and 4.90 -> 2.66 s (hard_negatives_ckpt),
+#: ``cold_run_s`` 1.67 -> 1.18 and 2.83 -> 2.12 s, ``setup_s``
+#: 2.74 -> 2.40 and 2.73 -> 2.39 s.  The 975k-turn probe at local[4]
+#: (long loops, where C1 code is slowest) took 6.5-6.9 s of wall
+#: against 7.5-8.0 s and 38-39 s of CPU against 54-56 s.  C2 kept with
+#: ``-XX:CICompilerCount=2`` lost to C1 only on every metric.
+_C1_ONLY = "-XX:TieredStopAtLevel=1"
+
+#: java options that already pick the JIT policy.  Every source
+#: ``_java_options`` joins reaches HotSpot before the tail of
+#: ``extraJavaOptions`` that ``_C1_ONLY`` is appended to, and the last
+#: flag wins, so ``_C1_ONLY`` is added only when none of these is there
+_USER_JIT = re.compile(
+    r"-XX:(?:TieredStopAtLevel|CompilationMode)=|-XX:[+-]TieredCompilation"
+    r"|(?<!\S)-X(?:int|comp)(?!\S)"
+)
+
+
+def _java_options(conf: dict[str, str]) -> str:
+    """Every java option the driver JVM launched with ``conf`` reads,
+    joined: ``spark.driver.defaultJavaOptions``,
+    ``spark.driver.extraJavaOptions``, ``JAVA_TOOL_OPTIONS`` and
+    ``JDK_JAVA_OPTIONS``."""
+    return " ".join(
+        [
+            conf.get("spark.driver.defaultJavaOptions", ""),
+            conf.get("spark.driver.extraJavaOptions", ""),
+            os.environ.get("JAVA_TOOL_OPTIONS", ""),
+            os.environ.get("JDK_JAVA_OPTIONS", ""),
+        ]
+    )
+
+
+def _add_java_options(conf: dict[str, str], options: str) -> None:
+    """Append ``options`` to the driver's ``extraJavaOptions``."""
+    opts = conf.get("spark.driver.extraJavaOptions", "")
+    conf["spark.driver.extraJavaOptions"] = f"{opts} {options}".strip()
 
 
 def _local_cores(master: str | None) -> int | None:
@@ -144,10 +195,13 @@ def _local_conf(cores: int) -> dict[str, str]:
     # executor does everything within 2 cores) and makes N concurrent
     # copies collide in GC/JIT stampedes (weak-scaling CPU inflated
     # 140->164 tree-CPU-sec).  A whole-machine session keeps the JVM's
-    # own ergonomics; measured with caps: solo local[2] tree-CPU
-    # 140->122 s, 4x-copy weak-scaling efficiency 0.755->0.877, and the
-    # local[8] probe ran FASTER (22.8->12.9 s wall) with less GC/JIT
-    # thrash.
+    # own ergonomics; measured with caps (under tiered C2): solo local[2]
+    # tree-CPU 140->122 s, 4x-copy weak-scaling efficiency 0.755->0.877,
+    # and the local[8] probe ran FASTER (22.8->12.9 s wall) with less
+    # GC/JIT thrash.  Under the C1-only policy (``_C1_ONLY``, which
+    # ``_session_conf`` adds unless the user picked a JIT policy)
+    # CICompilerCount caps the C1 compiler threads; under a user's
+    # tiered policy, C1 and C2 threads together.
     if cores < (os.cpu_count() or 32):
         gc_threads = max(2, cores)
         conf["spark.driver.extraJavaOptions"] = (
@@ -271,19 +325,11 @@ class _ClassArchive:
             return None
         spark_home = _find_spark_home()
         heap = conf.get("spark.driver.memory", "1g")  # spark-submit passes -Xmx<heap>
-        java_opts = " ".join(
-            [
-                conf.get("spark.driver.defaultJavaOptions", ""),
-                conf.get("spark.driver.extraJavaOptions", ""),
-                os.environ.get("JAVA_TOOL_OPTIONS", ""),
-                os.environ.get("JDK_JAVA_OPTIONS", ""),
-            ]
-        )
         if (
             not _only_templates(
                 os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
             )
-            or _USER_SHARING.search(java_opts)
+            or _USER_SHARING.search(_java_options(conf))
             or "spark.driver.extraClassPath" in conf
             or any(os.environ.get(name) for name in _CLASSPATH_ENV)
             or _heap_bytes(heap) is None

@@ -19,8 +19,8 @@ def _bench_extra():
 
 def test_strip_plan_ids_ignores_session_numbering():
     """Two dumps of one plan that differ only in the session's plan,
-    expression and RDD ids strip to equal text; a real operator change
-    still differs."""
+    expression, RDD and lambda variable ids strip to equal text; a real
+    operator change still differs."""
     strip = _bench_extra()._strip_plan_ids
     scan = (
         "(1) Scan ExistingRDD [codegen id : 1]\n"
@@ -30,10 +30,13 @@ def test_strip_plan_ids_ignores_session_numbering():
         "UnknownPartitioning(0)\n"
         "(2) {op}\n"
         "Arguments: hashpartitioning(conv_id#{e}, 4), ENSURE_REQUIREMENTS, [plan_id={p}]\n"
+        "Output: [size(filter(w#{e}, lambdafunction(NOT (lambda x_{x}#{e} = ), "
+        "lambda x_{x}#{e}, false))) AS n#{f}, lambda left#{f}]\n"
     )
-    a = scan.format(e=12, f=13, r=183, p=40, op="Exchange")
-    b = scan.format(e=57, f=58, r=193, p=91, op="Exchange")
-    c = scan.format(e=57, f=58, r=193, p=91, op="Sort")
+    a = scan.format(e=12, f=13, r=183, p=40, x=19, op="Exchange")
+    b = scan.format(e=57, f=58, r=193, p=91, x=11, op="Exchange")
+    c = scan.format(e=57, f=58, r=193, p=91, x=11, op="Sort")
     assert a != b and strip(a) == strip(b)
     assert "MapPartitionsRDD[]" in strip(a) and "plan_id" not in strip(a)
+    assert "lambda x_#" in strip(a) and "lambda left#" in strip(a)
     assert strip(b) != strip(c)

@@ -92,6 +92,33 @@ def test_clusters_independent_of_input_row_order(spark):
         assert got.equals(want)
 
 
+def test_canonicalize_orders_turns_by_index_without_lambdas(spark):
+    """Turns given out of order, with turn_idx 0-11 (a lexical sort
+    would put 10 and 11 before 2), join in turn_idx order; the
+    aggregate's plan holds no interpreted lambda."""
+    import contextlib
+    import io
+    import random
+
+    from sz_spark.canonicalize import SEP, canonicalize
+
+    rng = random.Random(7)
+    rows = [(f"c{c}", i, f"conv {c} turn {i}") for c in range(3) for i in range(12)]
+    rng.shuffle(rows)
+    tr = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    docs = canonicalize(tr)
+    got = {r["conv_id"]: (r["doc"], r["n_turns"]) for r in docs.collect()}
+    want = {
+        f"c{c}": (SEP.join(f"conv {c} turn {i}" for i in range(12)), 12) for c in range(3)
+    }
+    assert got == want
+    plan = io.StringIO()
+    with contextlib.redirect_stdout(plan):
+        docs.explain("extended")
+    assert "sort_array" in plan.getvalue()
+    assert "lambdafunction" not in plan.getvalue(), plan.getvalue()
+
+
 def test_empty_conversations_cluster_together(spark):
     """Two empty conversations (one empty turn each) next to two
     identical ones: the run completes under ANSI mode (a pair of empty

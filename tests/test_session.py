@@ -1,6 +1,6 @@
 """Process start-up: the package's checked zipimporter invalidation,
-the driver JVM's class-data-sharing archive and the Python workers'
-bytecode-cached pyspark tree.
+the driver JVM's JIT policy and class-data-sharing archive, and the
+Python workers' bytecode-cached pyspark tree.
 
 The zipimporter tests import from a fresh zip on ``sys.path``, so the
 zipimporter under test is the one the path hooks create, and invalidate
@@ -264,6 +264,51 @@ def test_opt_out_and_running_gateway_compute_nothing(install, monkeypatch):
     assert archive is None and _archive_flags(conf) == []
 
 
+# -- the driver JVM's JIT policy (no JVM) ----------------------------------
+
+_JIT_SOURCES = ("spark.driver.defaultJavaOptions", "spark.driver.extraJavaOptions",
+                "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS")
+
+
+def _jit_flags(conf):
+    return re.findall(r"-XX:TieredStopAtLevel=\S*", conf.get("spark.driver.extraJavaOptions", ""))
+
+
+def test_local_master_runs_c1_only_next_to_the_caps_and_archive(install, monkeypatch):
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 8)  # local[2] is a sub-box session
+    conf, archive = session._session_conf("local[2]", None, None)
+    opts = conf["spark.driver.extraJavaOptions"].split()
+    assert archive is not None
+    assert opts.count("-XX:TieredStopAtLevel=1") == 1
+    assert {"-XX:ParallelGCThreads=2", "-XX:ConcGCThreads=1", "-XX:CICompilerCount=2"} <= set(opts)
+    assert opts[opts.index("-XX:TieredStopAtLevel=1") + 1].startswith("-XX:DumpLoadedClassList=")
+    assert _jit_flags(conf) == ["-XX:TieredStopAtLevel=1"]
+
+
+@pytest.mark.parametrize("source", _JIT_SOURCES)
+@pytest.mark.parametrize("flag", ["-XX:TieredStopAtLevel=4", "-XX:+TieredCompilation",
+                                  "-XX:-TieredCompilation", "-XX:CompilationMode=high-only",
+                                  "-Xint", "-Xcomp"])
+def test_users_jit_flag_wins(install, monkeypatch, source, flag):
+    user = f"-Dsz.before=1 {flag} -Dsz.after=1"
+    if source.startswith("spark."):
+        conf, _ = session._session_conf("local[2]", None, {source: user})
+        assert flag in conf[source].split()
+    else:
+        monkeypatch.setenv(source, user)
+        conf, _ = session._session_conf("local[2]", None, None)
+        assert os.environ[source] == user
+    assert session._C1_ONLY not in conf.get("spark.driver.extraJavaOptions", "")
+    assert _archive_flags(conf)  # only the JIT policy steps aside
+
+
+def test_users_extra_java_options_without_a_jit_flag_get_c1(install):
+    user = "-Dsz.user=1 -XX:+UseG1GC -Xinternalversion"
+    conf, _ = session._session_conf("local[2]", None, {"spark.driver.extraJavaOptions": user})
+    assert conf["spark.driver.extraJavaOptions"].startswith(user + " ")
+    assert _jit_flags(conf) == ["-XX:TieredStopAtLevel=1"]
+
+
 # -- the Python workers' pyspark tree (no JVM) ----------------------------
 
 
@@ -412,7 +457,10 @@ spark = build_session(
         "spark.driver.defaultJavaOptions": "-Xlog:class+load=info:file=" + sys.argv[1],
     },
 )
-print(json.dumps(spark.range(1000).selectExpr("sum(id) AS s").collect()[0].s))
+print(json.dumps({
+    "sum": spark.range(1000).selectExpr("sum(id) AS s").collect()[0].s,
+    "vm_info": spark.sparkContext._jvm.java.lang.System.getProperty("java.vm.info"),
+}))
 """
 
 
@@ -430,13 +478,14 @@ def _spawn(cache, class_log) -> subprocess.Popen:
     )
 
 
-def _result(proc: subprocess.Popen) -> int:
+def _result(proc: subprocess.Popen) -> dict:
+    """The launch's ``sum`` (of a 1000-row range) and ``vm_info``."""
     out, err = proc.communicate(timeout=900)
     assert proc.returncode == 0, err[-4000:]
     return json.loads(out.strip().splitlines()[-1])
 
 
-def _launch(cache, class_log) -> int:
+def _launch(cache, class_log) -> dict:
     return _result(_spawn(cache, class_log))
 
 
@@ -466,7 +515,7 @@ def recorded(tmp_path_factory):
     root = tmp_path_factory.mktemp("archive")
     cache = root / "cache"
     got = _launch(cache, root / "record.log")
-    return {"cache": cache, "root": root, "result": got}
+    return {"cache": cache, "root": root, "result": got["sum"]}
 
 
 def test_fresh_cache_publishes_one_archive_the_next_launch_maps(recorded):
@@ -475,8 +524,11 @@ def test_fresh_cache_publishes_one_archive_the_next_launch_maps(recorded):
     assert not _maps_spark_classes(root / "record.log")
     assert len(_published(cache)) == 1
     assert _left_behind(cache) == []
-    assert _launch(cache, root / "mapped.log") == recorded["result"]
+    mapped = _launch(cache, root / "mapped.log")
+    assert mapped["sum"] == recorded["result"]
     assert _maps_spark_classes(root / "mapped.log")
+    # C1 only (HotSpot's "emulated-client") and the archive map together
+    assert "emulated-client" in mapped["vm_info"] and "sharing" in mapped["vm_info"]
     assert len(_published(cache)) == 1
 
 
@@ -488,7 +540,7 @@ def test_truncated_archive_still_launches_and_is_replaced(recorded, tmp_path):
     os.chmod(cache / name, 0o644)  # the JVM writes archives read-only
     with open(cache / name, "r+b") as fh:
         fh.truncate(1 << 20)
-    assert _launch(cache, tmp_path / "truncated.log") == recorded["result"]
+    assert _launch(cache, tmp_path / "truncated.log")["sum"] == recorded["result"]
     assert not _maps_spark_classes(tmp_path / "truncated.log")
     assert _published(cache) == [name]
     assert session._archive_identity(str(cache / name)) is not None
@@ -499,7 +551,7 @@ def test_truncated_archive_still_launches_and_is_replaced(recorded, tmp_path):
 def test_concurrent_first_launches_publish_at_most_one_archive(recorded, tmp_path):
     cache = tmp_path / "cache"
     procs = [_spawn(cache, tmp_path / f"first{i}.log") for i in range(2)]
-    assert [_result(p) for p in procs] == [recorded["result"]] * 2
+    assert [_result(p)["sum"] for p in procs] == [recorded["result"]] * 2
     assert len(_published(cache)) <= 1
     assert _left_behind(cache) == []
 
