@@ -17,7 +17,10 @@ The warm-up runs use seed ``S - 1``.  Every timed run's result goes to
 to stdout: per workload and end-to-end metric, each side's median and
 quartiles and the pairs the change won (ties count for neither side),
 then every run that exited non-zero or was not ``correct``.  Those runs count toward neither the medians nor
-the wins.  ``--summarize`` prints the summary of a saved ``--out`` file.
+the wins.  When the metrics hold ``setup_s`` and ``cold_run_s``, a last
+row does the same for their sum per run, ``setup_s+cold_run_s``: the
+fresh-process cost, where moving time from one to the other counts for
+nothing.  ``--summarize`` prints the summary of a saved ``--out`` file.
 """
 
 from __future__ import annotations
@@ -31,6 +34,9 @@ import sys
 import time
 
 SIDES = ("parent", "change")
+
+#: the summary row of ``setup_s + cold_run_s`` per run
+FRESH = "setup_s+cold_run_s"
 
 
 def metric_spec(checkout: str) -> tuple[list[str], list[tuple[str, str]], float]:
@@ -76,12 +82,24 @@ def _ok(run: dict) -> bool:
     return run["returncode"] == 0 and bool(run["result"]) and run["result"].get("correct", False)
 
 
+def _with_fresh(metrics: dict) -> dict:
+    """A run's metrics plus ``FRESH``, the sum of its ``setup_s`` and
+    ``cold_run_s``, when it has both."""
+    if "setup_s" not in metrics or "cold_run_s" not in metrics:
+        return metrics
+    total = metrics["setup_s"]["value"] + metrics["cold_run_s"]["value"]
+    return {**metrics, FRESH: {"value": total, "unit": "s"}}
+
+
 def summarize(runs: list[dict], metrics: list[tuple[str, str]]) -> str:
     """The summary of ``runs`` (records as ``--out`` writes them) over
-    ``metrics`` ([(name, "lower"|"higher")])."""
+    ``metrics`` ([(name, "lower"|"higher")]), plus the ``FRESH`` row
+    when ``metrics`` holds ``setup_s`` and ``cold_run_s``."""
+    if {"setup_s", "cold_run_s"} <= {name for name, _ in metrics}:
+        metrics = [*metrics, (FRESH, "lower")]
     lines = []
     for workload in sorted({r["workload"] for r in runs}):
-        ok = {side: {r["pair"]: r["result"]["metrics"] for r in runs
+        ok = {side: {r["pair"]: _with_fresh(r["result"]["metrics"]) for r in runs
                      if r["workload"] == workload and r["side"] == side and _ok(r)}
               for side in SIDES}
         pairs = sorted(ok["parent"].keys() & ok["change"].keys())

@@ -12,6 +12,7 @@ import os
 import re
 import shutil
 import subprocess
+import tempfile
 import zipfile
 
 from pyspark import SparkContext
@@ -46,7 +47,11 @@ def build_session(
     "-XX:TieredStopAtLevel=4"}`` opts back into tiered C2.  A local
     master, passed or submitted, whose launch conf leaves the shuffle
     width unset gets its ``defaultParallelism`` instead of Spark's 200.
-    ``extra`` is applied last, so its keys win.
+    ``extra`` is applied last, so its keys win; its
+    ``spark.driver.extraJavaOptions`` goes after the thread caps and
+    before the JIT and archive options.  A launch that records the
+    class archive also tours the pipeline (``_tour_pipeline``).  A
+    failing worker prewarm raises.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
@@ -67,6 +72,8 @@ def build_session(
         spark.conf.set("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
     sc.setLogLevel("WARN")
     _prewarm_python_workers(spark)
+    if archive is not None and archive.found is None:
+        _tour_pipeline(spark)
     return spark
 
 
@@ -78,7 +85,7 @@ def _session_conf(
     """``build_session``'s conf, in the order it is applied, and the
     class archive the driver JVM it launches maps (None: no archive)."""
     cores = _local_cores(master)
-    conf = _local_conf(cores) if cores is not None else {}
+    conf = _local_conf() if cores is not None else {}
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf.update(
@@ -112,8 +119,12 @@ def _session_conf(
         }
     )
     conf.update(extra or {})
-    if cores is not None and not _USER_JIT.search(_java_options(conf)):
-        _add_java_options(conf, _C1_ONLY)
+    if cores is not None:
+        # the caps first, so a caller's own flags in extraJavaOptions
+        # win; the JIT policy and the archive options after them
+        _add_java_options(conf, _thread_caps(cores), first=True)
+        if not _USER_JIT.search(_java_options(conf)):
+            _add_java_options(conf, _C1_ONLY)
     archive = _ClassArchive.for_launch(conf) if cores is not None else None
     if archive is not None:
         _add_java_options(conf, archive.java_options)
@@ -163,10 +174,13 @@ def _java_options(conf: dict[str, str]) -> str:
     )
 
 
-def _add_java_options(conf: dict[str, str], options: str) -> None:
-    """Append ``options`` to the driver's ``extraJavaOptions``."""
+def _add_java_options(conf: dict[str, str], options: str, first: bool = False) -> None:
+    """Append ``options`` to the driver's ``extraJavaOptions`` (or put
+    them in front, ``first``)."""
     opts = conf.get("spark.driver.extraJavaOptions", "")
-    conf["spark.driver.extraJavaOptions"] = f"{opts} {options}".strip()
+    joined = (f"{options} {opts}" if first else f"{opts} {options}").strip()
+    if joined:
+        conf["spark.driver.extraJavaOptions"] = joined
 
 
 def _local_cores(master: str | None) -> int | None:
@@ -179,13 +193,28 @@ def _local_cores(master: str | None) -> int | None:
     return int(n) if n.isdigit() else (os.cpu_count() or 32)
 
 
-def _local_conf(cores: int) -> dict[str, str]:
+def _local_conf() -> dict[str, str]:
     """Settings for the driver JVM a local master runs everything in."""
     conf = {
         "spark.ui.enabled": "false",
         # a caller's own heap goes through build_session(extra=...)
         "spark.driver.memory": "32g",
     }
+    # Shuffle/spill scratch.  Spark reads SPARK_LOCAL_DIRS ahead of
+    # spark.local.dir, and real clusters hand it node-local NVMe that
+    # way.  Unset, prefer RAM-backed scratch over the VM disk, which was
+    # measured as low as 4 MB/s writes (a 6 s shuffle-heavy query took
+    # 266 s): shuffle bytes are identical, only the device changes.
+    if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
+        scratch = "/dev/shm/sz_spark_local"
+        os.makedirs(scratch, exist_ok=True)
+        conf["spark.local.dir"] = scratch
+    return conf
+
+
+def _thread_caps(cores: int) -> str:
+    """GC/JIT thread caps for a local driver JVM of ``cores`` worker
+    threads; none for a whole-machine session."""
     # Size the JVM's BACKGROUND parallelism to the session's core budget
     # instead of the machine's.  HotSpot picks GC/JIT thread counts from
     # os.cpu_count(), so a local[2] probe JVM on a 32-core box runs ~23
@@ -202,23 +231,14 @@ def _local_conf(cores: int) -> dict[str, str]:
     # ``_session_conf`` adds unless the user picked a JIT policy)
     # CICompilerCount caps the C1 compiler threads; under a user's
     # tiered policy, C1 and C2 threads together.
-    if cores < (os.cpu_count() or 32):
-        gc_threads = max(2, cores)
-        conf["spark.driver.extraJavaOptions"] = (
-            f"-XX:ParallelGCThreads={gc_threads} "
-            f"-XX:ConcGCThreads={max(1, gc_threads // 4)} "
-            f"-XX:CICompilerCount={max(2, min(cores, 12))}"
-        )
-    # Shuffle/spill scratch.  Spark reads SPARK_LOCAL_DIRS ahead of
-    # spark.local.dir, and real clusters hand it node-local NVMe that
-    # way.  Unset, prefer RAM-backed scratch over the VM disk, which was
-    # measured as low as 4 MB/s writes (a 6 s shuffle-heavy query took
-    # 266 s): shuffle bytes are identical, only the device changes.
-    if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
-        scratch = "/dev/shm/sz_spark_local"
-        os.makedirs(scratch, exist_ok=True)
-        conf["spark.local.dir"] = scratch
-    return conf
+    if cores >= (os.cpu_count() or 32):
+        return ""
+    gc_threads = max(2, cores)
+    return (
+        f"-XX:ParallelGCThreads={gc_threads} "
+        f"-XX:ConcGCThreads={max(1, gc_threads // 4)} "
+        f"-XX:CICompilerCount={max(2, min(cores, 12))}"
+    )
 
 
 #: first word of a HotSpot static class-data-sharing archive
@@ -249,6 +269,11 @@ _CLASSPATH_ENV = (
     "SPARK_PREPEND_CLASSES",
 )
 
+#: version of what a recording launch loads besides its own work
+#: (``_tour_pipeline``), part of the archive key: a change to the tour
+#: bumps it, so caches recorded before it record again once
+_ARCHIVE_COVERAGE = 1
+
 #: a ``_ClassArchive`` file in the cache dir: key, recorder pid, kind
 _ARCHIVE_FILE = re.compile(
     r"spark_cds_([0-9a-f]{16})_(?:coops|wide)(?:\.(\d+))?"
@@ -265,20 +290,32 @@ class _ClassArchive:
     1.4-1.9 s.
 
     - *Where:* ``native.cache_dir()``, next to the compiled kernel, as
-      ``spark_cds_<key>_<mode>.jsa``.  The key hashes the JDK (realpath
-      and stat of the ``java`` spark-class runs, and its ``release``
-      file) and the name, size and mtime of every
-      ``$SPARK_HOME/jars/*.jar``: nothing that changes from process to
-      process.  JDK 17 maps an archive only into a JVM with the
-      compressed-oops mode it was dumped with, so a driver heap of
+      ``spark_cds_<key>_<mode>.jsa``.  The key hashes the coverage
+      version ``_ARCHIVE_COVERAGE``, the JDK (realpath and stat of the
+      ``java`` spark-class runs, and its ``release`` file) and the
+      name, size and mtime of every ``$SPARK_HOME/jars/*.jar``: nothing
+      that changes from process to process.  JDK 17 maps an archive
+      only into a JVM with the compressed-oops mode it was dumped with,
+      so a driver heap of
       32 GiB or more (``wide``, the default ``32g``) and a smaller one
       (``coops``) each get their own archive, dumped with the
       recording JVM's ``-Xmx``, as the JDK keeps
       ``classes_nocoops.jsa`` next to ``classes.jsa``.
+    - *Coverage:* the classes the recording process loaded: the
+      launch, the worker prewarm, the tour of ``_tour_pipeline`` (the
+      pipeline with ``localCheckpoint`` and with parquet checkpoints)
+      and whatever the process ran next.  Before the tour, a
+      ``dup_heavy`` recorder's list had 1 parquet class, and
+      perfbench's ``hard_negatives_ckpt`` ``cold_run_s`` was 2.13 s
+      over such an archive; with it, 1.80 s (median of 10 alternating
+      pairs on a 4-core box, 10 won), with ``dup_heavy`` flat and peak
+      RSS +25 MB.  A tour change bumps ``_ARCHIVE_COVERAGE``, so every
+      cache records once more.
     - *Recording:* a launch that finds no archive has its JVM list the
       classes it loads (``-XX:DumpLoadedClassList``), which costs the
-      launch nothing measurable.  At interpreter exit the list is dumped
-      into a static archive (``-Xshare:dump``, which runs interpreted:
+      launch nothing measurable, and runs the tour (~3-5 s, once per
+      key).  At interpreter exit the list is dumped into a static
+      archive (``-Xshare:dump``, which runs interpreted:
       ~40 s of one core, once per key) under a temporary name.  The file
       is renamed into place only after the dumping JVM has exited and
       only if it carries the archive magic.  One dump runs per cache at
@@ -458,8 +495,9 @@ def _java_binary() -> str | None:
 
 
 def _archive_key(java: str, spark_home: str) -> str:
-    """Hash of the JDK behind ``java`` and of the Spark jar set."""
-    h = hashlib.sha256()
+    """Hash of the archive's coverage version, of the JDK behind
+    ``java`` and of the Spark jar set."""
+    h = hashlib.sha256(f"coverage {_ARCHIVE_COVERAGE}\0".encode())
     real = os.path.realpath(java)
     st = os.stat(real)
     h.update(f"{real}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
@@ -672,38 +710,65 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     Importing ``sz_spark`` there also installs the package's checked
     zipimporter invalidation (``sz_spark/__init__.py``) in every pooled
     worker, so no timed task pays the per-task re-read of pyspark.zip.
-    Best-effort: a failure leaves the session usable and is logged once
-    here — the same fault (e.g. workers that cannot import sz_spark)
-    would otherwise surface only inside the first real query."""
-    try:
-        from pyspark.sql import types as T
+    A failure raises here (say, workers that cannot start or cannot
+    import sz_spark): the same fault would otherwise surface only inside
+    the first real query."""
+    from pyspark.sql import types as T
 
-        n = max(2, spark.sparkContext.defaultParallelism)
+    n = max(2, spark.sparkContext.defaultParallelism)
 
-        def fn(batches):
-            import numpy as np  # noqa: F401
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
+    def fn(batches):
+        import numpy as np  # noqa: F401
+        import pandas  # noqa: F401
+        import pyarrow  # noqa: F401
 
-            from sz_spark import kernels as K
+        from sz_spark import kernels as K
 
-            # touch the native twin: dlopen / first-time build
-            K.fingerprints_flat(
-                np.zeros(4, dtype=np.uint8),
-                np.array([0, 4], dtype=np.int64),
-                ndim=8,
-            )
-            yield from batches
-
-        schema = T.StructType([T.StructField("id", T.LongType())])
-        (
-            spark.range(2 * n, numPartitions=2 * n)
-            .mapInArrow(fn, schema)
-            .selectExpr("count(1)")
-            .collect()
+        # touch the native twin: dlopen / first-time build
+        K.fingerprints_flat(
+            np.zeros(4, dtype=np.uint8),
+            np.array([0, 4], dtype=np.int64),
+            ndim=8,
         )
-    except Exception as exc:  # prewarm must never break a session
-        logging.getLogger(__name__).warning(
-            "Python worker prewarm failed; the first Arrow stage will pay "
-            "worker start-up and may fail the same way: %s", exc
-        )
+        yield from batches
+
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    (
+        spark.range(2 * n, numPartitions=2 * n)
+        .mapInArrow(fn, schema)
+        .selectExpr("count(1)")
+        .collect()
+    )
+
+
+#: the tour's transcripts (conv_id, turn_idx, text): c0 and c1 are the
+#: same conversation, c2 another one
+_TOUR_TURNS = [
+    ("c0", 0, "the tour corpus holds three short conversations"),
+    ("c0", 1, "two of them match"),
+    ("c1", 0, "the tour corpus holds three short conversations"),
+    ("c1", 1, "two of them match"),
+    ("c2", 0, "a different conversation about river boats at dawn"),
+    ("c2", 1, "it matches none"),
+]
+
+
+def _tour_pipeline(spark: SparkSession) -> None:
+    """Run ``pipeline.run_pipeline`` over a three-conversation corpus,
+    once without ``checkpoint_dir`` (``localCheckpoint``) and once with
+    a temporary one (the parquet write and the schema-pinned read), and
+    read the clusters back as Arrow.
+
+    Only a launch that records the class archive runs this
+    (``_ClassArchive``), so the recorded class list covers every default
+    pipeline path whatever the process runs next, and later launches map
+    those classes instead of loading them in their first run.  The
+    clusters are c0 and c1 together and c2 alone.  It adds ~3-5 s to a
+    recording ``build_session`` on a 4-core box.  Nothing here is
+    caught: a tour that fails fails the launch."""
+    from sz_spark import pipeline
+
+    transcripts = spark.createDataFrame(_TOUR_TURNS, "conv_id string, turn_idx int, text string")
+    with tempfile.TemporaryDirectory(prefix="sz_tour_") as ckpt:
+        for cfg in (pipeline.PipelineConfig(), pipeline.PipelineConfig(checkpoint_dir=ckpt)):
+            pipeline.run_pipeline(spark, transcripts, cfg)["clusters"].toArrow()

@@ -55,6 +55,27 @@ def test_failed_and_incorrect_runs_are_listed_not_counted():
     assert "parent v seed 702: exit 1, correct None, failed None" in text
 
 
+def test_setup_plus_cold_row_sums_each_run():
+    def run(side, pair, setup, cold):
+        return {"side": side, "workload": "w", "seed": 700 + pair, "pair": pair, "returncode": 0,
+                "result": {"correct": True, "failed": 0,
+                           "metrics": {"setup_s": {"value": setup, "unit": "s"},
+                                       "cold_run_s": {"value": cold, "unit": "s"}}}}
+
+    # change: setup up, cold down; the sum decides the wins
+    sides = [(2.0, 3.0, 2.5, 2.0), (2.0, 2.0, 3.0, 1.5), (2.0, 4.0, 2.5, 2.5)]
+    runs = []
+    for pair, (p_setup, p_cold, c_setup, c_cold) in enumerate(sides):
+        runs += [run("parent", pair, p_setup, p_cold), run("change", pair, c_setup, c_cold)]
+    metrics = [("cold_run_s", "lower"), ("setup_s", "lower")]
+    text = summarize(runs, metrics)
+    # parent sums 5.0 4.0 6.0; change 4.5 4.5 5.0
+    assert _row(text, "w", "setup_s+cold_run_s") == ["setup_s+cold_run_s", "5", "[4.5,", "5.5]",
+                                                     "4.5", "[4.5,", "4.75]", "2/3"]
+    assert _row(text, "w", "setup_s")[-1] == "0/3" and _row(text, "w", "cold_run_s")[-1] == "3/3"
+    assert "setup_s+cold_run_s" not in summarize(runs, metrics[:1])
+
+
 def test_metric_spec_and_saved_runs(tmp_path, capsys):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     workloads, metrics, seconds = metric_spec(repo)
@@ -67,3 +88,4 @@ def test_metric_spec_and_saved_runs(tmp_path, capsys):
     assert _row(out, "w", "warm_cpu_s")[-1] == "1/1"
     assert _row(out, "w", "warm_turns_per_s")[-1] == "1/1"
     assert _row(out, "w", "cold_run_s")[1:] == ["-", "-", "0/0"]
+    assert _row(out, "w", "setup_s+cold_run_s")[1:] == ["-", "-", "0/0"]

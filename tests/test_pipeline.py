@@ -776,10 +776,9 @@ def test_gather_gate_malformed_env(spark, monkeypatch):
     assert scoring.gather_gate(spark.range(1)) is False
 
 
-def test_prewarm_failure_is_logged(caplog):
-    """A failing worker prewarm leaves the session usable but says so."""
-    import logging
-
+def test_prewarm_failure_raises():
+    """A failing worker prewarm fails loudly, not inside the first
+    real query (tests/test_session.py launches one for real)."""
     from sz_spark import session
 
     class NoContext:
@@ -787,10 +786,8 @@ def test_prewarm_failure_is_logged(caplog):
         def sparkContext(self):
             raise RuntimeError("no python workers")
 
-    with caplog.at_level(logging.WARNING, logger="sz_spark.session"):
+    with pytest.raises(RuntimeError, match="no python workers"):
         session._prewarm_python_workers(NoContext())
-    msgs = [r.getMessage() for r in caplog.records if r.name == "sz_spark.session"]
-    assert len(msgs) == 1 and "no python workers" in msgs[0]
 
 
 def _task_rows(spark, fn, fields, n_tasks=8):

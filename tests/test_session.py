@@ -190,7 +190,7 @@ def test_archive_key_ignores_per_process_env(install, monkeypatch, tmp_path):
     assert _key(install) == key
 
 
-def test_archive_key_follows_jars_and_jdk(install):
+def test_archive_key_follows_jars_and_jdk(install, monkeypatch):
     keys = {_key(install)}
     jar = install["home"] / "jars" / "a.jar"
     jar.write_bytes(jar.read_bytes() + b"!")
@@ -202,7 +202,9 @@ def test_archive_key_follows_jars_and_jdk(install):
     keys.add(_key(install))
     (install["jdk"] / "bin" / "java").write_bytes(b"other java")
     keys.add(_key(install))
-    assert len(keys) == 5
+    monkeypatch.setattr(session, "_ARCHIVE_COVERAGE", session._ARCHIVE_COVERAGE + 1)
+    keys.add(_key(install))
+    assert len(keys) == 6
 
 
 @pytest.mark.parametrize("conf_dir_set", [True, False])
@@ -305,8 +307,21 @@ def test_users_jit_flag_wins(install, monkeypatch, source, flag):
 def test_users_extra_java_options_without_a_jit_flag_get_c1(install):
     user = "-Dsz.user=1 -XX:+UseG1GC -Xinternalversion"
     conf, _ = session._session_conf("local[2]", None, {"spark.driver.extraJavaOptions": user})
-    assert conf["spark.driver.extraJavaOptions"].startswith(user + " ")
+    # the thread caps (none on a box of 2 cores or fewer), the caller's
+    # options, then C1
+    head = f"{session._thread_caps(2)} {user} {session._C1_ONLY} ".lstrip()
+    assert conf["spark.driver.extraJavaOptions"].startswith(head)
     assert _jit_flags(conf) == ["-XX:TieredStopAtLevel=1"]
+
+
+def test_users_extra_java_options_keep_the_thread_caps(install, monkeypatch):
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 8)  # local[2] is a sub-box session
+    conf, _ = session._session_conf("local[2]", None, {"spark.driver.extraJavaOptions": "-Dx=1"})
+    opts = conf["spark.driver.extraJavaOptions"].split()
+    caps = ["-XX:ParallelGCThreads=2", "-XX:ConcGCThreads=1", "-XX:CICompilerCount=2"]
+    assert opts[:4] == [*caps, "-Dx=1"]  # a caller's own cap, later, wins
+    assert opts[4] == "-XX:TieredStopAtLevel=1"
+    assert _archive_flags(conf)
 
 
 # -- the Python workers' pyspark tree (no JVM) ----------------------------
@@ -447,9 +462,9 @@ def test_publisher_that_loses_the_race_uses_the_winners_tree(install, worker_zip
 
 _LAUNCH = """
 import json, sys
-from sz_spark.session import build_session
+from sz_spark import session
 
-spark = build_session(
+spark = session.build_session(
     master="local[2]",
     app_name="archive-test",
     extra={
@@ -457,29 +472,47 @@ spark = build_session(
         "spark.driver.defaultJavaOptions": "-Xlog:class+load=info:file=" + sys.argv[1],
     },
 )
+sc = spark.sparkContext
+
+def jobs():
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup())
+
+built = jobs()
+session._prewarm_python_workers(spark)
+prewarm = jobs() - built
 print(json.dumps({
     "sum": spark.range(1000).selectExpr("sum(id) AS s").collect()[0].s,
-    "vm_info": spark.sparkContext._jvm.java.lang.System.getProperty("java.vm.info"),
+    "vm_info": sc._jvm.java.lang.System.getProperty("java.vm.info"),
+    "build_jobs": built,
+    "prewarm_jobs": prewarm,
 }))
 """
 
 
-def _spawn(cache, class_log) -> subprocess.Popen:
-    env = dict(
+def _launch_env(cache, **env) -> dict:
+    """The environment of a session launch in a fresh process over the
+    cache dir ``cache``, with ``env`` on top."""
+    out = dict(
         os.environ,
         SZ_NATIVE_CACHE=str(cache),
         PYSPARK_PYTHON=sys.executable,
         PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
     )
-    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    out.pop("PYSPARK_SUBMIT_ARGS", None)
+    return {**out, **env}
+
+
+def _spawn(cache, class_log) -> subprocess.Popen:
     return subprocess.Popen(
-        [sys.executable, "-c", _LAUNCH, str(class_log)],
-        cwd=REPO, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        [sys.executable, "-c", _LAUNCH, str(class_log)], cwd=REPO, env=_launch_env(cache),
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
     )
 
 
 def _result(proc: subprocess.Popen) -> dict:
-    """The launch's ``sum`` (of a 1000-row range) and ``vm_info``."""
+    """The launch's ``sum`` (of a 1000-row range), ``vm_info``, and the
+    Spark jobs ``build_session`` ran and a second prewarm runs."""
     out, err = proc.communicate(timeout=900)
     assert proc.returncode == 0, err[-4000:]
     return json.loads(out.strip().splitlines()[-1])
@@ -515,7 +548,13 @@ def recorded(tmp_path_factory):
     root = tmp_path_factory.mktemp("archive")
     cache = root / "cache"
     got = _launch(cache, root / "record.log")
-    return {"cache": cache, "root": root, "result": got["sum"]}
+    return {"cache": cache, "root": root, "result": got["sum"], "launch": got}
+
+
+def _classlist(cache) -> set[str]:
+    (name,) = [n for n in os.listdir(cache) if n.endswith(".classlist")]
+    with open(cache / name) as fh:
+        return {line.split()[0] for line in fh if line[:1] not in ("#", "@", "\n")}
 
 
 def test_fresh_cache_publishes_one_archive_the_next_launch_maps(recorded):
@@ -530,6 +569,18 @@ def test_fresh_cache_publishes_one_archive_the_next_launch_maps(recorded):
     # C1 only (HotSpot's "emulated-client") and the archive map together
     assert "emulated-client" in mapped["vm_info"] and "sharing" in mapped["vm_info"]
     assert len(_published(cache)) == 1
+    # only the recording launch tours the pipeline
+    assert mapped["build_jobs"] == mapped["prewarm_jobs"] > 0
+    assert recorded["launch"]["build_jobs"] > recorded["launch"]["prewarm_jobs"]
+
+
+def test_archive_covers_the_pipeline_whatever_the_recorder_ran(recorded):
+    """The recorder ran one range sum; the tour put the checkpoint
+    paths' classes on its list."""
+    classes = _classlist(recorded["cache"])
+    assert "org/apache/spark/SparkContext" in classes
+    assert "org/apache/parquet/hadoop/ParquetOutputFormat" in classes
+    assert "org/apache/spark/rdd/LocalCheckpointRDD" in classes
 
 
 def test_truncated_archive_still_launches_and_is_replaced(recorded, tmp_path):
@@ -554,6 +605,23 @@ def test_concurrent_first_launches_publish_at_most_one_archive(recorded, tmp_pat
     assert [_result(p)["sum"] for p in procs] == [recorded["result"]] * 2
     assert len(_published(cache)) <= 1
     assert _left_behind(cache) == []
+
+
+def test_start_up_fault_raises(tmp_path):
+    """Workers that cannot start fail ``build_session``, not a later
+    query.  (A local session's workers run ``PYSPARK_PYTHON``; pyspark
+    does not read ``spark.pyspark.python``.)"""
+    env = _launch_env(tmp_path / "cache", PYSPARK_PYTHON="/nonexistent/python")
+    script = (
+        "from sz_spark.session import build_session\n"
+        "build_session(master='local[1]', extra={'spark.driver.memory': '1g',"
+        " 'spark.driver.defaultJavaOptions': '-Xshare:off'})\n"
+        "print('session returned')\n"
+    )
+    done = subprocess.run([sys.executable, "-c", script], cwd=REPO, env=env,
+                          capture_output=True, text=True, timeout=900)
+    assert done.returncode != 0 and "session returned" not in done.stdout
+    assert "/nonexistent/python" in done.stderr
 
 
 # -- the Python workers' pyspark tree: a real launch ------------------------
@@ -602,13 +670,7 @@ def worker_launch(tmp_path_factory):
     if not os.path.isfile(os.path.join(session._find_spark_home(), "python", "lib",
                                        "pyspark.zip")):
         pytest.skip("no pyspark.zip: workers import the installed pyspark")
-    env = dict(
-        os.environ,
-        SZ_NATIVE_CACHE=str(tmp_path_factory.mktemp("workers") / "cache"),
-        PYSPARK_PYTHON=sys.executable,
-        PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
-    )
-    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    env = _launch_env(tmp_path_factory.mktemp("workers") / "cache")
     done = subprocess.run([sys.executable, "-c", _WORKERS], cwd=REPO, env=env,
                           capture_output=True, text=True, timeout=900)
     assert done.returncode == 0, done.stderr[-4000:]
