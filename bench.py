@@ -204,17 +204,15 @@ def _run_pipeline_probe(
     from sz_spark.session import build_session
     from sz_spark.transcripts import build_transcripts_from_documents
 
-    # 4x cores: at shuffle_partitions == cores every shuffle stage runs a
+    # 4x cores: with as many shuffle partitions as cores every stage runs a
     # single wave with zero straggler slack, and that penalty lands ONLY
     # on the high-core side (the low side already had 4x slack from the
     # max(cores, 8) floor) — measured r4: pairs/scored stage efficiency
     # 0.73/0.69 with one wave vs ~0.9 with 4x over-partitioning.
-    spark = build_session(
-        master=f"local[{cores}]",
-        shuffle_partitions=4 * cores,
-        app_name=f"bench_scale_{cores}",
-        extra={"spark.driver.memory": driver_memory} if driver_memory else None,
-    )
+    extra = {"spark.sql.shuffle.partitions": str(4 * cores)}
+    if driver_memory:
+        extra["spark.driver.memory"] = driver_memory
+    spark = build_session(master=f"local[{cores}]", app_name=f"bench_scale_{cores}", extra=extra)
     docs, scale_k = replicated_documents(spark, sf_dir, scale_k)
     transcripts = build_transcripts_from_documents(docs).localCheckpoint()
     n_turns = transcripts.count()
@@ -445,9 +443,7 @@ def main() -> None:
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.0
 
     # ---- headline queries at local[CPUS] --------------------------------
-    spark = build_session(
-        master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name="bench"
-    )
+    spark = build_session(master=f"local[{CPUS}]", app_name="bench")
     # warm the JVM/codegen/parquet-footer paths so the FIRST headline
     # query doesn't absorb session warmup (measured ~3s on q1 otherwise)
     spark.range(1_000_000).selectExpr("sum(id)").collect()

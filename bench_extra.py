@@ -36,9 +36,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 def _session():
     from sz_spark.session import build_session
 
-    return build_session(
-        master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name="bench_extra"
-    )
+    return build_session(master=f"local[{CPUS}]", app_name="bench_extra")
 
 
 def _warm(spark):

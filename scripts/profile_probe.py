@@ -44,8 +44,8 @@ import bench
 # parallelism levels, like a real N->4N executor comparison where
 # spark.sql.shuffle.partitions is held constant) is one env var away.
 sp = int(os.environ.get("PROF_SHUFFLE_PARTITIONS", 4 * cores))
-spark = build_session(master=f"local[{cores}]", shuffle_partitions=sp,
-                      app_name=f"profile_{cores}")
+spark = build_session(master=f"local[{cores}]", app_name=f"profile_{cores}",
+                      extra={"spark.sql.shuffle.partitions": str(sp)})
 docs, scale_k = bench.replicated_documents(spark, sf_dir, scale_k)
 t0 = time.time()
 transcripts = build_transcripts_from_documents(docs).localCheckpoint()

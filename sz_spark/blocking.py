@@ -300,22 +300,19 @@ def explode_lower_triangle(
     """All unordered element pairs (out[0] < out[1]) from each block's
     array — the in-array replacement for a block self-join.
 
-    Primitive (long/string) element types run through a vectorized
-    Arrow pair emitter (:func:`_triangle_arrow_fn`): NumPy triu index
-    tables gather both pair sides straight from the list column's flat
-    values buffer, so per-pair cost is a compiled gather + compare
-    instead of an interpreted transform/slice/struct lambda per element
-    (guide §4.2; the lambda path also paid the JIT-warmup cliff on
-    every fresh JVM).  Output batches are chunked (<= ~256k pairs) so a
-    near-cap block never materializes O(size^2) rows in one allocation.
-    Struct elements (field-lexicographic ordering) take the JVM
-    expression form below."""
-    elem = blocks.schema[ids_col].dataType.elementType
-    atomic = elem.typeName() in ("long", "integer", "string", "short", "byte")
-    if not atomic:
-        return explode_lower_triangle_exprs(blocks, ids_col, out)
+    A vectorized Arrow pair emitter (:func:`_triangle_arrow_fn`): NumPy
+    triu index tables gather both pair sides straight from the list
+    column's flat values buffer, so per-pair cost is a compiled gather +
+    compare instead of an interpreted transform/slice/struct lambda per
+    element (guide §4.2; the lambda path also paid the JIT-warmup cliff
+    on every fresh JVM).  Output batches are chunked (<= ~256k pairs) so
+    a near-cap block never materializes O(size^2) rows in one
+    allocation.  Pairs are ordered as Spark's least/greatest order them:
+    integers and strings by value, structs field-lexicographically (so
+    lead a struct with the id)."""
     from pyspark.sql import types as T
 
+    elem = blocks.schema[ids_col].dataType.elementType
     src = blocks.select(F.col(ids_col).alias("_ids"))
     out_schema = T.StructType(
         [T.StructField(out[0], elem, True), T.StructField(out[1], elem, True)]
@@ -358,9 +355,7 @@ def _triangle_chunks(offsets, max_pairs: int):
 
 def _triangle_arrow_fn(out: tuple, max_pairs_per_batch: int = 1 << 18):
     """RecordBatch (ids list<T>) -> (out0 T, out1 T): every unordered
-    in-list pair, out0 = min, out1 = max — value-identical to the
-    least/greatest of :func:`explode_lower_triangle_exprs` (same total
-    order for longs and UTF8 strings)."""
+    in-list pair, out0 = min, out1 = max in :func:`_arrow_le`'s order."""
 
     def fn(batches):
         import numpy as np
@@ -379,7 +374,7 @@ def _triangle_arrow_fn(out: tuple, max_pairs_per_batch: int = 1 << 18):
             for ia, ib in _triangle_chunks(offsets, max_pairs_per_batch):
                 va = values.take(pa.array(ia))
                 vb = values.take(pa.array(ib))
-                lt = pc.less_equal(va, vb)
+                lt = _arrow_le(va, vb)
                 emitted_any = True
                 yield pa.RecordBatch.from_arrays(
                     [pc.if_else(lt, va, vb), pc.if_else(lt, vb, va)],
@@ -395,37 +390,21 @@ def _triangle_arrow_fn(out: tuple, max_pairs_per_batch: int = 1 << 18):
     return fn
 
 
-def explode_lower_triangle_exprs(
-    blocks: DataFrame, ids_col: str = "ids", out: tuple = ("id_a", "id_b")
-) -> DataFrame:
-    """JVM expression form of :func:`explode_lower_triangle`, used for
-    element types the Arrow emitter does not order (structs).
+def _arrow_le(a, b):
+    """Element-wise ``a <= b`` of two Arrow arrays in the order of
+    Spark's least/greatest: by value for integers and strings (UTF-8
+    bytes), field by field for structs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    Two CHAINED explodes, not one flattened pair array: peak per-row
-    memory stays O(block size) (each generated row carries one element
-    plus the slice of later elements), never O(size^2) — a single
-    8 MB+ flattened value per near-cap block would churn the generate
-    operator's allocator at scale.  Elements may be any orderable type
-    incl. structs (ordering is field-lexicographic, so lead with the
-    id)."""
-    ids = F.col(ids_col)
-    halves = blocks.select(
-        F.explode(
-            F.transform(
-                ids,
-                lambda x, i: F.struct(
-                    x.alias("lhs"),
-                    F.slice(ids, i + F.lit(2), F.size(ids)).alias("rest"),
-                ),
-            )
-        ).alias("h")
-    )
-    return halves.select(
-        F.col("h.lhs").alias("_lhs"), F.explode("h.rest").alias("_rhs")
-    ).select(
-        F.least("_lhs", F.col("_rhs")).alias(out[0]),
-        F.greatest("_lhs", F.col("_rhs")).alias(out[1]),
-    )
+    if not pa.types.is_struct(a.type):
+        return pc.less_equal(a, b)
+    le = None
+    for x, y in reversed(list(zip(a.flatten(), b.flatten()))):
+        x_le_y = _arrow_le(x, y)
+        # x < y, or x == y and the later fields <=: not(y <= x) or (x <= y and le)
+        le = x_le_y if le is None else pc.or_(pc.invert(_arrow_le(y, x)), pc.and_(x_le_y, le))
+    return le
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ import glob
 import hashlib
 import logging
 import os
+import pathlib
 import re
 import shutil
 import subprocess
@@ -25,38 +26,38 @@ from sz_spark import native
 def build_session(
     master: str | None = None,
     app_name: str = "sz_spark",
-    shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or get) a SparkSession tuned for this pipeline: the one
     session recipe every entry point uses.
 
     ``master=None`` takes the master from spark-submit (or
-    ``PYSPARK_SUBMIT_ARGS``); a cluster deployment then gets the same
-    pipeline conf block and worker prewarm as a ``local[N]`` test
-    session.  The settings that only matter for a JVM this call
-    launches itself (driver memory, 32g unless ``extra`` sets
-    ``spark.driver.memory``; the JIT policy; GC/JIT thread caps,
-    scratch dir, UI off, the class-data-sharing archive of
-    ``_ClassArchive``) apply only to a ``local`` master passed here.
-    The JIT policy is C1 only (``-XX:TieredStopAtLevel=1``, see
-    ``_C1_ONLY``); a JIT flag in any of the driver's java options
+    ``PYSPARK_SUBMIT_ARGS``) and gets the pipeline conf block and the
+    worker prewarm.  A ``local`` master passed here also gets the driver
+    JVM's settings: 32g of heap unless ``extra`` sets
+    ``spark.driver.memory``, GC/JIT thread caps, scratch dir, UI off, and
+    C1 only (``_C1_ONLY``) unless a driver java option names a JIT flag
     (``-XX:TieredStopAtLevel=``, ``-XX:[+-]TieredCompilation``,
-    ``-XX:CompilationMode=``, ``-Xint``, ``-Xcomp``) wins, so
+    ``-XX:CompilationMode=``, ``-Xint``, ``-Xcomp``), so
     ``extra={"spark.driver.defaultJavaOptions":
-    "-XX:TieredStopAtLevel=4"}`` opts back into tiered C2.  A local
-    master, passed or submitted, whose launch conf leaves the shuffle
-    width unset gets its ``defaultParallelism`` instead of Spark's 200.
-    ``extra`` is applied last, so its keys win; its
-    ``spark.driver.extraJavaOptions`` goes after the thread caps and
-    before the JIT and archive options.  A launch that records the
-    class archive also tours the pipeline (``_tour_pipeline``).  A
-    failing worker prewarm raises.
+    "-XX:TieredStopAtLevel=4"}`` opts back into tiered C2.  When this
+    call launches that JVM (no gateway is up), the launch maps the class
+    archive (``_ClassArchive``) and the workers import the pyspark tree
+    (``_worker_tree``): one launch rule for both.  A local master, passed
+    or submitted, runs N shuffle partitions (its ``defaultParallelism``)
+    unless ``extra`` or the launch conf sets
+    ``spark.sql.shuffle.partitions``.  ``extra`` is applied last, so its
+    keys win; its ``spark.driver.extraJavaOptions`` goes after the thread
+    caps and before the JIT and archive options.  ``spark.pyspark.python``
+    or ``spark.pyspark.driver.python`` in ``extra`` raises ``ValueError``:
+    pyspark reads the environment instead.  A launch that records the
+    class archive also tours the pipeline (``_tour_pipeline``).  A failing
+    worker prewarm raises.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
-    conf, archive = _session_conf(master, shuffle_partitions, extra)
+    conf, archive = _session_conf(master, extra)
     for k, v in conf.items():
         builder = builder.config(k, v)
     with archive.launch_env() if archive else contextlib.nullcontext():
@@ -64,10 +65,8 @@ def build_session(
     if archive is not None:
         archive.launched(spark)
     sc = spark.sparkContext
-    if (
-        shuffle_partitions is None
-        and _local_cores(sc.master) is not None
-        and not sc.getConf().contains("spark.sql.shuffle.partitions")
+    if _local_cores(sc.master) is not None and not sc.getConf().contains(
+        "spark.sql.shuffle.partitions"
     ):
         spark.conf.set("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
     sc.setLogLevel("WARN")
@@ -77,36 +76,37 @@ def build_session(
     return spark
 
 
+#: conf keys that pyspark ignores, and the environment variable it reads
+#: instead (``pyspark/core/context.py`` takes the worker command from it)
+_PYTHON_ENV = {
+    "spark.pyspark.python": "PYSPARK_PYTHON",
+    "spark.pyspark.driver.python": "PYSPARK_DRIVER_PYTHON",
+}
+
+
 def _session_conf(
-    master: str | None,
-    shuffle_partitions: int | None,
-    extra: dict[str, str] | None,
+    master: str | None, extra: dict[str, str] | None
 ) -> tuple[dict[str, str], _ClassArchive | None]:
     """``build_session``'s conf, in the order it is applied, and the
-    class archive the driver JVM it launches maps (None: no archive)."""
+    class archive the driver JVM it launches maps (None: no archive).
+    Whether a JVM is launched (a local master, no gateway up), the Spark
+    home, the conf dir and the cache dir are decided here, once."""
+    for key, var in _PYTHON_ENV.items():
+        if key in (extra or {}):
+            raise ValueError(f"{key} has no effect: pyspark reads {var}; set it instead")
     cores = _local_cores(master)
     conf = _local_conf() if cores is not None else {}
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf.update(
         {
-            # AQE: runtime re-planning + skew-join splitting — the Spark
-            # analog of the reference's two-tier small/large work
-            # scheduling (similarities/serial.hpp:3296-3395).  Partition
-            # COALESCING is off: AQE sizes post-shuffle partitions by
-            # shuffle BYTES, and this engine's heavy stages are
-            # Arrow/pandas UDFs whose cost is CPU per row on surrogate-long
-            # keys — tiny bytes, huge compute — so byte-driven coalescing
-            # collapses exactly the parallelism the explicit 4x-waves
-            # repartitions create (scoring.py documents why AQE cannot see
-            # Python CPU cost).  Measured on the 975k-turn probe, same
-            # session, 8 cores: 29.7/33.5 s with coalescing off vs
-            # 57.4/62.5 s with it on (~1.9x), identical clusters; the
-            # 2-core side improved 80-88 -> 74.6 s.  At 100 TB the
-            # explicit shuffle-partition sizing
-            # (scripts/scale_projection.py) already bounds partition size;
-            # skew-join splitting — the part of AQE that protects the
-            # band/pair joins from hot keys — stays ON.
+            # AQE: runtime re-planning, and skew-join splitting for the
+            # band/pair joins' hot keys (the analog of the reference's
+            # two-tier work scheduling, similarities/serial.hpp:3296-3395).
+            # Partition COALESCING is off: it sizes post-shuffle partitions
+            # by shuffle bytes, and the heavy stages are Arrow/pandas UDFs
+            # whose cost is CPU per row on tiny surrogate-long keys, so it
+            # collapses the parallelism of the explicit 4x-waves
+            # repartitions (scoring.py).  975k-turn probe, 8 cores: 29.7/
+            # 33.5 s off vs 57.4/62.5 s on, identical clusters.
             "spark.sql.adaptive.enabled": "true",
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
             "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -119,16 +119,22 @@ def _session_conf(
         }
     )
     conf.update(extra or {})
-    if cores is not None:
-        # the caps first, so a caller's own flags in extraJavaOptions
-        # win; the JIT policy and the archive options after them
-        _add_java_options(conf, _thread_caps(cores), first=True)
-        if not _USER_JIT.search(_java_options(conf)):
-            _add_java_options(conf, _C1_ONLY)
-    archive = _ClassArchive.for_launch(conf) if cores is not None else None
+    if cores is None:
+        return conf, None
+    # the caps first, so a caller's own flags in extraJavaOptions win;
+    # the JIT policy and the archive options after them
+    _add_java_options(conf, _thread_caps(cores), first=True)
+    if not _USER_JIT.search(_java_options(conf)):
+        _add_java_options(conf, _C1_ONLY)
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return conf, None  # no JVM is launched: nothing below reaches one
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    cache = os.path.abspath(native.cache_dir())
+    archive = _ClassArchive.for_launch(conf, spark_home, conf_dir, cache)
     if archive is not None:
         _add_java_options(conf, archive.java_options)
-    tree = _worker_tree(conf) if cores is not None else None
+    tree = _worker_tree(conf, spark_home, conf_dir, cache)
     if tree is not None:
         conf["spark.python.daemon.module"] = _DAEMON_MODULE
         path = conf.get("spark.executorEnv.PYTHONPATH")
@@ -296,10 +302,9 @@ class _ClassArchive:
       name, size and mtime of every ``$SPARK_HOME/jars/*.jar``: nothing
       that changes from process to process.  JDK 17 maps an archive
       only into a JVM with the compressed-oops mode it was dumped with,
-      so a driver heap of
-      32 GiB or more (``wide``, the default ``32g``) and a smaller one
-      (``coops``) each get their own archive, dumped with the
-      recording JVM's ``-Xmx``, as the JDK keeps
+      so a driver heap of 32 GiB or more (``wide``, the default ``32g``)
+      and a smaller one (``coops``) each get their own archive, dumped
+      with the recording JVM's ``-Xmx``, as the JDK keeps
       ``classes_nocoops.jsa`` next to ``classes.jsa``.
     - *Coverage:* the classes the recording process loaded: the
       launch, the worker prewarm, the tour of ``_tour_pipeline`` (the
@@ -355,36 +360,31 @@ class _ClassArchive:
         self.found = _archive_identity(self.path)
 
     @classmethod
-    def for_launch(cls, conf: dict[str, str]) -> _ClassArchive | None:
-        """The archive for a driver JVM launched with ``conf``, or None
-        when no JVM is launched or the launch is not eligible."""
-        if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
-            return None
-        spark_home = _find_spark_home()
+    def for_launch(
+        cls, conf: dict[str, str], spark_home: str, conf_dir: str, cache: str
+    ) -> _ClassArchive | None:
+        """The archive in ``cache`` for the driver JVM launched with
+        ``conf`` from ``spark_home`` and ``conf_dir``, or None when the
+        launch is not eligible."""
         heap = conf.get("spark.driver.memory", "1g")  # spark-submit passes -Xmx<heap>
+        java = _java_binary()
         if (
-            not _only_templates(
-                os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
-            )
+            not _only_templates(conf_dir)
             or _USER_SHARING.search(_java_options(conf))
             or "spark.driver.extraClassPath" in conf
             or any(os.environ.get(name) for name in _CLASSPATH_ENV)
             or _heap_bytes(heap) is None
+            or java is None
+            # the cache path goes unquoted into -Xlog, -cp and the java options
+            or not re.fullmatch(r"[\w./+@-]+", cache)
         ):
-            return None
-        java = _java_binary()
-        cache = os.path.abspath(native.cache_dir())
-        # the cache path goes unquoted into -Xlog, -cp and the java options
-        if java is None or not re.fullmatch(r"[\w./+@-]+", cache):
             return None
         try:
             archive = cls(cache, _archive_key(java, spark_home), java, heap)
             os.makedirs(archive.conf_dir, exist_ok=True)
-            if os.listdir(archive.conf_dir):
-                return None
+            return None if os.listdir(archive.conf_dir) else archive
         except OSError:
             return None
-        return archive
 
     @property
     def java_options(self) -> str:
@@ -494,23 +494,33 @@ def _java_binary() -> str | None:
     return os.path.join(home, "bin", "java") if home else shutil.which("java")
 
 
-def _archive_key(java: str, spark_home: str) -> str:
-    """Hash of the archive's coverage version, of the JDK behind
-    ``java`` and of the Spark jar set."""
-    h = hashlib.sha256(f"coverage {_ARCHIVE_COVERAGE}\0".encode())
-    real = os.path.realpath(java)
-    st = os.stat(real)
-    h.update(f"{real}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
-    with contextlib.suppress(FileNotFoundError):
-        with open(os.path.join(os.path.dirname(os.path.dirname(real)), "release"), "rb") as fh:
-            h.update(fh.read())
-    jars = os.path.join(spark_home, "jars")
-    h.update(f"\0{jars}\0".encode())
-    for name in sorted(os.listdir(jars)):
-        if name.endswith(".jar"):
-            st = os.stat(os.path.join(jars, name))
-            h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+def _stat_key(*parts: bytes | tuple[str, str]) -> str:
+    """A cache key: 16 hex digits of a SHA-256 over ``parts``, a bytes
+    part as it is and a ``(label, path)`` part as the label and the
+    size and mtime of ``path``."""
+    h = hashlib.sha256()
+    for part in parts:
+        if isinstance(part, tuple):
+            label, path = part
+            st = os.stat(path)
+            part = f"{label}\0{st.st_size}\0{st.st_mtime_ns}\0".encode()
+        h.update(part)
     return h.hexdigest()[:16]
+
+
+def _archive_key(java: str, spark_home: str) -> str:
+    """Key of the archive's coverage version, of the JDK behind ``java``
+    and of the Spark jar set."""
+    real = os.path.realpath(java)
+    release = pathlib.Path(real).parent.parent / "release"
+    jars = os.path.join(spark_home, "jars")
+    return _stat_key(
+        f"coverage {_ARCHIVE_COVERAGE}\0".encode(),
+        (real, real),
+        release.read_bytes() if release.is_file() else b"",
+        f"\0{jars}\0".encode(),
+        *((n, os.path.join(jars, n)) for n in sorted(os.listdir(jars)) if n.endswith(".jar")),
+    )
 
 
 def _heap_bytes(size: str) -> int | None:
@@ -583,10 +593,11 @@ if __name__ == "__main__":
 _TREE_DIR = re.compile(r"pyspark_([0-9a-f]{16})(?:\.(\d+)\.tmp)?")
 
 
-def _worker_tree(conf: dict[str, str]) -> str | None:
-    """The bytecode-cached copy of pyspark and py4j a local session's
-    Python daemon imports, published if missing; None when no JVM is
-    launched or the launch is not eligible.
+def _worker_tree(conf: dict[str, str], spark_home: str, conf_dir: str, cache: str) -> str | None:
+    """The bytecode-cached copy of pyspark and py4j in ``cache`` that the
+    Python daemon of the driver JVM launched with ``conf`` from
+    ``spark_home`` and ``conf_dir`` imports, published if missing; None
+    when the launch is not eligible.
 
     Workers import pyspark from ``$SPARK_HOME/python/lib/pyspark.zip``,
     which holds ~1,170 ``.py`` files and no bytecode, so every daemon
@@ -606,19 +617,13 @@ def _worker_tree(conf: dict[str, str]) -> str | None:
       rename; a publisher that loses the race deletes its temp dir.
       Publishing deletes other keys' trees and dead publishers' temp
       dirs.  It takes ~0.2 s and 19 MB, once per key.
-    - *Eligibility:* as ``_ClassArchive``'s launch, plus a
-      ``pyspark.zip`` (a pip-only install has none, and its workers
-      already import bytecode) and no ``spark.python.daemon.module`` of
-      the user's (``extra``, ``PYSPARK_SUBMIT_ARGS`` or
-      ``spark-defaults.conf``).
+    - *Eligibility:* a launch ``_session_conf`` makes (as for
+      ``_ClassArchive``), a ``pyspark.zip`` (a pip-only install has
+      none, and its workers already import bytecode) and no
+      ``spark.python.daemon.module`` of the user's (``extra``,
+      ``PYSPARK_SUBMIT_ARGS`` or ``spark-defaults.conf``).
     """
-    spark_home = _find_spark_home()
-    if (
-        SparkContext._gateway is not None
-        or "PYSPARK_GATEWAY_PORT" in os.environ
-        or "spark.python.daemon.module" in conf
-        or _sets_daemon_module(spark_home)
-    ):
+    if "spark.python.daemon.module" in conf or _sets_daemon_module(conf_dir):
         return None
     lib = os.path.join(spark_home, "python", "lib")
     zips = [os.path.join(lib, "pyspark.zip")]
@@ -626,16 +631,15 @@ def _worker_tree(conf: dict[str, str]) -> str | None:
         return None
     zips += sorted(glob.glob(os.path.join(lib, "py4j-*-src.zip")))
     try:
-        return _publish_tree(os.path.abspath(native.cache_dir()), _tree_key(zips), zips)
+        return _publish_tree(cache, _tree_key(zips), zips)
     except (OSError, zipfile.BadZipFile) as exc:
         logging.getLogger(__name__).warning("pyspark worker tree not published: %s", exc)
         return None
 
 
-def _sets_daemon_module(spark_home: str) -> bool:
-    """Whether ``PYSPARK_SUBMIT_ARGS`` or the ``spark-defaults.conf``
-    spark-submit reads sets ``spark.python.daemon.module``."""
-    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+def _sets_daemon_module(conf_dir: str) -> bool:
+    """Whether ``PYSPARK_SUBMIT_ARGS`` or ``conf_dir``'s
+    ``spark-defaults.conf`` sets ``spark.python.daemon.module``."""
     try:
         with open(os.path.join(conf_dir, "spark-defaults.conf"), errors="replace") as fh:
             defaults = fh.read()
@@ -648,14 +652,9 @@ def _sets_daemon_module(spark_home: str) -> bool:
 
 
 def _tree_key(zips: list[str]) -> str:
-    """Hash of the zips a worker tree is extracted from and of the
-    daemon module."""
-    h = hashlib.sha256(_DAEMON_SOURCE.encode())
-    for path in zips:
-        real = os.path.realpath(path)
-        st = os.stat(real)
-        h.update(f"\0{real}\0{st.st_size}\0{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
+    """Key of the zips a worker tree is extracted from and of the daemon
+    module."""
+    return _stat_key(_DAEMON_SOURCE.encode(), *((r, r) for r in map(os.path.realpath, zips)))
 
 
 def _publish_tree(cache: str, key: str, zips: list[str]) -> str:

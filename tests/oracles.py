@@ -70,6 +70,33 @@ def distinct_shingles_exprs(
     )
 
 
+def explode_lower_triangle_exprs(
+    blocks: DataFrame, ids_col: str = "ids", out: tuple = ("id_a", "id_b")
+) -> DataFrame:
+    """blocking.explode_lower_triangle in Spark expressions: two chained
+    explodes (each element with the slice of later elements), each pair
+    ordered by least/greatest, which order structs
+    field-lexicographically."""
+    ids = F.col(ids_col)
+    halves = blocks.select(
+        F.explode(
+            F.transform(
+                ids,
+                lambda x, i: F.struct(
+                    x.alias("lhs"),
+                    F.slice(ids, i + F.lit(2), F.size(ids)).alias("rest"),
+                ),
+            )
+        ).alias("h")
+    )
+    return halves.select(
+        F.col("h.lhs").alias("_lhs"), F.explode("h.rest").alias("_rhs")
+    ).select(
+        F.least("_lhs", F.col("_rhs")).alias(out[0]),
+        F.greatest("_lhs", F.col("_rhs")).alias(out[1]),
+    )
+
+
 def _dot(x, y):
     return F.aggregate(
         F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v

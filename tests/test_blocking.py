@@ -17,7 +17,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from sz_spark.session import build_session
 
-    s = build_session(master="local[4]", shuffle_partitions=4, app_name="blocking-tests")
+    s = build_session(master="local[4]", app_name="blocking-tests")
     yield s
     s.stop()
 
@@ -67,7 +67,7 @@ def test_triangle_arrow_vs_exprs_longs(spark):
     ]
     df = spark.createDataFrame(rows, "ids array<bigint>")
     got = sorted(map(tuple, blocking.explode_lower_triangle(df).collect()))
-    want = sorted(map(tuple, blocking.explode_lower_triangle_exprs(df).collect()))
+    want = sorted(map(tuple, oracles.explode_lower_triangle_exprs(df).collect()))
     assert got == want
 
 
@@ -81,19 +81,27 @@ def test_triangle_arrow_vs_exprs_strings(spark):
     ]
     df = spark.createDataFrame(rows, "ids array<string>")
     got = sorted(map(tuple, blocking.explode_lower_triangle(df).collect()))
-    want = sorted(map(tuple, blocking.explode_lower_triangle_exprs(df).collect()))
+    want = sorted(map(tuple, oracles.explode_lower_triangle_exprs(df).collect()))
     assert got == want
 
 
-def test_triangle_struct_elements_use_jvm_path(spark):
-    df = spark.createDataFrame(
-        [([(1, "x"), (2, "y"), (0, "z")],)],
-        "ids array<struct<doc_id:bigint,simhash:string>>",
-    )
-    out = blocking.explode_lower_triangle(df, out=("pa", "pb"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" not in plan
-    assert out.count() == 3
+def test_triangle_arrow_vs_exprs_structs(spark):
+    """Struct elements order field-lexicographically, as least/greatest
+    do: ties on the first field are broken by the second."""
+    import random
+
+    random.seed(13)
+    rows = [
+        ([(random.randrange(5), f"s{random.randrange(4)}")
+          for _ in range(random.choice([0, 1, 2, 3, 6, 11]))],)
+        for _ in range(150)
+    ]
+    rows.append(([(2, "y"), (2, "x"), (1, "z"), (2, "x")],))
+    df = spark.createDataFrame(rows, "ids array<struct<doc_id:bigint,simhash:string>>")
+    got = sorted(map(tuple, blocking.explode_lower_triangle(df, out=("pa", "pb")).collect()))
+    want = sorted(map(tuple, oracles.explode_lower_triangle_exprs(df, out=("pa", "pb")).collect()))
+    assert got == want
+    assert ((2, "x"), (2, "y")) in got and ((2, "x"), (2, "x")) in got
 
 
 def test_block_pairs_uncapped_equals_brute_force(spark):

@@ -15,7 +15,7 @@ import pytest
 def spark():
     from sz_spark.session import build_session
 
-    s = build_session(master="local[4]", shuffle_partitions=4, app_name="cc-tests")
+    s = build_session(master="local[4]", app_name="cc-tests")
     yield s
     s.stop()
 

@@ -279,6 +279,17 @@ def test_pipeline_config_fields():
     ]
 
 
+def test_build_session_parameters():
+    """build_session takes the master, the app name and the conf in
+    ``extra``; a shuffle width or any other setting goes through
+    ``extra``.  A new parameter must be added here on purpose."""
+    import inspect
+
+    from sz_spark.session import build_session
+
+    assert list(inspect.signature(build_session).parameters) == ["master", "app_name", "extra"]
+
+
 def _run_pipeline_script():
     spec = importlib.util.spec_from_file_location(
         "run_pipeline_script", os.path.join(REPO, "scripts", "run_pipeline.py")

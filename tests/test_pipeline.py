@@ -20,7 +20,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from sz_spark.session import build_session
 
-    s = build_session(master="local[8]", shuffle_partitions=8, app_name="pipe-tests")
+    s = build_session(master="local[8]", app_name="pipe-tests")
     yield s
     s.stop()
 

@@ -19,7 +19,7 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 def spark():
     from sz_spark.session import build_session
 
-    s = build_session(master="local[8]", shuffle_partitions=8, app_name="tests")
+    s = build_session(master="local[8]", app_name="tests")
     yield s
     s.stop()
 

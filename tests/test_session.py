@@ -207,12 +207,32 @@ def test_archive_key_follows_jars_and_jdk(install, monkeypatch):
     assert len(keys) == 6
 
 
+def test_archive_key_bytes_are_stable(install):
+    """The key hashes exactly these bytes, so an archive recorded by an
+    earlier version of this module keeps its name and stays mapped."""
+    import hashlib
+
+    def stat(label, path):
+        st = os.stat(path)
+        return f"{label}\0{st.st_size}\0{st.st_mtime_ns}\0".encode()
+
+    java = os.path.realpath(install["jdk"] / "bin" / "java")
+    jars = install["home"] / "jars"
+    h = hashlib.sha256(f"coverage {session._ARCHIVE_COVERAGE}\0".encode())
+    h.update(stat(java, java))
+    h.update((install["jdk"] / "release").read_bytes())
+    h.update(f"\0{jars}\0".encode())
+    for name in ("a.jar", "b.jar"):
+        h.update(stat(name, jars / name))
+    assert _key(install) == h.hexdigest()[:16]
+
+
 @pytest.mark.parametrize("conf_dir_set", [True, False])
 def test_template_conf_dir_launches_with_the_empty_conf_dir(install, monkeypatch, conf_dir_set):
     templates = str(install["home"] / "conf")
     if conf_dir_set:
         monkeypatch.setenv("SPARK_CONF_DIR", templates)
-    conf, archive = session._session_conf("local[2]", None, None)
+    conf, archive = session._session_conf("local[2]", None)
     assert archive is not None
     assert "-XX:DumpLoadedClassList=" in _archive_flags(conf)  # empty cache: record
     for _ in range(2):  # the second time the body raises
@@ -226,11 +246,11 @@ def test_template_conf_dir_launches_with_the_empty_conf_dir(install, monkeypatch
 def test_heap_size_picks_the_compressed_oops_archive(install):
     paths = {}
     for heap in ("1g", "31g", "32g", "64g"):
-        _, archive = session._session_conf("local[2]", None, {"spark.driver.memory": heap})
+        _, archive = session._session_conf("local[2]", {"spark.driver.memory": heap})
         paths[heap] = archive.path
     assert paths["1g"] == paths["31g"] != paths["32g"] == paths["64g"]
     assert paths["1g"].replace("_coops.", "_wide.") == paths["32g"]
-    _, archive = session._session_conf("local[2]", None, {"spark.driver.memory": "2gb"})
+    _, archive = session._session_conf("local[2]", {"spark.driver.memory": "2gb"})
     assert archive is None  # not a size the JVM reads
 
 
@@ -238,7 +258,7 @@ def test_heap_size_picks_the_compressed_oops_archive(install):
 def test_real_conf_file_leaves_the_launch_as_it_was(install, real_file):
     (install["home"] / "conf" / real_file).write_text("")
     env = dict(os.environ)
-    conf, archive = session._session_conf("local[2]", None, None)
+    conf, archive = session._session_conf("local[2]", None)
     assert archive is None
     assert _archive_flags(conf) == []
     assert dict(os.environ) == env
@@ -247,14 +267,14 @@ def test_real_conf_file_leaves_the_launch_as_it_was(install, real_file):
 
 @pytest.mark.parametrize("master", [None, "spark://host:7077", "yarn"])
 def test_submitted_master_gets_no_archive(install, master):
-    conf, archive = session._session_conf(master, None, None)
+    conf, archive = session._session_conf(master, None)
     assert archive is None
     assert "spark.driver.extraJavaOptions" not in conf
 
 
 def test_opt_out_and_running_gateway_compute_nothing(install, monkeypatch):
     extra = {"spark.driver.defaultJavaOptions": "-Xshare:off"}
-    conf, archive = session._session_conf("local[2]", None, extra)
+    conf, archive = session._session_conf("local[2]", extra)
     assert archive is None and _archive_flags(conf) == []
 
     def no_key(*args):
@@ -262,7 +282,7 @@ def test_opt_out_and_running_gateway_compute_nothing(install, monkeypatch):
 
     monkeypatch.setattr(session, "_archive_key", no_key)
     monkeypatch.setattr(SparkContext, "_gateway", object())
-    conf, archive = session._session_conf("local[2]", None, None)
+    conf, archive = session._session_conf("local[2]", None)
     assert archive is None and _archive_flags(conf) == []
 
 
@@ -278,7 +298,7 @@ def _jit_flags(conf):
 
 def test_local_master_runs_c1_only_next_to_the_caps_and_archive(install, monkeypatch):
     monkeypatch.setattr(session.os, "cpu_count", lambda: 8)  # local[2] is a sub-box session
-    conf, archive = session._session_conf("local[2]", None, None)
+    conf, archive = session._session_conf("local[2]", None)
     opts = conf["spark.driver.extraJavaOptions"].split()
     assert archive is not None
     assert opts.count("-XX:TieredStopAtLevel=1") == 1
@@ -294,11 +314,11 @@ def test_local_master_runs_c1_only_next_to_the_caps_and_archive(install, monkeyp
 def test_users_jit_flag_wins(install, monkeypatch, source, flag):
     user = f"-Dsz.before=1 {flag} -Dsz.after=1"
     if source.startswith("spark."):
-        conf, _ = session._session_conf("local[2]", None, {source: user})
+        conf, _ = session._session_conf("local[2]", {source: user})
         assert flag in conf[source].split()
     else:
         monkeypatch.setenv(source, user)
-        conf, _ = session._session_conf("local[2]", None, None)
+        conf, _ = session._session_conf("local[2]", None)
         assert os.environ[source] == user
     assert session._C1_ONLY not in conf.get("spark.driver.extraJavaOptions", "")
     assert _archive_flags(conf)  # only the JIT policy steps aside
@@ -306,7 +326,7 @@ def test_users_jit_flag_wins(install, monkeypatch, source, flag):
 
 def test_users_extra_java_options_without_a_jit_flag_get_c1(install):
     user = "-Dsz.user=1 -XX:+UseG1GC -Xinternalversion"
-    conf, _ = session._session_conf("local[2]", None, {"spark.driver.extraJavaOptions": user})
+    conf, _ = session._session_conf("local[2]", {"spark.driver.extraJavaOptions": user})
     # the thread caps (none on a box of 2 cores or fewer), the caller's
     # options, then C1
     head = f"{session._thread_caps(2)} {user} {session._C1_ONLY} ".lstrip()
@@ -316,7 +336,7 @@ def test_users_extra_java_options_without_a_jit_flag_get_c1(install):
 
 def test_users_extra_java_options_keep_the_thread_caps(install, monkeypatch):
     monkeypatch.setattr(session.os, "cpu_count", lambda: 8)  # local[2] is a sub-box session
-    conf, _ = session._session_conf("local[2]", None, {"spark.driver.extraJavaOptions": "-Dx=1"})
+    conf, _ = session._session_conf("local[2]", {"spark.driver.extraJavaOptions": "-Dx=1"})
     opts = conf["spark.driver.extraJavaOptions"].split()
     caps = ["-XX:ParallelGCThreads=2", "-XX:ConcGCThreads=1", "-XX:CICompilerCount=2"]
     assert opts[:4] == [*caps, "-Dx=1"]  # a caller's own cap, later, wins
@@ -359,7 +379,7 @@ def _dead_pid() -> int:
 
 
 def test_local_master_daemon_imports_the_tree(install, worker_zips):
-    conf, _ = session._session_conf("local[2]", None, None)
+    conf, _ = session._session_conf("local[2]", None)
     tree = conf["spark.executorEnv.PYTHONPATH"]
     assert conf["spark.python.daemon.module"] == session._DAEMON_MODULE
     assert tree == str(install["cache"] / f"pyspark_{_zips_key(worker_zips)}")
@@ -372,33 +392,33 @@ def test_local_master_daemon_imports_the_tree(install, worker_zips):
 
 @pytest.mark.parametrize("master", [None, "spark://host:7077", "yarn"])
 def test_submitted_master_gets_no_tree(install, worker_zips, master):
-    conf, _ = session._session_conf(master, None, None)
+    conf, _ = session._session_conf(master, None)
     assert _tree_conf(conf) == {}
     assert not install["cache"].exists()
 
 
 def test_users_daemon_module_missing_zip_or_gateway_get_no_tree(install, worker_zips, monkeypatch):
     extra = {"spark.python.daemon.module": "my_daemon"}
-    conf, _ = session._session_conf("local[2]", None, extra)
+    conf, _ = session._session_conf("local[2]", extra)
     assert _tree_conf(conf) == extra
     monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--conf spark.python.daemon.module=d pyspark-shell")
-    assert _tree_conf(session._session_conf("local[2]", None, None)[0]) == {}
+    assert _tree_conf(session._session_conf("local[2]", None)[0]) == {}
     monkeypatch.delenv("PYSPARK_SUBMIT_ARGS")
     defaults = install["home"] / "conf" / "spark-defaults.conf"
     defaults.write_text("spark.python.daemon.module=my_daemon\n")
-    assert _tree_conf(session._session_conf("local[2]", None, None)[0]) == {}
+    assert _tree_conf(session._session_conf("local[2]", None)[0]) == {}
     defaults.unlink()
     monkeypatch.setattr(SparkContext, "_gateway", object())
-    assert _tree_conf(session._session_conf("local[2]", None, None)[0]) == {}
+    assert _tree_conf(session._session_conf("local[2]", None)[0]) == {}
     monkeypatch.setattr(SparkContext, "_gateway", None)
     worker_zips[0].unlink()  # a pip-only install: no pyspark.zip
-    assert _tree_conf(session._session_conf("local[2]", None, None)[0]) == {}
+    assert _tree_conf(session._session_conf("local[2]", None)[0]) == {}
     assert not install["cache"].exists() or _trees(install["cache"]) == []
 
 
 def test_users_worker_pythonpath_is_kept(install, worker_zips):
     user = os.pathsep.join(["/opt/a", "/opt/b"])
-    conf, _ = session._session_conf("local[2]", None, {"spark.executorEnv.PYTHONPATH": user})
+    conf, _ = session._session_conf("local[2]", {"spark.executorEnv.PYTHONPATH": user})
     path = conf["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
     assert path[:2] == ["/opt/a", "/opt/b"]
     assert os.path.basename(path[2]).startswith("pyspark_") and len(path) == 3
@@ -427,7 +447,7 @@ def test_publishing_sweeps_other_keys_and_dead_temp_dirs(install, worker_zips):
     for name in (*stale, live):
         (cache / name).mkdir(parents=True)
         (cache / name / "sz_pyspark_daemon.py").write_text("raise SystemExit(1)\n")
-    conf, _ = session._session_conf("local[2]", None, None)
+    conf, _ = session._session_conf("local[2]", None)
     assert conf["spark.executorEnv.PYTHONPATH"] == str(cache / f"pyspark_{key}")
     assert _trees(cache) == sorted([f"pyspark_{key}", live])
 
@@ -438,7 +458,7 @@ def test_leftover_temp_dir_is_never_used(install, worker_zips):
     own = cache / f"pyspark_{key}.{os.getpid()}.tmp"  # left by a failed publish
     own.mkdir(parents=True)
     (own / "sz_pyspark_daemon.py").write_text("raise SystemExit(1)\n")
-    tree = session._session_conf("local[2]", None, None)[0]["spark.executorEnv.PYTHONPATH"]
+    tree = session._session_conf("local[2]", None)[0]["spark.executorEnv.PYTHONPATH"]
     assert tree == str(cache / f"pyspark_{key}")
     with open(os.path.join(tree, "sz_pyspark_daemon.py")) as fh:
         assert fh.read() == session._DAEMON_SOURCE
@@ -453,9 +473,108 @@ def test_publisher_that_loses_the_race_uses_the_winners_tree(install, worker_zip
         return rename(src, dst)
 
     monkeypatch.setattr(session.os, "rename", winner_first)
-    tree = session._session_conf("local[2]", None, None)[0]["spark.executorEnv.PYTHONPATH"]
+    tree = session._session_conf("local[2]", None)[0]["spark.executorEnv.PYTHONPATH"]
     assert os.listdir(tree) == ["pyspark"]
     assert _trees(install["cache"]) == [os.path.basename(tree)]
+
+
+# -- the whole launch conf, case by case (no JVM) ---------------------------
+
+
+def test_launch_plan_finds_the_spark_home_once(install, worker_zips, monkeypatch):
+    """The archive and the worker tree share one launch plan."""
+    calls = []
+    real = session._find_spark_home
+    monkeypatch.setattr(session, "_find_spark_home", lambda: calls.append(1) or real())
+    conf, archive = session._session_conf("local[2]", None)
+    assert archive is not None and "spark.python.daemon.module" in conf
+    assert len(calls) == 1
+
+
+@pytest.mark.parametrize("master", ["local[1]", None])
+@pytest.mark.parametrize("key, var", sorted(session._PYTHON_ENV.items()))
+def test_python_path_in_extra_raises(install, master, key, var):
+    """pyspark takes the Python it runs from the environment only, so a
+    path in ``extra`` would be ignored: it raises, naming the variable."""
+    with pytest.raises(ValueError, match=var):
+        session._session_conf(master, {key: "/nonexistent/python"})
+    assert not install["cache"].exists()
+
+
+#: the conf block every master gets, ahead of ``extra``
+_PIPELINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+#: the thread caps of local[2] on an 8-core box
+_CAPS_2_OF_8 = "-XX:ParallelGCThreads=2 -XX:ConcGCThreads=1 -XX:CICompilerCount=2"
+
+#: name: (master, extra, os.cpu_count(), what else the case sets up,
+#: the driver's extraJavaOptions ("{rec}": the archive's recording
+#: options), the archive's mode (None: no archive), worker tree or not)
+_LAUNCH_CASES = {
+    "local2_whole_box": ("local[2]", None, 2, None, "-XX:TieredStopAtLevel=1 {rec}", "wide", True),
+    "local2_of_8": ("local[2]", None, 8, None,
+                    f"{_CAPS_2_OF_8} -XX:TieredStopAtLevel=1 {{rec}}", "wide", True),
+    "caller_java_options": ("local[2]", {"spark.driver.extraJavaOptions": "-Dx=1"}, 8, None,
+                            f"{_CAPS_2_OF_8} -Dx=1 -XX:TieredStopAtLevel=1 {{rec}}", "wide", True),
+    "heap_2g": ("local[2]", {"spark.driver.memory": "2g"}, 2, None,
+                "-XX:TieredStopAtLevel=1 {rec}", "coops", True),
+    "heap_32g": ("local[2]", {"spark.driver.memory": "32g"}, 2, None,
+                 "-XX:TieredStopAtLevel=1 {rec}", "wide", True),
+    "user_daemon_module": ("local[2]", {"spark.python.daemon.module": "my_daemon"}, 2, None,
+                           "-XX:TieredStopAtLevel=1 {rec}", "wide", False),
+    "real_conf_file": ("local[2]", None, 2, "conf_file", "-XX:TieredStopAtLevel=1", None, True),
+    "running_gateway": ("local[2]", None, 2, "gateway", "-XX:TieredStopAtLevel=1", None, False),
+    "submitted_master": (None, None, 2, None, None, None, False),
+    "standalone_master": ("spark://host:7077", None, 2, None, None, None, False),
+}
+
+
+@pytest.mark.parametrize("case", list(_LAUNCH_CASES))
+def test_session_conf_pins_the_whole_launch(install, worker_zips, monkeypatch, case):
+    """``_session_conf``'s conf and archive for each launch case, in
+    full: what ``build_session`` hands the builder is exactly this."""
+    master, extra, cpus, setup, java, mode, tree = _LAUNCH_CASES[case]
+    monkeypatch.setattr(session.os, "cpu_count", lambda: cpus)
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", "/scratch")  # no spark.local.dir
+    if setup == "conf_file":
+        (install["home"] / "conf" / "spark-defaults.conf").write_text("spark.foo bar\n")
+    elif setup == "gateway":
+        monkeypatch.setattr(SparkContext, "_gateway", object())
+    conf, archive = session._session_conf(master, extra)
+
+    cache = install["cache"]
+    want = {}
+    if master is not None and master.startswith("local"):
+        want = {"spark.ui.enabled": "false", "spark.driver.memory": "32g"}
+    want.update(_PIPELINE_CONF)
+    want.update(extra or {})
+    if mode is not None:
+        base = f"{cache}/spark_cds_{_key(install)}_{mode}"
+        rec = (f"-XX:DumpLoadedClassList={base}.{os.getpid()}.classlist"
+               f" -Xlog:cds*=off -Xlog:cds:file={base}.log::filecount=1")
+        assert (archive.path, archive.found, archive.conf_dir) == (
+            f"{base}.jsa", None, f"{cache}/spark_conf_empty")
+    else:
+        rec = None
+        assert archive is None
+    if java is not None:
+        want["spark.driver.extraJavaOptions"] = java.format(rec=rec)
+    trees = _trees(cache) if cache.exists() else []
+    if tree:
+        (name,) = trees
+        assert re.fullmatch(r"pyspark_[0-9a-f]{16}", name)
+        want["spark.python.daemon.module"] = session._DAEMON_MODULE
+        want["spark.executorEnv.PYTHONPATH"] = str(cache / name)
+    else:
+        assert trees == []
+    assert conf == want
 
 
 # -- the driver JVM's class archive: real launches -------------------------
