@@ -68,9 +68,9 @@ def doc_features(docs: DataFrame, id_col: str = "conv_id") -> DataFrame:
     """docs -> (id, len, pk long, bk array<long>, hist binary): the
     fused per-document feature table — the block keys (``pk`` the
     layered prefix key over the first PREFIX_LEN characters of ``doc``;
-    ``bk`` the N_BANDS LSH band keys, udfs.band_keys) AND the packed
-    prune histogram (udfs.pack_histograms) from ONE pass over the doc
-    bytes.
+    ``bk`` the N_BANDS LSH band keys, arrow_kernels.band_keys) AND the
+    packed prune histogram (arrow_kernels.pack_histograms) from ONE pass
+    over the doc bytes.
 
     The pipeline materializes this narrow frame once and derives the
     band explosion (:func:`bands_from_features`), the prune attributes
@@ -85,7 +85,7 @@ def doc_features(docs: DataFrame, id_col: str = "conv_id") -> DataFrame:
     shuffle width); a single-partition scan would run it on one core."""
     from pyspark.sql import types as T
 
-    from sz_spark.udfs import make_doc_features_arrow_fn
+    from sz_spark.arrow_kernels import make_doc_features_arrow_fn
 
     src = docs.select(
         F.col(id_col),
@@ -201,7 +201,7 @@ def block_pairs_gathered(
     metric-join partitioning idea).  The size check matters: a pair's
     first collision can sit in a suppressed stop-band block, and it
     must then come from its next kept row.  The same pass applies the
-    length + histogram prune (udfs.prune_keep, as
+    length + histogram prune (arrow_kernels.prune_keep, as
     scoring.prune_pairs_arrow does), so the set equals block_pairs +
     prune_pairs_arrow over bands_from_features of the same table."""
     from pyspark.sql import types as T
@@ -217,6 +217,8 @@ def block_pairs_gathered(
     def fn(batches):
         import pyarrow as pa
 
+        from sz_spark.arrow_kernels import arrow_from_numpy
+
         value = prune_bc.value
         for batch in batches:
             for task in batch.column(0).to_pylist():
@@ -224,7 +226,7 @@ def block_pairs_gathered(
                     value, task, n_tasks, max_block_size, threshold
                 ):
                     yield pa.RecordBatch.from_arrays(
-                        [pa.array(a), pa.array(b)], ["id_a", "id_b"]
+                        [arrow_from_numpy(a), arrow_from_numpy(b)], ["id_a", "id_b"]
                     )
 
     return spark.range(n_tasks, numPartitions=n_tasks).mapInArrow(fn, out_schema)
@@ -264,7 +266,7 @@ def _gathered_task_pairs(
     smaller id."""
     import numpy as np
 
-    from sz_spark.udfs import prune_keep
+    from sz_spark.arrow_kernels import prune_keep
 
     ids, lens, hists, keys, sizes = value
     cap = _cap(max_block_size)
@@ -362,18 +364,20 @@ def _triangle_arrow_fn(out: tuple, max_pairs_per_batch: int = 1 << 18):
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        from sz_spark.arrow_kernels import arrow_from_numpy, numpy_view
+
         for batch in batches:
             col = batch.column(0)
             if isinstance(col, pa.ChunkedArray):  # pragma: no cover
                 col = col.combine_chunks()
             # ListArray.offsets respects the logical slice and indexes
             # into .values (the unsliced child), so absolute takes work
-            offsets = np.asarray(col.offsets, dtype=np.int64)
+            offsets = numpy_view(col.offsets).astype(np.int64)
             values = col.values
             emitted_any = False
             for ia, ib in _triangle_chunks(offsets, max_pairs_per_batch):
-                va = values.take(pa.array(ia))
-                vb = values.take(pa.array(ib))
+                va = values.take(arrow_from_numpy(ia))
+                vb = values.take(arrow_from_numpy(ib))
                 lt = _arrow_le(va, vb)
                 emitted_any = True
                 yield pa.RecordBatch.from_arrays(

@@ -25,7 +25,8 @@ tests/oracles.py must agree with it bit-for-bit.
 All kernels are vectorized across the *batch* axis (the reference's
 "candidate lane" design, similarities/serial.hpp:613-693) — the right
 axis when pairs >> cores, and the one that maps onto Arrow record
-batches inside pandas UDFs.
+batches inside mapInArrow kernels (sz_spark.arrow_kernels) and pandas
+UDFs (sz_spark.udfs).
 """
 
 from __future__ import annotations
@@ -140,7 +141,7 @@ def flat_from_bytes(texts: Sequence[bytes]) -> tuple[np.ndarray, np.ndarray]:
     the *_flat kernels ingest: ``data`` is every byte concatenated,
     ``offsets`` (n+1 int64) bounds text i at data[offsets[i]:offsets[i+1]].
     This is exactly Arrow's variable-binary layout, so Arrow-native
-    callers (udfs.arrow_binary_flat) skip this copy entirely."""
+    callers (arrow_kernels.arrow_binary_flat) skip this copy entirely."""
     n = len(texts)
     offsets = np.zeros(n + 1, dtype=np.int64)
     if n:
@@ -263,8 +264,8 @@ def _fp_padded_flat(
 
     ``with_counts=False`` skips the count-of-min bookkeeping (3 of the
     ~13 memory passes per position) for consumers that only need the
-    min-hashes — the LSH blocking path (udfs.make_doc_features_arrow_fn) never
-    reads counts.  Hash values are identical either way.
+    min-hashes — the LSH blocking path
+    (arrow_kernels.make_doc_features_arrow_fn) never reads counts.  Hash values are identical either way.
 
     One Python step per BYTE POSITION updates all ``ndim`` dimensions at
     once (the round-1 kernel looped positions separately per width

@@ -1433,11 +1433,11 @@ FROM folded
 
 def _fp_rows_arrow(d: DataFrame, text_col, ndim: int, seed: int = 0) -> DataFrame:
     """(doc_id, dim, min_hash, min_count) via the Arrow-native transport
-    (udfs.make_fingerprint_arrow_fn over the flat-buffer kernel
+    (arrow_kernels.make_fingerprint_arrow_fn over the flat-buffer kernel
     kernels.fingerprints_flat)."""
     from pyspark.sql import types as T
 
-    from sz_spark.udfs import make_fingerprint_arrow_fn
+    from sz_spark.arrow_kernels import make_fingerprint_arrow_fn
 
     # AQE sizes by bytes and cannot see the kernel's CPU cost — spread
     # the docs before entering Python (as dedup_minhash_lsh does)

@@ -9,8 +9,8 @@ Scale notes:
   the surrogate ``did`` against the (much smaller) canonical-docs
   table; the texts are NEVER carried through the band explosion (that
   would multiply text bytes by n_bands in the shuffle).
-* a length-difference + byte-histogram prune (udfs.prune_keep) runs
-  before the DP, in a Python Arrow pass on both tiers
+* a length-difference + byte-histogram prune (arrow_kernels.prune_keep)
+  runs before the DP, in a Python Arrow pass on both tiers
   (prune_pairs_arrow above the gather gate,
   blocking.block_pairs_gathered below it): |len(a)-len(b)| /
   max(len) > 1-τ already bounds similarity below τ (edit distance ≥
@@ -28,8 +28,10 @@ from pyspark.sql import functions as F
 
 # module-level on purpose: importing the pipeline loads the kernels
 # here, not inside its first (timed) run
-from sz_spark.udfs import (
+from sz_spark.arrow_kernels import (
+    arrow_from_numpy,
     make_bounded_lev_arrow_fn,
+    numpy_view,
     prune_keep,
     unpack_histograms,
 )
@@ -61,8 +63,8 @@ def attach_prune_attrs(pairs: DataFrame, attrs_frame: DataFrame) -> DataFrame:
     (id, len, hist) frame — ``blocking.doc_features`` sliced to those
     columns, so one Python pass over the corpus serves both blocking
     and pruning; ``hist`` is the packed 192-byte blob
-    (udfs.pack_histograms), ~55% fewer bytes through the two pair joins
-    than an array<int> in UnsafeRow format.
+    (arrow_kernels.pack_histograms), ~55% fewer bytes through the two
+    pair joins than an array<int> in UnsafeRow format.
 
     The join tier attaches these first, prunes, and only then attaches
     texts (attach_texts) to the survivors.  Measured funnel at bench
@@ -90,7 +92,7 @@ def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
     """Fused length + histogram prune over the prune-attr frame
     (:func:`attach_prune_attrs`) — returns the surviving (id_a, id_b).
 
-    The bounds are udfs.prune_keep's, evaluated vectorized in a
+    The bounds are arrow_kernels.prune_keep's, evaluated vectorized in a
     mapInArrow batch: the same decisions as the gather tier's in-pass
     prune.  The Spark-expression form walked two interpreted
     zip_with/aggregate lambdas over 96 bins per candidate pair — at the
@@ -110,15 +112,13 @@ def prune_pairs_arrow(attrs: DataFrame, threshold: float) -> DataFrame:
             n = batch.num_rows
             if n == 0:
                 continue
-            lens = np.concatenate(
-                [np.asarray(batch.column(i), dtype=np.int64) for i in (2, 3)]
-            )
+            lens = np.concatenate([numpy_view(batch.column(i)) for i in (2, 3)])
             hists = np.concatenate(
                 [unpack_histograms(batch.column(i)) for i in (4, 5)]
             )
             rows = np.arange(n)
             keep = prune_keep(lens, hists, rows, rows + n, threshold)
-            idx = pa.array(np.nonzero(keep)[0].astype(np.int32))
+            idx = arrow_from_numpy(np.nonzero(keep)[0].astype(np.int32))
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0).take(idx), batch.column(1).take(idx)],
                 ["id_a", "id_b"],
@@ -230,8 +230,10 @@ def score_pairs(pairs_with_texts: DataFrame, bounded: float) -> DataFrame:
     DIVIDE_BY_ZERO under ANSI mode).
 
     The banded DP is exact below the τ = ``bounded`` bound (~10x cheaper
-    than the full DP); distances of sub-τ pairs come back clamped, which
-    only matters if you *keep* sub-τ pairs.  The worker reads the
+    than the full DP); a pair beyond its own bound comes back as
+    ``int((1-τ) * max byte length) + 2`` whatever shares its Arrow batch
+    (arrow_kernels.make_bounded_lev_arrow_fn), so the rows do not depend
+    on partitioning or batch size.  The worker reads the
     binary columns' flat buffers straight into the DP — no pandas
     Series, no per-row bytes objects — and the output deliberately
     DROPS doc_a/doc_b: shipping the texts back JVM-side would double

@@ -52,12 +52,15 @@ def build_session(
     or ``spark.pyspark.driver.python`` in ``extra`` raises ``ValueError``:
     pyspark reads the environment instead.  A launch that records the
     class archive also tours the pipeline (``_tour_pipeline``).  A failing
-    worker prewarm raises.
+    worker prewarm raises.  A later call in the same process starts from
+    its own ``extra``, not the one an earlier call launched the JVM with
+    (``_forget_earlier_launch``).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
     conf, archive = _session_conf(master, extra)
+    _forget_earlier_launch(conf, extra)
     for k, v in conf.items():
         builder = builder.config(k, v)
     with archive.launch_env() if archive else contextlib.nullcontext():
@@ -74,6 +77,39 @@ def build_session(
     if archive is not None and archive.found is None:
         _tour_pipeline(spark)
     return spark
+
+
+#: the ``extra`` of the ``build_session`` call that launched this
+#: process's driver JVM (empty until one does)
+_LAUNCH_EXTRA: dict[str, str] = {}
+
+
+def _forget_earlier_launch(conf: dict[str, str], extra: dict[str, str] | None) -> None:
+    """Keep an earlier call's ``extra`` out of a new session in this process.
+
+    pyspark launches the driver JVM through spark-submit, which turns
+    every launch conf entry into a JVM system property, and every later
+    ``SparkConf`` in that JVM loads them.  So after ``stop()``, a second
+    ``build_session`` would inherit keys only the first one's ``extra``
+    set (say, a shuffle width of 8 where its own master gives 2).  A call
+    that launches the JVM records its ``extra``; a later call that
+    creates a new context clears the recorded keys its own ``conf`` does
+    not set.  The rest of the launch conf stays: it is the recipe every
+    call applies, or the launch plan (the worker tree, the JVM's own
+    options) that holds for the JVM's life.  System properties of a
+    spark-submit of the user's own are left alone."""
+    if not _gateway_up():
+        _LAUNCH_EXTRA.clear()
+        _LAUNCH_EXTRA.update(extra or {})
+    elif SparkContext._active_spark_context is None:
+        for key in _LAUNCH_EXTRA.keys() - conf.keys():
+            SparkContext._jvm.java.lang.System.clearProperty(key)
+
+
+def _gateway_up() -> bool:
+    """True when this process already reaches a driver JVM: pyspark
+    launched one, or spark-submit started this process."""
+    return SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
 
 
 #: conf keys that pyspark ignores, and the environment variable it reads
@@ -126,7 +162,7 @@ def _session_conf(
     _add_java_options(conf, _thread_caps(cores), first=True)
     if not _USER_JIT.search(_java_options(conf)):
         _add_java_options(conf, _C1_ONLY)
-    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+    if _gateway_up():
         return conf, None  # no JVM is launched: nothing below reaches one
     spark_home = _find_spark_home()
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
@@ -687,7 +723,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     """Prestart the Python worker pool and its heavy imports.
 
     A fresh session's FIRST Arrow-UDF stage pays worker spawn + numpy/
-    pyarrow/pandas imports + the JVM's Arrow-stream codepath warmup.
+    pyarrow imports + the JVM's Arrow-stream codepath warmup.
     Measured at local[4] on a 4-core box: the first JVM job took 3.2 s
     (0.3 s the second time), the first Python worker start 2.8 s
     (0.3-0.4 s after that) and the worker imports ~1.3-1.5 s.  With the
@@ -706,6 +742,11 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     worker-side imports and touches the compiled kernel twin so its
     dlopen (or first-time gcc build, on a cold cache) also happens here
     rather than inside a timed stage.
+    The imports are the pipeline kernels' (``sz_spark.arrow_kernels``:
+    numpy, pyarrow, ``sz_spark.kernels``) and not pandas: pandas costs
+    ~37 MB of RSS and 0.26-0.28 s per worker, and no pipeline stage
+    loads it, so only the first registry ``pandas_udf`` /
+    ``mapInPandas`` task on each worker pays for it.
     Importing ``sz_spark`` there also installs the package's checked
     zipimporter invalidation (``sz_spark/__init__.py``) in every pooled
     worker, so no timed task pays the per-task re-read of pyspark.zip.
@@ -717,10 +758,9 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     n = max(2, spark.sparkContext.defaultParallelism)
 
     def fn(batches):
-        import numpy as np  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
+        import numpy as np
 
+        from sz_spark import arrow_kernels  # noqa: F401
         from sz_spark import kernels as K
 
         # touch the native twin: dlopen / first-time build

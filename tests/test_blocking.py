@@ -175,13 +175,13 @@ def test_cosine_arrow_zero_norm_is_null(spark):
 
 
 def test_byte_histogram_batch_matches_per_row():
-    """udfs.pack_histograms over one flat batch == a per-row bincount of
+    """arrow_kernels.pack_histograms over one flat batch == a per-row bincount of
     each document's UTF-8 bytes (control bytes, DEL, multi-byte
     characters, empty and NULL text included), and unpack_histograms
     round-trips the packed blobs."""
     import pyarrow as pa
 
-    from sz_spark.udfs import arrow_binary_flat, pack_histograms, unpack_histograms
+    from sz_spark.arrow_kernels import arrow_binary_flat, pack_histograms, unpack_histograms
 
     texts = ["hello world!", "", "\x01\x7f\x80 abc", None, "~" * 70000]
     arr = pa.array([None if t is None else t.encode() for t in texts], pa.binary())

@@ -266,6 +266,39 @@ def test_package_parses_no_plans():
         assert "_jdf" not in text and "queryExecution" not in text, path
 
 
+def test_pipeline_modules_import_no_pandas():
+    """A fresh interpreter that imports the pipeline and its Arrow
+    kernels holds no pandas: the kernels' closures pickle references to
+    these modules, so a Python worker that runs them imports them too."""
+    import subprocess
+    import sys
+
+    probe = (
+        "import sys\n"
+        "import sz_spark.pipeline, sz_spark.arrow_kernels\n"
+        "print('pandas' in sys.modules)\n"
+    )
+    done = subprocess.run([sys.executable, "-c", probe], cwd=REPO,
+                          capture_output=True, text=True, check=True)
+    assert done.stdout.strip() == "False"
+
+
+def test_arrow_kernels_call_no_pandas_conversion():
+    """sz_spark/arrow_kernels.py calls none of the pyarrow conversions
+    that import pandas: ``pa.array``, ``.to_numpy``, ``np.asarray``."""
+    path = os.path.join(REPO, "sz_spark", "arrow_kernels.py")
+    with open(path, encoding="utf-8") as fh:
+        text = fh.read()
+    assert "pa.array(" not in text and ".to_numpy(" not in text
+    calls = set()
+    for node in ast.walk(ast.parse(text, path)):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            base = node.func.value
+            calls.add((base.id if isinstance(base, ast.Name) else None, node.func.attr))
+    assert ("pa", "array") not in calls and ("np", "asarray") not in calls
+    assert "to_numpy" not in {attr for _, attr in calls}
+
+
 def test_pipeline_config_fields():
     """PipelineConfig holds the values an entry point sets; the blocking
     parameters are constants of sz_spark.blocking.  A new field must be

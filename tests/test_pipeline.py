@@ -471,6 +471,63 @@ def test_arrow_transport_parity(spark):
     assert n_kept > 0  # the parity check must not be vacuous
 
 
+def test_scored_rows_do_not_depend_on_batch_layout(spark):
+    """score_pairs gives the same rows whether the pairs share one Arrow
+    batch or sit one per batch, and each distance is min(exact, own
+    bound + 1), own bound = int((1-τ) * max byte length) + 1: a 100-byte
+    pair with 10 substitutions at τ = 0.94 (own bound 7) reads 8 in both
+    layouts, not 10 where a 1,000-byte pair shares its batch."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from sz_spark import kernels as K, scoring
+
+    rng = random.Random(7)
+
+    def text(n):
+        return "".join(rng.choice("abcdefghij ") for _ in range(n))
+
+    def substitute(s, k):
+        chars = list(s)
+        for i in rng.sample(range(len(s)), k):
+            chars[i] = "Z"
+        return "".join(chars)
+
+    short, long_ = text(100), text(1000)
+    rows = [("short", "short2", short, substitute(short, 10)),
+            ("long", "long2", long_, substitute(long_, 20))]
+    for i in range(30):
+        s = text(rng.randrange(20, 400))
+        rows.append((f"r{i}", f"r{i}b", s, substitute(s, rng.randrange(len(s) // 8 + 1))))
+    wt = (
+        spark.createDataFrame(rows, "id_a string, id_b string, doc_a string, doc_b string")
+        .withColumn("len_a", F.length("doc_a"))
+        .withColumn("len_b", F.length("doc_b"))
+    )
+    tau = 0.94
+    keys = ("spark.sql.execution.arrow.maxRecordsPerBatch", "spark.sql.shuffle.partitions")
+    saved = [spark.conf.get(k) for k in keys]
+    layouts = []
+    try:
+        # one partition: the default batch holds every pair
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        for per_batch in ("4096", "1"):
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", per_batch)
+            layouts.append(sorted(map(tuple, scoring.score_pairs(wt, bounded=tau).collect())))
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+    assert layouts[0] == layouts[1]
+    got = {r[0]: r[4] for r in layouts[0]}
+    assert len(got) == len(rows)
+    exact = K.levenshtein_batch([r[2].encode() for r in rows], [r[3].encode() for r in rows])
+    for r, d in zip(rows, exact.tolist()):
+        own_bound = int((1.0 - tau) * max(len(r[2]), len(r[3]))) + 1
+        assert got[r[0]] == min(d, own_bound + 1), r[0]
+    assert (got["short"], got["long"]) == (8, 20)
+
+
 def test_prune_first_scored_flow_parity(spark):
     """The production scored flow (doc_features (len, hist) ->
     attach_prune_attrs -> prune_pairs_arrow -> attach_texts on the

@@ -771,7 +771,8 @@ workers = spark.range(4, numPartitions=4).mapInArrow(report, "file string, versi
 def plus_one(s: pd.Series) -> pd.Series:
     return s + 1
 
-assert spark.range(8, numPartitions=4).select(plus_one("id")).count() == 8
+# an aggregate over the UDF: a bare count() would prune it from the plan
+assert spark.range(8, numPartitions=4).select(F.sum(plus_one("id"))).collect()[0][0] == 36
 jvm = spark.sparkContext._jvm.java.lang.ProcessHandle.current()
 print(json.dumps({
     "workers": sorted({tuple(r) for r in workers.collect()}),
@@ -810,3 +811,127 @@ def test_prewarm_warms_the_pool_the_pipeline_uses(worker_launch):
     worker pool: the JVM has one Python daemon."""
     daemons = [c for c in worker_launch["children"] if f"-m {session._DAEMON_MODULE}" in c]
     assert len(daemons) == 1, worker_launch["children"]
+
+
+# -- later sessions in one process: a real launch ---------------------------
+
+_TWO_SESSIONS = """
+import json
+from sz_spark.session import build_session
+
+opts = {"spark.driver.memory": "1g", "spark.driver.defaultJavaOptions": "-Xshare:off"}
+seen = []
+for extra in ({"spark.sql.shuffle.partitions": "8", "spark.sz.marker": "first"}, {}):
+    spark = build_session(master="local[2]", app_name="two-sessions", extra={**opts, **extra})
+    conf = spark.sparkContext.getConf()
+    seen.append({
+        "width": spark.conf.get("spark.sql.shuffle.partitions"),
+        "marker": conf.get("spark.sz.marker", None),
+        "daemon": conf.get("spark.python.daemon.module", None),
+    })
+    spark.stop()
+print(json.dumps(seen))
+"""
+
+
+def test_second_session_starts_from_its_own_extra(tmp_path):
+    """A session built after ``stop()`` in the same process gets its
+    master's shuffle width, not the width the first call's ``extra``
+    launched the JVM with (spark-submit made it a JVM system property),
+    and keeps the launch's worker tree."""
+    done = subprocess.run([sys.executable, "-c", _TWO_SESSIONS], cwd=REPO,
+                          env=_launch_env(tmp_path / "cache"),
+                          capture_output=True, text=True, timeout=900)
+    assert done.returncode == 0, done.stderr[-4000:]
+    first, second = json.loads(done.stdout.strip().splitlines()[-1])
+    assert (first["width"], first["marker"]) == ("8", "first")
+    assert (second["width"], second["marker"]) == ("2", None)
+    assert second["daemon"] == first["daemon"]
+
+
+# -- the pipeline's Python workers never load pandas: a real launch ---------
+
+_PANDAS_FREE = """
+import json, os, sys
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import functions as F
+from sz_spark import pipeline, session
+from sz_spark.arrow_kernels import arrow_from_numpy
+
+spark = session.build_session(master="local[2]", app_name="pandas-free-test",
+                              extra={"spark.driver.memory": "1g",
+                                     "spark.driver.defaultJavaOptions": "-Xshare:off"})
+sc = spark.sparkContext
+n = sc.defaultParallelism
+
+def probe(batches):
+    import time
+    for _ in batches:
+        pass
+    time.sleep(0.5)  # hold this worker, so the n tasks take n workers
+    # built from buffers: pa.array would import pandas by itself
+    yield pa.RecordBatch.from_arrays(
+        [arrow_from_numpy(np.array([os.getpid()])),
+         arrow_from_numpy(np.array([int("pandas" in sys.modules)]))],
+        ["pid", "pandas"])
+
+def pool():
+    # the driver JVM's descendants: the Python daemon and its workers
+    out = {}
+    for p in sc._jvm.java.lang.ProcessHandle.current().descendants().toArray():
+        try:
+            with open(f"/proc/{p.pid()}/maps") as fh:
+                out[p.pid()] = "/pandas/_libs/" in fh.read()
+        except OSError:  # exited since the listing
+            pass
+    return out
+
+def check(point, **more):
+    rows = spark.range(n, numPartitions=n).mapInArrow(probe, "pid long, pandas long").collect()
+    return {"point": point, "probe": [[r.pid, r.pandas] for r in rows], "pool": pool(), **more}
+
+points = [check("build_session")]
+turns = spark.createDataFrame(session._TOUR_TURNS, "conv_id string, turn_idx int, text string")
+for point, max_docs in (("gather tier", "1000000"), ("join tier", "0")):
+    os.environ["SZ_GATHER_MAX_DOCS"] = max_docs
+    out = pipeline.run_pipeline(spark, turns, pipeline.PipelineConfig())
+    scored = out["scored"].count()
+    clusters = sorted(map(list, out["clusters"].select("conv_id", "cluster_id").collect()))
+    points.append(check(point, scored=scored, clusters=clusters))
+
+@F.pandas_udf("long")
+def plus_one(s: pd.Series) -> pd.Series:
+    return s + 1
+
+spark.range(4 * n, numPartitions=4 * n).select(F.sum(plus_one("id"))).collect()
+points.append(check("pandas_udf"))
+print(json.dumps(points))
+"""
+
+
+def test_pipeline_workers_never_load_pandas(tmp_path):
+    """No Python worker of the pool (nor the daemon) holds pandas right
+    after ``build_session`` or after ``run_pipeline`` on either tier:
+    the probe reads ``sys.modules`` in each worker, and the driver reads
+    every pool process's mapped files.  A registry ``pandas_udf`` then
+    loads it, which shows the probe sees pandas where it is."""
+    done = subprocess.run([sys.executable, "-c", _PANDAS_FREE], cwd=REPO,
+                          env=_launch_env(tmp_path / "cache"),
+                          capture_output=True, text=True, timeout=900)
+    assert done.returncode == 0, done.stderr[-4000:]
+    points = json.loads(done.stdout.strip().splitlines()[-1])
+    assert [p["point"] for p in points] == [
+        "build_session", "gather tier", "join tier", "pandas_udf"]
+    for p in points:
+        pids = [pid for pid, _ in p["probe"]]
+        assert len(set(pids)) == len(pids) and set(map(str, pids)) <= set(p["pool"]), p
+    for p in points[:-1]:
+        assert not any(has for _, has in p["probe"]), p
+        assert not any(p["pool"].values()), p
+    gather, join = points[1], points[2]
+    assert gather["scored"] == join["scored"] == 1
+    assert gather["clusters"] == join["clusters"] == [
+        ["c0", "c0"], ["c1", "c0"], ["c2", "c2"]]
+    assert any(has for _, has in points[-1]["probe"]) and any(points[-1]["pool"].values())
